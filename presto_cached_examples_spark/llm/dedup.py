@@ -31,8 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from presto_cached_examples_spark.plans.artifacts import memo
 from presto_cached_examples_spark.registry import register
-from presto_cached_examples_spark.session import session_token
 from presto_cached_examples_spark.sources.catalog import load_table, spread
 
 # MinHash parameters: 64 permutations in 16 bands of 4 rows.
@@ -929,12 +929,6 @@ def q_dedup_cluster_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FP_BLOOM_BITS_FLOOR = 65536
 _FP_BLOOM_BITS_PER_KEY = 16
 _FP_BLOOM_K = 3
-# Standing-corpus fingerprint count, memoized per (session, sf_dir) so
-# repeat builds don't re-count. The one count job at first build is a
-# parquet metadata aggregate (no row materialization) — the same
-# accepted build-time-action class as _HOURLY_TIER / global_rank
-# (NOTES "Decisions").
-_FP_OLD_COUNT: dict[tuple[str, str], int] = {}
 
 
 def _bloom_bits(n_keys: int) -> int:
@@ -998,12 +992,12 @@ def q_dedup_incremental_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     new = docs.filter(F.col("doc_id") % _SNAP_MOD >= _SNAP_NEW)
     old = docs.filter(F.col("doc_id") % _SNAP_MOD < _SNAP_NEW)
 
-    # Size the filter from the measured standing corpus (memoized —
-    # one metadata-count job per session/sf, cf. _bloom_bits above).
-    ckey = (session_token(spark), sf_dir)
-    if ckey not in _FP_OLD_COUNT:
-        _FP_OLD_COUNT[ckey] = old.count()
-    n_bits = _bloom_bits(_FP_OLD_COUNT[ckey])
+    # Size the filter from the measured standing corpus, memoized per
+    # (session, sf) so repeat builds don't re-count. The one count job
+    # at first build is a parquet metadata aggregate (no row
+    # materialization) — the same accepted build-time-action class as
+    # the hourly tier / global_rank (NOTES "Decisions").
+    n_bits = _bloom_bits(memo(spark, sf_dir, "fp_old_count", old.count))
 
     def positions(col):
         return [
@@ -1119,12 +1113,6 @@ q_dedup_span.__doc__ = q_dedup_span.__doc__.replace("{n}", str(_SPAN_N))
 
 _EMBED_SWEEP_THRESHOLDS = (0.20, 0.25, 0.30, 0.35)
 
-#: Session-keyed memo of the sweep's scored candidate pairs — the
-#: blocking + scoring pass is identical for every build, and the
-#: checkpoint otherwise re-materializes per build (the _PAIRS_CACHE /
-#: curated-survivor discipline). Lazy checkpoint: no build-time jobs.
-_SWEEP_SCORED_CACHE: dict = {}
-
 
 def _dedup_embed_sweep_oracle() -> str:
     """DuckDB replay of the threshold sweep: the identical blocked
@@ -1206,7 +1194,7 @@ def q_dedup_embed_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["vec_a", "vec_b"])
     )
     vecs = e.select("vec_id", "v", "nrm")
-    scored = (
+    pair_cosines = (
         pairs.join(
             vecs.select(
                 F.col("vec_id").alias("vec_a"),
@@ -1237,13 +1225,13 @@ def q_dedup_embed_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cosine"),
         )
     )
-    skey = (session_token(spark), sf_dir)
-    cached = _SWEEP_SCORED_CACHE.get(skey)
-    if cached is None:
-        # one scoring pass per session/sf, N thresholds x M builds
-        cached = scored.localCheckpoint(eager=False)
-        _SWEEP_SCORED_CACHE[skey] = cached
-    scored = cached
+    # The blocking + scoring pass is identical for every build, and the
+    # checkpoint otherwise re-materializes per build: one scoring pass
+    # per session/sf, N thresholds x M builds. Lazy checkpoint: no
+    # build-time jobs.
+    scored = memo(
+        spark, sf_dir, "sweep_scored", lambda: pair_cosines.localCheckpoint(eager=False)
+    )
     out = None
     for t in _EMBED_SWEEP_THRESHOLDS:
         branch = scored.filter(F.col("cosine") >= t).agg(

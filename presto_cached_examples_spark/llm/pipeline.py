@@ -11,9 +11,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from presto_cached_examples_spark.plans.artifacts import memo
 from presto_cached_examples_spark.registry import register
 from presto_cached_examples_spark.plans.persistence import maybe_persist
-from presto_cached_examples_spark.session import session_token
 from presto_cached_examples_spark.sources.catalog import load_table, spread
 
 # Chunking: window of 32 tokens advancing by 24 (8-token overlap keeps
@@ -1088,12 +1088,6 @@ q_scrub_dup_spans.__doc__ = q_scrub_dup_spans.__doc__.replace(
 )
 
 
-#: q_mix_schedule's vtime split points, memoized per (session, sf) like
-#: _CURATION_SPLITS — the values shape the global_rank plan, never the
-#: answer, so reusing them across builds is free (ADVICE r7 item 2).
-_MIX_SPLITS: dict[tuple, list] = {}
-
-
 @register(
     "q_mix_schedule",
     category="llm-pipeline",
@@ -1171,17 +1165,17 @@ def q_mix_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vtime collides across equal-sized sources at equal rank, so the
     # unique doc_id is the tie-break on BOTH engines. Split points are
     # memoized per (session, sf) under the build-time-action contract
-    # (registry.py header): only the FIRST build per session pays the
+    # (registry.py header): they shape the global_rank plan, never the
+    # answer, so only the FIRST build per session pays the
     # approxQuantile pass (ADVICE r7 item 2 — q_mix_schedule was the
     # one global_rank caller re-sampling on every plan build).
-    skey = (session_token(spark), sf_dir)
-    if skey not in _MIX_SPLITS:
-        _MIX_SPLITS[skey] = v.approxQuantile(
-            "vtime", [i / 64 for i in range(1, 64)], 0.001
-        )
-    ranked = global_rank(
-        v, "vtime", "doc_id", out_rank="pos", splits=_MIX_SPLITS[skey]
+    splits = memo(
+        spark,
+        sf_dir,
+        "mix_splits",
+        lambda: v.approxQuantile("vtime", [i / 64 for i in range(1, 64)], 0.001),
     )
+    ranked = global_rank(v, "vtime", "doc_id", out_rank="pos", splits=splits)
     return ranked.select(
         F.col("pos").cast("long").alias("pos"), "doc_id", "source"
     )
@@ -1227,16 +1221,6 @@ _PPL_SURPRISAL_SQL = """
 """
 
 
-#: (applicationId, sf_dir) → checkpointed full-corpus (doc_id, s)
-#: surprisal relation shared by q_quality_ppl_filter and
-#: q_quality_ensemble (identical scoring pipelines over the identical
-#: base relation — guide §2.4; VERDICT r15 item 4). Same state contract
-#: as text.py's _PMI_CACHE: in-process, session-token-keyed, gone on a
-#: fresh driver. Width is 2 columns × one row per doc — the CCNet-shape
-#: "score once, filter many" artifact a production pipeline writes out.
-_SURPRISAL_CACHE: dict = {}
-
-
 def _doc_surprisal(
     d: DataFrame, spark: SparkSession | None = None, sf_dir: str | None = None
 ) -> DataFrame:
@@ -1248,28 +1232,27 @@ def _doc_surprisal(
     are ABSENT from the result (LEFT-join them as no-evidence).
 
     When ``spark``/``sf_dir`` are given, ``d`` MUST be the full
-    documents relation for that sf_dir: the result is then memoized per
-    session and the |V|^2 model table is shared through
-    text.bigram_model_counts. Callers scoring any other relation (e.g.
-    curation survivors) omit them and compute locally."""
+    documents relation for that sf_dir: the result is then a session
+    artifact shared by q_quality_ppl_filter and q_quality_ensemble
+    (identical scoring pipelines over the identical base relation —
+    guide §2.4; VERDICT r15 item 4), and the |V|^2 model table is
+    shared through text.bigram_model_counts. Width is 2 columns × one
+    row per doc — the CCNet-shape "score once, filter many" artifact a
+    production pipeline writes out. Callers scoring any other relation
+    (e.g. curation survivors) omit them and compute locally."""
     if spark is not None:
-        cached = _SURPRISAL_CACHE.get((session_token(spark), sf_dir))
-        if cached is not None:
-            return cached
-    toks = F.split("text", " ")
+        return memo(spark, sf_dir, "surprisal", lambda: _score_surprisal(d, spark, sf_dir))
+    return _score_surprisal(d)
+
+
+def _score_surprisal(
+    d: DataFrame, spark: SparkSession | None = None, sf_dir: str | None = None
+) -> DataFrame:
+    """_doc_surprisal's scoring pass, unmemoized."""
+    from presto_cached_examples_spark.llm.text import bigram_model_counts, bigram_structs
+
     doc_big = (
-        d.select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size(toks) - 1),
-                    lambda i: F.struct(
-                        F.element_at(toks, i).alias("w1"),
-                        F.element_at(toks, i + 1).alias("w2"),
-                    ),
-                )
-            ).alias("bg"),
-        )
+        d.select("doc_id", F.explode(bigram_structs(F.split("text", " "))).alias("bg"))
         .select("doc_id", "bg.w1", "bg.w2")
         .groupBy("doc_id", "w1", "w2")
         .agg(F.count(F.lit(1)).alias("k"))
@@ -1279,8 +1262,6 @@ def _doc_surprisal(
         # full-corpus call: share the |V|^2 model table session-wide;
         # on a cold cache the rollup of the already-needed doc_big
         # relation builds it (no extra corpus pass).
-        from presto_cached_examples_spark.llm.text import bigram_model_counts
-
         bc = bigram_model_counts(
             spark,
             sf_dir,
@@ -1311,10 +1292,7 @@ def _doc_surprisal(
     )
     # (doc_id, s) is |docs|-sized and feeds BOTH the threshold scalar
     # and the verdict join — checkpoint so the scoring pipeline runs once
-    surp = surp.localCheckpoint(eager=False)
-    if spark is not None:
-        _SURPRISAL_CACHE[(session_token(spark), sf_dir)] = surp
-    return surp
+    return surp.localCheckpoint(eager=False)
 
 
 @register(
@@ -1528,21 +1506,6 @@ def q_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Range-split points for the curation schedule's global_rank, memoized
-#: per (session, sf) like the k-means codebooks — the split values
-#: shape the plan, never the answer, so reusing them across builds is
-#: free; the first build's sampling pass doubles as the checkpoint
-#: materialization for surv/surp/kept.
-_CURATION_SPLITS: dict[tuple, list] = {}
-
-#: The curated survivor set (post-dedup, post-perplexity-cut), memoized
-#: per (session, sf) — an ingest-time artifact like _HOURLY_TIER: the
-#: dedup window + LM scoring execute once per session (localCheckpoint
-#: under AQE materializes at build), and every later build reuses the
-#: checkpointed relation job-free.
-_CURATION_KEPT: dict[tuple, DataFrame] = {}
-
-
 def _curation_pipeline_oracle() -> str:
     """The composed curation oracle: exact dedup (keep min doc_id per
     text md5) -> survivor-trained surprisal + mean+sigma cut ->
@@ -1616,9 +1579,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     publish as one loop; this is that chain for corpus curation)."""
     from presto_cached_examples_spark.operators.distwindows import global_rank
 
-    kkey = (session_token(spark), sf_dir)
-    kept = _CURATION_KEPT.get(kkey)
-    if kept is None:
+    def curate():
         d = spread(load_table(spark, sf_dir, "documents"), spark)
         surv = (
             d.select(
@@ -1651,8 +1612,13 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("s").isNull() | (F.col("s") <= F.col("thr")))
             .select("doc_id", "source")
         )
-        kept = kept.localCheckpoint(eager=False)  # feeds weights AND ranks
-        _CURATION_KEPT[kkey] = kept
+        return kept.localCheckpoint(eager=False)  # feeds weights AND ranks
+
+    # The curated survivor set (post-dedup, post-perplexity-cut) is an
+    # ingest-time artifact like the hourly tier: the dedup window + LM
+    # scoring execute once per session, and every later build reuses
+    # the checkpointed relation job-free.
+    kept = memo(spark, sf_dir, "curation_kept", curate)
     w = kept.groupBy("source").agg(F.sqrt(F.count(F.lit(1))).alias("wt"))
     r = kept.select(
         "doc_id",
@@ -1668,14 +1634,17 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = r.join(F.broadcast(w), "source").select(
         "doc_id", "source", ((F.col("rnk") - 0.5) / F.col("wt")).alias("vtime")
     )
-    skey = (session_token(spark), sf_dir)
-    if skey not in _CURATION_SPLITS:
-        _CURATION_SPLITS[skey] = v.approxQuantile(
-            "vtime", [i / 64 for i in range(1, 64)], 0.001
-        )
-    ranked = global_rank(
-        v, "vtime", "doc_id", out_rank="pos", splits=_CURATION_SPLITS[skey]
+    # Range-split points memoized per (session, sf): the split values
+    # shape the plan, never the answer, so reusing them across builds
+    # is free; the first build's sampling pass doubles as the
+    # checkpoint materialization for surv/surp/kept.
+    splits = memo(
+        spark,
+        sf_dir,
+        "curation_splits",
+        lambda: v.approxQuantile("vtime", [i / 64 for i in range(1, 64)], 0.001),
     )
+    ranked = global_rank(v, "vtime", "doc_id", out_rank="pos", splits=splits)
     return ranked.select(
         F.col("pos").cast("long").alias("pos"), "doc_id", "source"
     )

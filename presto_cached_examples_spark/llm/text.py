@@ -11,62 +11,51 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from presto_cached_examples_spark.plans.artifacts import memo
 from presto_cached_examples_spark.registry import register
 from presto_cached_examples_spark.plans.persistence import maybe_persist
-from presto_cached_examples_spark.session import session_token
 from presto_cached_examples_spark.sources.catalog import load_table, spread
 
-#: (applicationId, sf_dir) → (bc, uni) checkpointed count tables shared
-#: across q_text_pmi invocations in a session (copurchase_pairs
-#: discipline — the vocabulary-bounded LM artifact is built once).
-_PMI_CACHE: dict = {}
-
-#: (applicationId, sf_dir) → checkpointed corpus bigram count table
-#: (w1, w2, n_big) — the |V|^2-BOUNDED model artifact every bigram-LM
-#: consumer shares (q_text_kn_bigram, the _doc_surprisal scorers).
-#: Same state contract as _PMI_CACHE: in-process only, keyed on the
-#: session token so a fresh driver recomputes everything; values are
-#: builder-invariant (direct corpus aggregate ≡ doc-grain rollup —
-#: pinned by tests/test_round16_opt.py).
-_BIGRAM_BC_CACHE: dict = {}
+def bigram_structs(toks):
+    """(w1, w2) structs of the adjacent pairs in token array ``toks``.
+    Empty for 0- and 1-token documents, like the oracles'
+    ``generate_series(1, len(t) - 1)``."""
+    return F.zip_with(
+        F.slice(toks, 1, F.size(toks) - 1),
+        F.slice(toks, 2, F.size(toks) - 1),
+        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+    )
 
 
 def bigram_model_counts(spark, sf_dir, derive=None):
-    """Session-memoized corpus bigram counts (w1, w2, n_big).
+    """Session-memoized corpus bigram counts (w1, w2, n_big): the
+    |V|^2-bounded model artifact every bigram-LM consumer shares
+    (q_text_kn_bigram, q_text_bigram_lm, the _doc_surprisal scorers),
+    as a lazy checkpoint.
 
     ``derive``: optional thunk returning an equivalent relation — used
     by callers that already materialize doc-grain bigram counts, so a
     cold cache costs them a rollup of that relation instead of a second
     corpus pass. Both derivations aggregate the same multiset of corpus
     bigrams, so the table is identical whichever consumer builds it
-    first (guide §2.4 share-one-pass; VERDICT r15 item 4)."""
-    key = (session_token(spark), sf_dir)
-    cached = _BIGRAM_BC_CACHE.get(key)
-    if cached is None:
+    first (guide §2.4 share-one-pass; VERDICT r15 item 4; pinned by
+    tests/test_round16_opt.py)."""
+
+    def build():
         if derive is not None:
             bc = derive()
         else:
             d = spread(load_table(spark, sf_dir, "documents"), spark)
-            toks = F.split("text", " ")
             bc = (
-                d.select(
-                    F.explode(
-                        F.transform(
-                            F.sequence(F.lit(1), F.size(toks) - 1),
-                            lambda i: F.struct(
-                                F.element_at(toks, i).alias("w1"),
-                                F.element_at(toks, i + 1).alias("w2"),
-                            ),
-                        )
-                    ).alias("bg")
-                )
+                d.select(F.explode(bigram_structs(F.split("text", " "))).alias("bg"))
                 .select("bg.w1", "bg.w2")
                 .groupBy("w1", "w2")
                 .agg(F.count(F.lit(1)).alias("n_big"))
             )
-        cached = bc.localCheckpoint(eager=False)
-        _BIGRAM_BC_CACHE[key] = cached
-    return cached
+        return bc.localCheckpoint(eager=False)
+
+    return memo(spark, sf_dir, "bigram_counts", build)
+
 
 # Marker words for the heuristic language-ID scorer. The fixture corpus
 # is synthetic (31-word shared vocabulary), so markers are drawn from it;
@@ -865,25 +854,21 @@ def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast joins against the |V|-row side. Nothing downstream of
     the token stream scales with corpus size. log2 fold rounded at 4dp
     on both engines."""
-    d = load_table(spark, sf_dir, "documents")
-    tk = F.split("text", " ")
-    bigrams = d.select(
-        F.explode(
-            F.zip_with(
-                F.slice(tk, 1, F.size(tk) - 1),
-                F.slice(tk, 2, F.size(tk) - 1),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
-        ).alias("bg")
-    ).select("bg.w1", "bg.w2")
-    bc = bigrams.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_big"))
-    toks = d.select("doc_id", F.explode(tk).alias("tok"))
-    uni = (
-        toks.groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("k"))
-        .groupBy("tok")
-        .agg(F.sum("k").alias("n_uni"))
-    )
+
+    def counts():
+        d = load_table(spark, sf_dir, "documents")
+        tk = F.split("text", " ")
+        bigrams = d.select(F.explode(bigram_structs(tk)).alias("bg")).select("bg.w1", "bg.w2")
+        bc = bigrams.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_big"))
+        uni = (
+            d.select("doc_id", F.explode(tk).alias("tok"))
+            .groupBy("doc_id", "tok")
+            .agg(F.count(F.lit(1)).alias("k"))
+            .groupBy("tok")
+            .agg(F.sum("k").alias("n_uni"))
+        )
+        return bc.localCheckpoint(eager=True), uni.localCheckpoint(eager=True)
+
     # bc (<=|V|^2 rows) and uni (<=|V| rows) each feed multiple branches
     # below (totals + re-joins); localCheckpoint the vocabulary-bounded
     # relations once so the token-stream aggregates run exactly once —
@@ -891,12 +876,7 @@ def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edges — and memoize them per (session, sf): the bigram/unigram
     # count tables are the reusable LM artifact every PMI consumer
     # shares (the copurchase_pairs discipline).
-    key = (session_token(spark), sf_dir)
-    cached = _PMI_CACHE.get(key)
-    if cached is None:
-        cached = (bc.localCheckpoint(eager=True), uni.localCheckpoint(eager=True))
-        _PMI_CACHE[key] = cached
-    bc, uni = cached
+    bc, uni = memo(spark, sf_dir, "pmi_counts", counts)
     t_big = bc.agg(F.sum("n_big").alias("t_big"))
     t_uni = uni.agg(F.sum("n_uni").alias("t_uni"))
     u1 = uni.select(F.col("tok").alias("w1"), F.col("n_uni").alias("n1"))
@@ -1119,16 +1099,9 @@ def q_text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # No-op at production split counts.
     d = spread(load_table(spark, sf_dir, "documents"), spark)
     tk = F.split("text", " ")
-    bigrams = d.select(
-        "doc_id",
-        F.explode(
-            F.zip_with(
-                F.slice(tk, 1, F.size(tk) - 1),
-                F.slice(tk, 2, F.size(tk) - 1),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
-        ).alias("bg"),
-    ).select("doc_id", "bg.w1", "bg.w2")
+    bigrams = d.select("doc_id", F.explode(bigram_structs(tk)).alias("bg")).select(
+        "doc_id", "bg.w1", "bg.w2"
+    )
     doc_big = bigrams.groupBy("doc_id", "w1", "w2").agg(
         F.count(F.lit(1)).alias("k")
     )

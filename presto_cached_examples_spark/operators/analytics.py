@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from presto_cached_examples_spark.plans.artifacts import memo
 from presto_cached_examples_spark.registry import register
 from presto_cached_examples_spark.sources.catalog import load_table, spread
 
@@ -1213,11 +1214,6 @@ def q_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: q_ntile_spend split-point memo — (session, sf) keyed, the
-#: _MIX_SPLITS pattern (plan-shaping constants only, never values).
-_NTILE_SPLITS: dict[tuple, list] = {}
-
-
 @register(
     "q_ntile_spend",
     category="window",
@@ -1269,24 +1265,20 @@ def q_ntile_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long")) / 100.0
         ).alias("spend")
     )
-    # Lazy checkpoint + memoized split points (round 15, the
-    # _RFM_SPLITS/_MIX_SPLITS pattern): the base materializes inside
-    # whichever action touches it first (the sampling pass on the
-    # first build, the query's own action after), and split points —
-    # which shape only the global_rank plan, never the (rank, n)
-    # values — are computed once per (session, sf) instead of on
-    # every plan build.
+    # Lazy checkpoint + memoized split points (round 15): the base
+    # materializes inside whichever action touches it first (the
+    # sampling pass on the first build, the query's own action after),
+    # and split points — which shape only the global_rank plan, never
+    # the (rank, n) values — are computed once per (session, sf)
+    # instead of on every plan build.
     spend = spend.localCheckpoint(eager=False)
-    from presto_cached_examples_spark.session import session_token
-
-    skey = (session_token(spark), sf_dir)
-    if skey not in _NTILE_SPLITS:
-        _NTILE_SPLITS[skey] = spend.approxQuantile(
-            "spend", [i / 64 for i in range(1, 64)], 0.001
-        )
-    ranked = global_rank(
-        spend, "spend", "o_custkey", descending=True, splits=_NTILE_SPLITS[skey]
+    splits = memo(
+        spark,
+        sf_dir,
+        "ntile_splits",
+        lambda: spend.approxQuantile("spend", [i / 64 for i in range(1, 64)], 0.001),
     )
+    ranked = global_rank(spend, "spend", "o_custkey", descending=True, splits=splits)
     tiled = ranked.select(
         "o_custkey",
         "spend",

@@ -14,8 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from presto_cached_examples_spark.session import session_token
 from presto_cached_examples_spark.registry import register
+from presto_cached_examples_spark.plans.artifacts import memo
 from presto_cached_examples_spark.plans.persistence import maybe_persist
 from presto_cached_examples_spark.sources.catalog import load_table
 
@@ -139,15 +139,6 @@ def q_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: One materialized hourly tier per (session, fixture): the persist()
-#: below IS the materialized-rollup semantics, so re-invoking the
-#: builder must return the SAME cached relation — without this memo
-#: every call pinned a fresh InMemoryRelation into the shared session
-#: for the process lifetime (a leak under harnesses that rebuild
-#: queries repeatedly). Keyed by session id: one tier per live session.
-_HOURLY_TIER: dict[tuple[int, str], DataFrame] = {}
-
-
 @register(
     "q_events_rollup",
     category="behavioral",
@@ -182,18 +173,19 @@ def q_events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it Catalyst expands the daily branch back to a second (and the
     # union to a fourth) scan+aggregate over raw events — the plan
     # tests assert the raw table is read exactly once. The cached tier
-    # is domain-bounded (hours × event types), never event-volume;
-    # _HOURLY_TIER memoizes it so repeat builds share one relation.
-    key = (session_token(spark), sf_dir)
-    hourly = _HOURLY_TIER.get(key)
-    if hourly is None:
-        ev = load_table(spark, sf_dir, "events")
-        hourly = (
-            ev.groupBy(F.date_trunc("hour", "ts").alias("bucket"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-            .persist()
-        )
-        _HOURLY_TIER[key] = hourly
+    # is domain-bounded (hours × event types), never event-volume, and
+    # it is a session artifact: repeat builds share one relation instead
+    # of pinning a fresh InMemoryRelation each, and artifacts.release
+    # unpersists it.
+    hourly = memo(
+        spark,
+        sf_dir,
+        "hourly_tier",
+        lambda: load_table(spark, sf_dir, "events")
+        .groupBy(F.date_trunc("hour", "ts").alias("bucket"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
+        .persist(),
+    )
     # The daily tier re-aggregates in integer cent space: the hourly
     # sum_value is already cent-quantized, so summing exact longs and
     # dividing once is drift-free on both engines (a double re-sum +
@@ -719,11 +711,6 @@ def q_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: q_rfm_segments split-point memo — (session, sf) keyed, the
-#: _MIX_SPLITS pattern (plan-shaping constants only, never values).
-_RFM_SPLITS: dict[tuple[str, str], list] = {}
-
-
 @register(
     "q_rfm_segments",
     category="behavioral",
@@ -795,17 +782,17 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # after) and all four consumers still share the one artifact.
     rfm = rfm.localCheckpoint(eager=False)
     # Split points memoized per (session, sf) under the build-time-
-    # action contract (the _MIX_SPLITS/_CURATION_SPLITS precedent):
-    # splits shape only the plan — global_rank's (rank, n) is exact for
-    # ANY split set — so reusing them changes no value, and warm builds
-    # skip the sampling action.
-    skey = (session_token(spark), sf_dir)
-    if skey not in _RFM_SPLITS:
-        qs = [i / 64 for i in range(1, 64)]
-        _RFM_SPLITS[skey] = rfm.stat.approxQuantile(
-            ["recency_days", "frequency", "monetary"], qs, 0.001
-        )
-    all_splits = _RFM_SPLITS[skey]
+    # action contract: splits shape only the plan — global_rank's
+    # (rank, n) is exact for ANY split set — so reusing them changes no
+    # value, and warm builds skip the sampling action.
+    all_splits = memo(
+        spark,
+        sf_dir,
+        "rfm_splits",
+        lambda: rfm.stat.approxQuantile(
+            ["recency_days", "frequency", "monetary"], [i / 64 for i in range(1, 64)], 0.001
+        ),
+    )
     scores = []
     for (col, desc, out), col_splits in zip(
         (

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from presto_cached_examples_spark.session import session_token
+from presto_cached_examples_spark.plans.artifacts import memo
 
 
 #: Below this edge count the component graph fits trivially on the
@@ -113,12 +113,6 @@ def connected_components(
 
 _COPURCHASE_MIN_ORDERS = 2
 
-#: Session-keyed memo of the materialized co-purchase edge relation —
-#: all graph queries (components, PageRank, triangles) consume the SAME
-#: edge list; one eager build per (session, sf_dir) instead of one per
-#: query build (the _TABLE_CACHE/_HOURLY_TIER discipline).
-_PAIRS_CACHE: dict = {}
-
 
 def copurchase_pairs(spark, sf_dir: str) -> DataFrame:
     """Co-purchase edge list: part pairs appearing together in at least
@@ -132,13 +126,15 @@ def copurchase_pairs(spark, sf_dir: str) -> DataFrame:
     pair term is per-order, never global. The ids-only edge relation is
     localCheckpoint-materialized once because every consumer walks it
     repeatedly (component probe + degree, 3 PageRank rounds, the
-    triangle join chain)."""
+    triangle join chain). All graph queries (components, PageRank,
+    triangles) consume the SAME edge list, so it is a session artifact:
+    one eager build per (session, sf_dir), not one per query build."""
+    return memo(spark, sf_dir, "copurchase_pairs", lambda: _copurchase_pairs(spark, sf_dir))
+
+
+def _copurchase_pairs(spark, sf_dir: str) -> DataFrame:
     from presto_cached_examples_spark.sources.catalog import load_table
 
-    key = (session_token(spark), sf_dir)
-    cached = _PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     ps = li.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("ps")
@@ -152,7 +148,7 @@ def copurchase_pairs(spark, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    pairs = (
+    return (
         ps.select(F.explode(pair_arr).alias("p"))
         .select(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
         .groupBy("pa", "pb")
@@ -161,8 +157,6 @@ def copurchase_pairs(spark, sf_dir: str) -> DataFrame:
         .select("pa", "pb")
         .localCheckpoint(eager=True)
     )
-    _PAIRS_CACHE[key] = pairs
-    return pairs
 
 
 _GRAPH_COMPONENTS_ORACLE = f"""

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from presto_cached_examples_spark.session import session_token
+from presto_cached_examples_spark.plans.artifacts import memo
 from presto_cached_examples_spark.registry import register
 from presto_cached_examples_spark.sources import layouts
 from presto_cached_examples_spark.sources.catalog import load_table, source_fingerprint
@@ -355,8 +355,8 @@ def _landed_docs_path(spark: SparkSession, sf_dir: str, fmt: str) -> str:
     tag = f"{sftag}_{source_fingerprint(sf_dir, 'documents')}"
     wh = layouts.warehouse_dir(spark)
     path = os.path.join(wh, f"{fmt}_documents_{tag}")
-    key = (session_token(spark), path)
-    if key not in _LANDED_DOCS_WRITTEN:
+
+    def land():
         # concurrency-safe publish (VERDICT r12 item 1): stage in a
         # session-unique dir, install atomically, never rewrite
         if not layouts.is_published(path):
@@ -369,11 +369,9 @@ def _landed_docs_path(spark: SparkSession, sf_dir: str, fmt: str) -> str:
                 w = w.option("header", "true")
             w.format(fmt).save(stg)
             layouts.publish(stg, path)
-        _LANDED_DOCS_WRITTEN.add(key)
-    return path
+        return path
 
-
-_LANDED_DOCS_WRITTEN: set = set()
+    return memo(spark, sf_dir, ("landed_docs", path), land)
 
 
 def _docs_schema():

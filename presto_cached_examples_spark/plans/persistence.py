@@ -30,10 +30,10 @@ position without rebuilding the session):
   Non-local input paths (s3://, hdfs://) can't be stat'ed cheaply and
   are assumed production-scale: ``auto`` -> on.
 
-Lifecycle (ADVICE r9 item 1): every DataFrame this module persists is
-tracked per live session, keyed on ``applicationId`` like every other
-DataFrame memo in the engine, and ``release_intermediates(spark)``
-unpersists the lot — so entity-scaled entries (per-user grains) have
+Lifecycle: every DataFrame this module persists is tracked in the
+session-artifact store (plans/artifacts.py), and
+``artifacts.release(spark)`` unpersists it together with the session's
+persisted memo values, so entity-scaled entries (per-user grains) have
 an explicit teardown instead of leaning on LRU eviction for the whole
 session. Long-running drivers should call it between query batches.
 
@@ -43,7 +43,7 @@ q_quality_dsir's (doc_id, bucket) token-count grain grows with the
 corpus. That is a deliberate trade the gate makes exactly when inputs
 are large: the persist is MEMORY_AND_DISK (spills, never OOMs), it
 halves the number of corpus-wide explode passes, and it is released by
-``release_intermediates``. Callers adding a new input-proportional
+``artifacts.release``. Callers adding a new input-proportional
 persist should weigh the second scan against the footprint the same
 way and say so at the call site.
 """
@@ -54,7 +54,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from presto_cached_examples_spark.session import session_token
+from presto_cached_examples_spark.plans.artifacts import track
 
 MODE_CONF = "spark.pce.persistIntermediates"
 MIN_BYTES_CONF = "spark.pce.persistIntermediates.minInputBytes"
@@ -64,11 +64,6 @@ DEFAULT_MIN_BYTES = 256 << 20  # 256 MiB
 # process's life (fixtures are read-only; production ingest dirs are
 # snapshot paths), so one os.walk per path is enough.
 _DIR_BYTES: dict[str, int] = {}
-
-# persisted intermediates per live session (applicationId -> DataFrames),
-# released by release_intermediates(). Keyed like _TABLE_CACHE so a dead
-# session's entries can never alias a restart (see session.session_token).
-_LIVE: dict[str, list[DataFrame]] = {}
 
 
 def _input_bytes(sf_dir: str) -> int:
@@ -110,27 +105,11 @@ def maybe_persist(df: DataFrame, sf_dir: str) -> DataFrame:
     the input is scan-expensive; otherwise return it unchanged.
 
     Use for per-query bounded-grain intermediates with >1 consumer.
-    Session-memoized artifacts (codebooks, _HOURLY_TIER) stay on plain
+    Session-memoized artifacts (codebooks, the hourly tier) stay on plain
     ``persist()`` — their build cost amortizes across calls, so the
     fixture-scale trade never inverts for them.
     """
     spark = df.sparkSession
     if not persist_enabled(spark, sf_dir):
         return df
-    out = df.persist()
-    _LIVE.setdefault(session_token(spark), []).append(out)
-    return out
-
-
-def release_intermediates(spark: SparkSession, blocking: bool = False) -> int:
-    """Unpersist every gate-tracked intermediate of this session.
-
-    Returns how many were released. Safe to call any time: already-
-    evicted or re-released entries unpersist as no-ops."""
-    entries = _LIVE.pop(session_token(spark), [])
-    for df in entries:
-        try:
-            df.unpersist(blocking=blocking)
-        except Exception:
-            pass  # session torn down mid-release — nothing to free
-    return len(entries)
+    return track(df.persist())

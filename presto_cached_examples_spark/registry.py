@@ -13,15 +13,17 @@ the order-insensitive value hash.
 Build-time-action contract (ADVICE r6 item 4): builder functions are
 ALLOWED to run bounded, model-sized Spark jobs at plan-construction
 time when the query depends on a learned or measured artifact — k-means
-codebooks (llm/similarity._CODEBOOK_CACHE), range split points
+codebooks (llm/similarity._corpus_centroids), range split points
 (operators/distwindows.global_rank's approxQuantile), the standing-
 corpus count that sizes the incremental-dedup Bloom filter, the
-bucketed/evolved warehouse materializations. All such artifacts are
-memoized per (session_token, sf_dir), so only the FIRST build per
-session pays; every later build is pure plan assembly
-(tests/test_round7_ops.py pins this with a job-group probe). Callers
-that need strictly action-free construction should warm the session
-once, or treat the first build as ingest.
+bucketed/evolved warehouse materializations. All such artifacts live
+in the session-artifact store (plans/artifacts.memo, keyed on
+(session_token, sf_dir, name)), so only the FIRST build per session
+pays; every later build is pure plan assembly (tests/test_round7_ops.py
+pins this with a job-group probe). ``artifacts.release(spark)`` drops
+them and unpersists what they pinned. Callers that need strictly
+action-free construction should warm the session once, or treat the
+first build as ingest.
 """
 
 from __future__ import annotations

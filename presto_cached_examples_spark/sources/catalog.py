@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from presto_cached_examples_spark.session import session_token
+from presto_cached_examples_spark.plans.artifacts import memo
 
 TABLES = (
     "region",
@@ -148,29 +148,19 @@ def source_fingerprint(sf_dir: str, name: str) -> str:
     return f"{st.st_mtime_ns:x}_{st.st_size:x}"
 
 
-#: Analyzed-relation cache — one schema-resolved DataFrame per (session,
-#: parquet path), the engine analog of a metastore's table-descriptor
-#: cache. Without it every query BUILD re-reads parquet footers on the
-#: driver (spark.read.parquet infers the schema eagerly) and, for
-#: events, re-runs the ts-physical-type detection round trips — ~0.15 s
-#: of pure driver latency per build that round 3's bench misread as
-#: q_window_lag execution drift. DataFrames are immutable, so reusing
-#: the analyzed relation changes no plan, only skips re-analysis.
-_TABLE_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one fixture table (cached analyzed relation — see
-    _TABLE_CACHE). Column names are asserted against the declared
-    schema; types are left to the parquet footer (the physical source
-    of truth) so the vectorized reader stays on the fast path."""
-    key = (session_token(spark), table_path(sf_dir, name))
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    df = _load_table_uncached(spark, sf_dir, name)
-    _TABLE_CACHE[key] = df
-    return df
+    """Scan one fixture table. Column names are asserted against the
+    declared schema; types are left to the parquet footer (the physical
+    source of truth) so the vectorized reader stays on the fast path.
+
+    The analyzed relation is a session artifact, the engine analog of a
+    metastore's table-descriptor cache. Without it every query BUILD
+    re-reads parquet footers on the driver (spark.read.parquet infers
+    the schema eagerly) and, for events, re-runs the ts-physical-type
+    detection round trips: ~0.15 s of pure driver latency per build.
+    DataFrames are immutable, so reusing the analyzed relation changes
+    no plan, only skips re-analysis."""
+    return memo(spark, sf_dir, ("table", name), lambda: _load_table_uncached(spark, sf_dir, name))
 
 
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -203,7 +193,7 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
 
 
 #: spread() decision memo, weakly keyed on the input DataFrame (the
-#: _TABLE_CACHE makes those stable objects): the split-count probe
+#: load_table memo makes those stable objects): the split-count probe
 #: converts the plan to an RDD on the driver — tens of ms per query
 #: build that repeat invocations shouldn't re-pay. Weak keys mean a
 #: dropped DataFrame drops its entry; no stale-identity hazard.

@@ -21,13 +21,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_TINY
+from presto_cached_examples_spark.plans import artifacts
 from presto_cached_examples_spark.sources import layouts
 from presto_cached_examples_spark.operators.scans import (
     _evolved_snapshots,
     _landed_docs_path,
     _partitioned_events,
     _reap_stale_siblings,
-    _LANDED_DOCS_WRITTEN,
 )
 from presto_cached_examples_spark.operators.joins import _bucketed_tables
 
@@ -102,7 +102,7 @@ def test_evolved_and_landed_layouts_never_rewrite(spark):
     docs = _landed_docs_path(spark, SF_TINY, "json")
     before_root, before_docs = _dir_snapshot(root), _dir_snapshot(docs)
     # second session: the landed-docs memo is session-local state
-    _LANDED_DOCS_WRITTEN.clear()
+    artifacts.forget(spark, SF_TINY, ("landed_docs", docs))
     q1, q2 = _evolved_snapshots(spark, SF_TINY)
     docs2 = _landed_docs_path(spark, SF_TINY, "json")
     assert (q1, q2, docs2) == (p1, p2, docs)

@@ -14,11 +14,11 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_TINY
 
 
-def _clear_lm_caches():
-    from presto_cached_examples_spark.llm import pipeline, text
+def _clear_lm_caches(spark):
+    from presto_cached_examples_spark.plans import artifacts
 
-    text._BIGRAM_BC_CACHE.clear()
-    pipeline._SURPRISAL_CACHE.clear()
+    artifacts.forget(spark, SF_TINY, "bigram_counts")
+    artifacts.forget(spark, SF_TINY, "surprisal")
 
 
 def test_bigram_model_builder_invariance(spark):
@@ -26,21 +26,12 @@ def test_bigram_model_builder_invariance(spark):
     whichever consumer builds it: the direct corpus aggregate (cold
     q_text_kn_bigram) and the doc-grain rollup (cold _doc_surprisal /
     q_text_bigram_lm) aggregate the same multiset of corpus bigrams."""
+    from presto_cached_examples_spark.llm.text import bigram_structs
     from presto_cached_examples_spark.sources.catalog import load_table
 
     d = load_table(spark, SF_TINY, "documents")
-    toks = F.split("text", " ")
     grams = d.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - 1),
-                lambda i: F.struct(
-                    F.element_at(toks, i).alias("w1"),
-                    F.element_at(toks, i + 1).alias("w2"),
-                ),
-            )
-        ).alias("bg"),
+        "doc_id", F.explode(bigram_structs(F.split("text", " "))).alias("bg")
     ).select("doc_id", "bg.w1", "bg.w2")
     direct = (
         grams.groupBy("w1", "w2")
@@ -70,14 +61,14 @@ def test_bigram_memo_population_order_irrelevant(spark):
     kn = specs["q_text_kn_bigram"].fn
     ppl = specs["q_quality_ppl_filter"].fn
 
-    _clear_lm_caches()
+    _clear_lm_caches(spark)
     cold = kn(spark, SF_TINY).collect()
 
-    _clear_lm_caches()
+    _clear_lm_caches(spark)
     ppl(spark, SF_TINY).collect()  # populates via the rollup derivation
     warmed = kn(spark, SF_TINY).collect()
 
-    _clear_lm_caches()
+    _clear_lm_caches(spark)
     assert cold, "kn_bigram returned no rows"
     assert cold == warmed
 
@@ -95,14 +86,14 @@ def test_surprisal_memo_values_invariant(spark):
     def key(rows):
         return sorted(rows, key=lambda r: r.source)
 
-    _clear_lm_caches()
+    _clear_lm_caches(spark)
     cold = key(ens(spark, SF_TINY).collect())
 
-    _clear_lm_caches()
+    _clear_lm_caches(spark)
     ppl(spark, SF_TINY).collect()  # materializes + memoizes surp
     warmed = key(ens(spark, SF_TINY).collect())
 
-    _clear_lm_caches()
+    _clear_lm_caches(spark)
     assert cold, "ensemble returned no rows"
     assert cold == warmed
 

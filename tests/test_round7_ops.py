@@ -12,8 +12,9 @@ from tests.test_plans import build
 
 
 def test_codebook_queries_build_without_jobs_when_warm(spark):
-    """Plan construction for the learned-quantizer family must trigger
-    ZERO Spark jobs once the per-session codebook cache is warm — the
+    """Plan construction for the learned-quantizer family, and for every
+    other query whose session artifacts make it job-free, must trigger
+    ZERO Spark jobs once the session-artifact store is warm — the
     quantizer is an ingest-time artifact, and a caller that
     builds-but-doesn't-run (explain, plan audit, registration sweeps)
     must not pay training jobs on every build. The first build per
@@ -34,8 +35,20 @@ def test_codebook_queries_build_without_jobs_when_warm(spark):
         "q_cluster_purity",  # assigns cells from the memoized codebook
         "q_dedup_embed_sweep",  # memoized scored candidate pairs
         "q_mix_schedule",  # memoized vtime split points (ADVICE r7 item 2)
+        # other session-artifact consumers
+        "q_events_rollup",  # persisted hourly tier
+        "q_text_pmi",  # checkpointed count tables
+        "q_text_kn_bigram",  # shared bigram model
+        "q_text_bigram_lm",
+        "q_quality_ppl_filter",  # shared surprisal relation
+        "q_quality_ensemble",
+        "q_graph_pagerank",  # checkpointed co-purchase edges
+        "q_graph_triangles",
+        "q_graph_degree_stats",
+        "q_graph_khop",
+        "q_scan_json",  # documents landed once per session
     )
-    # Warm every cache (codebooks, bloom count) — may run jobs.
+    # Warm every artifact (codebooks, bloom count, ...) — may run jobs.
     for name in warm:
         build(spark, name)
 
@@ -654,16 +667,11 @@ def test_kcenter_oversampling_scan_budget(spark):
     Evicting the memo forces a cold rebuild; the rebuilt selection
     must equal the memoized one (determinism across rebuilds)."""
     from presto_cached_examples_spark.llm import sampling
-    from presto_cached_examples_spark.llm.sampling import (
-        _KCENTER_CACHE,
-        _KCENTER_K,
-        _KCENTER_LAST_SCANS,
-    )
-    from presto_cached_examples_spark.session import session_token
+    from presto_cached_examples_spark.llm.sampling import _KCENTER_K, _KCENTER_LAST_SCANS
+    from presto_cached_examples_spark.plans import artifacts
 
-    key = (session_token(spark), SF_TINY, _KCENTER_K)
     before = sampling._kcenter_select(spark, SF_TINY)  # warm or build
-    _KCENTER_CACHE.pop(key, None)
+    artifacts.forget(spark, SF_TINY, ("kcenter", _KCENTER_K))
     rebuilt = sampling._kcenter_select(spark, SF_TINY)  # guaranteed cold
     assert rebuilt == before, "cold rebuild changed the selection"
     scans = _KCENTER_LAST_SCANS["scans"]

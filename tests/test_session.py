@@ -29,7 +29,7 @@ def test_session_reflects_detected_sizing(spark):
 
 # ---- input-size-gated persistence (plans/persistence.py) ----------------
 
-from presto_cached_examples_spark.plans import persistence
+from presto_cached_examples_spark.plans import artifacts, persistence
 from presto_cached_examples_spark.registry import all_specs
 from tests.conftest import SF_TINY
 
@@ -44,11 +44,12 @@ def test_persist_gate_auto_off_at_fixture_scale(spark):
     tracks nothing — the fixture-scale plan re-scans tiny parquet
     instead of paying an InMemoryRelation build (NOTES r9 item 6)."""
     _gate_conf(spark, "auto")
+    artifacts.release(spark)  # earlier tests may have pinned memo values
     df = spark.range(10)
     out = persistence.maybe_persist(df, SF_TINY)
     assert out is df
     assert not df.storageLevel.useMemory
-    assert persistence.release_intermediates(spark) == 0
+    assert artifacts.release(spark) == 0
 
 
 def test_persist_gate_auto_on_for_big_or_remote_input(spark):
@@ -66,15 +67,16 @@ def test_persist_gate_auto_on_for_big_or_remote_input(spark):
 
 def test_persist_gate_on_tracks_and_releases(spark):
     """on mode: the frame is persisted (lazy) and tracked per session;
-    release_intermediates unpersists everything exactly once."""
+    artifacts.release unpersists everything exactly once."""
     _gate_conf(spark, "on")
+    artifacts.release(spark)  # earlier tests may have pinned memo values
     try:
         df = spark.range(10)
         out = persistence.maybe_persist(df, SF_TINY)
         assert out.storageLevel.useMemory
-        assert persistence.release_intermediates(spark, blocking=True) == 1
+        assert artifacts.release(spark, blocking=True) == 1
         assert not out.storageLevel.useMemory
-        assert persistence.release_intermediates(spark) == 0
+        assert artifacts.release(spark) == 0
     finally:
         _gate_conf(spark, "auto")
 
@@ -107,4 +109,4 @@ def test_persist_gate_parity(spark, duck):
                 )
             finally:
                 _gate_conf(spark, "auto")
-        persistence.release_intermediates(spark, blocking=True)
+        artifacts.release(spark, blocking=True)
