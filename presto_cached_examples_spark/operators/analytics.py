@@ -33,6 +33,67 @@ _SESSION_GAP_MIN = 30
 _PCT_BUCKET_CENTS = 16384
 
 
+def _cents():
+    return F.round(F.col("l_extendedprice") * 100, 0)
+
+
+def _cent_cum_ranks(li: DataFrame) -> DataFrame:
+    """(l_returnflag, cents, cum, n) per distinct cent value: `cum` is
+    the cumulative row count up to and including that cent within its
+    flag, `n` the flag's row count. See q_agg_percentiles."""
+    pre = li.select(
+        "l_returnflag",
+        _cents().alias("cents"),
+        F.floor(_cents() / _PCT_BUCKET_CENTS).alias("bkt"),
+    )
+    # Both consumers of `pre` must plan the SAME subtree or the
+    # repartition is not shared: the join side infers these not-null
+    # filters below the exchange, the offsets side cannot (its
+    # isnotnull(bkt) stays above the Window). Stating them here makes
+    # the two exchanges canonically equal, so one is reused.
+    pre = pre.filter(
+        F.col("l_returnflag").isNotNull() & F.col("bkt").isNotNull()
+    ).repartition("l_returnflag", "bkt")
+    cb = pre.groupBy("l_returnflag", "bkt", "cents").agg(
+        F.count(F.lit(1)).alias("cnt")
+    )
+
+    bcounts = cb.groupBy("l_returnflag", "bkt").agg(F.sum("cnt").alias("bcnt"))
+    w_off = Window.partitionBy("l_returnflag").orderBy("bkt").rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    offsets = bcounts.select(
+        "l_returnflag",
+        "bkt",
+        F.coalesce(F.sum("bcnt").over(w_off), F.lit(0)).alias("off"),
+        F.sum("bcnt").over(Window.partitionBy("l_returnflag")).alias("n"),
+    )
+
+    w_cum = Window.partitionBy("l_returnflag", "bkt").orderBy("cents").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    return cb.join(F.broadcast(offsets), ["l_returnflag", "bkt"]).select(
+        "l_returnflag",
+        "cents",
+        (F.col("off") + F.sum("cnt").over(w_cum)).alias("cum"),
+        "n",
+    )
+
+
+def _cent_quantile(p: float):
+    """quantile_cont(cents, p) as an aggregate over _cent_cum_ranks rows."""
+    # h is 0-indexed offset into the sorted values; exact for these p
+    h = (F.col("n") - 1) * F.lit(p)
+    k_lo = F.floor(h) + 1  # 1-indexed rank of lower neighbor
+    k_hi = F.least(k_lo + 1, F.col("n"))
+    frac = h - F.floor(h)
+    v_lo = F.min(F.when(F.col("cum") >= k_lo, F.col("cents")))
+    v_hi = F.min(F.when(F.col("cum") >= k_hi, F.col("cents")))
+    # frac is constant per group; min() collapses it without state
+    fr = F.min(frac)
+    return v_lo + fr * (v_hi - v_lo)
+
+
 @register(
     "q_agg_percentiles",
     category="aggregation",
@@ -90,53 +151,20 @@ def q_agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     two full exchanges of ~|distinct cents| rows. One explicit
     repartition on (flag, bkt) up front now serves the cent aggregate
     (bkt is functionally determined by cents, so adding it to the
-    group keys changes nothing), the bucket subtotals, AND the window
-    — committed plans show 7 -> 5 exchanges total, and the cent-grain
-    relation crosses the wire once instead of twice (the survivors are
-    the tiny offsets window and the final 3-row aggregate)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    cents = F.round(F.col("l_extendedprice") * 100, 0)
-    pre = li.select(
-        "l_returnflag",
-        cents.alias("cents"),
-        F.floor(cents / _PCT_BUCKET_CENTS).alias("bkt"),
-    ).repartition("l_returnflag", "bkt")
-    cb = pre.groupBy("l_returnflag", "bkt", "cents").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-
-    bcounts = cb.groupBy("l_returnflag", "bkt").agg(F.sum("cnt").alias("bcnt"))
-    w_off = Window.partitionBy("l_returnflag").orderBy("bkt").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = bcounts.select(
-        "l_returnflag",
-        "bkt",
-        F.coalesce(F.sum("bcnt").over(w_off), F.lit(0)).alias("off"),
-        F.sum("bcnt").over(Window.partitionBy("l_returnflag")).alias("n"),
-    )
-
-    w_cum = Window.partitionBy("l_returnflag", "bkt").orderBy("cents").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    b = cb.join(F.broadcast(offsets), ["l_returnflag", "bkt"]).select(
-        "l_returnflag",
-        "cents",
-        (F.col("off") + F.sum("cnt").over(w_cum)).alias("cum"),
-        "n",
-    )
+    group keys changes nothing), the bucket subtotals, AND the window.
+    That repartition is only shared when both consumers plan the same
+    subtree, which the not-null filter in _cent_cum_ranks guarantees: the
+    executed plan scans lineitem once and writes one cent-grain
+    exchange, which the offsets branch reads back as a ReusedExchange
+    (with AQE off: 4 exchanges plus 1 reuse; without the filter it was
+    5 exchanges, 2 scans and 0 reuses). The other exchanges are the
+    tiny offsets window and the final 3-row aggregate; the cent
+    aggregate itself runs once per branch over the shared shuffle
+    output."""
+    b = _cent_cum_ranks(load_table(spark, sf_dir, "lineitem"))
 
     def quantile(p: float):
-        # h is 0-indexed offset into the sorted values; exact for these p
-        h = (F.col("n") - 1) * F.lit(p)
-        k_lo = F.floor(h) + 1  # 1-indexed rank of lower neighbor
-        k_hi = F.least(k_lo + 1, F.col("n"))
-        frac = h - F.floor(h)
-        v_lo = F.min(F.when(F.col("cum") >= k_lo, F.col("cents")))
-        v_hi = F.min(F.when(F.col("cum") >= k_hi, F.col("cents")))
-        # frac is constant per group; min() collapses it without state
-        fr = F.min(frac)
-        return F.round(v_lo + fr * (v_hi - v_lo), 2) / 100
+        return F.round(_cent_quantile(p), 2) / 100
 
     return b.groupBy("l_returnflag").agg(
         quantile(0.25).alias("p25"),
@@ -1003,56 +1031,13 @@ def q_agg_percentiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     are bit-identical (old-vs-new frames equal at sf0.1; oracle
     hash-match at 3 SFs)."""
     li = load_table(spark, sf_dir, "lineitem")
-    cents = F.round(F.col("l_extendedprice") * 100, 0)
-    # Round 16: same single-exchange fix as q_agg_percentiles — one
-    # up-front (flag, bkt) repartition serves the cent aggregate, the
-    # bucket subtotals, and the cumulative window (guide §2.4; the
-    # cent-grain relation used to cross the wire twice).
-    pre = li.select(
-        "l_returnflag",
-        cents.alias("cents"),
-        F.floor(cents / _PCT_BUCKET_CENTS).alias("bkt"),
-    ).repartition("l_returnflag", "bkt")
-    cb = pre.groupBy("l_returnflag", "bkt", "cents").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    bcounts = cb.groupBy("l_returnflag", "bkt").agg(F.sum("cnt").alias("bcnt"))
-    w_off = Window.partitionBy("l_returnflag").orderBy("bkt").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = bcounts.select(
-        "l_returnflag",
-        "bkt",
-        F.coalesce(F.sum("bcnt").over(w_off), F.lit(0)).alias("off"),
-        F.sum("bcnt").over(Window.partitionBy("l_returnflag")).alias("n"),
-    )
-    w_cum = Window.partitionBy("l_returnflag", "bkt").orderBy("cents").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    b = cb.join(F.broadcast(offsets), ["l_returnflag", "bkt"]).select(
-        "l_returnflag",
-        "cents",
-        (F.col("off") + F.sum("cnt").over(w_cum)).alias("cum"),
-        "n",
-    )
-
-    def quantile(p: float):
-        h = (F.col("n") - 1) * F.lit(p)
-        k_lo = F.floor(h) + 1
-        k_hi = F.least(k_lo + 1, F.col("n"))
-        frac = h - F.floor(h)
-        v_lo = F.min(F.when(F.col("cum") >= k_lo, F.col("cents")))
-        v_hi = F.min(F.when(F.col("cum") >= k_hi, F.col("cents")))
-        fr = F.min(frac)
-        return v_lo + fr * (v_hi - v_lo)
-
-    ex = b.groupBy("l_returnflag").agg(
-        quantile(0.49).alias("ex_lo"),
-        quantile(0.50).alias("ex_mid"),
-        quantile(0.51).alias("ex_hi"),
+    ex = _cent_cum_ranks(li).groupBy("l_returnflag").agg(
+        _cent_quantile(0.49).alias("ex_lo"),
+        _cent_quantile(0.50).alias("ex_mid"),
+        _cent_quantile(0.51).alias("ex_hi"),
     )
     ap = li.groupBy("l_returnflag").agg(
-        F.percentile_approx(cents, F.lit(0.50), F.lit(10000)).alias("ap")
+        F.percentile_approx(_cents(), F.lit(0.50), F.lit(10000)).alias("ap")
     )
     return ex.join(F.broadcast(ap), "l_returnflag").select(
         "l_returnflag",

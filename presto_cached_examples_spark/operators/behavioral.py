@@ -1499,9 +1499,11 @@ def q_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("r.antecedent", "r.consequent", "r.nab")
     ia = item.select(F.col("p").alias("antecedent"), F.col("np").alias("na"))
     ic = item.select(F.col("p").alias("consequent"), F.col("np").alias("nc"))
+    # item supports grow with the part domain; the support-filtered rule
+    # rows do not, so the rules side is the one that broadcasts
+    ra = ia.join(F.broadcast(rules), "antecedent")
     return (
-        rules.join(F.broadcast(ia), "antecedent")
-        .join(F.broadcast(ic), "consequent")
+        ic.join(F.broadcast(ra), "consequent")
         .join(F.broadcast(glob))
         .select(
             "antecedent",

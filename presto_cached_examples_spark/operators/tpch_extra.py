@@ -840,10 +840,13 @@ def q_parts_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the denylist is a tiny filtered slice applied as a
     broadcast anti-join BEFORE the distinct, and the part attribute
-    filter broadcast-SEMI-joins the fact rows before the distinct too
-    (round 16, guide §3.2 — the attribute slice keeps ~11% of parts,
-    so pre-filtering shrinks the distinct's exchange ~9x; the filter
-    on partkey commutes with a distinct keyed on (partkey, suppkey)).
+    filter SEMI-joins the fact rows before the distinct too (round 16,
+    guide §3.2 — the attribute slice keeps ~11% of parts, so
+    pre-filtering shrinks the distinct's exchange ~9x; the filter on
+    partkey commutes with a distinct keyed on (partkey, suppkey)).
+    That slice grows with SF, so neither join on it carries a
+    broadcast hint: the planner broadcasts it while it fits under
+    autoBroadcastJoinThreshold and shuffles it beyond.
     The final COUNT DISTINCT is keyed on the bounded
     brand x type x size domain, so the output and the final-stage
     state are fixed-size regardless of SF."""
@@ -859,15 +862,13 @@ def q_parts_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "lineitem")
         .select("l_partkey", "l_suppkey")
         .join(
-            F.broadcast(p.select("p_partkey")),
-            F.col("l_partkey") == F.col("p_partkey"),
-            "left_semi",
+            p.select("p_partkey"), F.col("l_partkey") == F.col("p_partkey"), "left_semi"
         )
         .join(F.broadcast(bad), F.col("l_suppkey") == F.col("s_suppkey"), "left_anti")
         .distinct()
     )
     return (
-        ps.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        ps.join(p, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.count_distinct("l_suppkey").alias("supplier_cnt"))
     )

@@ -139,6 +139,20 @@ def get_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
+        # Generated-code cache sized to the working set. At Spark's
+        # 100-entry default the LRU evicts each class before it is
+        # reused: one 25-query headline pass compiles ~280 classes, so
+        # every warm pass recompiled ~270 of them, and a warm sweep of
+        # the whole registry at sf0.001 recompiled ~3,400. Distinct
+        # classes of one session that sweeps all 245 queries at
+        # sf0.001 and then sf0.01 (as the tier-1 tests do): 2,693 +
+        # 177 = 2,870 (pyspark 4.1.2), so 8192 is ~2.9x the working
+        # set. Cost: ~17 MB more Metaspace after such a sweep (NOTES.md
+        # "Decisions with rationale" has the measurements). A static
+        # conf cannot change once the JVM is up, so a session not built
+        # by get_session keeps the 100-entry default; that includes
+        # tools/driver_sim.py's bare session.
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -391,10 +391,17 @@ def test_agg_percentiles_has_no_buffered_percentile_state(spark):
     """q_agg_percentiles (round-5 rewrite): exact quantiles must come
     from the cent-bucket decomposition — no `percentile` aggregate
     whose per-group state buffers every value (the r4 scale-killer).
-    The only window runs over domain-bounded per-bucket count rows."""
-    p = plan_of(build(spark, "q_agg_percentiles"), mode="formatted")
+    The only window runs over domain-bounded per-bucket count rows.
+    Executed, the up-front repartition is shared: the offsets branch
+    reuses the join branch's exchange, so lineitem is scanned once."""
+    df = build(spark, "q_agg_percentiles")
+    p = plan_of(df, mode="formatted")
     assert "percentile(" not in p.lower()
     assert "Window" in p  # the cum/n running-sum over bucket counts
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().finalPhysicalPlan().toString()
+    assert final.count("lineitem.parquet") == 1, final
+    assert "ReusedExchange" in final
 
 def test_scan_orc_pushes_filter_and_prunes_columns(spark):
     """q_scan_orc: the n_chars predicate must reach the ORC reader

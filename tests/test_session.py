@@ -110,3 +110,27 @@ def test_persist_gate_parity(spark, duck):
             finally:
                 _gate_conf(spark, "auto")
         artifacts.release(spark, blocking=True)
+
+
+# ---- generated-code cache sized to the working set (session.py) --------
+
+
+def test_codegen_cache_holds_the_headline_working_set(spark):
+    """A warm pass over the headline set must compile nothing: at Spark's
+    100-entry default the LRU evicts each generated class before the
+    next pass needs it (~270 recompilations per pass at sf0.001)."""
+    from bench import HEADLINE
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "8192"
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    specs = all_specs()
+
+    def run_pass():
+        for name in HEADLINE:
+            specs[name].fn(spark, SF_TINY).write.format("noop").mode("overwrite").save()
+
+    run_pass()
+    run_pass()
+    before = compiles.METRIC_COMPILATION_TIME().getCount()
+    run_pass()
+    assert compiles.METRIC_COMPILATION_TIME().getCount() - before == 0

@@ -15,6 +15,14 @@ NOT janino — the static census in NOTES.md disambiguates: a wide delta
 only indicts codegen when the query also carries a wide unrolled
 Column forest (grep `for i in range` over the package).
 
+Blind spot: the warm run follows its own cold run back to back, while
+that query's generated classes are still in Spark's codegen cache, so
+the census cannot see eviction ACROSS queries. A cache smaller than the
+working set of a whole pass (Spark's 100-entry default against ~280
+classes per headline pass) recompiles every plan on the next pass and
+still reads as warm here. To see it, count
+CodegenMetrics.METRIC_COMPILATION_TIME over a second full pass.
+
 Usage:
     python tools/codegen_census.py [--sf /root/testdata/sf0.01] [--top 25] [names...]
 
