@@ -8,7 +8,7 @@ DoublePsramBuffer480x480.cpp:196-202; "buffers are swapped here",
 readers observing in-flight writes (README.md:24-26).
 
 Spark-native translation: DataFrames are immutable, so "the hidden
-buffer" is a fully-materialized (cached + counted) DataFrame, and the
+buffer" is a fully-materialized (cached + scanned) DataFrame, and the
 swap is a temp-view pointer replacement. A reader that resolved the
 view before the swap keeps its old plan — exactly the old buffer — and
 never sees a partial write. Readers resolving after the swap see the
@@ -46,7 +46,12 @@ class SnapshotPublisher:
         single-catalog pointer swap the 100 TB variant does against a
         metastore."""
         staged = df.cache()
-        staged.count()  # force full materialization BEFORE any reader can see it
+        # Force full materialization BEFORE any reader can see it. One
+        # action on the staged plan's own QueryExecution is enough: that
+        # plan is the cache scan itself, so running it builds every
+        # cached partition (and any lazy checkpoint underneath), while
+        # count() would plan an extra aggregate stage on top.
+        staged._jdf.queryExecution().toRdd().count()
         staged.createOrReplaceGlobalTempView(self.name)  # atomic pointer swap
         self._retired, self._live = self._live, staged
         self.version += 1

@@ -9,17 +9,20 @@ buffer every frame can be quite costly"). Strategy knob CLEAR_TYPE 0-3
 trades write volume vs correctness (:68-69,181-186).
 
 Spark-native translation: an incrementally-maintained grouped
-aggregate. Each new micro-batch is partially aggregated (touching only
-the *keys present in the batch* — the dirty rects), then merged with
-the running state by key; the result is published as a snapshot (C3).
-The CLEAR_TYPE knob maps to `strategy`: "incremental" merges deltas,
-"full" recomputes from all data seen — both must produce identical
-results (the C4 equivalence, tested in tests/test_streaming.py).
+aggregate. Each fold unions the running state with the new
+micro-batch's rows (touching only the *keys present in the batch* —
+the dirty rects) and re-aggregates by key; the result is published as
+a snapshot (C3). The CLEAR_TYPE knob maps to `strategy`: "incremental"
+merges deltas, "full" recomputes from all data seen — both must
+produce identical results (the C4 equivalence, tested in
+tests/test_streaming.py and tests/test_properties.py).
 
-At 100 TB: the merge shuffles only |batch keys| rows against state
-co-partitioned by key — not the full history. Sum/count/min/max are
-mergeable; avg derives from (sum, count). This is exactly the partial
-aggregation Spark does *within* a job, lifted across jobs.
+At 100 TB: a fold shuffles the state (one row per key) plus the
+batch's per-key partials — map-side partial aggregation collapses the
+batch's rows before they cross the wire — and never the raw history.
+Sum/count/min/max are mergeable; avg derives from (sum, count). This is
+exactly the partial aggregation Spark does *within* a job, lifted
+across jobs.
 """
 
 from __future__ import annotations
@@ -32,7 +35,12 @@ from presto_cached_examples_spark.plans.snapshot import SnapshotPublisher
 
 class IncrementalAggregator:
     """Maintains `SELECT <keys>, count(*), sum(v), min(v), max(v)
-    GROUP BY <keys>` across arbitrarily many appended batches."""
+    GROUP BY <keys>` across arbitrarily many appended batches.
+
+    strategy="incremental" folds each batch into the state (dirty keys
+    only). strategy="full" recomputes from the raw-history store
+    (CLEAR_TYPE 2's memset-everything). Identical results, different
+    cost."""
 
     def __init__(
         self,
@@ -41,78 +49,78 @@ class IncrementalAggregator:
         value_col: str,
         name: str,
         checkpoint_every: int = 8,
+        strategy: str = "incremental",
     ):
+        if strategy not in ("incremental", "full"):
+            raise ValueError(f"unknown strategy {strategy!r}")
         self.spark = spark
         self.keys = keys
         self.value_col = value_col
+        self.strategy = strategy
         self.publisher = SnapshotPublisher(spark, name)
         self.checkpoint_every = checkpoint_every
         self._state: DataFrame | None = None
-        # Raw-history store for the "full" strategy: a single running
-        # union, lineage-truncated every `checkpoint_every` updates —
-        # NOT a kept-forever list of batch plans. At cluster scale this
-        # is the append-only ingest table itself; localCheckpoint is
-        # the single-process analog of reading back the durable store.
+        # Raw-history store, kept only by the "full" strategy: a single
+        # running union of every batch's rows in the state's shape
+        # (`_rows`), lineage-truncated every `checkpoint_every`
+        # updates — NOT a kept-forever list of batch plans. At cluster
+        # scale this is the append-only ingest table itself;
+        # localCheckpoint is the single-process analog of reading back
+        # the durable store.
         self._seen: DataFrame | None = None
         self._n_updates = 0
 
-    def _partial(self, df: DataFrame) -> DataFrame:
+    def _rows(self, df: DataFrame) -> DataFrame:
+        """Raw rows in the state's shape: each row is a group of one."""
         v = F.col(self.value_col)
+        return df.select(
+            *self.keys,
+            F.lit(1).alias("n"),
+            v.alias("sum_v"),
+            v.alias("min_v"),
+            v.alias("max_v"),
+        )
+
+    def _fold(self, df: DataFrame) -> DataFrame:
+        """Re-aggregate state-shaped rows by key. SUM/MIN/MAX skip
+        NULLs, so an all-NULL group stays NULL however it is split."""
         return df.groupBy(*self.keys).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(v).alias("sum_v"),
-            F.min(v).alias("min_v"),
-            F.max(v).alias("max_v"),
+            F.sum("n").alias("n"),
+            F.sum("sum_v").alias("sum_v"),
+            F.min("min_v").alias("min_v"),
+            F.max("max_v").alias("max_v"),
         )
 
-    @staticmethod
-    def _merge(state: DataFrame, delta: DataFrame, keys: list[str]) -> DataFrame:
-        s, d = state.alias("s"), delta.alias("d")
-        joined = s.join(d, keys, "full_outer")
-
-        def comb(fn, col):
-            return fn(F.col(f"s.{col}"), F.col(f"d.{col}"))
-
-        def zsum(col):
-            return F.coalesce(F.col(f"s.{col}"), F.lit(0).cast("long")) + F.coalesce(
-                F.col(f"d.{col}"), F.lit(0).cast("long")
-            )
-
-        return joined.select(
-            *keys,
-            zsum("n").alias("n"),
-            (
-                F.coalesce(F.col("s.sum_v"), F.lit(0.0)) + F.coalesce(F.col("d.sum_v"), F.lit(0.0))
-            ).alias("sum_v"),
-            comb(F.least, "min_v").alias("min_v"),  # least/greatest skip NULLs
-            comb(F.greatest, "max_v").alias("max_v"),
-        )
-
-    def update(self, batch: DataFrame, strategy: str = "incremental") -> int:
+    def update(self, batch: DataFrame) -> int:
         """Fold one appended batch into the aggregate and publish.
 
-        strategy="incremental" — merge the batch's partial agg into
-        state (dirty keys only). strategy="full" — recompute from the
-        raw-history store (CLEAR_TYPE 2's memset-everything).
-        Identical results, different cost.
+        The merge is one shape for both strategies: union state-shaped
+        rows, then group by key — one exchange with map-side partial
+        aggregation. "incremental" unions the running state with the
+        batch's rows; "full" folds the whole raw history.
 
-        Lineage discipline: both the history store and the merged state
-        are localCheckpoint'ed every `checkpoint_every` updates, so plan
-        depth stays bounded no matter how many batches fold in — a
-        retired generation's recompute replays at most
-        `checkpoint_every` merges, never the whole chain."""
-        self._seen = batch if self._seen is None else self._seen.unionByName(batch)
-        if strategy == "full" or self._state is None:
-            if strategy == "incremental" and self._state is None:
-                new_state = self._partial(batch)
-            else:
-                new_state = self._partial(self._seen)
-        else:
-            new_state = self._merge(self._state, self._partial(batch), self.keys)
+        Lineage discipline: every `checkpoint_every` updates the
+        incremental state (under "full", the history store it is
+        recomputed from) is marked for a LAZY localCheckpoint. The plan
+        is truncated at once, so its depth stays bounded no matter how
+        many batches fold in; the blocks are written by the publish job
+        that materializes this generation anyway, so checkpointing adds
+        no Spark job of its own. Between checkpoints a fold replays at
+        most `checkpoint_every` merges from the last checkpoint, never
+        the whole chain — and so does a retired generation's
+        recompute."""
         self._n_updates += 1
-        if self._n_updates % self.checkpoint_every == 0:
-            new_state = new_state.localCheckpoint(eager=True)
-            self._seen = self._seen.localCheckpoint(eager=True)
+        checkpoint = self._n_updates % self.checkpoint_every == 0
+        rows = self._rows(batch)
+        if self.strategy == "full":
+            self._seen = rows if self._seen is None else self._seen.unionByName(rows)
+            if checkpoint:
+                self._seen = self._seen.localCheckpoint(eager=False)
+            new_state = self._fold(self._seen)
+        else:
+            new_state = self._fold(rows if self._state is None else self._state.unionByName(rows))
+            if checkpoint:
+                new_state = new_state.localCheckpoint(eager=False)
         self._state = new_state
         return self.publisher.publish(self.result(new_state))
 

@@ -46,13 +46,13 @@ def run_incremental_pipeline(
     `strategy` is the CLEAR_TYPE knob (C4): "incremental" folds dirty
     keys; "full" recomputes from all batches seen — identical results
     (tests/test_properties.py), different cost."""
-    agg = IncrementalAggregator(spark, keys=keys, value_col=value_col, name=name)
+    agg = IncrementalAggregator(spark, keys=keys, value_col=value_col, name=name, strategy=strategy)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         # Materialize the batch before folding: foreachBatch hands us a
         # view bound to this micro-batch's source offsets, and the
         # aggregator's state plan must not re-read those offsets later.
-        agg.update(batch_df.localCheckpoint(eager=True), strategy=strategy)
+        agg.update(batch_df.localCheckpoint(eager=True))
 
     # Fresh checkpoint per run: a reused location would resume from old
     # offsets and silently skip the source.
@@ -75,7 +75,7 @@ def run_continuous_pipeline(
     name: str,
     processing_time: str = "1 second",
     min_batches: int = 3,
-    strategy: str = "incremental",
+    strategy: str | None = None,
     timeout_sec: float = 120.0,
     sample=None,
     agg: IncrementalAggregator | None = None,
@@ -103,16 +103,23 @@ def run_continuous_pipeline(
 
     `sample`, if given, is invoked from the waiting thread after the
     first publish — the concurrent-reader hook; `agg` lets a caller
-    supply (and observe) the aggregator before the run starts."""
+    supply (and observe) the aggregator before the run starts. `strategy`
+    defaults to "incremental", or to the supplied aggregator's own; a
+    `strategy` that contradicts the supplied aggregator raises
+    ValueError."""
     if agg is None:
-        agg = IncrementalAggregator(spark, keys=keys, value_col=value_col, name=name)
+        agg = IncrementalAggregator(
+            spark, keys=keys, value_col=value_col, name=name, strategy=strategy or "incremental"
+        )
+    elif strategy not in (None, agg.strategy):
+        raise ValueError(f"strategy={strategy!r} but the supplied aggregator is {agg.strategy!r}")
     published: list[int] = []
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         b = batch_df.localCheckpoint(eager=True)
         if b.isEmpty():
             return  # idle tick — nothing to fold, nothing to publish
-        published.append(agg.update(b, strategy=strategy))
+        published.append(agg.update(b))
 
     ckpt = tempfile.mkdtemp(prefix=f"pce_ckpt_{name}_")
     q = (

@@ -37,9 +37,22 @@ rows = st.lists(
 )
 
 
+# incremental-vs-full rows: values may be NULL, so a key can be all-NULL
+# in one batch or across several
+nullable_rows = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=9),  # key
+        st.one_of(st.none(), st.integers(min_value=-1000, max_value=1000)),  # value
+    ),
+    min_size=0,
+    max_size=40,
+)
+
+
 def mkdf(spark, data):
     return spark.createDataFrame(
-        [(i, k, float(v)) for i, (k, v) in enumerate(data)], "id long, k long, v double"
+        [(i, k, None if v is None else float(v)) for i, (k, v) in enumerate(data)],
+        "id long, k long, v double",
     )
 
 
@@ -86,18 +99,21 @@ def test_dedup_idempotent(spark, data):
 
 
 @PROP
-@given(batches=st.lists(rows, min_size=1, max_size=4))
+@given(batches=st.lists(nullable_rows, min_size=1, max_size=4))
 def test_incremental_equals_full_refresh(spark, batches):
     """C4: folding batches one at a time through the incremental merge
-    must equal a single full recompute over the concatenation."""
+    must equal a single full recompute over the concatenation, NULL
+    values included."""
     from presto_cached_examples_spark.streaming.incremental import IncrementalAggregator
 
     inc = IncrementalAggregator(spark, keys=["k"], value_col="v", name="prop_inc")
-    full = IncrementalAggregator(spark, keys=["k"], value_col="v", name="prop_full")
+    full = IncrementalAggregator(
+        spark, keys=["k"], value_col="v", name="prop_full", strategy="full"
+    )
     for batch in batches:
         df = mkdf(spark, batch)
-        inc.update(df, strategy="incremental")
-        full.update(df, strategy="full")
+        inc.update(df)
+        full.update(df)
     key = lambda r: r.k  # noqa: E731
     assert sorted(inc.result().collect(), key=key) == sorted(
         full.result().collect(), key=key
@@ -117,7 +133,7 @@ def test_incremental_lineage_stays_bounded(spark):
     sizes = []
     for i in range(52):
         df = spark.createDataFrame([("a", float(i)), ("b", 1.0)], "k string, v double")
-        agg.update(df, strategy="incremental")
+        agg.update(df)
         sizes.append(len(agg._state._jdf.queryExecution().toString()))
     # after a checkpoint the plan resets to a scan of the checkpoint RDD;
     # max plan size across updates must stay near the within-cycle peak,

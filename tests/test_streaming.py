@@ -191,10 +191,10 @@ def test_incremental_equals_full(spark):
         ev.filter(F.dayofmonth("ts") > 20),
     ]
     inc = IncrementalAggregator(spark, ["event_type"], "value", "inc_test")
-    full = IncrementalAggregator(spark, ["event_type"], "value", "full_test")
+    full = IncrementalAggregator(spark, ["event_type"], "value", "full_test", strategy="full")
     for s in slices:
-        inc.update(s, strategy="incremental")
-        full.update(s, strategy="full")
+        inc.update(s)
+        full.update(s)
         assert _sorted_rows(inc.result()) == _sorted_rows(full.result())
     # and the final state equals a one-shot aggregate over everything
     one_shot = IncrementalAggregator(spark, ["event_type"], "value", "once_test")
@@ -203,6 +203,78 @@ def test_incremental_equals_full(spark):
     inc.publisher.drop()
     full.publisher.drop()
     one_shot.publisher.drop()
+
+
+def test_incremental_all_null_group_stays_null(spark):
+    """A key whose values are all NULL has no sum, min, max or avg
+    however many folds it spans — the same as a one-shot GROUP BY and
+    as the "full" strategy. Its count still counts the rows."""
+    data = ([("a", None), ("b", 1.0)], [("a", None), ("b", 2.0)])
+    inc = IncrementalAggregator(spark, ["k"], "v", "null_inc")
+    full = IncrementalAggregator(spark, ["k"], "v", "null_full", strategy="full")
+    for d in data:
+        batch = spark.createDataFrame(d, "k string, v double")
+        inc.update(batch)
+        full.update(batch)
+    want = [("a", 2, None, None, None, None), ("b", 2, 3.0, 1.0, 2.0, 1.5)]
+    for agg in (inc, full):
+        assert sorted(tuple(r) for r in agg.result().collect()) == want
+        assert sorted(tuple(r) for r in agg.current().collect()) == want
+        agg.publisher.drop()
+
+
+def _event_batches(spark, n=4):
+    ev = load_table(spark, SF_TINY, "events")
+    return [ev.filter(F.col("event_id") % n == b) for b in range(n)]
+
+
+def test_incremental_fold_job_budget(spark):
+    """Each fold materializes its new state once, inside the publish:
+    no raw-history checkpoint, no separate eager state checkpoint, and
+    no extra aggregate stage to force the cache. Three jobs per fold at
+    most, checkpoint folds included."""
+    sc = spark.sparkContext
+    agg = IncrementalAggregator(
+        spark, ["user_id", "event_type"], "value", "fold_budget", checkpoint_every=2
+    )
+    jobs = []
+    for i, batch in enumerate(_event_batches(spark)):
+        group = f"fold_budget_{i}"
+        sc.setJobGroup(group, "one incremental fold")
+        try:
+            agg.update(batch)
+        finally:
+            sc.setJobGroup(None, None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert max(jobs) <= 3, f"jobs per fold: {jobs}"
+    agg.publisher.drop()
+
+
+def test_publish_materializes_and_retired_handles_recompute(spark):
+    """After publish returns, every partition of the published
+    generation is cached and readers scan that cache. A handle taken
+    before two further folds (one of them a checkpoint fold) still
+    returns its own generation's rows after that generation retires."""
+    batches = _event_batches(spark)
+    agg = IncrementalAggregator(
+        spark, ["user_id", "event_type"], "value", "publish_safety", checkpoint_every=2
+    )
+    agg.update(batches[0])
+    live = agg.publisher._live
+    cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(live._jdf)
+    assert cached.isDefined(), "published generation is not in the cache manager"
+    rdd_id = cached.get().cachedRepresentation().cacheBuilder().cachedColumnBuffers().id()
+    info = [i for i in spark.sparkContext._jsc.sc().getRDDStorageInfo() if i.id() == rdd_id]
+    assert info and info[0].numCachedPartitions() == info[0].numPartitions(), "partial publish"
+    assert "InMemoryTableScan" in agg.current()._jdf.queryExecution().executedPlan().toString()
+
+    handle = agg.current()
+    before = _sorted_rows(handle)
+    assert sum(r.n for r in handle.collect()) == batches[0].count()
+    agg.update(batches[1])  # checkpoint fold
+    agg.update(batches[2])
+    assert _sorted_rows(handle) == before
+    agg.publisher.drop()
 
 
 def test_observed_metrics(spark):
