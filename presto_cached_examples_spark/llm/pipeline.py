@@ -1135,7 +1135,7 @@ def q_mix_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/root/reference/src/DoublePsramBuffer480x480.cpp:189-193 — every
     frame emits the block list in one deterministic order; the virtual
     clock generalizes that to weighted sources)."""
-    from presto_cached_examples_spark.operators.distwindows import global_rank
+    from presto_cached_examples_spark.operators.distwindows import global_rank, range_splits
 
     d = load_table(spark, sf_dir, "documents")
     w = d.groupBy("source").agg(F.sqrt(F.count(F.lit(1))).alias("wt"))
@@ -1173,7 +1173,7 @@ def q_mix_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "mix_splits",
-        lambda: v.approxQuantile("vtime", [i / 64 for i in range(1, 64)], 0.001),
+        lambda: range_splits(v, "vtime"),
     )
     ranked = global_rank(v, "vtime", "doc_id", out_rank="pos", splits=splits)
     return ranked.select(
@@ -1577,7 +1577,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference provenance: C6 chained pipeline (/root/reference/src/
     SinglePsramBuffer480x480.cpp:97-176 — capture -> transform ->
     publish as one loop; this is that chain for corpus curation)."""
-    from presto_cached_examples_spark.operators.distwindows import global_rank
+    from presto_cached_examples_spark.operators.distwindows import global_rank, range_splits
 
     def curate():
         d = spread(load_table(spark, sf_dir, "documents"), spark)
@@ -1642,7 +1642,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "curation_splits",
-        lambda: v.approxQuantile("vtime", [i / 64 for i in range(1, 64)], 0.001),
+        lambda: range_splits(v, "vtime"),
     )
     ranked = global_rank(v, "vtime", "doc_id", out_rank="pos", splits=splits)
     return ranked.select(

@@ -1242,6 +1242,7 @@ def q_ntile_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     from presto_cached_examples_spark.operators.distwindows import (
         global_rank,
         ntile_from_rank,
+        range_splits,
     )
 
     o = load_table(spark, sf_dir, "orders")
@@ -1261,7 +1262,7 @@ def q_ntile_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "ntile_splits",
-        lambda: spend.approxQuantile("spend", [i / 64 for i in range(1, 64)], 0.001),
+        lambda: range_splits(spend, "spend"),
     )
     ranked = global_rank(spend, "spend", "o_custkey", descending=True, splits=splits)
     tiled = ranked.select(

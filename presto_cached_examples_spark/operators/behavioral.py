@@ -764,6 +764,7 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from presto_cached_examples_spark.operators.distwindows import (
         global_rank,
         ntile_from_rank,
+        range_splits,
     )
 
     o = load_table(spark, sf_dir, "orders")
@@ -789,9 +790,7 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "rfm_splits",
-        lambda: rfm.stat.approxQuantile(
-            ["recency_days", "frequency", "monetary"], [i / 64 for i in range(1, 64)], 0.001
-        ),
+        lambda: range_splits(rfm, ["recency_days", "frequency", "monetary"]),
     )
     scores = []
     for (col, desc, out), col_splits in zip(

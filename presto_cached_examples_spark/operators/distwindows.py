@@ -181,55 +181,50 @@ def q_window_range_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def range_splits(df: DataFrame, cols):
+    """Split points for ``global_rank``: the 63 inner 1/64-quantiles of
+    ``cols`` (one column name, or a list for one shared pass over
+    several) from approxQuantile at 0.1% relative error — a
+    deterministic Greenwald-Khanna pass, the "sample" step of
+    RangePartitioning, adaptive to skew where fixed-width buckets are
+    not. This is an eager Spark job; callers memoize the result per
+    (session, sf) under the build-time-action contract."""
+    return df.approxQuantile(cols, [i / 64 for i in range(1, 64)], 0.001)
+
+
 def global_rank(
     df: DataFrame,
     value_col: str,
     tiebreak_col: str,
     *,
+    splits: list[float],
     descending: bool = False,
     out_rank: str = "rank",
-    out_n: str = "n",
-    n_buckets: int = 64,
-    rel_err: float = 0.001,
-    quantile_source: DataFrame | None = None,
-    splits: "list[float] | None" = None,
 ) -> DataFrame:
     """Exact global 1-based rank by (value_col [DESC], tiebreak_col ASC)
     with NO data-proportional window partition — the explicit form of
     the range-partitioned sort a distributed engine uses for global
     ORDER BY, kept inside the DataFrame API so the rank is exact and
-    the plan auditable.
+    the plan auditable. Adds ``out_rank`` and the row count ``n``.
 
-    Mechanics: split points from approxQuantile (a deterministic
-    Greenwald-Khanna pass — the "sample" step of RangePartitioning,
-    adaptive to skew where fixed-width buckets are not) define value
-    ranges; every row's bucket is a pure expression over the broadcast
-    split array (ties share a bucket by construction, so ranks never
-    straddle a boundary); rank = prefix-summed count of earlier buckets
-    + row_number within the bucket. The only window over raw rows is
-    partitioned by bucket (~n/n_buckets rows); the offset prefix-sum
-    runs over <= n_buckets rows. Results are invariant to the split
-    points themselves — they shape the plan, never the answer — so the
-    SQL oracles of callers are untouched. `quantile_source` lets a
-    caller chaining several rankings point the split-point pass at the
-    shallow base relation instead of the growing chain (same rows,
-    same distribution, cheaper eager pass). `splits` lets a caller
-    hand in pre-computed split points instead — e.g. ONE multi-column
-    `approxQuantile` call shared across several rankings of the same
-    relation (q_rfm_segments) — turning k rankings' k sample passes
-    into one; the split values still shape only the plan, never the
-    answer.
+    Mechanics: ``splits`` (from ``range_splits``) define value ranges;
+    every row's bucket is a pure expression over the broadcast split
+    array (ties share a bucket by construction, so ranks never straddle
+    a boundary); rank = prefix-summed count of earlier buckets +
+    row_number within the bucket. The only window over raw rows is
+    partitioned by bucket (~n/64 rows); the offset prefix-sum runs over
+    <= 64 bucket rows. Results are invariant to the split points
+    themselves — they shape the plan, never the answer — so callers can
+    memoize them, or share one multi-column pass across several
+    rankings of the same relation (q_rfm_segments), and the SQL oracles
+    of callers are untouched.
 
     At 100 TB: split points come from the same sampled pass Spark's
-    own range exchange does; n_buckets scales with cluster
-    parallelism. The approxQuantile collect is split-point-sized
-    (ingest-time artifact, like the k-means codebooks)."""
+    own range exchange does. The approxQuantile collect is
+    split-point-sized (ingest-time artifact, like the k-means
+    codebooks)."""
     for tmp in ("__grk_bucket", "__grk_rin", "__grk_cnt", "__grk_off"):
         assert tmp not in df.columns, f"column {tmp} collides with global_rank internals"
-    if splits is None:
-        qs = [i / n_buckets for i in range(1, n_buckets)]
-        src = df if quantile_source is None else quantile_source
-        splits = src.approxQuantile(value_col, qs, rel_err)
     splits = sorted(set(splits))
     if splits:
         arr = F.array(*[F.lit(float(s)) for s in splits])
@@ -254,7 +249,7 @@ def global_rank(
     offsets = counts.select(
         "__grk_bucket",
         F.coalesce(F.sum("__grk_cnt").over(w_off), F.lit(0)).alias("__grk_off"),
-        F.sum("__grk_cnt").over(Window.partitionBy()).alias(out_n),
+        F.sum("__grk_cnt").over(Window.partitionBy()).alias("n"),
     )
     return (
         rows.join(F.broadcast(offsets), "__grk_bucket")

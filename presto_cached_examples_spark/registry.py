@@ -14,7 +14,7 @@ Build-time-action contract (ADVICE r6 item 4): builder functions are
 ALLOWED to run bounded, model-sized Spark jobs at plan-construction
 time when the query depends on a learned or measured artifact — k-means
 codebooks (llm/similarity._corpus_centroids), range split points
-(operators/distwindows.global_rank's approxQuantile), the standing-
+(operators/distwindows.range_splits' approxQuantile), the standing-
 corpus count that sizes the incremental-dedup Bloom filter, the
 bucketed/evolved warehouse materializations. All such artifacts live
 in the session-artifact store (plans/artifacts.memo, keyed on
@@ -38,66 +38,34 @@ from pyspark.sql import DataFrame, SparkSession
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _ROUND_RE = re.compile(r"\bROUND\s*\(", re.IGNORECASE)
+_PAREN_STEP = {"(": 1, ")": -1}
 
 
-def _search_outside_literals(sql: str, pos: int) -> "re.Match[str] | None":
-    """Find the next ``ROUND(`` that is NOT inside a ``'...'`` string
-    literal or a ``--`` line comment. The paren-matching pass below
-    already skips literals; without the same discipline HERE, an oracle
-    containing ``ROUND(`` inside a quoted literal or comment would be
-    rewritten into corrupted SQL (ADVICE r5 item 1)."""
-    i = pos
-    n = len(sql)
+def _code_positions(sql: str):
+    """Yield every index of ``sql`` that lies outside a ``'...'`` string
+    literal (``''`` escapes itself) and a ``--`` line comment. The ROUND
+    rewrite and its paren-balance guard read only these positions, so a
+    ``ROUND(`` or a paren inside a literal or comment is never taken for
+    SQL (ADVICE r5 item 1)."""
+    i, n = 0, len(sql)
     while i < n:
-        c = sql[i]
-        if c == "'":  # string literal ('' escapes itself)
+        if sql[i] == "'":
             i += 1
-            while i < n:
-                if sql[i] == "'":
-                    if i + 1 < n and sql[i + 1] == "'":
-                        i += 2
-                        continue
-                    break
-                i += 1
-            i += 1
-        elif c == "-" and i + 1 < n and sql[i + 1] == "-":  # line comment
+            while i < n and not (sql[i] == "'" and sql[i + 1 : i + 2] != "'"):
+                i += 2 if sql[i] == "'" else 1
+            i += 1  # past the closing quote
+        elif sql.startswith("--", i):
             nl = sql.find("\n", i)
             i = n if nl < 0 else nl + 1
         else:
-            m = _ROUND_RE.match(sql, i)
-            if m:
-                return m
+            yield i
             i += 1
-    return None
 
 
 def _paren_balance(sql: str) -> int:
-    """Net paren balance counting only parens outside string literals
-    and line comments — the transform's loud-failure invariant."""
-    bal = 0
-    i = 0
-    n = len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'":
-            i += 1
-            while i < n:
-                if sql[i] == "'":
-                    if i + 1 < n and sql[i + 1] == "'":
-                        i += 2
-                        continue
-                    break
-                i += 1
-        elif c == "-" and i + 1 < n and sql[i + 1] == "-":
-            nl = sql.find("\n", i)
-            i = n if nl < 0 else nl
-            continue
-        elif c == "(":
-            bal += 1
-        elif c == ")":
-            bal -= 1
-        i += 1
-    return bal
+    """Net paren balance outside string literals and line comments —
+    the transform's loud-failure invariant."""
+    return sum(_PAREN_STEP.get(sql[i], 0) for i in _code_positions(sql))
 
 
 def neutralize_negative_zero(sql: str) -> str:
@@ -120,41 +88,27 @@ def neutralize_negative_zero(sql: str) -> str:
     """
     out: list[str] = []
     pos = 0
-    while True:
-        m = _search_outside_literals(sql, pos)
+    code = _code_positions(sql)
+    for i in code:
+        m = _ROUND_RE.match(sql, i)
         if not m:
-            out.append(sql[pos:])
-            return "".join(out)
-        out.append(sql[pos : m.start()])
-        # find the close paren matching ROUND's open paren
-        depth = 0
-        i = m.end() - 1  # index of the '('
-        n = len(sql)
-        while i < n:
-            c = sql[i]
-            if c == "'":  # skip string literals ('' escapes itself)
-                i += 1
-                while i < n:
-                    if sql[i] == "'":
-                        if i + 1 < n and sql[i + 1] == "'":
-                            i += 2
-                            continue
-                        break
-                    i += 1
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            i += 1
+            continue
+        # the close paren matching ROUND's open paren: the first paren
+        # after i is that open paren (only whitespace may precede it)
+        depth, close = 0, len(sql)
+        for j in code:
+            depth += _PAREN_STEP.get(sql[j], 0)
+            if depth == 0 and sql[j] == ")":
+                close = j
+                break
         # recurse so nested ROUNDs inside the call get wrapped too;
-        # split at the matched open paren (m.end()-1), not a fixed
-        # "ROUND(" offset — the regex also matches "ROUND (" with space
-        head = sql[m.start() : m.end()]  # "ROUND(" incl. any whitespace
-        inner = head + neutralize_negative_zero(sql[m.end() : i]) + ")"
-        out.append("(" + inner + " + 0.0)")
-        pos = i + 1
+        # m.group() keeps "ROUND (" with its whitespace as written
+        inner = neutralize_negative_zero(sql[m.end() : close])
+        out += [sql[pos : m.start()], "(", m.group(), inner, ") + 0.0)"]
+        pos = close + 1
+    out.append(sql[pos:])
+    return "".join(out)
+
 
 # Modules that register queries on import.
 _QUERY_MODULES = (
@@ -360,13 +314,7 @@ def _ensure_loaded() -> None:
     if _LOADED:
         return
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as e:
-            # Module not built yet (incremental rounds) — skip, don't fail
-            # the whole surface.
-            if mod.split(".")[-1] not in str(e):
-                raise
+        importlib.import_module(mod)
     _LOADED = True
 
 

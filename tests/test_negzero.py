@@ -78,10 +78,25 @@ def test_neutralized_sql_kills_negative_zero():
         ("SELECT ROUND (x, 2) AS a", "SELECT (ROUND (x, 2) + 0.0) AS a"),
         # NULL passthrough is preserved by + 0.0 (semantic no-op)
         ("SELECT ROUND(NULL::DOUBLE, 2) AS r", "SELECT (ROUND(NULL::DOUBLE, 2) + 0.0) AS r"),
+        # a paren inside a line comment does not close the call
+        (
+            "SELECT ROUND(a -- closes early)\n, 2) AS r FROM t",
+            "SELECT (ROUND(a -- closes early)\n, 2) + 0.0) AS r FROM t",
+        ),
     ],
 )
 def test_neutralize_rewrite_shapes(sql, expect):
     assert neutralize_negative_zero(sql) == expect
+
+
+def test_missing_query_module_fails_loudly(monkeypatch):
+    """A renamed or deleted operator module must fail the registry load,
+    not silently shrink the query surface."""
+    missing = "presto_cached_examples_spark.operators.no_such_module"
+    monkeypatch.setattr(registry, "_QUERY_MODULES", (*registry._QUERY_MODULES, missing))
+    monkeypatch.setattr(registry, "_LOADED", False)
+    with pytest.raises(ModuleNotFoundError, match="no_such_module"):
+        registry.all_specs()
 
 
 def test_all_registered_oracles_are_neutralized():

@@ -9,6 +9,7 @@ import os
 
 from tests.conftest import SF_TINY
 from tests.test_plans import build
+from tests.util import jobs_during
 
 
 def test_codebook_queries_build_without_jobs_when_warm(spark):
@@ -52,15 +53,7 @@ def test_codebook_queries_build_without_jobs_when_warm(spark):
     for name in warm:
         build(spark, name)
 
-    sc = spark.sparkContext
-    group = "r7-warm-build-probe"
-    sc.setJobGroup(group, "warm builds must be job-free")
-    try:
-        for name in warm:
-            build(spark, name)
-    finally:
-        sc.setJobGroup(None, None)
-    ran = sc.statusTracker().getJobIdsForGroup(group)
+    ran = jobs_during(spark, lambda: [build(spark, name) for name in warm])
     assert ran == [], f"warm plan-build ran Spark jobs: {ran}"
 
 

@@ -22,7 +22,7 @@ from presto_cached_examples_spark.streaming import runner, stateful
 from presto_cached_examples_spark.streaming.incremental import IncrementalAggregator
 from presto_cached_examples_spark.streaming.windows import q_stream_tumbling
 from tests.conftest import SF_TINY
-from tests.util import canon_rows
+from tests.util import canon_rows, jobs_during
 
 
 def _sorted_rows(df):
@@ -233,19 +233,10 @@ def test_incremental_fold_job_budget(spark):
     no raw-history checkpoint, no separate eager state checkpoint, and
     no extra aggregate stage to force the cache. Three jobs per fold at
     most, checkpoint folds included."""
-    sc = spark.sparkContext
     agg = IncrementalAggregator(
         spark, ["user_id", "event_type"], "value", "fold_budget", checkpoint_every=2
     )
-    jobs = []
-    for i, batch in enumerate(_event_batches(spark)):
-        group = f"fold_budget_{i}"
-        sc.setJobGroup(group, "one incremental fold")
-        try:
-            agg.update(batch)
-        finally:
-            sc.setJobGroup(None, None)
-        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    jobs = [len(jobs_during(spark, lambda: agg.update(b))) for b in _event_batches(spark)]
     assert max(jobs) <= 3, f"jobs per fold: {jobs}"
     agg.publisher.drop()
 
@@ -275,19 +266,6 @@ def test_publish_materializes_and_retired_handles_recompute(spark):
     agg.update(batches[2])
     assert _sorted_rows(handle) == before
     agg.publisher.drop()
-
-
-def test_observed_metrics(spark):
-    from presto_cached_examples_spark.observability import StageTimer, observed
-
-    df = load_table(spark, SF_TINY, "events")
-    t = StageTimer()
-    dfo, obs = observed(df.filter(F.col("event_type") == "click"))
-    n = dfo.count()
-    t.lap("scan")
-    assert obs.get["rows"] == n
-    line = t.summary(rows=n)
-    assert "scan=" in line and "F=" in line
 
 
 def test_incremental_pipeline_end_to_end(spark, tmp_path):

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import uuid
+
 import pandas as pd
 
 
@@ -51,3 +53,16 @@ def assert_frames_match(spark_df, duck_rel, context: str = "") -> None:
     assert len(s_rows) == len(o_rows), f"{context}: {len(s_rows)} rows vs {len(o_rows)}"
     mismatches = [(a, b) for a, b in zip(s_rows, o_rows) if a != b]
     assert not mismatches, f"{context}: first mismatch {mismatches[0]}"
+
+
+def jobs_during(spark, fn) -> list[int]:
+    """Ids of the Spark jobs that ``fn()`` runs, read from a job group
+    of its own."""
+    sc = spark.sparkContext
+    group = f"jobs-during-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs_during probe")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
