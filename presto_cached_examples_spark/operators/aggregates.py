@@ -17,15 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from presto_cached_examples_spark.registry import register
+from presto_cached_examples_spark.registry import register, register_sql
 from presto_cached_examples_spark.sources.catalog import load_table
 
 
-def _r2(col):  # ROUND(x, 2) — both sides of every oracle use this
-    return F.round(col, 2)
-
-
-@register(
+register_sql(
     "q_agg_pricing",
     category="aggregation",
     oracle="""
@@ -45,32 +41,9 @@ def _r2(col):  # ROUND(x, 2) — both sides of every oracle use this
     GROUP BY l_returnflag, l_linestatus
     """,
 )
-def q_agg_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship TPC-H-Q1-style pricing summary (SURVEY.md §7 M0).
-
-    Plan shape: parquet scan (shipdate filter pushed, 8 of 11 columns
-    pruned) → partial HashAggregate → 6-group exchange → final
-    HashAggregate. Whole-stage codegen end to end.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.filter(F.col("l_shipdate").cast("date") <= F.lit("1998-09-02").cast("date"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            _r2(F.sum("l_quantity")).alias("sum_qty"),
-            _r2(F.sum("l_extendedprice")).alias("sum_base_price"),
-            _r2(F.sum(disc_price)).alias("sum_disc_price"),
-            _r2(F.sum(disc_price * (1 + F.col("l_tax")))).alias("sum_charge"),
-            _r2(F.avg("l_quantity")).alias("avg_qty"),
-            _r2(F.avg("l_extendedprice")).alias("avg_price"),
-            _r2(F.avg("l_discount")).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
 
 
-@register(
+register_sql(
     "q_agg_distinct",
     category="aggregation",
     oracle="""
@@ -82,19 +55,10 @@ def q_agg_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderpriority
     """,
 )
-def q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact count(distinct) per group — Spark plans the 2-phase expand
-    + partial/final aggregate automatically."""
-    return (
-        load_table(spark, sf_dir, "orders")
-        .groupBy("o_orderpriority")
-        .agg(
-            F.countDistinct("o_custkey").alias("n_customers"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-    )
 
 
+# Builder kept: the query is the HLL++ sketch, and its oracle states only
+# the accuracy contract (an exact COUNT(DISTINCT) and a constant TRUE).
 @register(
     "q_agg_approx",
     category="aggregation",
@@ -144,7 +108,7 @@ def q_agg_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q_agg_stats",
     category="aggregation",
     oracle="""
@@ -160,20 +124,9 @@ def q_agg_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY event_type
     """,
 )
-def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Statistical aggregates per group (C8 metrics analog)."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        _r2(F.min("value")).alias("min_value"),
-        _r2(F.max("value")).alias("max_value"),
-        _r2(F.avg("value")).alias("avg_value"),
-        _r2(F.stddev_samp("value")).alias("stddev_value"),
-        _r2(F.var_samp("value")).alias("var_value"),
-        F.count(F.lit(1)).alias("n"),
-    )
 
 
-@register(
+register_sql(
     "q_agg_rollup",
     category="aggregation",
     oracle="""
@@ -186,26 +139,9 @@ def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
 )
-def q_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP over (returnflag, linestatus) — subtotal + grand-total rows.
-
-    NULL grouping markers are coalesced to '<all>' on both sides so the
-    hash compare can't be tripped by NULL-sorting differences.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(_r2(F.sum("l_quantity")).alias("sum_qty"), F.count(F.lit(1)).alias("n"))
-        .select(
-            F.coalesce("l_returnflag", F.lit("<all>")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("<all>")).alias("linestatus"),
-            "sum_qty",
-            "n",
-        )
-    )
 
 
-@register(
+register_sql(
     "q_agg_cube",
     category="aggregation",
     oracle="""
@@ -218,22 +154,9 @@ def q_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY CUBE (o_orderstatus, o_orderpriority)
     """,
 )
-def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE over (orderstatus, orderpriority) — all grouping-set combos."""
-    return (
-        load_table(spark, sf_dir, "orders")
-        .cube("o_orderstatus", "o_orderpriority")
-        .agg(_r2(F.sum("o_totalprice")).alias("sum_price"), F.count(F.lit(1)).alias("n"))
-        .select(
-            F.coalesce("o_orderstatus", F.lit("<all>")).alias("orderstatus"),
-            F.coalesce("o_orderpriority", F.lit("<all>")).alias("orderpriority"),
-            "sum_price",
-            "n",
-        )
-    )
 
 
-@register(
+register_sql(
     "q_agg_gsets",
     category="aggregation",
     oracle="""
@@ -245,24 +168,9 @@ def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
     """,
 )
-def q_agg_gsets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS — one total per returnflag and one per
-    linestatus, in a single pass (Expand node, not two scans)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("lineitem")
-    return spark.sql(
-        """
-        SELECT
-          COALESCE(l_returnflag, '<all>') AS returnflag,
-          COALESCE(l_linestatus, '<all>') AS linestatus,
-          COUNT(*)                        AS n
-        FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-        """
-    )
 
 
-@register(
+register_sql(
     "q_agg_having",
     category="aggregation",
     oracle="""
@@ -275,21 +183,9 @@ def q_agg_gsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING COUNT(*) >= 15
     """,
 )
-def q_agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Post-aggregation filter (HAVING) — filter applies after the final
-    HashAggregate; Catalyst cannot (and must not) push it below."""
-    return (
-        load_table(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            _r2(F.sum("o_totalprice")).alias("total_spent"),
-        )
-        .filter(F.col("n_orders") >= 15)
-    )
 
 
-@register(
+register_sql(
     "q_agg_conditional",
     category="aggregation",
     oracle="""
@@ -303,20 +199,9 @@ def q_agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag
     """,
 )
-def q_agg_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot-style conditional aggregation — sum(CASE WHEN ...) wide
-    metrics in one pass (reference analog: when/otherwise param updates,
-    SinglePsramBuffer480x480.cpp:121-141)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        _r2(F.sum(F.when(F.col("l_linestatus") == "F", F.col("l_extendedprice")).otherwise(0.0))).alias("rev_f"),
-        _r2(F.sum(F.when(F.col("l_linestatus") == "O", F.col("l_extendedprice")).otherwise(0.0))).alias("rev_o"),
-        F.sum(F.when(F.col("l_discount") > 0.05, 1).otherwise(0)).cast("long").alias("n_discounted"),
-        _r2(F.avg(F.when(F.col("l_quantity") >= 25, F.col("l_extendedprice")))).alias("avg_price_bulk"),
-    )
 
 
-@register(
+register_sql(
     "q_agg_bitwise",
     category="aggregation",
     oracle="""
@@ -329,17 +214,3 @@ def q_agg_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY event_type
     """,
 )
-def q_agg_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bitwise aggregates (AND/OR/XOR fold over a key column) — the
-    flag-mask summaries bitmap indexes and feature-flag rollups use.
-    Fully mergeable single-long state per group: map-side partials
-    carry one 8-byte value, the cheapest aggregate state there is."""
-    return (
-        load_table(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(
-            F.bit_and("user_id").alias("all_bits"),
-            F.bit_or("user_id").alias("any_bits"),
-            F.bit_xor("user_id").alias("parity_bits"),
-        )
-    )

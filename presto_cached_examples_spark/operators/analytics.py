@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from presto_cached_examples_spark.plans.artifacts import memo
-from presto_cached_examples_spark.registry import register
+from presto_cached_examples_spark.registry import register, register_sql
 from presto_cached_examples_spark.sources.catalog import load_table, spread
 
 _SESSION_GAP_MIN = 30
@@ -392,7 +392,9 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Both key columns are non-null, so NOT IN is a plain anti join here;
+# one NULL in the subquery would empty the result.
+register_sql(
     "q_subquery_in",
     category="subquery",
     oracle="""
@@ -406,30 +408,9 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     """,
 )
-def q_subquery_in(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IN + NOT IN subqueries. NOT IN is the NULL-semantics trap: one
-    NULL in the subquery empties the result — here both key columns are
-    non-null, so NOT IN ≡ anti join and Spark plans it as
-    LeftAnti(NAAJ). Built with the SQL entry point to exercise the
-    parser → decorrelation path on the Spark side too."""
-    from presto_cached_examples_spark.sources.catalog import register_all
-
-    register_all(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT o_orderkey, o_custkey, ROUND(o_totalprice, 2) AS o_totalprice
-        FROM orders
-        WHERE o_custkey IN (
-          SELECT c_custkey FROM customer WHERE c_mktsegment = 'MACHINERY'
-        )
-        AND o_orderkey NOT IN (
-          SELECT l_orderkey FROM lineitem WHERE l_discount > 0.09
-        )
-        """
-    )
 
 
-@register(
+register_sql(
     "q_subquery_corr",
     category="subquery",
     oracle="""
@@ -441,24 +422,6 @@ def q_subquery_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     """,
 )
-def q_subquery_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated scalar subquery: customers above their nation's mean
-    balance. Catalyst decorrelates this into an aggregate + join
-    (RewriteCorrelatedScalarSubquery) — the plan a hand-written
-    group-then-join would produce, for free."""
-    from presto_cached_examples_spark.sources.catalog import register_all
-
-    register_all(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT c_custkey, c_nationkey, ROUND(c_acctbal, 2) AS c_acctbal
-        FROM customer c
-        WHERE c_acctbal > (
-          SELECT AVG(c2.c_acctbal) FROM customer c2
-          WHERE c2.c_nationkey = c.c_nationkey
-        )
-        """
-    )
 
 
 @register(
@@ -1162,7 +1125,7 @@ def q_profile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q_lateral_topk",
     category="subquery",
     oracle="""
@@ -1175,28 +1138,6 @@ def q_profile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) t
     """,
 )
-def q_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LATERAL correlated subquery: per nation, the top-2 customers by
-    balance — the dependent-join SQL surface (Spark 4 LATERAL), built
-    through the SQL entry point to exercise parser → decorrelation.
-    Catalyst rewrites the dependent join into the same window/top-k
-    shape as q_topk_group, so no per-outer-row re-execution survives
-    into the physical plan; the unique (acctbal DESC, custkey) order
-    keeps the LIMIT deterministic on both engines."""
-    from presto_cached_examples_spark.sources.catalog import register_all
-
-    register_all(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT n.n_name, t.c_custkey, ROUND(t.c_acctbal, 2) AS c_acctbal
-        FROM nation n,
-        LATERAL (
-          SELECT c_custkey, c_acctbal FROM customer c
-          WHERE c.c_nationkey = n.n_nationkey
-          ORDER BY c_acctbal DESC, c_custkey LIMIT 2
-        ) t
-        """
-    )
 
 
 @register(

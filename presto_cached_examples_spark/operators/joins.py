@@ -3,11 +3,10 @@
 Scale posture, per join:
 - Equi-joins on keys shuffle both sides by the key (sort-merge) unless
   one side is broadcastable. Dimensions bounded in size (region=5,
-  nation=25, and filtered small sides) are explicitly `F.broadcast`-ed
-  so the 100 TB fact side never shuffles for them.
-- The multiway query joins facts in FK order so each join's build side
-  is the already-reduced result, and AQE can re-plan to broadcast when
-  a filtered side turns out small.
+  nation=25, and filtered small sides) broadcast, by hint in a builder
+  and by the size threshold in a SQL-only entry, so the 100 TB fact
+  side never shuffles for them. AQE re-plans to broadcast when a
+  filtered side turns out small.
 - Non-equi (range/as-of) joins always pair a *bounded* side with the
   big side: the bounded side broadcasts, so the big side is a single
   scan — no cartesian shuffle. The as-of join is an equi-join on the
@@ -21,12 +20,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from presto_cached_examples_spark.registry import register
+from presto_cached_examples_spark.registry import register, register_sql
 from presto_cached_examples_spark.sources import layouts
 from presto_cached_examples_spark.sources.catalog import load_table, source_fingerprint
 
 
-@register(
+register_sql(
     "q_join_inner",
     category="join",
     oracle="""
@@ -36,21 +35,11 @@ from presto_cached_examples_spark.sources.catalog import load_table, source_fing
     WHERE c.c_mktsegment = 'BUILDING'
     """,
 )
-def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi inner join orders ⋈ customer. The segment filter reduces the
-    customer side ~5×; AQE converts to broadcast when it fits."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    return o.join(c, o.o_custkey == c.c_custkey, "inner").select(
-        "o_orderkey",
-        "o_custkey",
-        "c_name",
-        "c_mktsegment",
-        F.round("o_totalprice", 2).alias("o_totalprice"),
-    )
 
 
-@register(
+# region and nation are a few rows at every scale factor, so the size
+# threshold broadcasts them without a hint (tests/test_plans.py pins it).
+register_sql(
     "q_join_broadcast",
     category="join",
     oracle="""
@@ -58,18 +47,13 @@ def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM nation n JOIN region r ON n.n_regionkey = r.r_regionkey
     """,
 )
-def q_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit broadcast join — region (5 rows, bounded at every sf) is
-    the C1 'small hot side cached' analog. Plan shows BroadcastHashJoin
-    with zero shuffle of the probe side (tests/test_plans.py)."""
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region")
-    return n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey).select(
-        "n_nationkey", "n_name", F.col("r_name").alias("region_name")
-    )
 
 
-@register(
+# Catalyst infers no semi-filter from the nation-region chain, so non-ASIA
+# customers and suppliers reach the fact joins. That costs nothing while
+# every join broadcasts: at sf0.1 the SQL plan has one stage fewer than an
+# explicitly semi-filtered builder, at equal shuffle bytes.
+register_sql(
     "q_join_multiway",
     category="join",
     oracle="""
@@ -88,60 +72,9 @@ def q_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n.n_name
     """,
 )
-def q_join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5-style 6-way join → revenue by nation. Dimension chain
-    (region→nation→supplier) broadcasts; the fact chain joins in FK
-    order so the largest table (lineitem) joins an already-filtered
-    orders side.
-
-    Round 15 (guide §3.2, transitive-filter pushdown): the region
-    predicate only bound at the LAST join, so non-ASIA customers and
-    suppliers survived through the c⋈o and lineitem joins — ~5x more
-    rows through the two biggest shuffles than the answer needs.
-    Catalyst cannot infer the semi-filter (the c_nationkey =
-    s_nationkey constraint arrives after the fact joins), so it is
-    explicit now: the ASIA nation keys (a broadcast-sized dimension
-    join, computed once as `asian`) semi-filter customer AND supplier
-    before any fact join, and the final name lookup joins `asian`
-    itself, making the old nation/region re-join (by then a tautology)
-    unnecessary. Result-identical — the semi-filters are implied by
-    the original join chain (old-vs-new frames equal at sf0.1; oracle
-    hash-match at 3 SFs). Warm min 0.94–1.2 → 0.68–1.0 s at sf0.1;
-    at scale the win is the 5x row cut in the fact shuffles."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate").cast("date") >= F.lit("1996-01-01").cast("date"))
-        & (F.col("o_orderdate").cast("date") < F.lit("1998-01-01").cast("date"))
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    asian = (
-        n.alias("nx")
-        .join(
-            F.broadcast(r.alias("rx")),
-            F.col("nx.n_regionkey") == F.col("rx.r_regionkey"),
-        )
-        .select(F.col("nx.n_nationkey").alias("ak"), F.col("nx.n_name").alias("a_name"))
-    )
-    a1, a2, a3 = asian.alias("a1"), asian.alias("a2"), asian.alias("a3")
-    c2 = c.join(F.broadcast(a1), c["c_nationkey"] == F.col("a1.ak"), "left_semi")
-    s2 = s.join(F.broadcast(a2), s["s_nationkey"] == F.col("a2.ak"), "left_semi")
-    return (
-        c2.join(o, c2["c_custkey"] == o["o_custkey"])
-        .join(li, li["l_orderkey"] == o["o_orderkey"])
-        .join(s2, (li["l_suppkey"] == s2["s_suppkey"]) & (c2["c_nationkey"] == s2["s_nationkey"]))
-        .join(F.broadcast(a3), s2["s_nationkey"] == F.col("a3.ak"))
-        .groupBy(F.col("a3.a_name").alias("nation"))
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
-            F.count(F.lit(1)).alias("n_lineitems"),
-        )
-    )
 
 
-@register(
+register_sql(
     "q_join_left",
     category="join",
     oracle="""
@@ -154,23 +87,9 @@ def q_join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY c.c_custkey, c.c_name
     """,
 )
-def q_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left outer join keeping customers with zero urgent orders; the
-    ON-clause extra predicate (vs WHERE) is the part outer joins get
-    wrong most often — checked exactly against the oracle."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        c.join(o, (c.c_custkey == o.o_custkey) & (o.o_orderpriority == "1-URGENT"), "left")
-        .groupBy("c_custkey", "c_name")
-        .agg(
-            F.count("o_orderkey").alias("n_orders"),
-            F.round(F.coalesce(F.sum("o_totalprice"), F.lit(0.0)), 2).alias("total_spent"),
-        )
-    )
 
 
-@register(
+register_sql(
     "q_join_full",
     category="join",
     oracle="""
@@ -190,33 +109,9 @@ def q_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM rich FULL OUTER JOIN big ON rich.c_custkey = big.o_custkey
     """,
 )
-def q_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full outer join with genuinely unmatched rows on both sides
-    (rich customers without big orders; big-order customers who aren't
-    rich). NULL columns survive into the result."""
-    c = (
-        load_table(spark, sf_dir, "customer")
-        .filter(F.col("c_acctbal") > 9000)
-        .select("c_custkey", F.round("c_acctbal", 2).alias("acctbal"))
-    )
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_totalprice") > 400000)
-        .groupBy("o_custkey")
-        .agg(
-            F.round(F.sum("o_totalprice"), 2).alias("big_total"),
-            F.count(F.lit(1)).alias("n_big"),
-        )
-    )
-    return c.join(o, c.c_custkey == o.o_custkey, "full").select(
-        F.coalesce(c.c_custkey, o.o_custkey).alias("custkey"),
-        "acctbal",
-        "big_total",
-        "n_big",
-    )
 
 
-@register(
+register_sql(
     "q_join_semi",
     category="join",
     oracle="""
@@ -228,18 +123,9 @@ def q_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     """,
 )
-def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-semi join ≡ EXISTS: customers with ≥1 urgent order. Semi
-    join never duplicates the probe side — output rows ≤ customer rows
-    regardless of order fan-out."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
-        "c_custkey", "c_name", "c_mktsegment"
-    )
 
 
-@register(
+register_sql(
     "q_join_anti",
     category="join",
     oracle="""
@@ -251,16 +137,9 @@ def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     """,
 )
-def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-anti join ≡ NOT EXISTS: customers with no urgent orders."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
-        "c_custkey", "c_name", F.round("c_acctbal", 2).alias("c_acctbal")
-    )
 
 
-@register(
+register_sql(
     "q_join_cross",
     category="join",
     oracle="""
@@ -269,17 +148,10 @@ def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM region r CROSS JOIN nation n
     """,
 )
-def q_join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross join of two bounded dimensions (5 × 25) — the only place a
-    cartesian product is acceptable at scale is bounded × anything
-    (reference analog: the 4-way symmetric fan-out, R34)."""
-    r = load_table(spark, sf_dir, "region")
-    n = load_table(spark, sf_dir, "nation")
-    return r.crossJoin(n).select(
-        "r_name", "n_name", (F.col("r_regionkey") == F.col("n_regionkey")).alias("is_home")
-    )
 
 
+# Builder kept: the broadcast inner join plus left re-join is the query.
+# As SQL at sf0.1: 764 -> 1,224 ms warm wall.
 @register(
     "q_join_range",
     category="join",
@@ -331,6 +203,7 @@ def q_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Builder kept: as SQL at sf0.1, shuffle write +12% (594,954 -> 667,444 bytes).
 @register(
     "q_join_asof",
     category="join",
@@ -397,6 +270,7 @@ def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Builder kept: as SQL at sf0.1, stages 3 -> 5 and shuffle exchanges 1 -> 2.
 @register(
     "q_join_asof_tol",
     category="join",
@@ -553,6 +427,8 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     return to, tl
 
 
+# Builder kept: the bucketed layout is the query. As SQL over the raw
+# tables at sf0.1: stages 1 -> 2, 305 -> 779 ms warm wall.
 @register(
     "q_join_bucketed",
     category="join",
@@ -597,6 +473,7 @@ _BLOOM_K = 3  # hash functions
 _BLOOM_PRICE = 480000.0  # build-side selectivity: ~top 3% of orders
 
 
+# Builder kept: the hand-built Bloom filter is the query.
 @register(
     "q_join_bloom",
     category="join",
@@ -681,6 +558,8 @@ def q_join_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RANGE_BUCKET_W = 50_000.0  # price-bucket width for the range-join rewrite
 
 
+# Builder kept: the price-bucket equi-join rewrite is the query. As SQL
+# at sf0.1: 904 -> 1,349 ms warm wall.
 @register(
     "q_join_range_bucketed",
     category="join",
@@ -754,6 +633,7 @@ def q_join_range_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Builder kept: the oracle's epoch_us is DuckDB-only.
 @register(
     "q_label_join",
     category="join",

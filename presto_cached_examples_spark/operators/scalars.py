@@ -15,10 +15,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from presto_cached_examples_spark.registry import register
+from presto_cached_examples_spark.registry import register, register_sql
 from presto_cached_examples_spark.sources.catalog import load_table
 
 
+# Builder kept: the oracle's STRING_SPLIT and STRPOS are DuckDB-only.
 @register(
     "q_string_funcs",
     category="scalar",
@@ -53,6 +54,7 @@ def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Builder kept: Spark SQL does not parse the oracle's DATEDIFF('day', ...).
 @register(
     "q_date_funcs",
     category="scalar",
@@ -90,7 +92,7 @@ def q_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q_math_funcs",
     category="scalar",
     oracle="""
@@ -111,34 +113,9 @@ def q_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     """,
 )
-def q_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Math + bitwise surface, including the RGB565-style bit pack —
-    the literal Spark form of `create_pen(r,g,b)`
-    (/root/reference/src/DoublePsramBuffer480x480.cpp:125): three
-    channels packed 5-6-5 into one integer via shiftleft + OR."""
-    li = load_table(spark, sf_dir, "lineitem")
-    r = F.col("l_linenumber").cast("long") * 4
-    g = F.col("l_suppkey") % 64
-    b = F.col("l_partkey") % 32
-    rgb565 = (
-        F.shiftleft(r.bitwiseAND(F.lit(31)), 11)
-        .bitwiseOR(F.shiftleft(g.bitwiseAND(F.lit(63)), 5))
-        .bitwiseOR(b.bitwiseAND(F.lit(31)))
-    )
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.abs(F.col("l_quantity") - 25.0).alias("qty_dev"),
-        F.ceil(F.col("l_extendedprice") / 1000).alias("price_k_ceil"),
-        F.floor(F.col("l_extendedprice") / 1000).alias("price_k_floor"),
-        F.pow(F.lit(2.0), F.col("l_linenumber").cast("double")).alias("pow2_line"),
-        F.round(F.log(F.col("l_extendedprice")), 4).alias("ln_price"),
-        (F.col("l_orderkey") % 7).alias("key_mod7"),
-        rgb565.cast("long").alias("rgb565"),
-    )
 
 
-@register(
+register_sql(
     "q_case_expr",
     category="scalar",
     oracle="""
@@ -154,21 +131,9 @@ def q_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer
     """,
 )
-def q_case_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tiered bucketing via CASE (reference analog: the clamp-and-
-    reflect update logic, R36)."""
-    c = load_table(spark, sf_dir, "customer")
-    return c.select(
-        "c_custkey",
-        F.when(F.col("c_acctbal") < 0, "debtor")
-        .when(F.col("c_acctbal") < 3000, "bronze")
-        .when(F.col("c_acctbal") < 7000, "silver")
-        .otherwise("gold")
-        .alias("tier"),
-        F.when(F.col("c_mktsegment") == "AUTOMOBILE", "auto").otherwise("other").alias("seg_class"),
-    )
 
 
+# Builder kept: the oracle's json_extract_string is DuckDB-only.
 @register(
     "q_json_funcs",
     category="scalar",
@@ -194,6 +159,7 @@ def q_json_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Builder kept: the oracle's list_min and list_max are DuckDB-only.
 @register(
     "q_array_funcs",
     category="scalar",
@@ -227,7 +193,7 @@ def q_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q_subquery_scalar",
     category="subquery",
     oracle="""
@@ -239,23 +205,10 @@ def q_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag
     """,
 )
-def q_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar subquery in a filter — expressed in SQL so Catalyst's
-    subquery machinery (not a hand-collected constant) runs it as a
-    one-row broadcast into the scan filter."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(
-        """
-        SELECT l_returnflag,
-               COUNT(*) AS n_above,
-               ROUND(AVG(l_extendedprice), 2) AS avg_above
-        FROM lineitem
-        WHERE l_extendedprice > (SELECT 1.9 * AVG(l_extendedprice) FROM lineitem)
-        GROUP BY l_returnflag
-        """
-    )
 
 
+# Builder kept: the query is the MapType surface; Spark SQL does not parse
+# the oracle's STRING_AGG(DISTINCT ... ORDER BY ...).
 @register(
     "q_map_funcs",
     category="scalar",
@@ -306,7 +259,9 @@ def q_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Both sides aggregate to at most six buckets before the null-safe join,
+# so the NULL bucket cannot hot-spot one partition of a raw-key join.
+register_sql(
     "q_join_nullsafe",
     category="join",
     oracle="""
@@ -323,39 +278,3 @@ def q_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ck JOIN sk ON ck.k IS NOT DISTINCT FROM sk.k
     """,
 )
-def q_join_nullsafe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Null-safe equi-join (Spark's <=>, ANSI IS NOT DISTINCT FROM):
-    customers and suppliers bucketed by a DERIVED NULLABLE key
-    (NULLIF(nationkey % 5, 4)), joined so the NULL bucket matches the
-    NULL bucket — the row a plain equi-join silently drops. The
-    completeness row for the operator a dimension-conforming pipeline
-    reaches for whenever 'unknown' must join 'unknown' instead of
-    vanishing.
-
-    Scale: aggregate-first — both sides collapse to their <=6-row
-    bucket relations BEFORE the null-safe join, so the join is
-    model-sized however large the inputs; pair counts come from the
-    product of exact longs, not row fan-out. (A null-safe join on raw
-    keys hash-partitions nulls to one partition — the aggregate-first
-    shape is also the skew defense.)
-
-    Reference provenance: C7 sentinel-key handling
-    (/root/reference/src/FT6236.h:121-127 — an out-of-range slot id is
-    routed to the nullTouch sentinel, not dropped)."""
-    c = load_table(spark, sf_dir, "customer").select(
-        F.nullif(F.col("c_nationkey") % 5, F.lit(4)).alias("k")
-    )
-    s = load_table(spark, sf_dir, "supplier").select(
-        F.nullif(F.col("s_nationkey") % 5, F.lit(4)).alias("k")
-    )
-    ck = c.groupBy("k").agg(F.count(F.lit(1)).alias("n_cust"))
-    sk = s.groupBy("k").agg(F.count(F.lit(1)).alias("n_supp"))
-    return ck.join(
-        sk.withColumnRenamed("k", "k_s"),
-        F.col("k").eqNullSafe(F.col("k_s")),
-    ).select(
-        F.col("k").cast("int").alias("k"),
-        "n_cust",
-        "n_supp",
-        (F.col("n_cust") * F.col("n_supp")).cast("long").alias("n_pairs"),
-    )

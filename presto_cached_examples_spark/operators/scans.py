@@ -15,12 +15,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from presto_cached_examples_spark.plans.artifacts import memo
-from presto_cached_examples_spark.registry import register
+from presto_cached_examples_spark.registry import register, register_sql
 from presto_cached_examples_spark.sources import layouts
 from presto_cached_examples_spark.sources.catalog import load_table, source_fingerprint
 
 
-@register(
+# Per-row products stay unrounded: identical IEEE multiplies are
+# bit-identical across engines, while ROUND at half-cent boundaries is not.
+register_sql(
     "q_scan_project",
     category="scan",
     oracle="""
@@ -33,27 +35,9 @@ from presto_cached_examples_spark.sources.catalog import load_table, source_fing
     FROM lineitem
     """,
 )
-def q_scan_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Projection + arithmetic derived columns. Catalyst prunes the scan
-    to 6 of 11 lineitem columns (ReadSchema).
-
-    Per-row products are left unrounded deliberately: with identical
-    association order, IEEE-754 double arithmetic is bit-identical
-    across engines, while ROUND at half-way boundaries is not (Spark
-    HALF_UP on the exact binary expansion vs DuckDB's scaled round).
-    Rounding is only for *aggregates*, where summation order varies."""
-    li = load_table(spark, sf_dir, "lineitem")
-    net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        net.alias("net_price"),
-        (net * (1 + F.col("l_tax"))).alias("gross_price"),
-        (F.col("l_quantity") * F.col("l_extendedprice")).alias("notional"),
-    )
 
 
-@register(
+register_sql(
     "q_filter_basic",
     category="filter",
     oracle="""
@@ -63,22 +47,10 @@ def q_scan_project(spark: SparkSession, sf_dir: str) -> DataFrame:
        OR (o_orderpriority = '1-URGENT' AND o_totalprice > 400000)
     """,
 )
-def q_filter_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compound predicate: AND/OR, BETWEEN, IN, comparison — all sargable,
-    all pushed to the parquet reader."""
-    o = load_table(spark, sf_dir, "orders")
-    return o.filter(
-        (F.col("o_orderstatus").isin("F", "P") & F.col("o_totalprice").between(50000, 150000))
-        | ((F.col("o_orderpriority") == "1-URGENT") & (F.col("o_totalprice") > 400000))
-    ).select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderstatus",
-        F.round("o_totalprice", 2).alias("o_totalprice"),
-    )
 
 
-@register(
+# The fixtures hold no NULLs, so NULLIF makes the NULLs that COALESCE removes.
+register_sql(
     "q_filter_like_null",
     category="filter",
     oracle="""
@@ -91,22 +63,6 @@ def q_filter_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE p_name LIKE '%re%' AND p_name NOT LIKE 'w%'
     """,
 )
-def q_filter_like_null(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LIKE patterns + NULLIF/COALESCE null semantics. The fixtures are
-    NULL-free (FIXTURES.md), so NULLIF synthesizes the nulls this query
-    then COALESCEs away — exercising three-valued logic end to end."""
-    p = load_table(spark, sf_dir, "part")
-    return (
-        p.filter(F.col("p_name").like("%re%") & ~F.col("p_name").like("w%"))
-        .select(
-            "p_partkey",
-            "p_name",
-            F.coalesce(F.nullif(F.col("p_brand"), F.lit("Brand#11")), F.lit("<masked>")).alias(
-                "brand_masked"
-            ),
-            F.col("p_name").like("%gold%").alias("has_gold"),
-        )
-    )
 
 
 def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
@@ -164,6 +120,8 @@ def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     return name
 
 
+# Builder kept: it reads the day-partitioned layout; the oracle reads the
+# raw table.
 @register(
     "q_scan_pruned",
     category="scan",
@@ -301,6 +259,8 @@ def _evolved_snapshots(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     return p1, p2
 
 
+# Builder kept: it reads the two schema-evolved snapshots; the oracle
+# reads the raw table.
 @register(
     "q_scan_evolved",
     category="scan",
@@ -388,6 +348,7 @@ def _docs_schema():
     )
 
 
+# Builder kept: it reads the JSON-lines copy; the oracle reads parquet.
 @register(
     "q_scan_json",
     category="scan",
@@ -425,6 +386,7 @@ def q_scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Builder kept: it reads the CSV copy; the oracle reads parquet.
 @register(
     "q_scan_csv",
     category="scan",
@@ -458,6 +420,7 @@ def q_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Builder kept: it reads the ORC copy; the oracle reads parquet.
 @register(
     "q_scan_orc",
     category="scan",
@@ -497,6 +460,8 @@ def q_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Builder kept: it prunes the day-partitioned layout at run time; the
+# oracle reads the raw table.
 @register(
     "q_join_dpp",
     category="join",
@@ -558,6 +523,7 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Builder kept: Spark SQL does not parse the oracle's list lambdas.
 @register(
     "q_layout_zorder",
     category="scan",
@@ -638,11 +604,13 @@ def q_layout_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Snapshot diff: v2 simulates the next day's table version with
 # deterministic mutations — ~10% price updates, ~5% deletes, plus a
 # re-keyed 2% insert batch. All derived from o_orderkey so both
-# engines build bit-identical versions.
+# engines build bit-identical versions. The insert batch scales by
+# 0.37, not 0.5: halving 2-dp prices parks the sums on half-cent ROUND
+# boundaries where the engines disagree.
 _DIFF_UPD_MOD, _DIFF_DEL_MOD, _DIFF_INS_MOD = 10, 20, 50
 
 
-@register(
+register_sql(
     "q_snapshot_diff",
     category="scan",
     oracle=f"""
@@ -677,67 +645,6 @@ _DIFF_UPD_MOD, _DIFF_DEL_MOD, _DIFF_INS_MOD = 10, 20, 50
     FROM joined GROUP BY status
     """,
 )
-def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Table-version diff — the lakehouse maintenance pass that
-    classifies every key across two snapshots as added / deleted /
-    changed / unchanged and totals the value drift, the audit a
-    nightly pipeline publishes before promoting a new table version
-    (and the verification step behind incremental-materialization
-    correctness). v2 is derived in-plan with deterministic mutations
-    (5% price bumps on key%10=3, deletes on key%20=7, a re-keyed
-    discounted insert batch — x0.37, deliberately NOT x0.5: an exact
-    binary halving of 2-dp prices parks aggregate sums on half-cent
-    ROUND boundaries where engines legitimately disagree) so both engines diff bit-identical versions; with
-    real snapshots the two CTEs become two table reads — same plan.
-
-    Scale: ONE full outer join on the key (sort-merge on a uniform
-    key), per-row classification map-side, then a 4-group aggregate —
-    the minimal shape a snapshot diff can have. No window, no skew
-    (keys are unique), and column pruning reaches both scans (only
-    key + compared columns are read).
-
-    Reference provenance: C3/C4 double-buffer swap (/root/reference/
-    src/DoublePsramBuffer480x480.cpp:196-203 — old and new framebuffer
-    coexist across the swap; the diff is what a promotion gate
-    computes between them)."""
-    o = load_table(spark, sf_dir, "orders")
-    v1 = o.select(F.col("o_orderkey").alias("k"), F.col("o_totalprice").alias("price"))
-    v2 = (
-        o.filter(F.col("o_orderkey") % _DIFF_DEL_MOD != 7)
-        .select(
-            F.col("o_orderkey").alias("k"),
-            F.when(
-                F.col("o_orderkey") % _DIFF_UPD_MOD == 3,
-                F.col("o_totalprice") * 1.05,
-            )
-            .otherwise(F.col("o_totalprice"))
-            .alias("price"),
-        )
-        .unionAll(
-            o.filter(F.col("o_orderkey") % _DIFF_INS_MOD == 11).select(
-                (-F.col("o_orderkey")).alias("k"),
-                (F.col("o_totalprice") * 0.37).alias("price"),
-            )
-        )
-    )
-    j = v1.alias("a").join(v2.alias("b"), F.col("b.k") == F.col("a.k"), "full_outer")
-    status = (
-        F.when(F.col("a.k").isNull(), "added")
-        .when(F.col("b.k").isNull(), "deleted")
-        .when(F.col("a.price") != F.col("b.price"), "changed")
-        .otherwise("unchanged")
-    )
-    delta = F.coalesce(F.col("b.price"), F.lit(0.0)) - F.coalesce(
-        F.col("a.price"), F.lit(0.0)
-    )
-    return (
-        j.select(status.alias("status"), delta.alias("delta"))
-        .groupBy("status")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.sum("delta"), 2).alias("price_delta"),
-        )
-    )
 
 
 _DRIFT_COLS = (
@@ -785,6 +692,7 @@ def _drift_oracle() -> str:
     """
 
 
+# Builder kept: Spark SQL runs the oracle text to a different answer.
 @register("q_drift_report", category="scan", oracle=_drift_oracle())
 def q_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-level profile drift between two table versions (v2 is

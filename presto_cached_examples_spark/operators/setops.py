@@ -6,27 +6,10 @@ compile to semi/anti joins on all columns — they inherit the join
 engine's broadcast/AQE behavior.
 """
 
-from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from presto_cached_examples_spark.registry import register
-from presto_cached_examples_spark.sources.catalog import load_table
+from presto_cached_examples_spark.registry import register_sql
 
 
-def _slices(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    urgent = o.filter(F.col("o_orderpriority") == "1-URGENT").select(
-        "o_orderkey", "o_custkey", F.lit("urgent").alias("slice")
-    )
-    big = o.filter(F.col("o_totalprice") > 350000).select(
-        "o_orderkey", "o_custkey", F.lit("big").alias("slice")
-    )
-    return urgent, big
-
-
-@register(
+register_sql(
     "q_union_all",
     category="setop",
     oracle="""
@@ -37,14 +20,9 @@ def _slices(spark, sf_dir):
     FROM orders WHERE o_totalprice > 350000
     """,
 )
-def q_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNION ALL of two order slices — overlapping rows kept (an order
-    can be both urgent and big; it appears once per slice)."""
-    urgent, big = _slices(spark, sf_dir)
-    return urgent.unionByName(big)
 
 
-@register(
+register_sql(
     "q_union_distinct",
     category="setop",
     oracle="""
@@ -55,13 +33,9 @@ def q_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders WHERE o_totalprice > 350000
     """,
 )
-def q_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNION (distinct): overlap between the slices collapses."""
-    urgent, big = _slices(spark, sf_dir)
-    return urgent.drop("slice").unionByName(big.drop("slice")).distinct()
 
 
-@register(
+register_sql(
     "q_intersect",
     category="setop",
     oracle="""
@@ -70,22 +44,9 @@ def q_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_custkey AS c_custkey FROM orders WHERE o_totalprice > 300000
     """,
 )
-def q_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT of two customer-key sets (compiles to a semi join)."""
-    c = (
-        load_table(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == "BUILDING")
-        .select("c_custkey")
-    )
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_totalprice") > 300000)
-        .select(F.col("o_custkey").alias("c_custkey"))
-    )
-    return c.intersect(o)
 
 
-@register(
+register_sql(
     "q_except",
     category="setop",
     oracle="""
@@ -94,23 +55,9 @@ def q_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_custkey AS c_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
     """,
 )
-def q_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT (distinct): BUILDING customers minus urgent-order
-    customers (compiles to an anti join)."""
-    c = (
-        load_table(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == "BUILDING")
-        .select("c_custkey")
-    )
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderpriority") == "1-URGENT")
-        .select(F.col("o_custkey").alias("c_custkey"))
-    )
-    return c.subtract(o)  # subtract == EXCEPT DISTINCT
 
 
-@register(
+register_sql(
     "q_intersect_all",
     category="setop",
     oracle="""
@@ -119,19 +66,9 @@ def q_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_custkey FROM orders WHERE o_totalprice > 150000
     """,
 )
-def q_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT ALL — bag semantics: each customer key appears
-    min(count_left, count_right) times. Spark compiles intersectAll to
-    a count-stamped join (two partial aggregates + one equi-join), so
-    multiplicities never require a row-by-row pairing — the same
-    two-phase-aggregate scale shape as any keyed count."""
-    o = load_table(spark, sf_dir, "orders")
-    left = o.filter(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
-    right = o.filter(F.col("o_totalprice") > 150000).select("o_custkey")
-    return left.intersectAll(right)
 
 
-@register(
+register_sql(
     "q_except_all",
     category="setop",
     oracle="""
@@ -140,11 +77,3 @@ def q_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_custkey FROM orders WHERE o_totalprice > 150000
     """,
 )
-def q_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT ALL — bag semantics: each key survives
-    max(count_left - count_right, 0) times. Same count-stamped join
-    compilation as INTERSECT ALL; no pairwise matching at any scale."""
-    o = load_table(spark, sf_dir, "orders")
-    left = o.filter(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
-    right = o.filter(F.col("o_totalprice") > 150000).select("o_custkey")
-    return left.exceptAll(right)

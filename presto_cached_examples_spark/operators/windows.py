@@ -19,11 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from presto_cached_examples_spark.registry import register
+from presto_cached_examples_spark.registry import register, register_sql
 from presto_cached_examples_spark.sources.catalog import load_table
 
 
-@register(
+register_sql(
     "q_window_rank",
     category="window",
     oracle="""
@@ -35,22 +35,9 @@ from presto_cached_examples_spark.sources.catalog import load_table
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey)
     """,
 )
-def q_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """rank / dense_rank / row_number of orders per customer by price.
-    The (price DESC, orderkey) ordering is a total order, so all three
-    ranking functions are deterministic."""
-    o = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.round("o_totalprice", 2).alias("o_totalprice"),
-        F.rank().over(w).alias("rnk"),
-        F.dense_rank().over(w).alias("drnk"),
-        F.row_number().over(w).alias("rn"),
-    )
 
 
+# Builder kept: the oracle's epoch_us is DuckDB-only.
 @register(
     "q_window_lag",
     category="window",
@@ -78,7 +65,9 @@ def q_window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# The unpartitioned window is bounded: it runs over the daily aggregate,
+# one row per order date, never over the orders themselves.
+register_sql(
     "q_window_frame",
     category="window",
     oracle="""
@@ -94,26 +83,9 @@ def q_window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM daily
     """,
 )
-def q_window_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """7-row centered moving average of daily revenue (C4's sliding
-    dirty-region analog). Inner daily sums are rounded before the
-    moving average so both engines average identical inputs.
-
-    The unpartitioned window (Spark warns "No Partition Defined") is
-    deliberate and safe: it runs over the DAILY aggregate, whose row
-    count is bounded by the date domain (~2.4k rows for 7 years),
-    never by order volume — the same domain-bounded argument as the
-    distwindows sweep relations. The raw scan reduces via a two-phase
-    aggregate first."""
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").cast("date").cast("timestamp").alias("day")).agg(
-        F.round(F.sum("o_totalprice"), 2).alias("revenue")
-    )
-    w = Window.orderBy("day").rowsBetween(-3, 3)
-    return daily.select("day", "revenue", F.round(F.avg("revenue").over(w), 2).alias("ma7"))
 
 
-@register(
+register_sql(
     "q_window_running",
     category="window",
     oracle="""
@@ -125,24 +97,9 @@ def q_window_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     """,
 )
-def q_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running total per customer — cumulative frame ordered by a total
-    order (orderdate, orderkey)."""
-    o = load_table(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        "o_orderdate",
-        F.round(F.sum("o_totalprice").over(w), 2).alias("running_total"),
-    )
 
 
-@register(
+register_sql(
     "q_topk_group",
     category="window",
     oracle="""
@@ -156,21 +113,9 @@ def q_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE rn <= 3
     """,
 )
-def q_topk_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 orders per customer with deterministic tie-break. The
-    row_number+filter shape lets Spark push the limit into the window
-    (WindowGroupLimit) — per-group top-k without materializing full
-    partitions."""
-    o = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-    return (
-        o.withColumn("k", F.row_number().over(w))
-        .filter(F.col("k") <= 3)
-        .select("o_custkey", "o_orderkey", F.round("o_totalprice", 2).alias("o_totalprice"), "k")
-    )
 
 
-@register(
+register_sql(
     "q_sort_limit",
     category="sort",
     oracle="""
@@ -180,13 +125,3 @@ def q_topk_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 20
     """,
 )
-def q_sort_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global top-N, total-order tie-broken. Physical plan is
-    TakeOrderedAndProject: no full sort, no single-partition shuffle —
-    each partition contributes its local top-20."""
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        o.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-        .limit(20)
-        .select("o_orderkey", "o_custkey", F.round("o_totalprice", 2).alias("o_totalprice"), "o_orderpriority")
-    )

@@ -13,6 +13,10 @@ The store runs no Spark action of its own. A builder decides whether
 its artifact is an eager or lazy checkpoint, a ``persist()`` or a
 plain value; the store only keeps what the builder returned.
 
+The store also records which fixture directory the session's temp
+views name (``bind``), so the SQL binder re-registers them only when
+that directory changes.
+
 Lifecycle: ``release(spark)`` unpersists every persisted DataFrame the
 session holds (DataFrame memo values and ``track``-ed intermediates
 alike) and drops all of the session's entries. Long-running drivers
@@ -51,6 +55,19 @@ def memo(spark: SparkSession, sf_dir: str, name: Hashable, build: Callable[[], T
 def forget(spark: SparkSession, sf_dir: str, name: Hashable) -> None:
     """Drop one entry, so the next ``memo`` call rebuilds it."""
     _ENTRIES.pop((session_token(spark), sf_dir, name), None)
+
+
+def bind(spark: SparkSession, sf_dir: str, register: Callable[[], None]) -> None:
+    """Call ``register()`` unless ``sf_dir`` is the fixture directory the
+    session's temp views were last bound to, then record ``sf_dir``.
+
+    The record is one entry per session token: binding another
+    directory replaces it, and ``release`` drops it, so the next bind
+    registers again."""
+    key = (session_token(spark), None, "bound_sf_dir")
+    if _ENTRIES.get(key) != sf_dir:
+        register()
+        _ENTRIES[key] = sf_dir
 
 
 def track(df: DataFrame) -> DataFrame:

@@ -3,6 +3,8 @@
 Every operator from SURVEY.md §2.B registers here with a builder
 function `(spark, sf_dir) -> DataFrame` and, when SQL-expressible, an
 ANSI-SQL oracle string DuckDB can run over the same parquet views.
+A query registered with `register_sql` has no Python builder: its
+builder runs that oracle string through `spark.sql`.
 `__spark_entry__.py` exposes this registry to the driver.
 
 Discipline (SURVEY.md §5.2 / FIXTURES.md): every computed column is
@@ -34,6 +36,8 @@ from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from presto_cached_examples_spark.sources.catalog import register_all
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -142,7 +146,6 @@ class QuerySpec:
     fn: QueryFn
     oracle: str | None  # ANSI SQL for DuckDB; None → rows-only check
     category: str
-    doc: str = ""
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
@@ -302,11 +305,27 @@ def register(name: str, oracle: str | None = None, category: str = "") -> Callab
             fn=fn,
             oracle=neutralized,
             category=category,
-            doc=(fn.__doc__ or "").strip(),
         )
         return fn
 
     return deco
+
+
+def register_sql(name: str, oracle: str, category: str) -> None:
+    """Register a query whose builder is its oracle: Spark SQL runs the
+    same neutralized text DuckDB runs, over the fixture tables that
+    ``catalog.register_all`` binds as session temp views.
+
+    A query is SQL-only when Spark runs its oracle to the same answer
+    with no more stages and at most 1% more shuffle bytes than a
+    hand-written builder, and no builder technique is the point of the
+    query (NOTES.md "Decisions with rationale")."""
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        register_all(spark, sf_dir)
+        return spark.sql(_REGISTRY[name].oracle)
+
+    register(name, oracle, category)(build)
 
 
 def _ensure_loaded() -> None:

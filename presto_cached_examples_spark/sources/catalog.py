@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from presto_cached_examples_spark.plans.artifacts import memo
+from presto_cached_examples_spark.plans.artifacts import bind, memo
 
 TABLES = (
     "region",
@@ -225,11 +225,20 @@ def spread(df: DataFrame, spark: SparkSession) -> DataFrame:
     return out
 
 
-def register_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every fixture as a temp view (for the SQL entry point)."""
-    out = {}
-    for name in TABLES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
+def register_all(spark: SparkSession, sf_dir: str) -> None:
+    """Bind every fixture table of ``sf_dir`` to a session temp view of
+    its own name: the one binder for queries that Spark SQL runs from
+    their oracle text (``registry.register_sql``).
+
+    Each view is the ``load_table`` relation, so SQL reads the same
+    normalized columns a builder does. The session records the bound
+    directory (``artifacts.bind``), and a build at an unchanged
+    ``sf_dir`` registers nothing: one ``createOrReplaceTempView`` costs
+    several milliseconds of driver round trips, and the ten views cost
+    about a tenth of a second (NOTES.md has the measurements)."""
+
+    def register() -> None:
+        for name in TABLES:
+            load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+
+    bind(spark, sf_dir, register)

@@ -7,7 +7,9 @@ streaming execution of the same plans — readStream → watermark →
 window → memory sink — lives in runner.py and is asserted equal to
 these twins in tests/test_streaming.py. That makes the tumbling window
 &c. hash-checked even though the driver's streaming check is
-rows-only.
+rows-only. For the same reason every twin keeps its DataFrame builder,
+even where Spark SQL runs its oracle to the same answer: the builder is
+the plan the streaming runner runs, and the SQL text is not.
 
 Scale posture: tumbling/sliding windows are hash aggregations keyed by
 (window, type) — partial aggregation map-side, tiny shuffle. Session

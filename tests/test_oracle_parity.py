@@ -1,6 +1,12 @@
 """Differential test: every SQL-checkable registered query must match its
 DuckDB oracle at sf0.001 (the driver runs the same check at sf0.01).
 
+For a SQL-only entry (``registry.register_sql``) the Spark side is the
+oracle text itself, run by ``spark.sql`` over the temp views that
+``catalog.register_all`` binds: the test then compares two engines on
+one text. Every other query compares its DataFrame builder with the
+oracle.
+
 This single parametrized test is the local mirror of the t2 gate.
 """
 
