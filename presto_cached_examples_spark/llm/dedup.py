@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from presto_cached_examples_spark.plans.artifacts import memo
-from presto_cached_examples_spark.registry import register
+from presto_cached_examples_spark.registry import register, register_sql
 from presto_cached_examples_spark.sources.catalog import load_table, spread
 
 # MinHash parameters: 64 permutations in 16 bands of 4 rows.
@@ -56,7 +56,7 @@ _SIMHASH_BAND_BITS = 64 // _SIMHASH_BANDS
 _HAMMING_MAX = 3
 
 
-@register(
+register_sql(
     "q_dedup_exact",
     category="llm-dedup",
     oracle="""
@@ -68,17 +68,6 @@ _HAMMING_MAX = 3
     GROUP BY md5(LOWER(TRIM(text)))
     """,
 )
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup: group by a fingerprint of normalized text, keep the
-    minimum doc_id as canonical. At 100 TB: shuffle moves only
-    (fp, doc_id) pairs — never the text — and the md5 key distributes
-    uniformly, so no skew."""
-    d = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.lower(F.trim(F.col("text"))))
-    return d.groupBy(fp.alias("fp")).agg(
-        F.min("doc_id").alias("canonical_id"),
-        F.count(F.lit(1)).alias("n_copies"),
-    )
 
 
 @register(

@@ -16,16 +16,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from presto_cached_examples_spark.plans.artifacts import memo
-from presto_cached_examples_spark.registry import register
+from presto_cached_examples_spark.registry import register, register_sql
 from presto_cached_examples_spark.plans.persistence import maybe_persist
 from presto_cached_examples_spark.sources.catalog import load_table
 
-# per-language keep quota out of 10 (en-heavy corpora downsample en last)
-_QUOTAS = {"en": 8, "es": 5, "fr": 5, "de": 5}
-_DEFAULT_QUOTA = 2
 
-
-@register(
+register_sql(
     "q_sample_stratified",
     category="llm-sampling",
     oracle="""
@@ -36,19 +32,6 @@ _DEFAULT_QUOTA = 2
       ELSE 2 END
     """,
 )
-def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-stratified deterministic sample: keep doc when
-    doc_id % 10 falls under the language's quota (en 80%, es/fr/de 50%,
-    rest 20%). A single scan + filter — the cheapest shape a sampler
-    can have; stratum rates are exact in expectation and reproducible
-    bit-for-bit."""
-    d = load_table(spark, sf_dir, "documents")
-    quota = F.lit(_DEFAULT_QUOTA)
-    for lang, q in _QUOTAS.items():
-        quota = F.when(F.col("lang") == lang, q).otherwise(quota)
-    return d.filter(F.col("doc_id") % 10 < quota).select(
-        "doc_id", "lang", "source", "n_chars"
-    )
 
 
 @register(

@@ -23,8 +23,6 @@ from presto_cached_examples_spark.plans.artifacts import memo
 from presto_cached_examples_spark.registry import register, register_sql
 from presto_cached_examples_spark.sources.catalog import load_table, spread
 
-_SESSION_GAP_MIN = 30
-
 # q_agg_percentiles bucket width for the cumulative-rank decomposition:
 # a DOMAIN constant (cents of l_extendedprice), not a core-count tune —
 # it bounds every raw-row window partition at ≤ 16,384 cent rows and
@@ -176,7 +174,7 @@ def q_agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q_agg_corr",
     category="aggregation",
     oracle="""
@@ -188,19 +186,9 @@ def q_agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_linestatus
     """,
 )
-def q_agg_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bivariate aggregates (Pearson correlation, sample/population
-    covariance) — single-pass mergeable moments, so partial aggregation
-    applies exactly as for sum/count."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_linestatus").agg(
-        F.round(F.corr("l_quantity", "l_extendedprice"), 4).alias("corr_qty_price"),
-        F.round(F.covar_samp("l_quantity", "l_extendedprice"), 2).alias("covar_s"),
-        F.round(F.covar_pop("l_quantity", "l_extendedprice"), 2).alias("covar_p"),
-    )
 
 
-@register(
+register_sql(
     "q_pivot",
     category="reshape",
     oracle="""
@@ -212,21 +200,9 @@ def q_agg_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_linestatus
     """,
 )
-def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot with a DECLARED value list ('A','N','R'): no extra
-    values-discovery job, and the plan is an ordinary grouped
-    conditional aggregate — one shuffle, pivot width known at plan
-    time. (Undeclared pivots first run a distinct() over the pivot
-    column — never do that on the 100 TB path.)"""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_linestatus")
-        .pivot("l_returnflag", ["A", "N", "R"])
-        .agg(F.round(F.sum("l_quantity"), 2))
-    )
 
 
-@register(
+register_sql(
     "q_unpivot",
     category="reshape",
     oracle="""
@@ -240,19 +216,6 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNPIVOT (val FOR metric IN (price, prio_len))
     """,
 )
-def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unpivot (melt): wide metric columns → (key, metric, value) rows.
-    Purely map-side — each input row emits one row per metric, no
-    shuffle at all."""
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.round("o_totalprice", 2).alias("price"),
-        F.length("o_orderpriority").cast("double").alias("prio_len"),
-    )
-    return o.unpivot(
-        ids=["o_orderkey"], values=["price", "prio_len"], variableColumnName="metric",
-        valueColumnName="v",
-    ).select("o_orderkey", "metric", F.round("v", 2).alias("val"))
 
 
 def q_window_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -277,7 +240,7 @@ def q_window_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q_window_firstlast",
     category="window",
     oracle="""
@@ -292,23 +255,6 @@ def q_window_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     """,
 )
-def q_window_firstlast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """first/last/nth_value over the full-partition frame (explicit —
-    the default frame stops at CURRENT ROW, the classic last_value
-    trap). Order key (orderdate, orderkey) is unique per customer."""
-    o = load_table(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    return o.select(
-        "o_orderkey",
-        "o_custkey",
-        F.round(F.first("o_totalprice").over(w), 2).alias("first_price"),
-        F.round(F.last("o_totalprice").over(w), 2).alias("last_price"),
-        F.round(F.nth_value("o_totalprice", 2).over(w), 2).alias("second_price"),
-    )
 
 
 @register(
@@ -336,14 +282,14 @@ def q_string_regexp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q_sessionize",
     category="window",
-    oracle=f"""
+    oracle="""
     WITH gapped AS (
       SELECT user_id, ts, event_id,
              CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                       > INTERVAL {_SESSION_GAP_MIN} MINUTE
+                       > INTERVAL 30 MINUTE
                   OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
                   THEN 1 ELSE 0 END AS is_start
       FROM events
@@ -364,32 +310,6 @@ def q_string_regexp(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY user_id, session_no
     """,
 )
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch sessionization (gaps-and-islands): a session breaks after a
-    {gap}-minute silence. Two window passes over the same (user_id)
-    partitioning — Spark reuses the exchange — then one grouped
-    aggregate; the batch twin of q_stream_session's session_window.
-    All per-user: nothing crosses partitions, so it scales with user
-    cardinality, not event count per user."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # microsecond-exact gap — casting ts to seconds would truncate and
-    # mis-classify gaps within 1s of the threshold
-    gap_us = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
-    is_start = F.when(
-        gap_us.isNull() | (gap_us > _SESSION_GAP_MIN * 60 * 1_000_000), 1
-    ).otherwise(0)
-    numbered = ev.select(
-        "user_id", "ts", "event_id", is_start.alias("is_start")
-    ).withColumn(
-        "session_no",
-        F.sum("is_start").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-    )
-    return numbered.groupBy("user_id", "session_no").agg(
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
 
 
 # Both key columns are non-null, so NOT IN is a plain anti join here;
@@ -424,7 +344,7 @@ register_sql(
 )
 
 
-@register(
+register_sql(
     "q_agg_groupingid",
     category="aggregation",
     oracle="""
@@ -438,27 +358,6 @@ register_sql(
     GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
 )
-def q_agg_groupingid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """grouping() markers in a rollup: distinguishes a real NULL group
-    from a subtotal row — the standard way to label aggregation levels
-    in one pass."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            (
-                F.grouping("l_returnflag").cast("int") * 2
-                + F.grouping("l_linestatus").cast("int")
-            ).alias("gid"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("<all>")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("<all>")).alias("linestatus"),
-            "gid",
-            "n",
-        )
-    )
 
 
 @register(
@@ -564,7 +463,7 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q_values_cte",
     category="scan",
     oracle="""
@@ -578,26 +477,9 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN tier t ON c.c_mktsegment = t.seg AND c.c_acctbal >= t.min_bal
     """,
 )
-def q_values_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inline VALUES relation joined to a table — config-style literal
-    data (tier thresholds) entering the plan as a broadcastable local
-    relation, no file needed."""
-    c = load_table(spark, sf_dir, "customer")
-    tier = spark.createDataFrame(
-        [("AUTOMOBILE", "gold", 5000.0), ("BUILDING", "silver", 3000.0),
-         ("MACHINERY", "bronze", 1000.0)],
-        "seg string, tier_name string, min_bal double",
-    )
-    return (
-        c.join(
-            F.broadcast(tier),
-            (c.c_mktsegment == tier.seg) & (c.c_acctbal >= tier.min_bal),
-        )
-        .select("c_custkey", "tier_name", F.round("c_acctbal", 2).alias("c_acctbal"))
-    )
 
 
-@register(
+register_sql(
     "q_top_unshipped",
     category="join",
     oracle="""
@@ -615,35 +497,9 @@ def q_values_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 10
     """,
 )
-def q_top_unshipped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3-style shipping priority: top-10 unshipped orders by
-    revenue for one segment. Both filters reach their scans before any
-    join; the final top-10 is TakeOrderedAndProject (per-partition
-    top-N, no global sort), tie-broken on l_orderkey for cross-engine
-    determinism."""
-    c = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate").cast("date") < F.lit("1997-03-15").cast("date")
-    )
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate").cast("date") >= F.lit("1997-03-15").cast("date")
-    )
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-                "revenue"
-            )
-        )
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-        .orderBy(F.col("revenue").desc(), "l_orderkey")
-        .limit(10)
-    )
 
 
-@register(
+register_sql(
     "q_returned_revenue",
     category="join",
     oracle="""
@@ -661,34 +517,9 @@ def q_top_unshipped(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 20
     """,
 )
-def q_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10-style returned-item report: top-20 customers by revenue
-    lost to returns in one half-year. The nation dimension broadcasts;
-    the return-flag and date filters push to the lineitem/orders scans
-    so the join input is already the small slice."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate").cast("date") >= F.lit("1997-01-01").cast("date"))
-        & (F.col("o_orderdate").cast("date") < F.lit("1997-07-01").cast("date"))
-    )
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = load_table(spark, sf_dir, "nation")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "c_name", "c_mktsegment", F.col("n_name").alias("nation"))
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-                "lost_revenue"
-            )
-        )
-        .orderBy(F.col("lost_revenue").desc(), "c_custkey")
-        .limit(20)
-    )
 
 
-@register(
+register_sql(
     "q_filtered_revenue",
     category="aggregation",
     oracle="""
@@ -701,29 +532,9 @@ def q_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_quantity < 24
     """,
 )
-def q_filtered_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6-style forecasting query: pure filter + global aggregate.
-    Every predicate pushes to the parquet scan, the aggregate is a
-    map-side partial into a 1-row final — the cheapest possible shape
-    at any scale (no join, one short shuffle of partial states)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate").cast("date") >= F.lit("1997-01-01").cast("date"))
-            & (F.col("l_shipdate").cast("date") < F.lit("1998-01-01").cast("date"))
-            & F.col("l_discount").between(0.05, 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias(
-                "revenue_delta"
-            ),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
 
 
-@register(
+register_sql(
     "q_promo_share",
     category="join",
     oracle="""
@@ -737,27 +548,6 @@ def q_filtered_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND CAST(l.l_shipdate AS DATE) <  DATE '1997-04-01'
     """,
 )
-def q_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14-style promotion share: conditional aggregate over a
-    fact-dimension join. The month filter reduces lineitem before the
-    join; part joins broadcast (bounded dimension)."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate").cast("date") >= F.lit("1997-03-01").cast("date"))
-        & (F.col("l_shipdate").cast("date") < F.lit("1997-04-01").cast("date"))
-    )
-    p = load_table(spark, sf_dir, "part")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .agg(
-            F.round(
-                100.0
-                * F.sum(F.when(F.col("p_type").like("PROMO%"), rev).otherwise(0.0))
-                / F.sum(rev),
-                4,
-            ).alias("promo_pct")
-        )
-    )
 
 
 @register(
@@ -786,7 +576,7 @@ def q_agg_stringagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q_window_lead",
     category="window",
     oracle="""
@@ -798,22 +588,9 @@ def q_agg_stringagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
     """,
 )
-def q_window_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lead() with an explicit default — the forward twin of
-    q_window_lag's dx/dy deltas; the last row per customer takes the
-    default instead of NULL."""
-    o = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.round("o_totalprice", 2).alias("o_totalprice"),
-        F.round(F.lead("o_totalprice", 1, 0.0).over(w), 2).alias("next_price"),
-        F.lead("o_orderdate").over(w).cast("timestamp").alias("next_date"),
-    )
 
 
-@register(
+register_sql(
     "q_agg_decimal",
     category="aggregation",
     oracle="""
@@ -824,25 +601,9 @@ def q_window_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag
     """,
 )
-def q_agg_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-money aggregation: prices accumulate as DECIMAL(12,2), so
-    the sum is identical under ANY summation order or partitioning —
-    no ROUND discipline needed, unlike double sums. This is the money
-    type the engine prescribes for 100 TB financial rollups (SURVEY.md
-    §1.2); the single final cast to double exists only because pandas
-    lowers DuckDB decimals to float on output."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.withColumn("price_dec", F.col("l_extendedprice").cast("decimal(12,2)"))
-        .groupBy("l_returnflag")
-        .agg(
-            F.sum("price_dec").cast("double").alias("total_exact"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
 
 
-@register(
+register_sql(
     "q_exists_agg",
     category="subquery",
     oracle="""
@@ -855,21 +616,9 @@ def q_agg_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o.o_orderpriority
     """,
 )
-def q_exists_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: EXISTS reduced to a left-semi join feeding an
-    aggregate — the semi join keeps orders unduplicated no matter how
-    many qualifying lineitems each has, so the count is per-order, not
-    per-match."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 45)
-    return (
-        o.join(li, o.o_orderkey == li.l_orderkey, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-    )
 
 
-@register(
+register_sql(
     "q_null_ordering",
     category="sort",
     oracle="""
@@ -886,24 +635,9 @@ def q_exists_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 50
     """,
 )
-def q_null_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit NULL ordering — the cross-engine trap this query pins:
-    Spark's default for DESC is NULLS LAST, DuckDB's spec requires an
-    explicit choice too; both sides declare NULLS FIRST so customers
-    with no qualifying orders sort ahead, tie-broken by key."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 450000)
-    enriched = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.round(F.sum("o_totalprice"), 2).alias("spent"))
-    )
-    return enriched.orderBy(
-        F.col("spent").desc_nulls_first(), "c_custkey"
-    ).limit(50)
 
 
-@register(
+register_sql(
     "q_histogram",
     category="aggregation",
     oracle="""
@@ -917,21 +651,9 @@ def q_null_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     """,
 )
-def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-width histogram via width_bucket: binning is a pure
-    expression, so the whole histogram is one ordinary grouped
-    aggregate — the constant-memory way to profile a 100 TB column
-    (contrast an exact percentile's per-group sort)."""
-    o = load_table(spark, sf_dir, "orders")
-    bucket = F.width_bucket("o_totalprice", F.lit(0), F.lit(600000), F.lit(12))
-    return o.groupBy(bucket.alias("bucket")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.min("o_totalprice"), 2).alias("lo"),
-        F.round(F.max("o_totalprice"), 2).alias("hi"),
-    )
 
 
-@register(
+register_sql(
     "q_cond_count",
     category="aggregation",
     oracle="""
@@ -943,15 +665,6 @@ def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY c_mktsegment
     """,
 )
-def q_cond_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Boolean aggregates: count_if / bool_and / bool_or — predicate
-    profiling in one grouped pass."""
-    c = load_table(spark, sf_dir, "customer")
-    return c.groupBy("c_mktsegment").agg(
-        F.count_if(F.col("c_acctbal") > 5000).alias("n_rich"),
-        F.bool_and(F.col("c_acctbal") > -1000).alias("all_above_floor"),
-        F.bool_or(F.col("c_acctbal") > 9990).alias("any_near_cap"),
-    )
 
 
 @register(
@@ -1068,6 +781,8 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Builder kept: as SQL at sf0.1, stages 3 -> 7 and shuffle write 3.1x; the SQL plan scans
+# orders 3 times, and test_profile_stats_is_single_pass pins one scan.
 @register(
     "q_profile_stats",
     category="aggregation",
@@ -1140,6 +855,8 @@ register_sql(
 )
 
 
+# Builder kept: Spark SQL keeps the oracle's SUM(...) / 100.0 DECIMAL (DuckDB: DOUBLE), so
+# min_spend reads 64377.50 vs 64377.5.
 @register(
     "q_ntile_spend",
     category="window",
@@ -1371,7 +1088,7 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q_agg_mode",
     category="aggregation",
     oracle="""
@@ -1388,32 +1105,9 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT p_type, p_brand AS mode_brand, n AS n_parts FROM r WHERE rn = 1
     """,
 )
-def q_agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic statistical mode: the most common brand per part
-    type, ties broken by lowest brand name — the categorical summary
-    built-in `mode()` functions leave nondeterministic on ties (each
-    engine picks its own row), made cross-engine exact by stating the
-    tie-break.
-
-    Scale: count-then-argmax — a two-phase hash aggregate whose output
-    is bounded by |type|x|brand| cells, then a windowed top-1 over that
-    tiny relation (WindowGroupLimit keeps one row per type in the
-    sort). The raw table never meets the window."""
-    from pyspark.sql import Window
-
-    p = load_table(spark, sf_dir, "part")
-    cnt = p.groupBy("p_type", "p_brand").agg(F.count(F.lit(1)).alias("n"))
-    w = Window.partitionBy("p_type").orderBy(F.col("n").desc(), F.col("p_brand"))
-    return (
-        cnt.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "p_type", F.col("p_brand").alias("mode_brand"), F.col("n").alias("n_parts")
-        )
-    )
 
 
-@register(
+register_sql(
     "q_regression_elasticity",
     category="aggregation",
     oracle="""
@@ -1426,34 +1120,6 @@ def q_agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY p.p_brand
     """,
 )
-def q_regression_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-brand discount elasticity: least-squares slope of quantity
-    against discount (with intercept and fit correlation) — the
-    grouped-regression shape behind every 'does discounting move
-    volume for THIS brand' analysis. The per-group sibling of
-    q_regression_zipf's global fit.
-
-    Scale: regr_slope/intercept/corr are single-pass mergeable moment
-    aggregates, so the whole query is one shuffle keyed on brand after
-    a broadcast join to part — grouped regression at 100 TB costs the
-    same as a grouped average. 4dp rounding on both engines."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part")
-    return (
-        li.join(F.broadcast(p.select("p_partkey", "p_brand")),
-                F.col("p_partkey") == F.col("l_partkey"))
-        .groupBy("p_brand")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_lines"),
-            F.round(F.regr_slope("l_quantity", "l_discount"), 4).alias(
-                "qty_per_discount"
-            ),
-            F.round(F.regr_intercept("l_quantity", "l_discount"), 4).alias(
-                "base_qty"
-            ),
-            F.round(F.corr("l_quantity", "l_discount"), 4).alias("fit_corr"),
-        )
-    )
 
 
 #: Poisson(1) inverse-CDF thresholds (cumulative e^{-1}/k! for k=0..5,
@@ -1569,6 +1235,8 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WILSON_Z = 1.96  # 95% two-sided normal quantile
 
 
+# Builder kept: Spark SQL keeps the oracle's n_returned * 1.0 / n_items DECIMAL (DuckDB:
+# DOUBLE); NATION_0's ci_lo reads 0.3046 vs 0.3045.
 @register(
     "q_returns_wilson",
     category="analytics",

@@ -14,13 +14,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from presto_cached_examples_spark.registry import register
+from presto_cached_examples_spark.registry import register, register_sql
 from presto_cached_examples_spark.plans.artifacts import memo
 from presto_cached_examples_spark.plans.persistence import maybe_persist
 from presto_cached_examples_spark.sources.catalog import load_table
 
 
-@register(
+register_sql(
     "q_events_funnel",
     category="behavioral",
     oracle="""
@@ -47,48 +47,6 @@ from presto_cached_examples_spark.sources.catalog import load_table
     SELECT 'purchase' AS stage, 3 AS stage_no, COUNT(*) AS n_users FROM p
     """,
 )
-def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered view→click→purchase funnel: a user advances a stage only
-    with an event strictly AFTER their previous stage's first event.
-
-    Each stage is filter → per-user MIN(ts) → join to the prior stage's
-    per-user row. The per-user stage relations shrink monotonically, so
-    the chained joins ride broadcast or small shuffles; raw events are
-    only ever scanned and filtered, never windowed or self-joined.
-    Each stage relation has TWO consumers (the next stage's join and
-    its own count row), so each is persisted at user grain —
-    without that, every consumer re-derived its whole ancestry and the
-    physical plan read the events fact table SIX times instead of
-    three (round 9; at 100 TB the fact scans are the query's cost)."""
-    ev = load_table(spark, sf_dir, "events")
-    v = ev.filter(F.col("event_type") == "view").groupBy("user_id").agg(
-        F.min("ts").alias("tv")
-    )
-    v = maybe_persist(v, sf_dir)  # user grain; 2 consumers (lazy, gated)
-    c = (
-        ev.filter(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .filter(F.col("ts") > F.col("tv"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("tc"))
-    )
-    c = maybe_persist(c, sf_dir)  # user grain; 2 consumers (lazy, gated)
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .filter(F.col("ts") > F.col("tc"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("tp"))
-    )
-
-    def stage(df: DataFrame, name: str, no: int) -> DataFrame:
-        return df.agg(F.count(F.lit(1)).alias("n_users")).select(
-            F.lit(name).alias("stage"), F.lit(no).alias("stage_no"), "n_users"
-        )
-
-    return stage(v, "view", 1).unionByName(stage(c, "click", 2)).unionByName(
-        stage(p, "purchase", 3)
-    )
 
 
 @register(
@@ -139,6 +97,8 @@ def q_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Builder kept: as SQL at sf0.1, stages 2 -> 3 and shuffle write 4.8x (14,563 -> 69,911
+# bytes): the daily tier re-aggregates raw events instead of the memoized hourly tier.
 @register(
     "q_events_rollup",
     category="behavioral",
@@ -203,6 +163,9 @@ def q_events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Builder kept: the oracle's range join plans a BroadcastNestedLoopJoin of every
+# (day, user) pair against every day, which test_rolling_wau_never_windows_raw_events
+# forbids (at sf0.1 the SQL side still ran 6 stages, as the builder does).
 @register(
     "q_rolling_wau",
     category="behavioral",
@@ -256,6 +219,8 @@ def q_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Builder kept: Spark SQL keeps the oracle's n_retained * 1.0 / n_active DECIMAL (DuckDB:
+# DOUBLE), so retention reads 0.0000 vs 0.0.
 @register(
     "q_rolling_retention",
     category="behavioral",
@@ -323,6 +288,8 @@ def q_rolling_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Builder kept: the query is the HLL sketch merge; its oracle states only the exact
+# count, through the same BroadcastNestedLoopJoin as q_rolling_wau's.
 @register(
     "q_rolling_wau_approx",
     category="behavioral",
@@ -398,6 +365,8 @@ def q_rolling_wau_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Builder kept: Spark SQL keeps the oracle's n_transitions * 1.0 / SUM(...) DECIMAL
+# (DuckDB: DOUBLE), so prob reads 0.1910 vs 0.191.
 @register(
     "q_markov_transitions",
     category="behavioral",
@@ -454,6 +423,8 @@ def q_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Builder kept: Spark SQL keeps the oracle's SUM(...) / 100.0 DECIMAL (DuckDB: DOUBLE), so
+# revenue reads 443358.10 vs 443358.1.
 @register(
     "q_anomaly_zscore",
     category="behavioral",
@@ -519,7 +490,7 @@ def q_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q_event_runs",
     category="behavioral",
     oracle="""
@@ -546,45 +517,10 @@ def q_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY user_id, run_no, event_type
     """,
 )
-def q_event_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Run-length compression of per-user event streams
-    (gaps-and-islands on VALUE change rather than time gap): maximal
-    runs of consecutive same-type events collapse to one row with
-    validity bounds — the SCD-style change-log a sessionized activity
-    table is built from, and the repeat-burst signal (n_events per
-    run) rage-click detection reads.
-
-    Scale: the q_sessionize argument verbatim — two window passes over
-    one (user_id) hash partitioning (Spark reuses the exchange), then
-    a grouped aggregate on (user_id, run_no); nothing ever crosses
-    user partitions, and the unique event_id tie-break makes run
-    boundaries deterministic on both engines."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = ev.select(
-        "user_id",
-        "event_type",
-        "ts",
-        "event_id",
-        F.when(
-            ~F.lag("event_type").over(w).eqNullSafe(F.col("event_type")), 1
-        ).otherwise(0).alias("is_start"),
-    )
-    numbered = flagged.withColumn(
-        "run_no",
-        F.sum("is_start").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    return numbered.groupBy("user_id", "run_no", "event_type").agg(
-        F.min("ts").alias("run_start"),
-        F.max("ts").alias("run_end"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
 
 
+# Builder kept: as SQL at sf0.1, shuffle write +2.50% (39,900 -> 40,897 bytes) on the same
+# 2-stage plan.
 @register(
     "q_cdc_merge",
     category="behavioral",
@@ -635,7 +571,7 @@ def q_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q_attribution_linear",
     category="behavioral",
     oracle="""
@@ -667,48 +603,6 @@ def q_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY event_type
     """,
 )
-def q_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Linear multi-touch attribution: each purchase's value splits
-    equally across every click/view by the same user in the 7 days
-    before it; per touch-type totals. The marketing-analytics
-    counterpart of the as-of join (which is last-touch).
-
-    Scale: the touch-purchase pairing is an equi-join on user_id with
-    both time bounds as join predicates — the same bounded-state shape
-    as q_join_asof_tol (a watermarked stream-stream join executes it
-    incrementally; q_stream_interval_join pins that equivalence). The
-    per-purchase touch count is a window over the join output keyed by
-    purchase id — uniform, bounded by a user's 7-day activity — and
-    the final rollup is a tiny hash aggregate. ROUND(.,2) after the
-    sum on both engines."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    purch = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-        "value",
-    )
-    touch = ev.filter(F.col("event_type").isin("click", "view")).select(
-        "user_id", "event_type", F.col("ts").alias("t_ts")
-    )
-    joined = purch.join(
-        touch,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("t_ts") < F.col("p_ts"))
-        & (F.col("t_ts") >= F.col("p_ts") - F.expr("INTERVAL 7 DAYS")),
-    )
-    weighted = joined.withColumn(
-        "n_touch", F.count(F.lit(1)).over(Window.partitionBy("p_id"))
-    )
-    return weighted.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_touches"),
-        F.countDistinct("p_id").alias("n_purchases"),
-        F.round(F.sum(F.col("value") / F.col("n_touch")), 2).alias(
-            "attributed_value"
-        ),
-    )
 
 
 @register(
@@ -828,6 +722,8 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PATH_GAP_MIN = 30  # session silence threshold, matches q_sessionize
 
 
+# Builder kept: Spark SQL keeps the oracle's n_paths * 1.0 / SUM(n_paths) OVER () DECIMAL
+# (DuckDB: DOUBLE), so path_share reads 0.5000 vs 0.5 at sf0.001.
 @register(
     "q_path_trigrams",
     category="behavioral",
@@ -914,6 +810,8 @@ def q_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Builder kept: Spark SQL keeps the oracle's MIN(...) * 1.0 / MAX(n_customers) DECIMAL
+# (DuckDB: DOUBLE), so concentration reads 0.3630 vs 0.363.
 @register(
     "q_pareto_half",
     category="behavioral",
@@ -994,7 +892,7 @@ def q_pareto_half(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q_cdc_scd2",
     category="behavioral",
     oracle="""
@@ -1009,34 +907,6 @@ def q_pareto_half(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     """,
 )
-def q_cdc_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Slowly-changing-dimension type-2 materialization: the changelog
-    becomes a versioned history table — one row per state change with
-    [valid_from, valid_to) validity, a version number, and the
-    open-ended current row flagged. The point-in-time side of the CDC
-    story (q_cdc_merge is the latest-state side): 'what was this
-    user's state on date X' becomes a BETWEEN lookup.
-
-    Scale: one hash partition on the dimension key and one window pass
-    computing lead + row_number together (same frame, one sort). This
-    is how SCD2 backfills actually run on a 100 TB changelog —
-    key-partitioned, no global sort, output rows = input rows. The
-    unique (ts, event_id) order makes every validity interval
-    deterministic."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    nxt = F.lead("ts").over(w)
-    return ev.select(
-        "user_id",
-        F.col("event_type").alias("state"),
-        F.col("value").alias("state_value"),
-        F.col("ts").alias("valid_from"),
-        nxt.alias("valid_to"),
-        nxt.isNull().alias("is_current"),
-        F.row_number().over(w).alias("version"),
-    )
 
 
 @register(
@@ -1119,6 +989,9 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Builder kept: the per-day segmented prefix sum is the point. As SQL at sf0.1 it runs in
+# 3 stages against 6, but the sweep becomes one unpartitioned window over every
+# session boundary, which test_concurrency_sweep_is_day_partitioned forbids.
 @register(
     "q_concurrency_peak",
     category="behavioral",
@@ -1233,6 +1106,7 @@ def q_concurrency_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Builder kept: as SQL at sf0.1, stages 12 -> 13 (shuffle write equal, 27,650 bytes).
 @register(
     "q_funnel_windowed",
     category="behavioral",
@@ -1660,6 +1534,8 @@ _MAD_K = 1.4826  # normal-consistency constant
 _MAD_MULT = 2.0  # flag beyond 2 robust sigmas
 
 
+# Builder kept: as SQL at sf0.1, stages 3 -> 6 and shuffle write +1.27% (4,718 -> 4,778
+# bytes).
 @register(
     "q_events_mad",
     category="behavioral",
@@ -1922,6 +1798,8 @@ q_revenue_ewma.__doc__ = q_revenue_ewma.__doc__.replace(
 ).replace("{_EWMA_FRAME}", str(_EWMA_FRAME))
 
 
+# Builder kept: Spark SQL keeps the oracle's SUM(...) / 100.0 DECIMAL (DuckDB: DOUBLE), so
+# NATION_11's bias reads -0.1220 vs -0.122.
 @register(
     "q_seasonal_naive",
     category="behavioral",
@@ -2249,6 +2127,8 @@ def q_revenue_moving_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Builder kept: Spark SQL keeps the oracle's SUM(num) * 1.0 / ANY_VALUE(den) DECIMAL
+# (DuckDB: DOUBLE), so l1_shift reads 0.0480 vs 0.048.
 @register(
     "q_priority_shift",
     category="behavioral",

@@ -285,6 +285,8 @@ def _register_pagerank_query():
     from presto_cached_examples_spark.registry import register
     from presto_cached_examples_spark.sources.catalog import load_table
 
+    # Builder kept: Spark SQL keeps the oracle's 1.0 / n_nodes DECIMAL (DuckDB:
+    # DOUBLE), so rank reads 0.000200 vs 0.0002.
     @register("q_graph_pagerank", category="graph", oracle=_pagerank_oracle())
     def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         """PageRank over the part co-purchase graph — 3 fixed
@@ -388,6 +390,8 @@ def _register_triangles_query():
 
     from presto_cached_examples_spark.registry import register
 
+    # Builder kept: Spark SQL keeps the oracle's 2.0 * n_tri / (d * (d - 1)) DECIMAL
+    # (DuckDB: DOUBLE), so clustering_coeff reads 0.0000 vs 0.0.
     @register("q_graph_triangles", category="graph", oracle=_GRAPH_TRIANGLES_ORACLE)
     def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Per-node triangle counts and local clustering coefficient
@@ -460,6 +464,8 @@ def _register_degree_stats_query():
 
     from presto_cached_examples_spark.registry import register
 
+    # Builder kept: Spark SQL keeps the oracle's h.n_nodes * 1.0 / n.n_nodes DECIMAL
+    # (DuckDB: DOUBLE), so share reads 0.4090 vs 0.409.
     @register(
         "q_graph_degree_stats", category="graph", oracle=_DEGREE_STATS_ORACLE
     )

@@ -692,7 +692,8 @@ def _drift_oracle() -> str:
     """
 
 
-# Builder kept: Spark SQL runs the oracle text to a different answer.
+# Builder kept: Spark SQL keeps the oracle's nd * 1.0 / nd - 1 DECIMAL (DuckDB: DOUBLE),
+# so distinct_drift reads 0.0000 vs 0.0.
 @register("q_drift_report", category="scan", oracle=_drift_oracle())
 def q_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-level profile drift between two table versions (v2 is

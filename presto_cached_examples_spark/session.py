@@ -17,6 +17,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "presto-cached-examples-spark"
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_cpus() -> str:
@@ -158,4 +159,12 @@ def get_session(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # Python workers unpickle this package's UDFs and so import it; they
+    # see the environment of the Python functions Spark ships, not the
+    # driver's sys.path. Put the package's parent on their path so they
+    # find it whatever the driver's working directory.
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_PARENT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_PARENT, *paths])
     return spark

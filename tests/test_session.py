@@ -99,7 +99,7 @@ def test_persist_gate_parity(spark, duck):
     from tests.util import assert_frames_match
 
     specs = all_specs()
-    for name in ("q_events_funnel", "q_rolling_wau", "q_priority_shift"):
+    for name in ("q_funnel_windowed", "q_rolling_wau", "q_priority_shift"):
         spec = specs[name]
         for mode in ("off", "on"):
             _gate_conf(spark, mode)
@@ -134,3 +134,37 @@ def test_codegen_cache_holds_the_headline_working_set(spark):
     before = compiles.METRIC_COMPILATION_TIME().getCount()
     run_pass()
     assert compiles.METRIC_COMPILATION_TIME().getCount() - before == 0
+
+
+# ---- Python workers find the package (session.py) -----------------------
+
+
+def test_python_workers_import_package_from_any_cwd(tmp_path):
+    """A driver whose working directory is not the repo, with the repo on
+    sys.path only, must still run a query whose Python worker imports the
+    package (q_mm_features' mapInPandas unpickles a package function)."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {root!r})\n"
+        "from presto_cached_examples_spark import get_session, registry\n"
+        "spark = get_session()\n"
+        f"n = registry.queries()['q_mm_features'](spark, {SF_TINY!r}).count()\n"
+        "print('ROWS', n)\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    rows = [line for line in out.stdout.splitlines() if line.startswith("ROWS ")]
+    assert rows and int(rows[-1].split()[1]) > 0, out.stdout[-2000:]

@@ -63,7 +63,7 @@ def audit_plans() -> list[str]:
 
     from presto_cached_examples_spark import get_session, registry
 
-    spark = get_session(cpus="8", app_name="audit")
+    spark = get_session(app_name="audit")
     sf = "/root/testdata/sf0.001"
     problems: list[str] = []
     for name, spec in registry.all_specs().items():

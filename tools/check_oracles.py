@@ -75,7 +75,7 @@ def main() -> int:
     from presto_cached_examples_spark import get_session, registry
     from presto_cached_examples_spark.sources.catalog import TABLES, table_path
 
-    spark = get_session(cpus="8")
+    spark = get_session()
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(args.sf, t)}'")
