@@ -1112,7 +1112,7 @@ def _dedup_embed_sweep_oracle() -> str:
     )
 
     branches = "\n    UNION ALL ".join(
-        f"""SELECT {t} AS threshold,
+        f"""SELECT CAST({t} AS DOUBLE) AS threshold,
            COUNT(*) AS n_pairs,
            COUNT(DISTINCT vec_b) AS n_dup_candidates
     FROM scored WHERE cosine >= {t}"""

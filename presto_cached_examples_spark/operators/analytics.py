@@ -855,15 +855,16 @@ register_sql(
 )
 
 
-# Builder kept: Spark SQL keeps the oracle's SUM(...) / 100.0 DECIMAL (DuckDB: DOUBLE), so
-# min_spend reads 64377.50 vs 64377.5.
+# Builder kept: as SQL, NTILE is one single-task window over every customer, which
+# distwindows.global_rank avoids; at sf0.1, shuffle write +70.9% (204,459 -> 349,394 bytes).
 @register(
     "q_ntile_spend",
     category="window",
     oracle="""
     WITH spend AS (
       SELECT o_custkey,
-             SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) / 100.0 AS spend
+             CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0
+               AS spend
       FROM orders GROUP BY o_custkey
     ),
     tiled AS (
@@ -875,7 +876,7 @@ register_sql(
            COUNT(*) AS n_customers,
            ROUND(MIN(spend), 2) AS min_spend,
            ROUND(MAX(spend), 2) AS max_spend,
-           ROUND(SUM(CAST(ROUND(spend * 100, 0) AS BIGINT)) / 100.0
+           ROUND(CAST(SUM(CAST(ROUND(spend * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0
                  / COUNT(*), 2) AS avg_spend
     FROM tiled GROUP BY decile
     """,
@@ -1235,9 +1236,7 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WILSON_Z = 1.96  # 95% two-sided normal quantile
 
 
-# Builder kept: Spark SQL keeps the oracle's n_returned * 1.0 / n_items DECIMAL (DuckDB:
-# DOUBLE); NATION_0's ci_lo reads 0.3046 vs 0.3045.
-@register(
+register_sql(
     "q_returns_wilson",
     category="analytics",
     oracle=f"""
@@ -1253,75 +1252,19 @@ _WILSON_Z = 1.96  # 95% two-sided normal quantile
       GROUP BY n.n_name
     )
     SELECT nation, n_items, n_returned,
-           ROUND(n_returned * 1.0 / n_items, 4) AS p_hat,
-           ROUND((n_returned * 1.0 / n_items
-                  + {_WILSON_Z} * {_WILSON_Z} / (2 * n_items)
-                  - {_WILSON_Z} * SQRT(
-                      (n_returned * 1.0 / n_items)
-                      * (1 - n_returned * 1.0 / n_items) / n_items
-                      + {_WILSON_Z} * {_WILSON_Z}
-                        / (4.0 * n_items * n_items)))
-                 / (1 + {_WILSON_Z} * {_WILSON_Z} / n_items), 4) AS ci_lo,
-           ROUND((n_returned * 1.0 / n_items
-                  + {_WILSON_Z} * {_WILSON_Z} / (2 * n_items)
-                  + {_WILSON_Z} * SQRT(
-                      (n_returned * 1.0 / n_items)
-                      * (1 - n_returned * 1.0 / n_items) / n_items
-                      + {_WILSON_Z} * {_WILSON_Z}
-                        / (4.0 * n_items * n_items)))
-                 / (1 + {_WILSON_Z} * {_WILSON_Z} / n_items), 4) AS ci_hi
-    FROM r
+           ROUND(p, 4) AS p_hat,
+           ROUND((p + z * z / (2 * n_items)
+                  - z * SQRT(p * (1 - p) / n_items
+                             + z * z / (4.0 * n_items * n_items)))
+                 / (1 + z * z / n_items), 4) AS ci_lo,
+           ROUND((p + z * z / (2 * n_items)
+                  + z * SQRT(p * (1 - p) / n_items
+                             + z * z / (4.0 * n_items * n_items)))
+                 / (1 + z * z / n_items), 4) AS ci_hi
+    FROM (
+      SELECT r.*, CAST(n_returned AS DOUBLE) / n_items AS p,
+             CAST({_WILSON_Z} AS DOUBLE) AS z
+      FROM r
+    ) s
     """,
 )
-def q_returns_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-nation lineitem return rate with a Wilson 95% score
-    interval — the closed-form CI that stays inside [0,1] and behaves
-    at small n, where the naive Wald interval (and a mean +/- stddev
-    eyeball) lies. The deterministic counterpart to q_bootstrap_ci:
-    same 'rate with honest uncertainty' deliverable, zero resampling,
-    so it runs as ONE aggregate pass and both engines agree to the
-    last ULP of the shared formula before the 4 dp rounding.
-
-    Scale: three joins reduced before arithmetic — lineitem shuffles
-    once on orderkey against orders (the only fact-fact join),
-    customer and nation broadcast; the Wilson formula is scalar math
-    on the |nations|-row aggregate. All counts are exact longs; the
-    CI is derived per-row from those longs, so there is no
-    summation-order exposure at all.
-
-    Reference provenance: C8 bounded-confidence telemetry
-    (/root/reference/src/SinglePsramBuffer480x480.cpp:166-175)."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_returnflag"
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    r = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.count(F.lit(1)).alias("n_items"),
-            F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
-            .cast("long")
-            .alias("n_returned"),
-        )
-    )
-    z = _WILSON_Z
-    p = F.col("n_returned") / F.col("n_items")
-    nn = F.col("n_items")
-    center = p + z * z / (2 * nn)
-    half = z * F.sqrt(p * (1 - p) / nn + z * z / (4.0 * nn * nn))
-    denom = 1 + z * z / nn
-    return r.select(
-        "nation",
-        "n_items",
-        "n_returned",
-        F.round(p, 4).alias("p_hat"),
-        F.round((center - half) / denom, 4).alias("ci_lo"),
-        F.round((center + half) / denom, 4).alias("ci_hi"),
-    )

@@ -219,8 +219,8 @@ def q_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Builder kept: Spark SQL keeps the oracle's n_retained * 1.0 / n_active DECIMAL (DuckDB:
-# DOUBLE), so retention reads 0.0000 vs 0.0.
+# Builder kept: as SQL the retained set is an equi-join on user_id under a range filter, with
+# no map-side Generate explode, which test_rolling_retention_is_map_side_expansion pins.
 @register(
     "q_rolling_retention",
     category="behavioral",
@@ -238,7 +238,7 @@ def q_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT act.d AS day,
            act.n_active,
            COALESCE(ret.n_retained, 0) AS n_retained,
-           ROUND(COALESCE(ret.n_retained, 0) * 1.0 / act.n_active, 4) AS retention
+           ROUND(CAST(COALESCE(ret.n_retained, 0) AS DOUBLE) / act.n_active, 4) AS retention
     FROM act LEFT JOIN ret ON ret.d = act.d
     """,
 )
@@ -365,9 +365,7 @@ def q_rolling_wau_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Builder kept: Spark SQL keeps the oracle's n_transitions * 1.0 / SUM(...) DECIMAL
-# (DuckDB: DOUBLE), so prob reads 0.1910 vs 0.191.
-@register(
+register_sql(
     "q_markov_transitions",
     category="behavioral",
     oracle="""
@@ -384,54 +382,21 @@ def q_rolling_wau_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
       GROUP BY from_type, to_type
     )
     SELECT from_type, to_type, n_transitions,
-           ROUND(n_transitions * 1.0 /
+           ROUND(CAST(n_transitions AS DOUBLE) /
                  SUM(n_transitions) OVER (PARTITION BY from_type), 4) AS prob
     FROM t
     """,
 )
-def q_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix over per-user event
-    sequences: P(next event type | current event type) — the
-    path-analysis primitive behind "what do users do after a click".
-
-    Scale: one shuffle keyed on user_id for the lead() window (the same
-    partitioning q_sessionize rides), then a hash aggregate whose
-    output is bounded by |event_type|² — a handful of rows no matter
-    the event volume. The normalizing window runs over that tiny
-    matrix, not over events. The unique event_id tie-break keeps the
-    sequence (and therefore every count) deterministic on both
-    engines."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        F.col("event_type").alias("from_type"),
-        F.lead("event_type").over(w).alias("to_type"),
-    ).filter(F.col("to_type").isNotNull())
-    t = seq.groupBy("from_type", "to_type").agg(
-        F.count(F.lit(1)).alias("n_transitions")
-    )
-    norm = Window.partitionBy("from_type")
-    return t.select(
-        "from_type",
-        "to_type",
-        "n_transitions",
-        F.round(
-            F.col("n_transitions") * 1.0 / F.sum("n_transitions").over(norm), 4
-        ).alias("prob"),
-    )
 
 
-# Builder kept: Spark SQL keeps the oracle's SUM(...) / 100.0 DECIMAL (DuckDB: DOUBLE), so
-# revenue reads 443358.10 vs 443358.1.
-@register(
+register_sql(
     "q_anomaly_zscore",
     category="behavioral",
     oracle="""
     WITH daily AS (
       SELECT date_trunc('day', o_orderdate) AS day,
-             SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) / 100.0 AS revenue
+             CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0
+               AS revenue
       FROM orders GROUP BY day
     ),
     scored AS (
@@ -450,44 +415,6 @@ def q_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM scored
     """,
 )
-def q_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing-window anomaly detection: each day's revenue scored as
-    a z-score against the previous ≤28 observed days (ROWS frame — the
-    monitoring query behind a revenue-alerting dashboard). Days with
-    fewer than 10 priors or zero variance score NULL instead of
-    producing unstable flags.
-
-    Scale: raw orders collapse to one row per day first (two-phase hash
-    aggregate, cent-summed so the day totals are bit-identical across
-    engines); the window then runs over the day series — thousands of
-    rows for years of data — so the single-partition unpartitioned
-    window is domain-bounded, the same argument as q_window_frame. Both
-    engines evaluate mean/std over the identical ordered frame of
-    identical cent-exact values, and 3dp rounding absorbs ULP drift."""
-    from pyspark.sql import Window
-
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.date_trunc("day", "o_orderdate").alias("day")).agg(
-        (
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long")) / 100.0
-        ).alias("revenue")
-    )
-    w = Window.orderBy("day").rowsBetween(-28, -1)
-    scored = daily.select(
-        "day",
-        "revenue",
-        F.avg("revenue").over(w).alias("mu"),
-        F.stddev_samp("revenue").over(w).alias("sigma"),
-        F.count(F.lit(1)).over(w).alias("n_prior"),
-    )
-    ok = (F.col("n_prior") >= 10) & (F.col("sigma") > 0)
-    z = (F.col("revenue") - F.col("mu")) / F.col("sigma")
-    return scored.select(
-        "day",
-        F.round("revenue", 2).alias("revenue"),
-        F.when(ok, F.round(z, 3)).alias("z_28"),
-        F.when(ok, F.abs(z) > 2).alias("is_anomaly"),
-    )
 
 
 register_sql(
@@ -722,9 +649,7 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PATH_GAP_MIN = 30  # session silence threshold, matches q_sessionize
 
 
-# Builder kept: Spark SQL keeps the oracle's n_paths * 1.0 / SUM(n_paths) OVER () DECIMAL
-# (DuckDB: DOUBLE), so path_share reads 0.5000 vs 0.5 at sf0.001.
-@register(
+register_sql(
     "q_path_trigrams",
     category="behavioral",
     oracle=f"""
@@ -757,62 +682,13 @@ _PATH_GAP_MIN = 30  # session silence threshold, matches q_sessionize
       GROUP BY e1, e2, e3
     )
     SELECT e1, e2, e3, n_paths,
-           ROUND(n_paths * 1.0 / SUM(n_paths) OVER (), 4) AS path_share
+           ROUND(CAST(n_paths AS DOUBLE) / SUM(n_paths) OVER (), 4) AS path_share
     FROM cnt
     """,
 )
-def q_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-scoped path mining: the frequency of every 3-step
-    event-type path users take WITHIN a session (30-minute silence
-    breaks a path — the q_sessionize boundary), with each path's share
-    of all observed paths. The sequence-mining upgrade of
-    q_markov_transitions' first-order matrix: 'view→click→purchase'
-    is visible here, invisible there.
-
-    Scale: sessionization and both lead() steps ride ONE (user_id)
-    hash partitioning — Spark reuses the exchange across the three
-    window passes, so raw events shuffle once. The trigram aggregate's
-    output is bounded by |event_type|^3 (125 cells max) and the share
-    window runs over that tiny relation. Unique (ts, event_id)
-    ordering keeps every path count deterministic on both engines."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_us = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
-    is_start = F.when(
-        gap_us.isNull() | (gap_us > _PATH_GAP_MIN * 60 * 1_000_000), 1
-    ).otherwise(0)
-    sess = ev.select(
-        "user_id", "ts", "event_id", "event_type", is_start.alias("is_start")
-    ).withColumn(
-        "session_no",
-        F.sum("is_start").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    s = Window.partitionBy("user_id", "session_no").orderBy("ts", "event_id")
-    tri = sess.select(
-        F.col("event_type").alias("e1"),
-        F.lead("event_type", 1).over(s).alias("e2"),
-        F.lead("event_type", 2).over(s).alias("e3"),
-    ).filter(F.col("e3").isNotNull())
-    cnt = tri.groupBy("e1", "e2", "e3").agg(F.count(F.lit(1)).alias("n_paths"))
-    return cnt.select(
-        "e1",
-        "e2",
-        "e3",
-        "n_paths",
-        F.round(
-            F.col("n_paths") * 1.0 / F.sum("n_paths").over(Window.partitionBy()),
-            4,
-        ).alias("path_share"),
-    )
 
 
-# Builder kept: Spark SQL keeps the oracle's MIN(...) * 1.0 / MAX(n_customers) DECIMAL
-# (DuckDB: DOUBLE), so concentration reads 0.3630 vs 0.363.
-@register(
+register_sql(
     "q_pareto_half",
     category="behavioral",
     oracle="""
@@ -838,58 +714,11 @@ def q_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(MIN(CASE WHEN cum_cents * 2 >= total_cents THEN rn END)
                 AS BIGINT) AS n_to_half,
            MAX(n_customers) AS n_customers,
-           ROUND(MIN(CASE WHEN cum_cents * 2 >= total_cents THEN rn END)
-                 * 1.0 / MAX(n_customers), 4) AS concentration
+           ROUND(CAST(MIN(CASE WHEN cum_cents * 2 >= total_cents THEN rn END)
+                      AS DOUBLE) / MAX(n_customers), 4) AS concentration
     FROM ranked GROUP BY mktsegment
     """,
 )
-def q_pareto_half(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue concentration (Pareto analysis): per market segment, the
-    smallest number of customers whose combined spend reaches half the
-    segment's revenue, and that count as a fraction of the segment's
-    customers — the 'how top-heavy is this segment' KPI.
-
-    Scale: orders first reduce to cent-exact (segment, customer) spend
-    rows (two-phase hash aggregate), then ONE (mktsegment) partitioning
-    serves the rank, running-sum, total, and count windows — all
-    integer arithmetic, so the 50% crossover is exact on both engines.
-    The final aggregate is per-segment (5 rows). Customer-count-sized
-    windows per segment are the query's irreducible sort."""
-    from pyspark.sql import Window
-
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    spend = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .groupBy(F.col("c_mktsegment").alias("mktsegment"), "o_custkey")
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long")).alias(
-                "cents"
-            )
-        )
-    )
-    wseg = Window.partitionBy("mktsegment")
-    worder = wseg.orderBy(F.col("cents").desc(), F.col("o_custkey"))
-    ranked = spend.select(
-        "mktsegment",
-        "cents",
-        F.row_number().over(worder).alias("rn"),
-        F.sum("cents")
-        .over(worder.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .alias("cum_cents"),
-        F.sum("cents").over(wseg).alias("total_cents"),
-        F.count(F.lit(1)).over(wseg).alias("n_customers"),
-    )
-    crossed = F.when(
-        F.col("cum_cents") * 2 >= F.col("total_cents"), F.col("rn")
-    )
-    return ranked.groupBy("mktsegment").agg(
-        F.min(crossed).cast("long").alias("n_to_half"),
-        F.max("n_customers").alias("n_customers"),
-        F.round(F.min(crossed) * 1.0 / F.max("n_customers"), 4).alias(
-            "concentration"
-        ),
-    )
 
 
 register_sql(
@@ -1798,17 +1627,15 @@ q_revenue_ewma.__doc__ = q_revenue_ewma.__doc__.replace(
 ).replace("{_EWMA_FRAME}", str(_EWMA_FRAME))
 
 
-# Builder kept: Spark SQL keeps the oracle's SUM(...) / 100.0 DECIMAL (DuckDB: DOUBLE), so
-# NATION_11's bias reads -0.1220 vs -0.122.
-@register(
+register_sql(
     "q_seasonal_naive",
     category="behavioral",
     oracle="""
     WITH monthly AS (
       SELECT n.n_name AS nation,
              date_trunc('month', o.o_orderdate) AS month,
-             SUM(CAST(ROUND(o.o_totalprice * 100, 0) AS BIGINT)) / 100.0
-               AS revenue
+             CAST(SUM(CAST(ROUND(o.o_totalprice * 100, 0) AS BIGINT)) AS DOUBLE)
+               / 100.0 AS revenue
       FROM orders o
       JOIN customer c ON c.c_custkey = o.o_custkey
       JOIN nation n ON n.n_nationkey = c.c_nationkey
@@ -1828,67 +1655,6 @@ q_revenue_ewma.__doc__ = q_revenue_ewma.__doc__.replace(
     FROM scored GROUP BY nation
     """,
 )
-def q_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seasonal-naive forecast backtest: predict each nation-month's
-    revenue as the SAME month one year earlier (the lag-12 baseline
-    every real forecasting system must beat before it earns its
-    complexity), scoring MAPE and signed bias per nation over all
-    months where the lag exists. A bias far from 0 means the market is
-    trending (seasonal-naive systematically under/over-shoots); a low
-    MAPE means seasonality dominates and fancy models have little
-    headroom.
-
-    Scale: the fact stream collapses to the (nation, month) spine
-    first — cent-summed longs so both engines agree bit-for-bit before
-    any ratio. The forecast is a CALENDAR self-join (month = month +
-    12 months), NOT a row-lag window: on a sparse month spine LAG(12)
-    silently grabs whatever happened to be 12 rows back, which is a
-    different (and wrong) forecast. The spine relation is bounded by
-    |nations| x |months| so the self-join is model-sized, and the
-    scoreboard aggregate keys on nation. The only doubles are the
-    final error ratios, rounded at 4 dp.
-
-    Reference provenance: C8 history-vs-now comparison
-    (/root/reference/src/SinglePsramBuffer480x480.cpp:166-175)."""
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderdate", "o_totalprice"
-    )
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    monthly = (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.date_trunc("month", "o_orderdate").alias("month"),
-        )
-        .agg(
-            (
-                F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long"))
-                / 100.0
-            ).alias("revenue")
-        )
-    )
-    prev = monthly.select(
-        F.col("nation").alias("p_nation"),
-        F.add_months(F.to_date("month"), 12).alias("p_month"),
-        F.col("revenue").alias("forecast"),
-    )
-    # the spine is |nations| x |months| — broadcast beats an SMJ of
-    # two re-aggregations of the fact table
-    scored = monthly.join(
-        F.broadcast(prev),
-        (F.col("p_nation") == F.col("nation"))
-        & (F.col("p_month") == F.to_date("month")),
-    )
-    err = (F.col("revenue") - F.col("forecast")) / F.col("revenue")
-    return scored.groupBy("nation").agg(
-        F.count(F.lit(1)).alias("n_months"),
-        F.round(F.avg(F.abs(err)), 4).alias("mape"),
-        F.round(F.avg(err), 4).alias("bias"),
-    )
 
 
 _AB_Z = 1.96
@@ -2127,9 +1893,7 @@ def q_revenue_moving_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Builder kept: Spark SQL keeps the oracle's SUM(num) * 1.0 / ANY_VALUE(den) DECIMAL
-# (DuckDB: DOUBLE), so l1_shift reads 0.0480 vs 0.048.
-@register(
+register_sql(
     "q_priority_shift",
     category="behavioral",
     oracle="""
@@ -2163,86 +1927,13 @@ def q_revenue_moving_median(spark: SparkSession, sf_dir: str) -> DataFrame:
       -- den = t1*t0 is constant within a month: sum the INTEGER
       -- numerators, divide once — zero summation-order exposure
       SELECT month, COUNT(*) AS n_priorities,
-             ROUND(SUM(num) * 1.0 / ANY_VALUE(den), 4) AS l1_shift
+             ROUND(CAST(SUM(num) AS DOUBLE) / ANY_VALUE(den), 4) AS l1_shift
       FROM shifted GROUP BY month
     )
     SELECT a.month, CAST(a.n_priorities AS INT) AS n_priorities,
            a.l1_shift,
            r.prio AS top_mover,
-           ROUND(r.num * 1.0 / r.den, 4) AS top_shift
+           ROUND(CAST(r.num AS DOUBLE) / r.den, 4) AS top_shift
     FROM agg a JOIN ranked r ON r.month = a.month AND r.rl = 1
     """,
 )
-def q_priority_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Month-over-month distribution shift of the order-priority mix:
-    per month, the L1 distance between this month's and last month's
-    priority shares, plus the priority that moved most. The
-    over-TIME companion to q_drift_report's two-version column drift —
-    the monitor that catches a silent upstream change re-weighting a
-    categorical long before any single month looks wrong in isolation.
-
-    Determinism: share differences are computed as the EXACT integer
-    cross-multiplication |c1*t0 - c0*t1| over a common denominator
-    t1*t0, so the L1 sum accumulates INTEGERS (no summation-order ULP
-    exposure at all — the post-q_events_heatmap discipline) and each
-    output sees exactly one IEEE division before its rounding; the
-    top-mover argmax compares integers with a priority tie-break.
-
-    Scale: the fact stream collapses to the (month, priority) spine
-    first (bounded |months| x 5) and that model-sized aggregate is
-    persisted (lazily — no build-time jobs) so its FIVE
-    downstream consumers (totals, current, previous, window, L1
-    aggregate) share ONE orders scan — before round 9 each consumer
-    branch re-read the fact table (8 parquet scans in the physical
-    plan; at 100 TB that is 8 fact scans for a monitor query). The
-    previous-month join is CALENDAR (the q_seasonal_naive lesson —
-    row-lag mis-pairs on sparse spines) over the checkpointed
-    relation, the per-month window ranks <= 5 rows, and the final
-    month-grain join broadcasts.
-
-    Reference provenance: C8 history-vs-now comparison
-    (/root/reference/src/SinglePsramBuffer480x480.cpp:166-175)."""
-    o = load_table(spark, sf_dir, "orders")
-    m = o.groupBy(
-        F.date_trunc("month", "o_orderdate").alias("month"),
-        F.col("o_orderpriority").alias("prio"),
-    ).agg(F.count(F.lit(1)).alias("c"))
-    m = maybe_persist(m, sf_dir)  # |months| x 5; 5 consumers (lazy, gated)
-    t = m.groupBy("month").agg(F.sum("c").alias("tot"))
-    cur = m.join(F.broadcast(t), "month")
-    prev = cur.select(
-        F.col("prio").alias("p_prio"),
-        F.add_months(F.to_date("month"), 1).alias("p_month"),
-        F.col("c").alias("c0"),
-        F.col("tot").alias("t0"),
-    )
-    shifted = cur.join(
-        F.broadcast(prev),
-        (F.col("p_prio") == F.col("prio"))
-        & (F.col("p_month") == F.to_date("month")),
-    ).select(
-        "month",
-        "prio",
-        F.abs(F.col("c") * F.col("t0") - F.col("c0") * F.col("tot")).alias(
-            "num"
-        ),
-        (F.col("tot") * F.col("t0")).alias("den"),
-    )
-    from pyspark.sql import Window
-
-    rl = F.row_number().over(
-        Window.partitionBy("month").orderBy(F.col("num").desc(), "prio")
-    )
-    ranked = shifted.select("month", "prio", "num", "den", rl.alias("rl"))
-    agg = shifted.groupBy("month").agg(
-        F.count(F.lit(1)).cast("int").alias("n_priorities"),
-        # den is month-constant: integer-sum the numerators, one division
-        F.round(F.sum("num") / F.any_value("den"), 4).alias("l1_shift"),
-    )
-    return agg.join(F.broadcast(ranked.filter(F.col("rl") == 1)), "month").select(
-        "month",
-        "n_priorities",
-        "l1_shift",
-        F.col("prio").alias("top_mover"),
-        F.round(F.col("num") / F.col("den"), 4).alias("top_shift"),
-    )

@@ -669,7 +669,7 @@ def _drift_oracle() -> str:
         f"CAST(a.null_{c} AS BIGINT) AS nulls_v1, "
         f"CAST(b.null_{c} AS BIGINT) AS nulls_v2, "
         f"a.nd_{c} AS distinct_v1, b.nd_{c} AS distinct_v2, "
-        f"ROUND(b.nd_{c} * 1.0 / a.nd_{c} - 1, 4) AS distinct_drift "
+        f"ROUND(CAST(b.nd_{c} AS DOUBLE) / a.nd_{c} - 1, 4) AS distinct_drift "
         f"FROM a CROSS JOIN b"
         for c in _DRIFT_COLS
     )
@@ -692,8 +692,7 @@ def _drift_oracle() -> str:
     """
 
 
-# Builder kept: Spark SQL keeps the oracle's nd * 1.0 / nd - 1 DECIMAL (DuckDB: DOUBLE),
-# so distinct_drift reads 0.0000 vs 0.0.
+# Builder kept: as SQL at sf0.1, stages 6 -> 26.
 @register("q_drift_report", category="scan", oracle=_drift_oracle())
 def q_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-level profile drift between two table versions (v2 is

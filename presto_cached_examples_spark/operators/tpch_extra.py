@@ -92,9 +92,7 @@ register_sql(
 )
 
 
-# Builder kept: as SQL at sf0.1 the AQE-final plan holds 5 shuffle exchanges,
-# not 3, counting the scalar subquery's (ledger stages and shuffle bytes equal).
-@register(
+register_sql(
     "q_top_supplier",
     category="join",
     oracle="""
@@ -111,31 +109,6 @@ register_sql(
     WHERE r.total_revenue = (SELECT MAX(total_revenue) FROM rev)
     """,
 )
-def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15-style top supplier: the supplier(s) achieving the
-    maximum quarterly revenue. The revenue "view" aggregates once; the
-    scalar max is a 1-row broadcast joined back (no second scan of
-    lineitem, no window over the whole table). Revenue is rounded to
-    cents BEFORE the max comparison on both engines so ULP noise can't
-    flip the argmax."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate").cast("date") >= F.lit("1997-01-01").cast("date"))
-        & (F.col("l_shipdate").cast("date") < F.lit("1997-04-01").cast("date"))
-    )
-    rev = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-            "total_revenue"
-        )
-    )
-    mx = rev.agg(F.max("total_revenue").alias("mx"))
-    s = load_table(spark, sf_dir, "supplier")
-    # mx is a 1-row aggregate — forced broadcast; supplier grows with
-    # SF, so no hint (AQE promotes it while it fits)
-    return (
-        rev.join(F.broadcast(mx), rev.total_revenue == mx.mx)
-        .join(s, F.col("supplier_no") == s.s_suppkey)
-        .select("s_suppkey", "s_name", "total_revenue")
-    )
 
 
 register_sql(
@@ -296,9 +269,7 @@ def q_sole_return_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Builder kept: as SQL at sf0.1 the AQE-final plan holds 3 shuffle exchanges,
-# not 2 (ledger stages and shuffle bytes equal).
-@register(
+register_sql(
     "q_global_sales_opp",
     category="subquery",
     oracle="""
@@ -316,36 +287,6 @@ def q_sole_return_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY p.c_nationkey
     """,
 )
-def q_global_sales_opp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22-style sales opportunity: well-funded customers in
-    selected nations with no URGENT order. (The classic "never ordered"
-    predicate is vacuous on the driver fixtures — every customer has
-    orders at every SF — so the anti-join target is the urgent-order
-    slice, which keeps the result non-empty at sf0.001/0.01/0.1 and the
-    parity check meaningful; ADVICE r2.) The scalar average is one tiny
-    aggregate broadcast back; the NOT EXISTS is a left-anti join
-    against the filtered orders key projection — both scale-safe (the
-    anti join shuffles only custkeys). Customer pool filter reaches the
-    scan."""
-    pool = load_table(spark, sf_dir, "customer").filter(
-        F.col("c_nationkey").isin(1, 3, 7, 12, 18)
-    )
-    avg_bal = pool.filter(F.col("c_acctbal") > 0.0).agg(F.avg("c_acctbal").alias("ab"))
-    o_keys = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_custkey")
-    )
-    return (
-        pool.join(F.broadcast(avg_bal))
-        .filter(F.col("c_acctbal") > F.col("ab"))
-        .join(o_keys, pool.c_custkey == o_keys.o_custkey, "left_anti")
-        .groupBy(F.col("c_nationkey").alias("cntry"))
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            F.round(F.sum("c_acctbal"), 2).alias("totacctbal"),
-        )
-    )
 
 
 register_sql(
@@ -423,9 +364,7 @@ register_sql(
 )
 
 
-# Builder kept: as SQL at sf0.1 the AQE-final plan holds 5 shuffle exchanges,
-# not 3 (ledger stages equal).
-@register(
+register_sql(
     "q_important_stock",
     category="subquery",
     oracle="""
@@ -445,47 +384,6 @@ register_sql(
     LIMIT 100
     """,
 )
-def q_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11-style important stock: parts whose shipped value from
-    one nation's suppliers exceeds 2x the nation's MEAN per-part value
-    — the fraction-of-a-global-aggregate HAVING shape. Value is modeled
-    as extendedprice x quantity over the derived lineitem partsupp
-    (no ps_availqty in the fixture; documented adaptation). TPC-H
-    scales Q11's fixed fraction by 1/SF so the result set stays
-    non-degenerate as the part domain grows; a mean-relative threshold
-    is the self-normalizing equivalent — no SF knob, meaningful output
-    at every scale (a fixed 0.001 fraction returned 0 rows at sf0.1).
-
-    Scale: the nation filter prunes the supplier slice before the fact
-    join; the per-part aggregate and the global total come from ONE
-    shared slice (the CTE computes once, Spark reuses the same plan
-    subtree). The total is a 1-row aggregate crossed in as a broadcast
-    scalar — the accepted BNLJ-scalar pattern — and the threshold
-    compares cent-rounded values on both engines so summation-order
-    ULP drift cannot flip a borderline part. Top-100 is
-    TakeOrderedAndProject with a partkey tie-break."""
-    n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
-    s = load_table(spark, sf_dir, "supplier").join(
-        F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey")
-    )
-    natl = (
-        load_table(spark, sf_dir, "lineitem")
-        .join(s.select("s_suppkey"), F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(
-            "l_partkey", (F.col("l_extendedprice") * F.col("l_quantity")).alias("val")
-        )
-    )
-    per_part = natl.groupBy("l_partkey").agg(F.round(F.sum("val"), 2).alias("part_value"))
-    total = natl.agg(
-        F.round(F.sum("val") * 2.0 / F.count_distinct("l_partkey"), 2).alias("thresh")
-    )
-    return (
-        per_part.crossJoin(F.broadcast(total))
-        .filter(F.col("part_value") > F.col("thresh"))
-        .select("l_partkey", "part_value")
-        .orderBy(F.col("part_value").desc(), "l_partkey")
-        .limit(100)
-    )
 
 
 # Builder kept: Spark SQL does not parse the oracle's DATEDIFF('day', ...).

@@ -16,7 +16,7 @@ import pytest
 
 from presto_cached_examples_spark import registry
 from tests.conftest import SF_TINY
-from tests.util import assert_frames_match
+from tests.util import assert_frames_match, canon_rows
 
 SPECS = registry.all_specs()
 
@@ -31,6 +31,17 @@ def test_query_matches_oracle(spark, duck, name):
         assert df.count() >= 0
         return
     assert_frames_match(df, duck.sql(spec.oracle), context=name)
+
+
+def test_decimal_against_double_fails(spark, duck):
+    """A Spark DECIMAL column that DuckDB returns as DOUBLE fails the
+    match even when every value hashes alike: ``0.5`` hashes the same
+    on both sides, ``0.50`` would not."""
+    sdf = spark.sql("SELECT CAST(0.5 AS DECIMAL(2,1)) AS x")
+    rel = duck.sql("SELECT 0.5::DOUBLE AS x")
+    assert canon_rows(sdf.toPandas()) == canon_rows(rel.df())
+    with pytest.raises(AssertionError, match="DECIMAL on one side only"):
+        assert_frames_match(sdf, rel, context="decimal")
 
 
 def test_driver_window_covers_unverified_queries():

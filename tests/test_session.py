@@ -99,7 +99,7 @@ def test_persist_gate_parity(spark, duck):
     from tests.util import assert_frames_match
 
     specs = all_specs()
-    for name in ("q_funnel_windowed", "q_rolling_wau", "q_priority_shift"):
+    for name in ("q_funnel_windowed", "q_rolling_wau", "q_rolling_wau_approx"):
         spec = specs[name]
         for mode in ("off", "on"):
             _gate_conf(spark, mode)

@@ -1,4 +1,4 @@
-"""Test comparison helpers — same canonicalization as tools/check_oracles.py."""
+"""Test comparison helpers, on the canonicalization of tools/check_oracles.py."""
 
 from __future__ import annotations
 
@@ -6,32 +6,7 @@ import uuid
 
 import pandas as pd
 
-
-def _canon_cell(v) -> str:
-    # containers first: `v != v` on an ndarray returns an array (ambiguous
-    # truth value), so the NaN test must only ever see scalars
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_canon_cell(x) for x in v) + "]"
-    if v is None or v is pd.NaT or (isinstance(v, float) and v != v):
-        return "<null>"
-    if isinstance(v, float):
-        # driver-strength: raw repr, signed zero and full precision intact
-        # (see tools/check_oracles.py — the round-4 -0.0 lesson)
-        return repr(v)
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_canon_cell(x) for x in v) + "]"
-    try:
-        import numpy as np
-
-        if isinstance(v, np.ndarray):
-            return "[" + ",".join(_canon_cell(x) for x in v.tolist()) + "]"
-        if isinstance(v, np.generic):
-            return _canon_cell(v.item())
-    except ImportError:
-        pass
-    return str(v)
+from tools.check_oracles import _canon_cell, decimal_mismatches
 
 
 def canon_rows(df: pd.DataFrame) -> list[str]:
@@ -43,12 +18,15 @@ def canon_rows(df: pd.DataFrame) -> list[str]:
 
 
 def assert_frames_match(spark_df, duck_rel, context: str = "") -> None:
-    """Order-insensitive equality of a Spark DataFrame and a DuckDB relation."""
+    """Order-insensitive equality of a Spark DataFrame and a DuckDB
+    relation, with the same columns DECIMAL on both sides."""
     sdf = spark_df.toPandas()
     odf = duck_rel.df()
     assert sorted(sdf.columns) == sorted(odf.columns), (
         f"{context}: columns {sorted(sdf.columns)} != {sorted(odf.columns)}"
     )
+    decimal_diff = decimal_mismatches(spark_df, duck_rel)
+    assert not decimal_diff, f"{context}: DECIMAL on one side only: {decimal_diff}"
     s_rows, o_rows = canon_rows(sdf), canon_rows(odf)
     assert len(s_rows) == len(o_rows), f"{context}: {len(s_rows)} rows vs {len(o_rows)}"
     mismatches = [(a, b) for a, b in zip(s_rows, o_rows) if a != b]
