@@ -9,16 +9,7 @@ query after a shared warm-up of the session.
 
 Measurement policy (documented, deliberate): timings are WARM-SERVING
 throughout — learned artifacts (codebooks, LM tables, split points)
-are pre-built untimed under the build-time-action contract. The
-round-9 bounded-grain persist() intermediates (month/day/user/label
-grains) are input-size-gated from round 10 (plans/persistence.py):
-at fixture scale the gate auto-disables, so the benched plans re-scan
-tiny parquet instead of paying InMemoryRelation builds — the ~16%
-v2 drift round 9 measured was exactly that build cost (VERDICT r9
-what's-wrong #2 / next #1-2). The resolved gate position is published
-in the payload (`persist_gate`) so cross-round comparisons know which
-shape ran. The frozen 25-query HEADLINE contains none of the gated
-queries, so the comparability series is unaffected either way.
+are pre-built untimed under the build-time-action contract.
 
 JVM-sizing comparability caveat (ADVICE r9 item 2): from round 9 the
 bench defaults driver memory to 48g (was 16g through r8) and issues
@@ -288,13 +279,6 @@ def main() -> None:
     load_wait_budget_s = float(os.environ.get("SPARK_GRAFT_LOAD_WAIT", "120"))
     load_before_1m, load_wait_s = wait_for_quiet(load_warn_threshold, load_wait_budget_s)
     spark = get_session(app_name="pce-spark-bench")
-    # Isolated-pair lever for the persist gate (VERDICT r9 next #1):
-    # SPARK_GRAFT_PERSIST=on|off|auto pins the gate for this run so the
-    # v2 drift can be attributed with two otherwise-identical runs.
-    from presto_cached_examples_spark.plans import persistence
-
-    if os.environ.get("SPARK_GRAFT_PERSIST"):
-        spark.conf.set(persistence.MODE_CONF, os.environ["SPARK_GRAFT_PERSIST"])
     qs = registry.queries()
     names = [n for n in HEADLINE if n in qs]
     gc_ms: dict[str, int] = {}  # per-query GC attribution (all timed runs)
@@ -433,10 +417,6 @@ def main() -> None:
             timings_v2[name] = min(timings_v2[name], t_retry[name])
             spread_v2[name] = s_retry[name]
     gc_after_timed_ms = _jvm_gc_ms(spark)
-    persist_gate = "{}:{}".format(
-        spark.conf.get(persistence.MODE_CONF, "auto"),
-        "on" if persistence.persist_enabled(spark, sf_dir) else "off",
-    )
     payload = {
         "metric": "headline_queries_total_sec",
         "value": round(sum(timings.values()), 3),
@@ -452,7 +432,6 @@ def main() -> None:
         # artifacts pre-built, untimed); gc attribution separates a
         # plan regression from heap pressure caused by resident state.
         "prewarmed": True,
-        "persist_gate": persist_gate,
         "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM", ""),
         "heap_after_prewarm_mb": heap_after_prewarm_mb,
         "timed_gc_total_ms": (
@@ -523,7 +502,6 @@ def main() -> None:
         "v2_slowest5": slowest5,
         "v2_max_spread_sec": round(max(spread_v2.values()), 3) if spread_v2 else 0.0,
         "prewarmed": True,
-        "persist_gate": persist_gate,
         "timed_gc_total_ms": payload["timed_gc_total_ms"],
         "load_1m": payload["load_1m"],
         "load_wait_s": payload["load_wait_s"],

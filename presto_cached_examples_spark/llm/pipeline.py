@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from presto_cached_examples_spark.plans.artifacts import memo
 from presto_cached_examples_spark.registry import register
-from presto_cached_examples_spark.plans.persistence import maybe_persist
 from presto_cached_examples_spark.sources.catalog import load_table, spread
 
 # Chunking: window of 32 tokens advancing by 24 (8-token overlap keeps
@@ -613,12 +612,10 @@ def q_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("eval_id"), F.explode("grams").alias("g")
     )
     # eval-slice gram grain (small by construction — it broadcasts
-    # below); 2 consumers (the probe join + the eval-id universe), so
-    # persist instead of re-scanning documents a third time. Every
+    # below); 2 consumers (the probe join + the eval-id universe). Every
     # eval doc emits >= 1 gram row (the gram builder floors the
     # sequence at 1 element), so DISTINCT eval_id over this relation
     # IS the full eval universe.
-    ev = maybe_persist(ev, sf_dir)
     tr = docs.filter(F.col("doc_id") % _EVAL_MOD != 0).select(
         F.col("doc_id").alias("train_id"), F.explode("grams").alias("g")
     )
@@ -785,14 +782,12 @@ def q_quality_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round 15 (guide §2.4): ONE corpus token pass. The (doc, bucket)
     # grain now carries the doc's (constant) lang, so the bucket-level
     # distribution rolls up from IT instead of from a second
-    # explode+md5 pass over the corpus (round 9 had cut 4 passes to 2;
-    # this cuts 2 to 1 under the persist gate, and at fixture scale
-    # the two consumers share the db exchange). min(lang) is exact:
-    # lang is functionally determined by doc_id.
+    # explode+md5 pass over the corpus, and the two consumers share the
+    # db exchange. min(lang) is exact: lang is functionally determined
+    # by doc_id.
     db = bt.groupBy("doc_id", "b").agg(
         F.count(F.lit(1)).alias("k"), F.min("lang").alias("lang")
     )
-    db = maybe_persist(db, sf_dir)
     doc_b = db.select("doc_id", "b", "k")
     blt = db.groupBy("b", "lang").agg(F.sum("k").alias("k"))
     rawb = blt.groupBy("b").agg(F.sum("k").alias("raw_k"))
@@ -1155,12 +1150,6 @@ def q_mix_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         ((F.col("rnk") - 0.5) / F.col("wt")).alias("vtime"),
     )
-    # narrow (id, source, vtime) rows; the quantile sampler and the
-    # rank decomposition's bucket/offset passes otherwise re-run the
-    # scan AND the per-source window once each (4 documents scans
-    # pre-round-9). First materialization rides the memoized
-    # approxQuantile action, so warm builds stay job-free.
-    v = maybe_persist(v, sf_dir)
     # exact global order by (vtime, doc_id) without a global sort —
     # vtime collides across equal-sized sources at equal rank, so the
     # unique doc_id is the tie-break on BOTH engines. Split points are

@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from presto_cached_examples_spark.plans.artifacts import memo
 from presto_cached_examples_spark.registry import register, register_sql
-from presto_cached_examples_spark.plans.persistence import maybe_persist
 from presto_cached_examples_spark.sources.catalog import load_table
 
 
@@ -428,11 +427,8 @@ def q_sample_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ranked = e.select("vec_id", "label", F.row_number().over(w).alias("r"))
     # class sizes don't need the rank — aggregate the raw (id, label)
-    # pairs directly, and persist the |labels|-grain result so the
-    # 1-row cap MIN doesn't trigger a third scan (round 9: 3 -> 2
-    # column-pruned scans; the rank pass is the second, inherently)
+    # pairs directly
     sizes = e.groupBy("label").agg(F.count(F.lit(1)).alias("n_total"))
-    sizes = maybe_persist(sizes, sf_dir)
     cap = sizes.agg(F.min("n_total").alias("cap"))
     return (
         ranked.join(F.broadcast(sizes), "label")

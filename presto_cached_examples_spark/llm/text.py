@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from presto_cached_examples_spark.plans.artifacts import memo
 from presto_cached_examples_spark.registry import register
-from presto_cached_examples_spark.plans.persistence import maybe_persist
 from presto_cached_examples_spark.sources.catalog import load_table, spread
 
 def bigram_structs(toks):
@@ -436,13 +435,9 @@ def q_token_freq_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("d", "c")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    # depth x width grain (the materialized sketch artifact); 2
-    # consumers (probe join + the total below) — persisted so the
-    # token stream is scanned once for the sketch, once for the
-    # exact side (was 3 scans: grid, total, top — round 9)
-    grid = maybe_persist(grid, sf_dir)
-    # every token contributes exactly one grid count per depth row,
-    # so the corpus total is sum(cnt) / depth — no third scan
+    # depth x width grain (the sketch); 2 consumers (probe join + the
+    # total below). Every token contributes exactly one grid count per
+    # depth row, so the corpus total is sum(cnt) / depth — no third scan
     n_total = grid.agg(
         (F.sum("cnt") / _CMS_DEPTH).cast("long").alias("n_total")
     )
@@ -511,11 +506,10 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # df its per-token row count (count(*) over distinct (doc, tok)
     # pairs IS countDistinct(doc_id) per token) — so df shuffles the
     # already-aggregated pairs, never the raw token stream (round 9).
-    # DELIBERATELY NOT persisted: unlike the round's bounded-grain
-    # persists (day/user/label/month grains), the inverted index is
-    # corpus-scale — pinning it trades one columnar re-scan for a
-    # corpus-sized cache entry, the exact fact-pollution anti-pattern
-    # plans/cache.py documents. Two pruned scans is the right cost.
+    # DELIBERATELY NOT persisted: the inverted index is corpus-scale —
+    # pinning it trades one columnar re-scan for a corpus-sized cache
+    # entry, the exact fact-pollution anti-pattern plans/cache.py
+    # documents. Two pruned scans is the right cost.
     pairs = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     tf = pairs.filter(F.col("tf") >= 2)
     df = pairs.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))

@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from presto_cached_examples_spark.registry import register, register_sql
 from presto_cached_examples_spark.plans.artifacts import memo
-from presto_cached_examples_spark.plans.persistence import maybe_persist
 from presto_cached_examples_spark.sources.catalog import load_table
 
 
@@ -199,9 +198,6 @@ def q_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     (and the oracle) defines. Nothing ever windows raw events."""
     ev = load_table(spark, sf_dir, "events")
     du = ev.select(F.date_trunc("day", "ts").alias("d"), "user_id").distinct()
-    # (day, user) grain; 2 consumers (cover + observed-day spine) —
-    # without the persist each re-scanned events (round 9)
-    du = maybe_persist(du, sf_dir)
     cover = du.select(
         F.explode(
             F.sequence(
@@ -257,11 +253,6 @@ def q_rolling_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     IS the design note on why the shapes differ."""
     ev = load_table(spark, sf_dir, "events")
     du = ev.select(F.date_trunc("day", "ts").alias("d"), "user_id").distinct()
-    # (day, user) grain — users x days, orders below event volume;
-    # THREE consumers (cover, same-day join, active counts) otherwise
-    # re-scan events once each (round 9; lazy persist, deduped across
-    # calls by the cache manager)
-    du = maybe_persist(du, sf_dir)
     cover = du.select(
         F.explode(
             F.sequence(
@@ -336,9 +327,7 @@ def q_rolling_wau_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.hll_sketch_agg("user_id").alias("sk")
     )
     # |days| grain (the write-time sketch artifact); 2 consumers
-    # (observed-day spine + the merge tier) — without the persist
-    # each re-scanned events (round 9)
-    daily = maybe_persist(daily, sf_dir)
+    # (observed-day spine + the merge tier)
     days = daily.select(F.col("d").alias("day"))
     est = (
         daily.select(window_days("d"), "sk")
@@ -902,9 +891,6 @@ def q_concurrency_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     iv = sess.groupBy("user_id", "session_no").agg(
         F.min("ts").alias("s"), F.max("ts").alias("e")
     )
-    # session grain; the start/end union + the two sweep consumers
-    # otherwise re-derive the sessionization (4 events scans, round 9)
-    iv = maybe_persist(iv, sf_dir)
     pts = iv.select(
         F.col("s").alias("ts"), F.lit(1).alias("delta"), "user_id", "session_no"
     ).unionByName(
@@ -976,17 +962,13 @@ def q_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     to one scalar per user BEFORE the next stage joins it (per-user
     rows, uniform key, broadcast-sized stage outputs), with the time
     bound as a join predicate so state stays capped exactly like the
-    interval joins. Final counts are three 1-row aggregates. Stage
-    relations persist at user grain (two consumers each — round 9,
-    same rationale as q_events_funnel: without it the physical plan
-    read events SIX times instead of three)."""
+    interval joins. Final counts are three 1-row aggregates."""
     ev = load_table(spark, sf_dir, "events")
     v = (
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("tv"))
     )
-    v = maybe_persist(v, sf_dir)  # user grain; 2 consumers (lazy, gated)
     c = (
         ev.filter(F.col("event_type") == "click")
         .join(v, "user_id")
@@ -997,7 +979,6 @@ def q_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min("ts").alias("tc"))
     )
-    c = maybe_persist(c, sf_dir)  # user grain; 2 consumers (lazy, gated)
     p = (
         ev.filter(F.col("event_type") == "purchase")
         .join(c, "user_id")

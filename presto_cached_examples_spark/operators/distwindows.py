@@ -30,7 +30,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from presto_cached_examples_spark.registry import register
-from presto_cached_examples_spark.plans.persistence import maybe_persist
 from presto_cached_examples_spark.sources.catalog import load_table
 
 _SEG = "c_mktsegment"
@@ -136,10 +135,7 @@ def q_window_range_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", _SEG, "c_acctbal", _cents("c_acctbal").alias("cents")
     )
     counts = c.groupBy(_SEG, "cents").agg(F.count(F.lit(1)).alias("cnt"))
-    # (segment, cents) grain — bounded by the cent domain, not rows;
-    # 3 consumers (values + both probe streams) otherwise re-scan the
-    # base table once each (7 customer scans pre-round-9)
-    counts = maybe_persist(counts, sf_dir)
+    # (segment, cents) grain — bounded by the cent domain, not rows
     values = counts.select(
         _SEG, F.col("cents").alias("pos"), F.col("cnt").alias("w"),
         F.lit(None).cast("long").alias("base"), F.lit(0).alias("is_probe"),
@@ -162,7 +158,6 @@ def q_window_range_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(_SEG, "base", "is_probe", F.sum("w").over(w_sweep).alias("cum"))
         .filter(F.col("is_probe") > 0)
     )
-    swept = maybe_persist(swept, sf_dir)  # probe grain; hi+lo consumers (lazy, gated)
     hi = swept.filter("is_probe = 1").select(
         _SEG, F.col("base").alias("cents"), F.col("cum").alias("c_hi")
     )

@@ -17,11 +17,10 @@ The store also records which fixture directory the session's temp
 views name (``bind``), so the SQL binder re-registers them only when
 that directory changes.
 
-Lifecycle: ``release(spark)`` unpersists every persisted DataFrame the
-session holds (DataFrame memo values and ``track``-ed intermediates
-alike) and drops all of the session's entries. Long-running drivers
-call it between query batches; the next build of each artifact
-rebuilds it.
+Lifecycle: ``release(spark)`` unpersists every persisted DataFrame memo
+value the session holds and drops all of the session's entries.
+Long-running drivers call it between query batches; the next build of
+each artifact rebuilds it.
 """
 
 from __future__ import annotations
@@ -70,15 +69,10 @@ def bind(spark: SparkSession, sf_dir: str, register: Callable[[], None]) -> None
         _ENTRIES[key] = sf_dir
 
 
-def track(df: DataFrame) -> DataFrame:
-    """Hold a persisted per-query intermediate until ``release``."""
-    _ENTRIES[(session_token(df.sparkSession), None, ("tracked", id(df)))] = df
-    return df
-
-
 def release(spark: SparkSession, blocking: bool = False) -> int:
-    """Unpersist every persisted DataFrame the session holds, then drop
-    all of its entries. Returns how many DataFrames were unpersisted."""
+    """Unpersist every persisted DataFrame memo value the session holds,
+    then drop all of its entries. Returns how many DataFrames were
+    unpersisted."""
     token = session_token(spark)
     freed = 0
     for key in [k for k in list(_ENTRIES) if k[0] == token]:

@@ -72,12 +72,11 @@ def test_session_token_is_called_only_by_the_store():
 
 def test_no_module_level_memo_dicts():
     """A module-level ``{}``/``dict()``/``set()`` is how the old memos
-    started. Besides the store's own, the two left are not session
-    memos: the registry itself and a process-lifetime filesystem probe."""
+    started. Besides the store's own, the one left is not a session
+    memo: the registry itself."""
     allowed = {
         "plans/artifacts.py:_ENTRIES",
         "registry.py:_REGISTRY",
-        "plans/persistence.py:_DIR_BYTES",
     }
     found = set()
     for p in PACKAGE.rglob("*.py"):

@@ -241,97 +241,6 @@ def test_scan_during_fresh_session_rebuild_interleave(spark):
         assert spark.table(t).count() == expected
 
 
-def test_recert_check_source_classifier():
-    """tools/recert_check.py: the gate re-run trigger must fire on
-    package/bench/tools/entry changes and stay quiet on tests, docs,
-    and round artifacts — misclassifying either way breaks the
-    round-close discipline (silent skip, or permanent false alarm)."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "recert_check",
-        os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", "recert_check.py"),
-    )
-    rc = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(rc)
-    for p in (
-        "bench.py",
-        "__spark_entry__.py",
-        "presto_cached_examples_spark/operators/scans.py",
-        "tools/plan_report.py",
-    ):
-        assert rc.is_source(p), p
-    for p in (
-        "tests/test_layout_publish.py",
-        "NOTES.md",
-        "BENCH_r13.json",
-        "CORRECTNESS_r12.json",
-        "bench_out.json",
-        "PROGRESS.jsonl",
-        ".claude/skills/verify/SKILL.md",
-    ):
-        assert not rc.is_source(p), p
-
-
-def test_recert_check_sees_through_merge_commits(tmp_path):
-    """ADVICE r13 item 3: the old per-commit ``git show --name-only``
-    walk printed no file list for merge commits, so a merge bringing in
-    source changes exited 0. The tree-diff rewrite must flag it — and
-    must treat a change fully reverted before HEAD as covered (the
-    certification is of the tree)."""
-    import subprocess
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    rc = os.path.join(repo, "tools", "recert_check.py")
-
-    def git(*args):
-        subprocess.run(
-            ["git", *args],
-            cwd=tmp_path,
-            check=True,
-            capture_output=True,
-            env=dict(
-                os.environ,
-                GIT_AUTHOR_NAME="t",
-                GIT_AUTHOR_EMAIL="t@t",
-                GIT_COMMITTER_NAME="t",
-                GIT_COMMITTER_EMAIL="t@t",
-            ),
-        )
-
-    def sha():
-        return subprocess.check_output(
-            ["git", "rev-parse", "HEAD"], cwd=tmp_path, text=True
-        ).strip()
-
-    def check(certified):
-        return subprocess.run(
-            [sys.executable, rc, certified], cwd=tmp_path, capture_output=True, text=True
-        )
-
-    git("init", "-q", "-b", "main")
-    (tmp_path / "bench.py").write_text("v1\n")
-    git("add", "."), git("commit", "-qm", "base")
-    certified = sha()
-    # source change arriving ONLY via a merge commit
-    git("checkout", "-qb", "feature")
-    (tmp_path / "bench.py").write_text("v2\n")
-    git("commit", "-aqm", "feature: source change")
-    git("checkout", "-q", "main")
-    (tmp_path / "README.md").write_text("doc\n")
-    git("add", "."), git("commit", "-qm", "docs only")
-    git("merge", "-q", "--no-ff", "-m", "merge feature", "feature")
-    r = check(certified)
-    assert r.returncode == 1, f"merge-borne source change passed: {r.stdout}"
-    assert "bench.py" in r.stdout
-    # revert the source change: the TREE matches certification again
-    (tmp_path / "bench.py").write_text("v1\n")
-    git("commit", "-aqm", "revert source change")
-    r = check(certified)
-    assert r.returncode == 0, r.stdout
-
-
 def test_two_process_concurrent_layout_build(tmp_path):
     """TRUE two-session race (not an interleave simulation): two
     separate JVM/Python processes build the SAME events layout into

@@ -322,6 +322,18 @@ def test_ewma_fold_bounded_by_frame(spark, vals):
     assert min(vals) - 1e-9 <= row.e <= max(vals) + 1e-9
 
 
+def _after_cte(sql: str, cte: str) -> str:
+    """The statement that follows ``WITH <cte> AS (...)`` in ``sql``, so
+    a test can bind ``cte`` to rows of its own."""
+    start = sql.index(f"WITH {cte} AS (") + len(f"WITH {cte} AS (")
+    depth = 1
+    for i in range(start, len(sql)):
+        depth += {"(": 1, ")": -1}.get(sql[i], 0)
+        if depth == 0:
+            return sql[i + 1 :]
+    raise ValueError(f"unbalanced CTE {cte!r}")
+
+
 @PROP
 @given(
     pairs=st.lists(
@@ -334,25 +346,26 @@ def test_ewma_fold_bounded_by_frame(spark, vals):
     )
 )
 def test_wilson_interval_brackets_and_bounds(spark, pairs):
-    """q_returns_wilson's CI formula must bracket p_hat and stay inside
-    [0, 1] for any (k, n) — including k=0 and k=n, where the naive Wald
-    interval escapes the unit range."""
-    data = [(i, int(round(n * r)), n) for i, (n, r) in enumerate(pairs)]
-    df = spark.createDataFrame(data, "id long, k long, n long")
-    z = 1.96
-    p = F.col("k") / F.col("n")
-    nn = F.col("n")
-    center = p + z * z / (2 * nn)
-    half = z * F.sqrt(p * (1 - p) / nn + z * z / (4.0 * nn * nn))
-    denom = 1 + z * z / nn
-    out = df.select(
-        p.alias("p"),
-        ((center - half) / denom).alias("lo"),
-        ((center + half) / denom).alias("hi"),
-    ).collect()
+    """q_returns_wilson's CI must bracket p_hat and stay inside [0, 1]
+    for any (k, n) — including k=0 and k=n, where the naive Wald
+    interval escapes the unit range. The query's own oracle text runs
+    after its ``r`` CTE, with ``r`` bound to the generated rows."""
+    from presto_cached_examples_spark import registry
+
+    oracle = registry.all_specs()["q_returns_wilson"].oracle
+    data = [(f"n{i}", n, int(round(n * r))) for i, (n, r) in enumerate(pairs)]
+    spark.createDataFrame(
+        data, "nation string, n_items long, n_returned long"
+    ).createOrReplaceTempView("r")
+    try:
+        out = spark.sql(_after_cte(oracle, "r")).collect()
+    finally:
+        spark.catalog.dropTempView("r")
+    assert len(out) == len(data)
+    tol = 1e-4  # p_hat, ci_lo and ci_hi are each ROUND(..., 4)
     for r in out:
-        assert 0.0 - 1e-12 <= r.lo <= r.p + 1e-12
-        assert r.p - 1e-12 <= r.hi <= 1.0 + 1e-12
+        assert 0.0 - tol <= r.ci_lo <= r.p_hat + tol
+        assert r.p_hat - tol <= r.ci_hi <= 1.0 + tol
 
 
 @PROP

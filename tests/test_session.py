@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+from presto_cached_examples_spark.registry import all_specs
 from presto_cached_examples_spark.session import derived_conf, detect_resources
+from tests.conftest import SF_TINY
 
 
 def test_detect_resources_probes_runtime():
@@ -25,91 +27,6 @@ def test_derived_conf_scales_and_clamps():
 def test_session_reflects_detected_sizing(spark):
     parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert parts >= 4
-
-
-# ---- input-size-gated persistence (plans/persistence.py) ----------------
-
-from presto_cached_examples_spark.plans import artifacts, persistence
-from presto_cached_examples_spark.registry import all_specs
-from tests.conftest import SF_TINY
-
-
-def _gate_conf(spark, mode):
-    spark.conf.set(persistence.MODE_CONF, mode)
-
-
-def test_persist_gate_auto_off_at_fixture_scale(spark):
-    """auto mode: every test fixture (<= ~18 MB) sits far below the
-    256 MiB threshold, so maybe_persist returns the frame unchanged and
-    tracks nothing — the fixture-scale plan re-scans tiny parquet
-    instead of paying an InMemoryRelation build (NOTES r9 item 6)."""
-    _gate_conf(spark, "auto")
-    artifacts.release(spark)  # earlier tests may have pinned memo values
-    df = spark.range(10)
-    out = persistence.maybe_persist(df, SF_TINY)
-    assert out is df
-    assert not df.storageLevel.useMemory
-    assert artifacts.release(spark) == 0
-
-
-def test_persist_gate_auto_on_for_big_or_remote_input(spark):
-    """auto mode flips on when the input dir exceeds the threshold and
-    for non-local paths (object stores can't be stat'ed — assume
-    production scale)."""
-    _gate_conf(spark, "auto")
-    spark.conf.set(persistence.MIN_BYTES_CONF, "1")  # fixtures now "big"
-    try:
-        assert persistence.persist_enabled(spark, SF_TINY)
-    finally:
-        spark.conf.set(persistence.MIN_BYTES_CONF, str(persistence.DEFAULT_MIN_BYTES))
-    assert persistence.persist_enabled(spark, "s3://bucket/snapshots/ingest")
-
-
-def test_persist_gate_on_tracks_and_releases(spark):
-    """on mode: the frame is persisted (lazy) and tracked per session;
-    artifacts.release unpersists everything exactly once."""
-    _gate_conf(spark, "on")
-    artifacts.release(spark)  # earlier tests may have pinned memo values
-    try:
-        df = spark.range(10)
-        out = persistence.maybe_persist(df, SF_TINY)
-        assert out.storageLevel.useMemory
-        assert artifacts.release(spark, blocking=True) == 1
-        assert not out.storageLevel.useMemory
-        assert artifacts.release(spark) == 0
-    finally:
-        _gate_conf(spark, "auto")
-
-
-def test_persist_gate_rejects_unknown_mode(spark):
-    import pytest as _pytest
-
-    _gate_conf(spark, "maybe")
-    try:
-        with _pytest.raises(ValueError):
-            persistence.persist_enabled(spark, SF_TINY)
-    finally:
-        _gate_conf(spark, "auto")
-
-
-def test_persist_gate_parity(spark, duck):
-    """The gate is a semantic no-op: one representative gated query per
-    shape (funnel chain, (day,user) expansion, bounded rollup) hashes
-    identically against its oracle with the gate forced on and off."""
-    from tests.util import assert_frames_match
-
-    specs = all_specs()
-    for name in ("q_funnel_windowed", "q_rolling_wau", "q_rolling_wau_approx"):
-        spec = specs[name]
-        for mode in ("off", "on"):
-            _gate_conf(spark, mode)
-            try:
-                assert_frames_match(
-                    spec.fn(spark, SF_TINY), duck.sql(spec.oracle), context=f"{name}[{mode}]"
-                )
-            finally:
-                _gate_conf(spark, "auto")
-        artifacts.release(spark, blocking=True)
 
 
 # ---- generated-code cache sized to the working set (session.py) --------

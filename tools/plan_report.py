@@ -92,11 +92,6 @@ def main() -> None:
     args = ap.parse_args()
 
     spark = get_session(app_name="pce-plan-report")
-    # PLANS.md documents the 100-TB posture: force the input-size persist
-    # gate ON so multi-consumer intermediates plan as InMemoryRelation
-    # (single fact scan) exactly as they would on production-sized input,
-    # regardless of the tiny audit fixture (plans/persistence.py).
-    spark.conf.set("spark.pce.persistIntermediates", "on")
     specs = registry.all_specs()
     rows = []
     for name in sorted(specs):
@@ -129,12 +124,6 @@ def main() -> None:
         "exchanges (the expensive kind); `broadcasts` counts bounded",
         "broadcast exchanges. `python` lists any Python-eval nodes — only",
         "the declared pandas-UDF surface may have them.",
-        "",
-        "Plans are audited with `spark.pce.persistIntermediates=on` (the",
-        "100-TB posture): multi-consumer bounded-grain intermediates show",
-        "as single-fact-scan InMemoryRelation plans, as they would on",
-        "production-sized input. At fixture scale the gate auto-disables",
-        "(plans/persistence.py) — results are identical either way.",
         "",
         "`aqe reuse` = ReusedExchange nodes in the AQE-FINALIZED plan,",
         "measured by executing queries whose static shuffle count is >=",
