@@ -167,29 +167,38 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     if name == "events":
-        # Fixture generations have stored ts as TIMESTAMP(NANOS) or
-        # TIMESTAMP(MICROS); set the legacy read conf defensively (it is
-        # runtime-settable) so a NANOS file reads as int64 ns from ANY
-        # session, not only ones built by get_session().
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, name))
-    if name == "events":
-        # Normalize ts to session-tz TimestampType whatever the footer
-        # says: int64 ns (NANOS + nanosAsLong) integer-divides to µs —
-        # identical truncation to DuckDB's ns→µs read; MICROS arrives as
-        # timestamp/timestamp_ntz and only needs the type unified (the
-        # session runs UTC, so the cast is wall-clock-identity).
-        from pyspark.sql import functions as F
-
-        if dict(df.dtypes)["ts"] == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        else:
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        df = df.select("event_id", "ts", "user_id", "event_type", "value", "props")
+        df = normalize_events(read_events_stored(spark, sf_dir))
+    else:
+        df = spark.read.parquet(table_path(sf_dir, name))
     expected = [f.name for f in SCHEMAS[name].fields]
     if list(df.columns) != expected:
         raise ValueError(f"{name}: columns {df.columns} != declared {expected}")
     return df
+
+
+def read_events_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events fixture with ts as stored. Fixture generations have
+    stored ts as TIMESTAMP(NANOS) or TIMESTAMP(MICROS); set the legacy
+    read conf defensively (it is runtime-settable) so a NANOS file reads
+    as int64 ns from ANY session, not only ones built by get_session()."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.parquet(table_path(sf_dir, "events"))
+
+
+def normalize_events(df: DataFrame) -> DataFrame:
+    """Normalize a stored events frame, batch or stream, to the declared
+    columns with ts as session-tz TimestampType whatever the footer
+    says: int64 ns (NANOS + nanosAsLong) integer-divides to µs —
+    identical truncation to DuckDB's ns→µs read; MICROS arrives as
+    timestamp/timestamp_ntz and only needs the type unified (the
+    session runs UTC, so the cast is wall-clock-identity)."""
+    from pyspark.sql import functions as F
+
+    if dict(df.dtypes)["ts"] == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    else:
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df.select("event_id", "ts", "user_id", "event_type", "value", "props")
 
 
 #: spread() decision memo, weakly keyed on the input DataFrame (the

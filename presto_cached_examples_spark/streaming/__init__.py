@@ -8,7 +8,9 @@ operators, and the reference's pipeline pillars made literal:
 - C5 (polled event source with per-event deltas, FT6236.h:85-119)
   → stateful.py per-key delta operator + windows.py lag queries.
 
-Each streaming query has a batch twin (same result, SQL-checkable) so
-the driver's weaker rows-only streaming check is never load-bearing
-(SURVEY.md §7 M3).
+Each streamable query in windows.py is one plan function over an
+`events` frame. Its registered builder runs it on the batch table, the
+batch twin (same result, SQL-checkable), and the stream runs the same
+function on runner.read_events_stream, so the driver's weaker rows-only
+streaming check is never load-bearing (SURVEY.md §7 M3).
 """

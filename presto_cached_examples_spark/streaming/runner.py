@@ -1,6 +1,7 @@
-"""Structured Streaming runtime: readStream sources over the fixture
-parquet, watermarked windowed aggregation, and streaming dedup — the
-genuinely streaming execution of windows.py's batch twins.
+"""Structured Streaming runtime: a readStream source over the events
+fixture, watermarked streaming dedup, and a memory-sink drain. The
+window, join and rollup plans a stream runs are windows.py's plan
+functions, applied to `read_events_stream(...)` plus a watermark.
 
 Reference trace (SURVEY.md §3.1 EP2): the eternal frame loop —
 poll (ReadTouch) → vsync barrier → transform → write → metrics —
@@ -12,75 +13,33 @@ like the demo's finite test run.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from presto_cached_examples_spark.sources.catalog import SCHEMAS, table_path
-
-# Streaming reads declare the schema explicitly (no inference in the
-# engine core) — but fixture generations have stored ts as either
-# TIMESTAMP(NANOS) (reads as long under nanosAsLong) or
-# TIMESTAMP(MICROS); a cheap batch footer read picks the right one.
-_EVENTS_PHYSICAL_NS = "event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, props STRING"
-_EVENTS_PHYSICAL_US = "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, value DOUBLE, props STRING"
+from presto_cached_examples_spark.sources.catalog import normalize_events, read_events_stored
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events fixture (file source; one file = one
-    initial micro-batch under AvailableNow). ts normalized to
-    TimestampType exactly as the batch catalog does."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # driver-only footer peek to learn this generation's physical type
-    ts_is_long = dict(spark.read.parquet(table_path(sf_dir, "events")).dtypes)["ts"] == "bigint"
+    initial micro-batch under AvailableNow). A stream needs its schema
+    up front: it takes the stored one from a driver-only footer read,
+    and ts is normalized by the batch catalog's own normalize_events."""
+    stored = read_events_stored(spark, sf_dir).schema
     raw = (
-        spark.readStream.schema(_EVENTS_PHYSICAL_NS if ts_is_long else _EVENTS_PHYSICAL_US)
+        spark.readStream.schema(stored)
         # the fixture is a single parquet *file* and the file stream
         # source requires a directory path — so stream the directory
         # with a glob filter selecting only the events file
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if ts_is_long:
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def tumbling_counts_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Watermarked 1h tumbling counts — streaming twin of
-    q_stream_tumbling. The watermark bounds state: windows older than
-    max(event time) - watermark are finalized and evicted."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(F.col("w.start").alias("ws"), "event_type", "n", "sum_value")
-    )
-
-
-def alert_counts_stream(events: DataFrame, watermark: str = "12 hours") -> DataFrame:
-    """Streaming half of q_stream_alert: watermarked 6h tumbling
-    event/error counts — the incremental state. The alert verdicts are
-    computed per micro-batch over the accumulated window relation by
-    the caller (foreachBatch + windows.alert_verdict), because the
-    global baseline is a cross-window aggregate a single streaming
-    query cannot chain after a stateful agg."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "6 hours").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
-            .cast("long")
-            .alias("n_errors"),
-        )
-        .select(F.col("w.start").alias("ws"), "n_events", "n_errors")
-    )
+    return normalize_events(raw)
 
 
 def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Watermarked streaming dedup on (user_id, event_type): keeps the
     first-seen row per key; rows arriving later than the watermark are
     dropped without growing state (C2's torn-read hazard, solved by
-    state + watermark instead of a second buffer)."""
+    state + watermark instead of a second buffer). The stream form of
+    q_stream_dedup_late, whose row_number a stream cannot run."""
     return events.withWatermark("ts", watermark).dropDuplicates(["user_id", "event_type"])
 
 
@@ -96,48 +55,3 @@ def run_to_memory(df: DataFrame, name: str, output_mode: str = "append") -> Data
     )
     q.awaitTermination()
     return df.sparkSession.table(name)
-
-
-def enrich_stream_static(events: DataFrame, dim: DataFrame, on_left: str, on_right: str) -> DataFrame:
-    """Stream-static join: enrich a live stream with a batch dimension.
-
-    The static side is re-resolved per micro-batch (so a snapshot-swap
-    of the dimension is picked up at the next trigger) and joins as an
-    ordinary broadcast — no state store involved, the streaming analog
-    of the bounded-dimension broadcast rule."""
-    from pyspark.sql import functions as F
-
-    return events.join(F.broadcast(dim), events[on_left] == dim[on_right], "left")
-
-
-def join_stream_stream(
-    left: DataFrame,
-    right: DataFrame,
-    user_col: str = "user_id",
-    max_delay: str = "1 hour",
-    watermark: str = "2 hours",
-    how: str = "inner",
-) -> DataFrame:
-    """Watermarked stream-stream join: pair each left event with right
-    events from the same user within the preceding `max_delay` — the
-    streaming as-of shape (C5's latest-state lookup, live).
-
-    Both sides carry a watermark plus a time-range join condition, so
-    the state store can evict rows older than watermark + delay — state
-    stays bounded no matter how long the streams run. `how="leftOuter"`
-    gives the organic-vs-attributed split (q_stream_interval_left's
-    shape): an unmatched left row emits its NULL-padded result only
-    once the watermark guarantees no matching right row can still
-    arrive — the deferred-NULL semantics the batch twin states
-    timelessly."""
-    from pyspark.sql import functions as F
-
-    lw = left.withWatermark("l_ts", watermark)
-    rw = right.withWatermark("r_ts", watermark)
-    return lw.join(
-        rw,
-        (F.col(f"l_{user_col}") == F.col(f"r_{user_col}"))
-        & (F.col("r_ts") <= F.col("l_ts"))
-        & (F.col("r_ts") >= F.col("l_ts") - F.expr(f"INTERVAL {max_delay}")),
-        how,
-    )

@@ -9,8 +9,8 @@ arbitrary-stateful-processing API.
 
 Scale posture: state lives in the state store, partitioned by key —
 per-key state is two scalars, so total state is O(distinct users) and
-evenly spread. The same function body serves batch tests (via
-applyInPandas over sorted groups) and streaming.
+evenly spread. tests/test_streaming.py checks the streamed deltas
+against the window-lag form over the batch table.
 """
 
 from __future__ import annotations
@@ -44,9 +44,8 @@ _STATE_SCHEMA = T.StructType(
 
 
 def _deltas_for_group(pdf: pd.DataFrame, last_us, last_value) -> tuple[pd.DataFrame, int, float]:
-    """Pure per-group delta computation (shared by streaming and batch
-    paths). Rows are processed in (ts, event_id) order; returns the
-    output frame plus the final state."""
+    """Pure per-group delta computation. Rows are processed in
+    (ts, event_id) order; returns the output frame plus the final state."""
     pdf = pdf.sort_values(["ts", "event_id"])
     out = {
         "user_id": pdf["user_id"],
@@ -90,61 +89,4 @@ def event_deltas_stateful(events: DataFrame) -> DataFrame:
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    )
-
-
-def event_deltas_batch(events: DataFrame) -> DataFrame:
-    """Batch twin via applyInPandas with empty initial state — must
-    equal the window-lag form (tests/test_streaming.py)."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        out, _, _ = _deltas_for_group(pdf, None, None)
-        return out
-
-    return events.groupBy("user_id").applyInPandas(fn, schema=DELTA_SCHEMA)
-
-
-try:  # Spark 4 arbitrary-state API; absent on older builds
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-except ImportError:  # pragma: no cover
-    StatefulProcessor = object
-
-
-class DeltaProcessor(StatefulProcessor):
-    """transformWithStateInPandas variant of the delta operator — the
-    Spark 4 arbitrary-state API (typed state handles, timers, TTL).
-    Same semantics as _stateful_fn; state is a single-row value state
-    (last_us, last_value) per user."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("last", _STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        prior = self._state.get() if self._state.exists() else None
-        last_us, last_value = (prior[0], prior[1]) if prior is not None else (None, None)
-        for pdf in rows:
-            if len(pdf) == 0:
-                continue
-            out, last_us, last_value = _deltas_for_group(pdf, last_us, last_value)
-            yield out
-        if last_us is not None:
-            self._state.update((last_us, last_value))
-
-    def close(self) -> None:
-        pass
-
-
-def event_deltas_tws(events: DataFrame) -> DataFrame:
-    """Streaming per-user deltas via transformWithStateInPandas.
-
-    Requires the RocksDB state store provider (the API's backing
-    store): set spark.sql.streaming.stateStore.providerClass to
-    ...state.RocksDBStateStoreProvider before starting the query — and
-    the protobuf python package (the state-server wire protocol), so
-    environments without it use event_deltas_stateful instead."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=DeltaProcessor(),
-        outputStructType=DELTA_SCHEMA,
-        outputMode="Append",
-        timeMode="None",
     )

@@ -1,15 +1,18 @@
-"""Streaming window queries (SURVEY.md §2.B q_stream_*), registered as
-their batch twins.
+"""Streaming window queries (SURVEY.md §2.B q_stream_*).
 
-Contract: each `queries()` entry here is the *batch* form (runs on the
-static events table, SQL-checkable against DuckDB). The genuinely
-streaming execution of the same plans — readStream → watermark →
-window → memory sink — lives in runner.py and is asserted equal to
-these twins in tests/test_streaming.py. That makes the tumbling window
-&c. hash-checked even though the driver's streaming check is
-rows-only. For the same reason every twin keeps its DataFrame builder,
-even where Spark SQL runs its oracle to the same answer: the builder is
-the plan the streaming runner runs, and the SQL text is not.
+Each streamable query is one plan function over an `events` frame
+(`tumbling_counts`, `sliding_counts`, `sessions`, `interval_pairs`,
+`interval_left`, `enrich_rollup`, `alert_counts`). The registered builder applies it to
+`load_table(..., "events")`, which makes the batch twin the driver
+SQL-checks against DuckDB. tests/test_streaming.py applies the same
+function to `runner.read_events_stream(...)` plus a watermark and
+asserts the stream's output against that twin. That makes the tumbling
+window &c. hash-checked even though the driver's streaming check is
+rows-only. For the same reason these queries keep their DataFrame
+builders, even where Spark SQL runs the oracle to the same answer: the
+plan function is what the stream runs, and the SQL text is not.
+`q_stream_topk` ranks with `row_number` and `q_stream_dedup_late` keeps
+the first row with `row_number`; a stream cannot run either window.
 
 Scale posture: tumbling/sliding windows are hash aggregations keyed by
 (window, type) — partial aggregation map-side, tiny shuffle. Session
@@ -43,9 +46,17 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events per type per 1-hour tumbling window. Spark's window()
     start for a 1h/0-offset window equals date_trunc('hour') — the
     oracle identity (R43: the vsync trigger boundary analog)."""
-    ev = load_table(spark, sf_dir, "events")
+    return tumbling_counts(load_table(spark, sf_dir, "events"))
+
+
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """Count and value sum per (1-hour window, event_type)."""
+    return _window_counts(events, F.window("ts", "1 hour"))
+
+
+def _window_counts(events: DataFrame, window) -> DataFrame:
     return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        events.groupBy(window.alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
         .select(F.col("w.start").alias("ws"), "event_type", "n", "sum_value")
     )
@@ -68,12 +79,12 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour window sliding every 15 minutes. Each event lands in
     exactly 4 windows; the oracle materializes the same 4 starts via
     UNNEST — so even the sliding case is hash-checked."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(F.col("w.start").alias("ws"), "event_type", "n", "sum_value")
-    )
+    return sliding_counts(load_table(spark, sf_dir, "events"))
+
+
+def sliding_counts(events: DataFrame) -> DataFrame:
+    """Count and value sum per (1-hour window every 15 minutes, event_type)."""
+    return _window_counts(events, F.window("ts", "1 hour", "15 minutes"))
 
 
 @register(
@@ -110,9 +121,13 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's native session_window. The oracle is the classic
     gaps-and-islands rewrite; session_window.end = last event + gap by
     definition, matching MAX(ts) + 30 min."""
-    ev = load_table(spark, sf_dir, "events")
+    return sessions(load_table(spark, sf_dir, "events"))
+
+
+def sessions(events: DataFrame) -> DataFrame:
+    """Per-user sessions closed by a 30-minute gap: bounds, count, value sum."""
     return (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+        events.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
         .select(
             "user_id",
@@ -144,7 +159,10 @@ def q_stream_dedup_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     earliest-row window so it's deterministic and SQL-checkable (the
     streaming form keeps 'first seen', which in event-time order is
     exactly min(ts, event_id)). The watermark/late-drop behavior is
-    exercised for real in tests/test_streaming.py."""
+    exercised for real in tests/test_streaming.py.
+
+    The stream keeps its own form, `runner.dedup_stream`: a stream
+    cannot run `row_number`, so it uses `dropDuplicates`."""
     from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events")
@@ -175,10 +193,10 @@ def q_stream_dedup_late(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval join — ALL same-user clicks within the hour before each
-    purchase, with the click→purchase lag. The batch twin of
-    runner.join_stream_stream (the watermarked stream-stream join);
-    tests/test_streaming.py pins that the genuinely-streaming execution
-    over the same events produces exactly these pairs. Differs from
+    purchase, with the click→purchase lag. interval_pairs over a
+    watermarked events stream is a stream-stream self-join;
+    tests/test_streaming.py pins that it produces exactly these pairs.
+    Differs from
     q_join_asof_tol by emitting EVERY in-window pair, not the latest —
     the attribution-path analysis shape.
 
@@ -186,30 +204,43 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicates — the matcher state per key is capped by the interval,
     which is precisely what lets the streaming form evict state at
     watermark + delay. No window, no skew beyond the user key itself."""
-    ev = load_table(spark, sf_dir, "events")
-    p = ev.filter(F.col("event_type") == "purchase").select(
+    return interval_pairs(load_table(spark, sf_dir, "events"))
+
+
+def interval_pairs(events: DataFrame) -> DataFrame:
+    """Every (purchase, same-user click in the hour before it) pair."""
+    return _interval_join(events, "inner")
+
+
+def interval_left(events: DataFrame) -> DataFrame:
+    """interval_pairs plus one NULL-click row per purchase with no click."""
+    return _interval_join(events, "left")
+
+
+def _interval_join(events: DataFrame, how: str) -> DataFrame:
+    p = events.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"),
         "user_id",
         F.col("ts").alias("p_ts"),
     )
-    c = ev.filter(F.col("event_type") == "click").select(
+    c = events.filter(F.col("event_type") == "click").select(
         F.col("event_id").alias("click_id"),
         F.col("user_id").alias("c_user_id"),
         F.col("ts").alias("c_ts"),
     )
-    return (
-        p.join(
-            c,
-            (p.user_id == c.c_user_id)
-            & (c.c_ts <= p.p_ts)
-            & (c.c_ts >= p.p_ts - F.expr("INTERVAL 1 HOUR")),
-        )
-        .select(
-            "purchase_id",
-            "click_id",
-            "user_id",
-            (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("lag_us"),
-        )
+    organic = [F.col("click_id").isNull().alias("is_organic")] if how == "left" else []
+    return p.join(
+        c,
+        (p.user_id == c.c_user_id)
+        & (c.c_ts <= p.p_ts)
+        & (c.c_ts >= p.p_ts - F.expr("INTERVAL 1 HOUR")),
+        how,
+    ).select(
+        "purchase_id",
+        "click_id",
+        "user_id",
+        (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("lag_us"),
+        *organic,
     )
 
 
@@ -225,20 +256,26 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static enrichment rolled up per market segment — the
-    batch twin of runner.enrich_stream_static (events stream joined to
-    a broadcast dimension; the static side re-resolves per micro-batch,
-    so a snapshot swap of the dimension lands at the next trigger —
-    C3's double-buffer flip, live). tests/test_streaming.py asserts the
-    genuinely-streaming execution equals this plan.
+    """Stream-static enrichment rolled up per market segment. Over an
+    events stream, enrich_rollup joins each micro-batch to a broadcast
+    dimension; the static side re-resolves per micro-batch, so a
+    snapshot swap of the dimension lands at the next trigger — C3's
+    double-buffer flip, live. tests/test_streaming.py asserts the
+    streaming execution equals this batch twin.
 
     Scale: the dimension is bounded (customers), the stream side never
     shuffles before the broadcast hash join, and the rollup is a tiny
     keyed aggregate — the canonical streaming-enrichment plan."""
-    ev = load_table(spark, sf_dir, "events")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    return enrich_rollup(
+        load_table(spark, sf_dir, "events"), load_table(spark, sf_dir, "customer")
+    )
+
+
+def enrich_rollup(events: DataFrame, customer: DataFrame) -> DataFrame:
+    """Events joined to their customer's segment: count and value sum per segment."""
+    c = customer.select("c_custkey", "c_mktsegment")
     return (
-        ev.join(F.broadcast(c), ev.user_id == c.c_custkey)
+        events.join(F.broadcast(c), events.user_id == c.c_custkey)
         .groupBy("c_mktsegment")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
     )
@@ -314,30 +351,7 @@ def q_stream_interval_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: same bounded-state equi-join on user_id as the inner twin;
     the outer side adds no state, only deferred NULL emission. The
     left-side filter is pushed to the scan on both engines."""
-    ev = load_table(spark, sf_dir, "events")
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts").alias("p_ts"),
-    )
-    c = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("c_user_id"),
-        F.col("ts").alias("c_ts"),
-    )
-    return p.join(
-        c,
-        (p.user_id == c.c_user_id)
-        & (c.c_ts <= p.p_ts)
-        & (c.c_ts >= p.p_ts - F.expr("INTERVAL 1 HOUR")),
-        "left",
-    ).select(
-        "purchase_id",
-        "click_id",
-        "user_id",
-        (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("lag_us"),
-        F.col("click_id").isNull().alias("is_organic"),
-    )
+    return interval_left(load_table(spark, sf_dir, "events"))
 
 
 _ALERT_NUM, _ALERT_DEN = 3, 2  # alert when share > 1.5x the global share
@@ -372,9 +386,9 @@ def q_stream_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Windowed error-rate alerting: 6-hour tumbling windows, each
     flagged when its error share exceeds 1.5x the global share — the
     on-call pager rule, shaped so the SAME plan runs as a Structured
-    Streaming query (tumbling window counts are the incremental state,
-    exactly q_stream_tumbling's; the global baseline becomes a
-    broadcast reference relation refreshed per batch).
+    Streaming query (alert_counts, the tumbling window counts, is the
+    incremental state; the global baseline becomes a broadcast
+    reference relation refreshed per batch).
 
     Determinism: the alert compares INTEGERS via cross-multiplication
     ({_ALERT_DEN}*err*tot_g > {_ALERT_NUM}*tot*err_g  <=>  share >
@@ -389,19 +403,23 @@ def q_stream_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference provenance: C8 watchdog thresholds over periodic
     self-measurement (/root/reference/src/SinglePsramBuffer480x480.cpp:166-175)."""
-    ev = load_table(spark, sf_dir, "events")
-    w = ev.groupBy(F.window("ts", "6 hours").alias("w")).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
-        .cast("long")
-        .alias("n_errors"),
-    ).select(F.col("w.start").alias("ws"), "n_events", "n_errors")
-    return alert_verdict(w)
+    return alert_verdict(alert_counts(load_table(spark, sf_dir, "events")))
 
 
 q_stream_alert.__doc__ = q_stream_alert.__doc__.replace(
     "{_ALERT_NUM}", str(_ALERT_NUM)
 ).replace("{_ALERT_DEN}", str(_ALERT_DEN))
+
+
+def alert_counts(events: DataFrame) -> DataFrame:
+    """Events and errors per 6-hour tumbling window: q_stream_alert's
+    incremental state, the |windows|-bounded relation alert_verdict reads."""
+    return events.groupBy(F.window("ts", "6 hours").alias("w")).agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
+        .cast("long")
+        .alias("n_errors"),
+    ).select(F.col("w.start").alias("ws"), "n_events", "n_errors")
 
 
 def alert_verdict(w: DataFrame) -> DataFrame:

@@ -439,39 +439,43 @@ def test_scan_csv_json_prune_nothing_but_stay_jvm(spark):
 # Window outside the explicit allow-list below.
 #
 # Allow-list rationale (each case is bounded by a fixed domain or a
-# fixed fan-out, never by data volume). The list is EXACT: the audit
-# also fails when an entry stops planning an unpartitioned window
-# (test_window_allowlist_entries_still_unpartitioned), so every line
-# here corresponds to a real node in a real plan.
+# fixed fan-out, never by data volume). Each entry caps how many
+# unpartitioned windows its query may plan, so a new data-proportional
+# window inside an allowed query still fails the audit. The list is
+# EXACT: the audit also fails when an entry plans fewer windows than its
+# cap (test_window_allowlist_entries_still_unpartitioned), so every
+# count here corresponds to real nodes in a real plan.
 #
 # NOT on the list anymore: q_ntile_spend and q_rfm_segments ranked a
 # data-proportional per-customer relation through a single-task NTILE
 # window until round 6 — the audit's first catch. Both now use
 # distwindows.global_rank (range-bucket decomposition; their remaining
-# unpartitioned windows are the <=64-row prefix-offset relations).
+# unpartitioned windows are the <=64-row prefix-offset relations, two
+# per global_rank: the offset prefix sum and the grand total).
 # ---------------------------------------------------------------------------
 
-WINDOW_UNPARTITIONED_ALLOWED: dict[str, str] = {
-    "q_window_frame": "day-spine relation (|days| rows)",
-    "q_resample_interp": "daily revenue spine (|days| rows)",
-    "q_mix_temperature": "per-language mixture table (|langs| rows)",
-    "q_mix_weights": "per-language mixture table (|langs| rows)",
-    "q_regression_zipf": "vocabulary-bounded unigram ranks (|vocab| rows)",
-    "q_concurrency_peak": "per-day boundary prefix (|days| rows)",
-    "q_anomaly_zscore": "trailing z-window over the day spine (|days| rows)",
-    "q_revenue_ewma": "trailing EWMA frame over the day spine (|days| rows)",
-    "q_revenue_moving_median": "trailing median frame over the day spine",
-    "q_path_trigrams": "global share over |event_types|^3 trigram rows",
-    "q_text_unigram_lm": "corpus-total window over |vocab| rows",
+WINDOW_UNPARTITIONED_ALLOWED: dict[str, tuple[int, str]] = {
+    "q_window_frame": (1, "day-spine relation (|days| rows)"),
+    "q_resample_interp": (1, "daily revenue spine (|days| rows)"),
+    "q_mix_temperature": (2, "per-language mixture table (|langs| rows)"),
+    "q_mix_weights": (1, "per-language mixture table (|langs| rows)"),
+    "q_regression_zipf": (1, "vocabulary-bounded unigram ranks (|vocab| rows)"),
+    "q_concurrency_peak": (1, "per-day boundary prefix (|days| rows)"),
+    "q_anomaly_zscore": (1, "trailing z-window over the day spine (|days| rows)"),
+    "q_revenue_ewma": (1, "trailing EWMA frame over the day spine (|days| rows)"),
+    "q_revenue_moving_median": (1, "trailing median frame over the day spine"),
+    "q_path_trigrams": (1, "global share over |event_types|^3 trigram rows"),
+    "q_text_unigram_lm": (1, "corpus-total window over |vocab| rows"),
     "q_sample_weighted": (
+        1,
         "rank<=25 pushes a TakeOrderedAndProject(25) BELOW the window "
         "(LimitPushDownThroughWindow) — the unpartitioned window sees "
-        "exactly k rows (asserted in test_sample_weighted_pushes_topk)"
+        "exactly k rows (asserted in test_sample_weighted_pushes_topk)",
     ),
-    "q_ntile_spend": "global_rank prefix offsets (<= 64 bucket rows)",
-    "q_rfm_segments": "global_rank prefix offsets (<= 64 bucket rows, x3)",
-    "q_mix_schedule": "global_rank prefix offsets (<= 64 bucket rows)",
-    "q_curation_pipeline": "global_rank prefix offsets (<= 64 bucket rows)",
+    "q_ntile_spend": (2, "global_rank prefix offsets (<= 64 bucket rows)"),
+    "q_rfm_segments": (6, "global_rank prefix offsets (<= 64 bucket rows, x3)"),
+    "q_mix_schedule": (1, "global_rank prefix offsets (<= 64 bucket rows)"),
+    "q_curation_pipeline": (1, "global_rank prefix offsets (<= 64 bucket rows)"),
 }
 
 
@@ -504,22 +508,23 @@ def _unpartitioned_windows(df) -> int:
 @pytest.mark.parametrize("name", sorted(SPECS))
 def test_no_unpartitioned_windows_outside_allowlist(spark, name):
     n = _unpartitioned_windows(build(spark, name))
-    if name in WINDOW_UNPARTITIONED_ALLOWED:
-        return  # bounded by construction — documented above
-    assert n == 0, (
-        f"{name}: {n} unpartitioned Window node(s) in the optimized plan — "
-        "either partition it or add it to WINDOW_UNPARTITIONED_ALLOWED "
-        "with a domain-boundedness justification"
+    cap = WINDOW_UNPARTITIONED_ALLOWED.get(name, (0, ""))[0]
+    assert n <= cap, (
+        f"{name}: {n} unpartitioned Window node(s) in the optimized plan, "
+        f"{cap} allowed — either partition it or raise its "
+        "WINDOW_UNPARTITIONED_ALLOWED count with a domain-boundedness justification"
     )
 
 
 def test_window_allowlist_entries_still_unpartitioned(spark):
-    """Keep the allow-list honest: drop entries whose queries no longer
-    plan an unpartitioned window."""
-    stale = [
-        n for n in WINDOW_UNPARTITIONED_ALLOWED if _unpartitioned_windows(build(spark, n)) == 0
-    ]
-    assert not stale, f"allow-list entries no longer needed: {stale}"
+    """Keep the allow-list honest: an entry's count must equal the
+    unpartitioned windows its query plans today."""
+    stale = {
+        name: (cap, n)
+        for name, (cap, _) in WINDOW_UNPARTITIONED_ALLOWED.items()
+        if (n := _unpartitioned_windows(build(spark, name))) != cap
+    }
+    assert not stale, f"allow-list counts (allowed, planned) out of date: {stale}"
 
 
 def test_min_cost_supplier_is_topk_no_cartesian(spark):

@@ -1,7 +1,8 @@
 """Streaming pillar tests (SURVEY.md §7 M3):
 
-1. Real streaming runs (readStream → watermark → memory sink) equal
-   their batch twins.
+1. Real streaming runs (readStream → watermark → memory sink) of
+   windows.py's plan functions equal the registered batch twins that
+   run the same functions.
 2. Watermarked dedup drops late rows.
 3. The stateful delta operator equals the window-lag form, and its
    cross-batch state carries deltas across micro-batch boundaries.
@@ -11,51 +12,115 @@
 
 from __future__ import annotations
 
+import datetime
+
 import pandas as pd
-import pytest
 
 from pyspark.sql import functions as F
 
 from presto_cached_examples_spark.plans.snapshot import SnapshotPublisher
+from presto_cached_examples_spark.registry import all_specs
 from presto_cached_examples_spark.sources.catalog import load_table
-from presto_cached_examples_spark.streaming import runner, stateful
+from presto_cached_examples_spark.streaming import runner, stateful, windows
 from presto_cached_examples_spark.streaming.incremental import IncrementalAggregator
-from presto_cached_examples_spark.streaming.windows import q_stream_tumbling
 from tests.conftest import SF_TINY
 from tests.util import canon_rows, jobs_during
+
+WATERMARK = datetime.timedelta(hours=2)
 
 
 def _sorted_rows(df):
     return canon_rows(df.toPandas())
 
 
+def _events_stream(spark, watermark: str = "2 hours"):
+    return runner.read_events_stream(spark, SF_TINY).withWatermark("ts", watermark)
+
+
+def _twin(spark, name):
+    return all_specs()[name].fn(spark, SF_TINY)
+
+
+def _final_watermark(spark):
+    """max(event time) - WATERMARK: where the drained stream's watermark ends."""
+    return load_table(spark, SF_TINY, "events").agg(F.max("ts")).first()[0] - WATERMARK
+
+
 def test_stream_tumbling_equals_batch_twin(spark):
     # complete mode: emit open windows too — append mode would hold back
     # windows newer than (max event time - watermark), which is correct
     # streaming behavior but makes the batch comparison asymmetric.
-    events = runner.read_events_stream(spark, SF_TINY)
     streamed = runner.run_to_memory(
-        runner.tumbling_counts_stream(events), "t_tumbling", output_mode="complete"
+        windows.tumbling_counts(_events_stream(spark)), "t_tumbling", output_mode="complete"
     )
-    batch = q_stream_tumbling(spark, SF_TINY)
-    assert _sorted_rows(streamed) == _sorted_rows(batch)
+    assert _sorted_rows(streamed) == _sorted_rows(_twin(spark, "q_stream_tumbling"))
 
 
 def test_stream_tumbling_append_holds_back_open_windows(spark):
     """Append mode must emit exactly the windows closed by the final
     watermark — the late-data discipline the reference's single-buffer
     demo lacks (C2)."""
-    events = runner.read_events_stream(spark, SF_TINY)
     streamed = runner.run_to_memory(
-        runner.tumbling_counts_stream(events), "t_tumbling_append", output_mode="append"
+        windows.tumbling_counts(_events_stream(spark)), "t_tumbling_append", output_mode="append"
     )
-    batch = q_stream_tumbling(spark, SF_TINY).toPandas()
-    max_ts = load_table(spark, SF_TINY, "events").agg(F.max("ts")).first()[0]
-    import datetime
-
-    cutoff = (max_ts - datetime.timedelta(hours=2)).replace(minute=0, second=0, microsecond=0)
+    batch = _twin(spark, "q_stream_tumbling").toPandas()
+    cutoff = _final_watermark(spark).replace(minute=0, second=0, microsecond=0)
     closed = batch[batch.ws < cutoff]
     assert streamed.count() == len(closed)
+
+
+def test_stream_sliding_equals_batch_twin(spark):
+    """Sliding windows overlap, so each event updates four windows of
+    state; in complete mode the drained stream equals the twin."""
+    streamed = runner.run_to_memory(
+        windows.sliding_counts(_events_stream(spark)), "t_sliding", output_mode="complete"
+    )
+    assert _sorted_rows(streamed) == _sorted_rows(_twin(spark, "q_stream_sliding"))
+
+
+def test_stream_session_append_emits_only_closed_sessions(spark):
+    """Append mode emits a session once the watermark passes its end.
+    Every emitted session is a row of the twin, and every session the
+    stream withholds ends past the final watermark."""
+    streamed = runner.run_to_memory(
+        windows.sessions(_events_stream(spark)), "t_session", output_mode="append"
+    )
+    got = set(map(tuple, streamed.collect()))
+    want = set(map(tuple, _twin(spark, "q_stream_session").collect()))
+    assert got, "watermark never closed a session"
+    assert got <= want
+    wm = _final_watermark(spark)
+    withheld = [r for r in want - got if r[2] <= wm]
+    assert not withheld, f"closed sessions never emitted: {withheld[:5]}"
+
+
+def test_stream_normalizes_nanos_ts_like_the_table(spark, tmp_path):
+    """Fixture generations stored ts as TIMESTAMP(NANOS) or (MICROS);
+    the shipped fixtures are all MICROS. A NANOS file reads to the same
+    µs-truncated timestamps through load_table and read_events_stream."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ts = pd.to_datetime(["2024-01-01 00:00:00.000001999", "2024-01-02 12:00:00.000000000"])
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array(ts, pa.timestamp("ns")),
+                "user_id": pa.array([7, 8], pa.int64()),
+                "event_type": ["click", "view"],
+                "value": [1.0, 2.0],
+                "props": ["{}", "{}"],
+            }
+        ),
+        tmp_path / "events.parquet",
+        version="2.6",
+    )
+    table = load_table(spark, str(tmp_path), "events")
+    streamed = runner.run_to_memory(runner.read_events_stream(spark, str(tmp_path)), "t_nanos")
+    assert streamed.dtypes == table.dtypes
+    assert sorted(streamed.collect()) == sorted(table.collect())
+    assert table.orderBy("event_id").first().ts == datetime.datetime(2024, 1, 1, 0, 0, 0, 1)
 
 
 def test_stream_dedup_drops_duplicates(spark):
@@ -306,100 +371,22 @@ def test_incremental_pipeline_end_to_end(spark, tmp_path):
     assert got == want
 
 
-def test_stream_static_enrich_equals_batch_join(spark):
-    """Stream-static broadcast enrichment must equal the batch join."""
-    from pyspark.sql import functions as F
-
-    from presto_cached_examples_spark.sources.catalog import load_table
-    from presto_cached_examples_spark.streaming.runner import (
-        enrich_stream_static,
-        read_events_stream,
-        run_to_memory,
-    )
-
-    dim = load_table(spark, SF_TINY, "customer").select(
-        F.col("c_custkey").alias("u_key"), "c_mktsegment"
-    )
-    stream = read_events_stream(spark, SF_TINY).select("event_id", "user_id")
-    enriched = enrich_stream_static(stream, dim, "user_id", "u_key").select(
-        "event_id", "user_id", "c_mktsegment"
-    )
-    got = sorted(run_to_memory(enriched, "enriched").collect())
-
-    ev = load_table(spark, SF_TINY, "events").select("event_id", "user_id")
-    want = sorted(
-        ev.join(dim, ev.user_id == dim.u_key, "left")
-        .select("event_id", "user_id", "c_mktsegment")
-        .collect()
-    )
-    assert got == want
-
-
 def test_stream_enrich_rollup_equals_registered_twin(spark):
     """The streaming execution of q_stream_enrich's plan (stream →
     broadcast dim join → per-segment rollup in complete mode) must
     equal the registered batch twin the driver hash-checks."""
-    from pyspark.sql import functions as F
-
-    from presto_cached_examples_spark.registry import all_specs
-    from presto_cached_examples_spark.sources.catalog import load_table
-    from presto_cached_examples_spark.streaming.runner import (
-        enrich_stream_static,
-        read_events_stream,
-        run_to_memory,
-    )
-
-    dim = load_table(spark, SF_TINY, "customer").select("c_custkey", "c_mktsegment")
-    stream = read_events_stream(spark, SF_TINY).select("user_id", "value")
-    rolled = (
-        enrich_stream_static(stream, dim, "user_id", "c_custkey")
-        .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-    )
-    got = sorted(
-        run_to_memory(rolled, "enrich_rollup", output_mode="complete").collect()
-    )
-    want = sorted(all_specs()["q_stream_enrich"].fn(spark, SF_TINY).collect())
-    assert got == want
+    customer = load_table(spark, SF_TINY, "customer")
+    rolled = windows.enrich_rollup(_events_stream(spark), customer)
+    got = sorted(runner.run_to_memory(rolled, "enrich_rollup", output_mode="complete").collect())
+    assert got == sorted(_twin(spark, "q_stream_enrich").collect())
 
 
 def test_stream_stream_join_equals_batch_twin(spark):
-    """Watermarked stream-stream join (purchases with clicks from the
-    same user in the preceding hour) equals the batch range join."""
-    from pyspark.sql import functions as F
-
-    from presto_cached_examples_spark.sources.catalog import load_table
-    from presto_cached_examples_spark.streaming.runner import (
-        join_stream_stream,
-        read_events_stream,
-        run_to_memory,
-    )
-
-    def split(df):
-        p = df.filter(F.col("event_type") == "purchase").select(
-            F.col("event_id").alias("l_event_id"),
-            F.col("user_id").alias("l_user_id"),
-            F.col("ts").alias("l_ts"),
-        )
-        c = df.filter(F.col("event_type") == "click").select(
-            F.col("event_id").alias("r_event_id"),
-            F.col("user_id").alias("r_user_id"),
-            F.col("ts").alias("r_ts"),
-        )
-        return p, c
-
-    sp, sc = split(read_events_stream(spark, SF_TINY))
-    joined = join_stream_stream(sp, sc).select("l_event_id", "r_event_id")
-    got = sorted(tuple(r) for r in run_to_memory(joined, "ss_join").collect())
-
-    # the registered batch twin IS the ground truth (and carries the
-    # driver-facing SQL oracle for the same pair set)
-    from presto_cached_examples_spark.registry import all_specs
-
-    want = sorted(
-        (r.purchase_id, r.click_id)
-        for r in all_specs()["q_stream_interval_join"].fn(spark, SF_TINY).collect()
-    )
+    """Watermarked stream-stream self-join (purchases with clicks from
+    the same user in the preceding hour) equals the batch range join."""
+    joined = windows.interval_pairs(_events_stream(spark))
+    got = sorted(tuple(r) for r in runner.run_to_memory(joined, "ss_join").collect())
+    want = sorted(tuple(r) for r in _twin(spark, "q_stream_interval_join").collect())
     assert want, "fixture has no in-window purchase/click pairs"
     assert got == want
 
@@ -451,81 +438,6 @@ def test_checkpoint_restart_does_not_reprocess(spark, tmp_path):
     )
 
 
-def test_transform_with_state_matches_lag(spark, tmp_path):
-    """The transformWithStateInPandas delta operator must equal the
-    window-lag batch computation (same check the applyInPandasWithState
-    variant passes). Needs the RocksDB state store provider, and the
-    API's state-server protocol needs the protobuf python package —
-    skip (not fail) where the environment lacks it."""
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithState state server requires protobuf — "
-        "see NOTES.md 'Env-gated-paths matrix' (the applyInPandasWithState "
-        "twin covers the semantics in this container)",
-    )
-    import pyspark.sql.functions as F
-
-    from presto_cached_examples_spark.sources.catalog import load_table
-    from presto_cached_examples_spark.streaming.runner import read_events_stream
-    from presto_cached_examples_spark.streaming.stateful import event_deltas_tws
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_events_stream(spark, SF_TINY).select(
-            "user_id", "event_id", "ts", "value"
-        )
-        out = event_deltas_tws(stream)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("tws_deltas")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = {
-            (r.event_id): (r.value_delta, r.us_since_prev)
-            for r in spark.table("tws_deltas").collect()
-        }
-    finally:
-        spark.conf.set(key, old)
-
-    ev = load_table(spark, SF_TINY, "events")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    want = {
-        r.event_id: (r.value_delta, r.us_since_prev)
-        for r in ev.select(
-            "event_id",
-            (F.col("value") - F.lag("value").over(w)).alias("value_delta"),
-            (F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)).alias(
-                "us_since_prev"
-            ),
-        ).collect()
-    }
-    assert set(got) == set(want)
-    for eid, (vd, us) in want.items():
-        gvd, gus = got[eid]
-        assert gus == us, f"{eid}: us {gus} != {us}"
-        if vd is None:
-            assert gvd is None or pd_isna(gvd)
-        else:
-            assert abs(gvd - vd) < 1e-9, f"{eid}: delta {gvd} != {vd}"
-
-
-def pd_isna(x):
-    import math
-
-    return x is None or (isinstance(x, float) and math.isnan(x))
-
-
 def test_stream_stream_left_outer_matches_and_defers_nulls(spark):
     """Left-outer watermarked stream-stream join: matched pairs equal
     the batch twin exactly (matches emit eagerly); NULL-padded organic
@@ -535,46 +447,19 @@ def test_stream_stream_left_outer_matches_and_defers_nulls(spark):
     organic rows flush depends on micro-batch watermark advancement,
     so the test pins soundness — never-wrong — plus non-emptiness,
     not the exact flush frontier.)"""
-    from pyspark.sql import functions as F
-
-    from presto_cached_examples_spark.registry import all_specs
-    from presto_cached_examples_spark.streaming.runner import (
-        join_stream_stream,
-        read_events_stream,
-        run_to_memory,
-    )
-
-    def split(df):
-        p = df.filter(F.col("event_type") == "purchase").select(
-            F.col("event_id").alias("l_event_id"),
-            F.col("user_id").alias("l_user_id"),
-            F.col("ts").alias("l_ts"),
-        )
-        c = df.filter(F.col("event_type") == "click").select(
-            F.col("event_id").alias("r_event_id"),
-            F.col("user_id").alias("r_user_id"),
-            F.col("ts").alias("r_ts"),
-        )
-        return p, c
-
-    sp, sc = split(read_events_stream(spark, SF_TINY))
-    joined = join_stream_stream(sp, sc, how="leftOuter").select(
-        "l_event_id", "r_event_id"
-    )
-    got = [tuple(r) for r in run_to_memory(joined, "ss_left_join").collect()]
-    got_pairs = sorted(t for t in got if t[1] is not None)
+    joined = windows.interval_left(_events_stream(spark))
+    got = [tuple(r) for r in runner.run_to_memory(joined, "ss_left_join").collect()]
+    got_pairs = sorted(t[:4] for t in got if t[1] is not None)
     got_null_ids = {t[0] for t in got if t[1] is None}
 
-    batch = all_specs()["q_stream_interval_left"].fn(spark, SF_TINY).collect()
-    want_pairs = sorted(
-        (r.purchase_id, r.click_id) for r in batch if r.click_id is not None
-    )
+    batch = _twin(spark, "q_stream_interval_left").collect()
+    want_pairs = sorted(tuple(r)[:4] for r in batch if r.click_id is not None)
     want_organic_ids = {r.purchase_id for r in batch if r.is_organic}
 
     assert got_pairs == want_pairs
     assert got_null_ids, "watermark never flushed any organic purchase"
     assert got_null_ids <= want_organic_ids
-    assert not (got_null_ids & {p for p, _ in got_pairs})
+    assert not (got_null_ids & {t[0] for t in got_pairs})
 
 
 def test_stream_alert_equals_batch_twin(spark):
@@ -584,15 +469,6 @@ def test_stream_alert_equals_batch_twin(spark):
     window relation, and the shared alert_verdict projection —
     baseline recomputed per batch — must converge to the batch twin
     exactly once the fixture drains."""
-    import datetime
-
-    from presto_cached_examples_spark.registry import all_specs
-    from presto_cached_examples_spark.streaming.runner import (
-        alert_counts_stream,
-        read_events_stream,
-    )
-    from presto_cached_examples_spark.streaming.windows import alert_verdict
-
     acc: dict = {}
     verdicts_per_batch: list[int] = []
 
@@ -610,10 +486,10 @@ def test_stream_alert_equals_batch_twin(spark):
             [(ws, n, e) for ws, (n, e) in acc.items()],
             "ws timestamp, n_events long, n_errors long",
         )
-        verdicts_per_batch.append(alert_verdict(cur).count())
+        verdicts_per_batch.append(windows.alert_verdict(cur).count())
 
     q = (
-        alert_counts_stream(read_events_stream(spark, SF_TINY))
+        windows.alert_counts(_events_stream(spark, "12 hours"))
         .writeStream.foreachBatch(sink)
         .outputMode("update")
         .trigger(availableNow=True)
@@ -627,11 +503,8 @@ def test_stream_alert_equals_batch_twin(spark):
         [(ws, n, e) for ws, (n, e) in acc.items()],
         "ws timestamp, n_events long, n_errors long",
     )
-    got = sorted(tuple(r) for r in alert_verdict(final).collect())
-    want = sorted(
-        tuple(r)
-        for r in all_specs()["q_stream_alert"].fn(spark, SF_TINY).collect()
-    )
+    got = sorted(tuple(r) for r in windows.alert_verdict(final).collect())
+    want = sorted(tuple(r) for r in _twin(spark, "q_stream_alert").collect())
     assert want and got == want
     assert any(r[4] for r in got), "fixture raises no alert — rule untested"
 
