@@ -12,17 +12,32 @@ container plus a scan-scripted witness encoder
 (tests/test_jpeg_progressive.py).
 
 Scope — Huffman coding at 8-bit precision:
-- decode: SOF0/SOF1 (sequential) and SOF2 (progressive: DC/AC
-  first-pass + refinement scans, EOB runs, per-scan DHT/DRI),
-  grayscale or YCbCr with any 1/2/4 sampling factors
-  (nearest-neighbor chroma upsample), multiple DQT/DHT segments,
-  DRI/RSTn restart intervals;
-- encode: grayscale or RGB (4:4:4 or 4:2:0), baseline via Annex K
-  tables or progressive via a scan script (encode_jpeg_progressive,
-  flat full-alphabet Huffman tables), Annex K quantization scaled by
-  the common IJG quality formula, optional DRI/RSTn restart
-  intervals — enough surface to exercise every decode path without
-  external fixtures.
+- decode: SOF0/SOF1 (sequential: one scan or several, interleaved or
+  not) and SOF2 (progressive: DC/AC first-pass + refinement scans, EOB
+  runs, per-scan DHT/DRI), grayscale or YCbCr with any 1/2/4 sampling
+  factors (nearest-neighbor chroma upsample), multiple DQT/DHT
+  segments, DRI/RSTn restart intervals;
+- encode: grayscale or RGB (4:4:4 or 4:2:0), sequential via Annex K
+  tables (encode_jpeg: one scan per component group, one interleaved
+  scan by default) or progressive via a scan script
+  (encode_jpeg_progressive, flat full-alphabet Huffman tables), Annex
+  K quantization scaled by the common IJG quality formula, optional
+  DRI/RSTn restart intervals — enough surface to exercise every
+  decode path without external fixtures.
+
+One scan walk: every scan loop, encode or decode, sequential or
+progressive, iterates `_scan_units` — the T.81 A.2 data-unit order (a
+one-component scan walks that component's block raster, a multi-
+component scan walks MCUs) plus the restart boundary every `ri` MCUs.
+Each loop keeps only its per-unit work and its restart action (reset
+the DC predictors, reset the EOB run, or flush and write RSTn).
+
+One decode path: every frame, single-scan baseline included,
+accumulates its scans into per-component coefficient grids
+(`_decode_scan_into_grids`, whose sequential unit is
+`_decode_sequential_block`) and reconstructs once, at EOI
+(`_reconstruct_frame`). So every frame must end in EOI, and its scans
+must have delivered DC for every component.
 
 Exact-decode construction used by the multimodal fixtures: an image
 whose 8x8 blocks are each UNIFORM decodes bit-exactly through any
@@ -34,7 +49,9 @@ byte sequence rendered as one uniform block per byte round-trips
 losslessly through a REAL lossy-format container (encode_bytes_exact /
 the decode side of it is plain decode_jpeg), which is what lets the
 DuckDB oracles replay JPEG-path pixel math from document characters
-(tests/test_multimodal.py pins all 256 byte values).
+(tests/test_multimodal.py pins all 256 byte values). Its encoders,
+encode_bytes_exact and encode_frames_exact, pack that DC chain
+directly, byte-identical to encode_jpeg of the same image.
 
 Reference tie (analogy only — the demo does no JPEG work): it renders
 raw RGB565 pixels into a PSRAM frame buffer each frame via
@@ -223,6 +240,7 @@ class _BitWriter:
         self.out = bytearray()
         self.acc = 0
         self.nbits = 0
+        self.rst = 0  # number of the next RSTn marker
 
     def write(self, value: int, length: int) -> None:
         self.acc = (self.acc << length) | (value & ((1 << length) - 1))
@@ -235,11 +253,21 @@ class _BitWriter:
             self.nbits -= 8
         self.acc &= (1 << self.nbits) - 1
 
-    def flush(self) -> bytes:
+    def _pad(self) -> None:
         if self.nbits:
             # pad with 1-bits to the byte boundary (spec convention)
             self.write(0xFF, 8 - self.nbits)
+
+    def flush(self) -> bytes:
+        self._pad()
         return bytes(self.out)
+
+    def restart(self) -> None:
+        """Close a restart interval (T.81 E.1.4): pad to the byte
+        boundary, then write the next RSTn marker (RST0..RST7 cycle)."""
+        self._pad()
+        self.out += bytes([0xFF, 0xD0 + self.rst])
+        self.rst = (self.rst + 1) % 8
 
 
 def _category(v: int) -> int:
@@ -303,14 +331,64 @@ def _encode_block(writer, row, pred, dc_codes, ac_codes) -> int:
     return int(row[0])
 
 
+def _frame_geometry(samp, width: int, height: int):
+    """(hmax, vmax, mcux, mcuy) of a frame: the largest sampling
+    factors and the MCU grid covering the image (T.81 A.2.4)."""
+    hmax = max(sh for sh, _ in samp)
+    vmax = max(sv for _, sv in samp)
+    return hmax, vmax, -(-width // (8 * hmax)), -(-height // (8 * vmax))
+
+
+def _scan_units(samp, width: int, height: int, comp_ids, ri: int):
+    """The data-unit walk of one scan — the one loop every encoder and
+    decoder scan runs. Yields (restart, si, ci, bi) per data unit:
+    whether a restart boundary precedes it, its position in the scan's
+    component list, its frame component index, and its block index in
+    that component's MCU-padded raster (row pitch mcux * h).
+
+    Order (T.81 A.2): a one-component scan is non-interleaved — its
+    MCU is one block, walked over the component's own block raster
+    cropped to the image (A.2.2); a multi-component scan walks the MCU
+    grid, each MCU holding every scan component's h x v blocks in
+    raster order (A.2.3). With a restart interval ri > 0, a boundary
+    falls before every ri-th MCU after the first (E.1.4)."""
+    hmax, vmax, mcux, mcuy = _frame_geometry(samp, width, height)
+    # the units of one MCU: (si, ci, MCU row step, MCU column step,
+    # block offset inside the MCU)
+    if len(comp_ids) == 1:
+        ci = comp_ids[0]
+        sh, sv = samp[ci]
+        rows = -(-(height * sv) // (vmax * 8))
+        cols = -(-(width * sh) // (hmax * 8))
+        units = [(0, ci, mcux * sh, 1, 0)]
+    else:
+        rows, cols = mcuy, mcux
+        units = []
+        for si, ci in enumerate(comp_ids):
+            sh, sv = samp[ci]
+            pitch = mcux * sh
+            units += [
+                (si, ci, sv * pitch, sh, by * pitch + bx)
+                for by in range(sv)
+                for bx in range(sh)
+            ]
+    m = 0
+    for my in range(rows):
+        for mx in range(cols):
+            restart = ri > 0 and m > 0 and m % ri == 0
+            m += 1
+            for si, ci, row_step, col_step, off in units:
+                yield restart, si, ci, my * row_step + mx * col_step + off
+                restart = False
+
+
 def _frame_coefficients(
     samples, width: int, height: int, n_channels: int, quality: int, subsampling: str
 ):
     """Shared front half of both encoders: color transform, chroma
     subsample, MCU-padded FDCT + quantization. Returns (qstacks — one
-    (n, 64) zig-zag int stack per component in component raster order,
-    brasters — per-component (bw, bh) padded block dims, samp, qt,
-    mcux, mcuy)."""
+    (n, 64) zig-zag int stack per component over its MCU-padded block
+    raster, samp, qt)."""
     if not (1 <= width <= 65535 and 1 <= height <= 65535):
         raise ValueError(
             f"JPEG dimensions {width}x{height} out of the 16-bit SOF range"
@@ -346,15 +424,11 @@ def _frame_coefficients(
     qt = [quality_scaled(QUANT_LUMA, quality)]
     if n_channels == 3:
         qt.append(quality_scaled(QUANT_CHROMA, quality))
-    hmax = max(sh for sh, _ in samp)
-    vmax = max(sv for _, sv in samp)
-    mcux = -(-width // (8 * hmax))
-    mcuy = -(-height // (8 * vmax))
+    _, _, mcux, mcuy = _frame_geometry(samp, width, height)
 
     # per-component zig-zag stacks in component raster order, with the
     # block raster padded to whole MCUs (edge replication)
     qstacks = []
-    brasters = []
     for ci, plane in enumerate(planes):
         sh, sv = samp[ci]
         bw, bh = mcux * sh, mcuy * sv
@@ -368,28 +442,52 @@ def _frame_coefficients(
         coeffs = _fdct_blocks(blocks)
         q = qt[min(ci, len(qt) - 1)].reshape(8, 8).astype(np.float64)
         qstacks.append(np.round(coeffs / q).astype(np.int64).reshape(-1, 64)[:, ZIGZAG])
-        brasters.append((bw, bh))
-    return qstacks, brasters, samp, qt, mcux, mcuy
+    return qstacks, samp, qt
+
+
+def _segment(marker: int, payload: bytes) -> bytes:
+    """One length-prefixed marker segment (T.81 B.1.1.4)."""
+    return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
+
+
+def _sos_segment(
+    comp_ids, table_ids, Ss: int = 0, Se: int = 63, Ah: int = 0, Al: int = 0
+) -> bytes:
+    """SOS header of one scan: each component with its DC/AC table id
+    (defaults: a full-band sequential scan)."""
+    body = bytes([len(comp_ids)])
+    for ci in comp_ids:
+        body += bytes([ci + 1, (table_ids[ci] << 4) | table_ids[ci]])
+    return _segment(0xDA, body + bytes([Ss, Se, (Ah << 4) | Al]))
+
+
+#: Annex K Huffman codes, luminance (0) and chrominance (1), and the
+#: table id of each encoded component (Y, Cb, Cr).
+_K_DC_CODES = (
+    _build_codes(DC_LUMA_BITS, DC_LUMA_VALS),
+    _build_codes(DC_CHROMA_BITS, DC_CHROMA_VALS),
+)
+_K_AC_CODES = (
+    _build_codes(AC_LUMA_BITS, AC_LUMA_VALS),
+    _build_codes(AC_CHROMA_BITS, AC_CHROMA_VALS),
+)
+_K_TABLE_IDS = (0, 1, 1)
 
 
 def _emit_frame_headers(
     qt, samp, width: int, height: int, n_channels: int, sof_marker: int,
     restart_interval: int,
 ) -> list[bytes]:
-    """SOI..DRI segments shared by both encoders (SOS differs)."""
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
-
+    """SOI..DRI segments shared by every encoder (SOS differs)."""
     out = [b"\xff\xd8"]  # SOI
-    out.append(seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"))
+    out.append(_segment(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"))
     for ti, q in enumerate(qt):
-        out.append(seg(0xDB, bytes([ti]) + bytes(int(x) for x in q[ZIGZAG])))
+        out.append(_segment(0xDB, bytes([ti]) + bytes(int(x) for x in q[ZIGZAG])))
     sof = struct.pack(">BHHB", 8, height, width, n_channels)
     for ci in range(n_channels):
         sh, sv = samp[ci]
         sof += bytes([ci + 1, (sh << 4) | sv, min(ci, len(qt) - 1)])
-    out.append(seg(sof_marker, sof))
+    out.append(_segment(sof_marker, sof))
     hts = [(0x00, DC_LUMA_BITS, DC_LUMA_VALS), (0x10, AC_LUMA_BITS, AC_LUMA_VALS)]
     if n_channels == 3:
         hts += [
@@ -397,9 +495,9 @@ def _emit_frame_headers(
             (0x11, AC_CHROMA_BITS, AC_CHROMA_VALS),
         ]
     for tc, bits, vals in hts:
-        out.append(seg(0xC4, bytes([tc]) + bytes(bits) + bytes(vals)))
+        out.append(_segment(0xC4, bytes([tc]) + bytes(bits) + bytes(vals)))
     if restart_interval:
-        out.append(seg(0xDD, struct.pack(">H", restart_interval)))
+        out.append(_segment(0xDD, struct.pack(">H", restart_interval)))
     return out
 
 
@@ -411,60 +509,45 @@ def encode_jpeg(
     quality: int = 100,
     subsampling: str = "4:4:4",
     restart_interval: int = 0,
+    groups=None,
 ) -> bytes:
-    """Baseline sequential JFIF encoder: grayscale (1 channel) or RGB
+    """Sequential (SOF0) JFIF encoder: grayscale (1 channel) or RGB
     (3 channels, 4:4:4 or 4:2:0 chroma subsampling), 8-bit, Annex K
     Huffman tables, Annex K quant tables at the given IJG quality
     (100 -> all-ones tables). restart_interval > 0 emits DRI + RSTn
     markers every that-many MCUs (exercises the decoder's restart
-    path; what hardened streaming encoders emit for error recovery)."""
-    qstacks, brasters, samp, qt, mcux, mcuy = _frame_coefficients(
+    path; what hardened streaming encoders emit for error recovery).
+
+    `groups` lists the components of each full-band scan. The default,
+    one interleaved scan of every component, is the baseline
+    single-scan layout; [[0], [1], [2]] is the classic non-interleaved
+    multi-scan layout, and a group of several components emits an
+    interleaved subset scan. Every grouping carries the same
+    coefficients, so they all decode byte-identically — the witness
+    for the decoder's multi-scan path."""
+    qstacks, samp, qt = _frame_coefficients(
         samples, width, height, n_channels, quality, subsampling
     )
-    writer = _BitWriter()
-    dc_l = _build_codes(DC_LUMA_BITS, DC_LUMA_VALS)
-    ac_l = _build_codes(AC_LUMA_BITS, AC_LUMA_VALS)
-    dc_c = _build_codes(DC_CHROMA_BITS, DC_CHROMA_VALS)
-    ac_c = _build_codes(AC_CHROMA_BITS, AC_CHROMA_VALS)
-    tables = [(dc_l, ac_l)] + [(dc_c, ac_c)] * (n_channels - 1)
-
-    scan_parts = []
-    preds = [0] * n_channels
-    rst = 0
-    mcu_i = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu_i and mcu_i % restart_interval == 0:
-                scan_parts.append(writer.flush())
-                scan_parts.append(bytes([0xFF, 0xD0 + rst]))
-                rst = (rst + 1) % 8
-                writer = _BitWriter()
-                preds = [0] * n_channels
-            for ci in range(n_channels):
-                sh, sv = samp[ci]
-                bw, _ = brasters[ci]
-                dc_codes, ac_codes = tables[ci]
-                for by in range(sv):
-                    for bx in range(sh):
-                        bi = (my * sv + by) * bw + mx * sh + bx
-                        preds[ci] = _encode_block(
-                            writer, qstacks[ci][bi], preds[ci], dc_codes, ac_codes
-                        )
-            mcu_i += 1
-    scan_parts.append(writer.flush())
-    scan = b"".join(scan_parts)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
-
-    ncomp = n_channels
-    out = _emit_frame_headers(qt, samp, width, height, ncomp, 0xC0, restart_interval)
-    sos = bytes([ncomp])
-    for ci in range(ncomp):
-        sos += bytes([ci + 1, 0x00 if ci == 0 else 0x11])
-    sos += b"\x00\x3f\x00"
-    out.append(seg(0xDA, sos))
-    out.append(scan)
+    if groups is None:
+        groups = [list(range(n_channels))]
+    out = _emit_frame_headers(
+        qt, samp, width, height, n_channels, 0xC0, restart_interval
+    )
+    for group in groups:
+        out.append(_sos_segment(group, _K_TABLE_IDS))
+        writer = _BitWriter()
+        preds = [0] * len(group)
+        for restart, si, ci, bi in _scan_units(
+            samp, width, height, group, restart_interval
+        ):
+            if restart:
+                writer.restart()
+                preds = [0] * len(group)
+            t = _K_TABLE_IDS[ci]
+            preds[si] = _encode_block(
+                writer, qstacks[ci][bi], preds[si], _K_DC_CODES[t], _K_AC_CODES[t]
+            )
+        out.append(writer.flush())
     out.append(b"\xff\xd9")  # EOI
     return b"".join(out)
 
@@ -624,18 +707,13 @@ def encode_jpeg_progressive(
     the IJG jcparam.c script. AC scans must be single-component; every
     component's DC must reach Al=0 through a refinement chain, same for
     any AC band the script opens (the default script does both)."""
-    qstacks, brasters, samp, qt, mcux, mcuy = _frame_coefficients(
+    qstacks, samp, qt = _frame_coefficients(
         samples, width, height, n_channels, quality, subsampling
     )
     if scans is None:
         scans = _PROG_SCRIPT_COLOR if n_channels == 3 else _PROG_SCRIPT_GRAY
     flat_dc = _build_codes(_PROG_DC_BITS, _PROG_DC_VALS)
     flat_ac = _build_codes(_PROG_AC_BITS, _PROG_AC_VALS)
-    dc_tbls = [flat_dc] * n_channels
-    ac_tbls = [flat_ac] * n_channels
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
 
     out = _emit_frame_headers(
         qt, samp, width, height, n_channels, 0xC2, restart_interval
@@ -643,182 +721,30 @@ def encode_jpeg_progressive(
     # flat progressive tables override the Annex K ids (later DHT with
     # the same id redefines — spec-legal, and exactly what multi-DHT
     # wild progressive files do between scans)
-    out.append(seg(0xC4, bytes([0x00]) + bytes(_PROG_DC_BITS) + bytes(_PROG_DC_VALS)))
-    out.append(seg(0xC4, bytes([0x10]) + bytes(_PROG_AC_BITS) + bytes(_PROG_AC_VALS)))
+    out.append(_segment(0xC4, b"\x00" + bytes(_PROG_DC_BITS) + bytes(_PROG_DC_VALS)))
+    out.append(_segment(0xC4, b"\x10" + bytes(_PROG_AC_BITS) + bytes(_PROG_AC_VALS)))
     for comp_ids, Ss, Se, Ah, Al in scans:
         if Ss > 0 and len(comp_ids) != 1:
             raise ValueError("progressive AC scans must be single-component")
-        sos = bytes([len(comp_ids)])
-        for ci in comp_ids:
-            sos += bytes([ci + 1, 0x00])  # all components use flat table 0
-        sos += bytes([Ss, Se, (Ah << 4) | Al])
-        out.append(seg(0xDA, sos))
-
+        # all components use flat table 0
+        out.append(_sos_segment(comp_ids, (0, 0, 0), Ss, Se, Ah, Al))
         writer = _BitWriter()
-        parts: list[bytes] = []
-        rst = 0
-
-        def restart_break(preds_len: int, state):
-            nonlocal writer, rst
-            if state is not None:
-                state.emit_eobrun(writer, ac_tbls[comp_ids[0]])
-            parts.append(writer.flush())
-            parts.append(bytes([0xFF, 0xD0 + rst]))
-            rst = (rst + 1) % 8
-            writer = _BitWriter()
-            return [0] * preds_len
-
-        if Ss == 0:
-            preds = [0] * len(comp_ids)
-            if len(comp_ids) == 1:
-                ci = comp_ids[0]
-                sh, sv = samp[ci]
-                hmax = max(s for s, _ in samp)
-                vmax = max(s for _, s in samp)
-                bw = -(-(width * sh) // (hmax * 8))
-                bh = -(-(height * sv) // (vmax * 8))
-                bw_pad = mcux * sh
-                units = [(by * bw_pad + bx,) for by in range(bh) for bx in range(bw)]
-                for m, (bi,) in enumerate(units):
-                    if restart_interval and m and m % restart_interval == 0:
-                        preds = restart_break(1, None)
-                    _enc_dc_unit(
-                        writer, qstacks[ci][bi], preds, 0, dc_tbls[ci], Ah, Al
-                    )
+        preds = [0] * len(comp_ids)
+        state = _ProgACState()
+        enc = _enc_ac_first_block if Ah == 0 else _enc_ac_refine_block
+        for restart, si, ci, bi in _scan_units(
+            samp, width, height, comp_ids, restart_interval
+        ):
+            if restart:
+                state.emit_eobrun(writer, flat_ac)
+                writer.restart()
+                preds = [0] * len(comp_ids)
+            if Ss == 0:
+                _enc_dc_unit(writer, qstacks[ci][bi], preds, si, flat_dc, Ah, Al)
             else:
-                for m in range(mcux * mcuy):
-                    if restart_interval and m and m % restart_interval == 0:
-                        preds = restart_break(len(comp_ids), None)
-                    my, mx = divmod(m, mcux)
-                    for si, ci in enumerate(comp_ids):
-                        sh, sv = samp[ci]
-                        bw_pad = mcux * sh
-                        for by in range(sv):
-                            for bx in range(sh):
-                                bi = (my * sv + by) * bw_pad + mx * sh + bx
-                                _enc_dc_unit(
-                                    writer, qstacks[ci][bi], preds, si,
-                                    dc_tbls[ci], Ah, Al,
-                                )
-        else:
-            ci = comp_ids[0]
-            sh, sv = samp[ci]
-            hmax = max(s for s, _ in samp)
-            vmax = max(s for _, s in samp)
-            bw = -(-(width * sh) // (hmax * 8))
-            bh = -(-(height * sv) // (vmax * 8))
-            bw_pad = mcux * sh
-            state = _ProgACState()
-            enc = _enc_ac_first_block if Ah == 0 else _enc_ac_refine_block
-            m = 0
-            for by in range(bh):
-                for bx in range(bw):
-                    if restart_interval and m and m % restart_interval == 0:
-                        restart_break(0, state)
-                        state = _ProgACState()
-                    enc(
-                        writer, qstacks[ci][by * bw_pad + bx], Ss, Se, Al,
-                        ac_tbls[ci], state,
-                    )
-                    m += 1
-            state.emit_eobrun(writer, ac_tbls[ci])
-        parts.append(writer.flush())
-        out.append(b"".join(parts))
-    out.append(b"\xff\xd9")  # EOI
-    return b"".join(out)
-
-
-def encode_jpeg_multiscan(
-    samples,
-    width: int,
-    height: int,
-    n_channels: int = 3,
-    quality: int = 100,
-    subsampling: str = "4:4:4",
-    groups=None,
-    restart_interval: int = 0,
-) -> bytes:
-    """Multi-scan SEQUENTIAL (SOF0) witness encoder: the same frame
-    coefficients as encode_jpeg, entropy-coded as one full-band
-    sequential scan per component group (`groups` defaults to one scan
-    per component — the classic non-interleaved layout; a group of
-    several components emits an interleaved subset scan). Decoding must
-    be byte-identical to the single-scan baseline decode — this is the
-    round-trip witness for the multi-scan decode path."""
-    qstacks, brasters, samp, qt, mcux, mcuy = _frame_coefficients(
-        samples, width, height, n_channels, quality, subsampling
-    )
-    if groups is None:
-        groups = [[ci] for ci in range(n_channels)]
-    dc_tbls = [_build_codes(DC_LUMA_BITS, DC_LUMA_VALS)] + [
-        _build_codes(DC_CHROMA_BITS, DC_CHROMA_VALS)
-    ] * (n_channels - 1)
-    ac_tbls = [_build_codes(AC_LUMA_BITS, AC_LUMA_VALS)] + [
-        _build_codes(AC_CHROMA_BITS, AC_CHROMA_VALS)
-    ] * (n_channels - 1)
-    hmax = max(s for s, _ in samp)
-    vmax = max(s for _, s in samp)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
-
-    out = _emit_frame_headers(
-        qt, samp, width, height, n_channels, 0xC0, restart_interval
-    )
-    for group in groups:
-        sos = bytes([len(group)])
-        for ci in group:
-            t = 0 if ci == 0 else 1
-            sos += bytes([ci + 1, (t << 4) | t])
-        sos += b"\x00\x3f\x00"
-        out.append(seg(0xDA, sos))
-
-        writer = _BitWriter()
-        parts: list[bytes] = []
-        rst = 0
-        preds = [0] * len(group)
-
-        def restart_break(n: int):
-            nonlocal writer, rst
-            parts.append(writer.flush())
-            parts.append(bytes([0xFF, 0xD0 + rst]))
-            rst = (rst + 1) % 8
-            writer = _BitWriter()
-            return [0] * n
-
-        if len(group) == 1:
-            ci = group[0]
-            sh, sv = samp[ci]
-            bw = -(-(width * sh) // (hmax * 8))
-            bh = -(-(height * sv) // (vmax * 8))
-            bw_pad = mcux * sh
-            m = 0
-            for by in range(bh):
-                for bx in range(bw):
-                    if restart_interval and m and m % restart_interval == 0:
-                        preds = restart_break(1)
-                    preds[0] = _encode_block(
-                        writer, qstacks[ci][by * bw_pad + bx], preds[0],
-                        dc_tbls[ci], ac_tbls[ci],
-                    )
-                    m += 1
-        else:
-            for m in range(mcux * mcuy):
-                if restart_interval and m and m % restart_interval == 0:
-                    preds = restart_break(len(group))
-                my, mx = divmod(m, mcux)
-                for si, ci in enumerate(group):
-                    sh, sv = samp[ci]
-                    bw_pad = mcux * sh
-                    for by in range(sv):
-                        for bx in range(sh):
-                            bi = (my * sv + by) * bw_pad + mx * sh + bx
-                            preds[si] = _encode_block(
-                                writer, qstacks[ci][bi], preds[si],
-                                dc_tbls[ci], ac_tbls[ci],
-                            )
-        parts.append(writer.flush())
-        out.append(b"".join(parts))
+                enc(writer, qstacks[ci][bi], Ss, Se, Al, flat_ac, state)
+        state.emit_eobrun(writer, flat_ac)
+        out.append(writer.flush())
     out.append(b"\xff\xd9")  # EOI
     return b"".join(out)
 
@@ -842,67 +768,55 @@ def _enc_dc_unit(writer, zz, preds, si, dc_codes, Ah, Al) -> None:
 def encode_bytes_exact(data: bytes) -> bytes:
     """Render a byte sequence as a REAL baseline JPEG that decodes
     bit-exactly: one uniform 8x8 block per byte (height 8, width
-    8*len), quality 100. decode_jpeg (or any conformant decoder)
-    returns each byte repeated 64 times in row-major block layout —
-    the lossless-through-a-lossy-container fixture construction."""
-    if not data:
-        raise ValueError("empty payload")
-    if len(data) > 8191:
+    8*len), quality 100 — byte-identical to `encode_jpeg` of that
+    image (tests/test_multimodal.py), packed by `encode_frames_exact`.
+    decode_jpeg (or any conformant decoder) returns each byte repeated
+    64 times in row-major block layout — the lossless-through-a-lossy-
+    container fixture construction."""
+    return encode_frames_exact(data, len(data))[0]
+
+
+@functools.lru_cache(maxsize=16)
+def _exact_header(frame_bytes: int) -> bytes:
+    """SOI..SOS that `encode_jpeg` writes for the 8*frame_bytes x 8
+    grayscale frame at quality 100. Memoized: every frame of a movie
+    shares it."""
+    qt = [quality_scaled(QUANT_LUMA, 100)]
+    return b"".join(
+        _emit_frame_headers(qt, [(1, 1)], 8 * frame_bytes, 8, 1, 0xC0, 0)
+    ) + _sos_segment([0], _K_TABLE_IDS)
+
+
+def encode_frames_exact(data: bytes, frame_bytes: int) -> list[bytes]:
+    """The exact construction over consecutive fixed-size frames of
+    `data` (a trailing partial frame is dropped): one REAL baseline
+    JPEG per frame, each byte-identical to `encode_jpeg` of the frame's
+    uniform-block image at quality 100 (property-pinned in
+    tests/test_multimodal.py), without its FDCT or per-coefficient scan.
+
+    Why the packer is exact: with quality-100 all-ones quant tables a
+    uniform 8x8 block's FDCT is DC = 8*(v-128) with every AC exactly
+    zero, so the entropy stream is a pure chain of (DC-category code,
+    diff magnitude bits, EOB) triples. The header is the SOI..SOS that
+    `encode_jpeg` writes for an 8*frame_bytes x 8 grayscale frame; only
+    the entropy segment is packed per frame (integer bit-concat +
+    T.81 F.1.2.3 stuffing, the same byte stream `_BitWriter` emits)."""
+    if not 1 <= frame_bytes <= 8191:
         # JPEG dimensions are 16-bit (<= 65535 px = 8191 blocks per
         # strip), and a multi-row layout can't stay exact: a partial
         # final block-row would need pad blocks that pollute the
         # decoded sample stream. Callers fall back to the PNG carrier
         # (32-bit dims) above this bound — see synthesize_image_batches.
         raise ValueError(
-            f"payload of {len(data)} bytes exceeds the 8191-byte bound of "
+            f"{frame_bytes}-byte frame outside the 1..8191-byte bound of "
             "the single-strip exact JPEG construction"
-        )
-    vals = np.frombuffer(data, dtype=np.uint8)
-    img = np.tile(np.repeat(vals, 8), 8)  # 8 identical rows of (each v x8)
-    return encode_jpeg(img, width=8 * len(data), height=8, n_channels=1, quality=100)
-
-
-@functools.lru_cache(maxsize=16)
-def _frame_consts(frame_bytes: int):
-    """Constants of the exact-frame construction that depend only on
-    the frame size: the JFIF/DQT/SOF/DHT/SOS header (everything up to
-    and including the SOS segment of a real encode at 8*frame_bytes x
-    8) plus the luma Huffman code tables. Memoized — a synthesizer
-    encodes one document per call but every call shares frame_bytes,
-    and the reference encode here was the dominant per-call cost."""
-    ref = encode_bytes_exact(bytes(frame_bytes))
-    sos = ref.index(b"\xff\xda")
-    hdr = ref[: sos + 2 + int.from_bytes(ref[sos + 2 : sos + 4], "big")]
-    dc_codes = _build_codes(DC_LUMA_BITS, DC_LUMA_VALS)
-    eob = _build_codes(AC_LUMA_BITS, AC_LUMA_VALS)[0x00]
-    return hdr, dc_codes, eob
-
-
-def encode_frames_exact(data: bytes, frame_bytes: int) -> list[bytes]:
-    """Batch form of `encode_bytes_exact` over consecutive fixed-size
-    frames of `data` (a trailing partial frame is dropped): returns one
-    REAL baseline JPEG per frame, each byte-identical to
-    `encode_bytes_exact(frame)` (property-pinned in
-    tests/test_multimodal.py), at a fraction of the cost.
-
-    Why the fast path is exact: with quality-100 all-ones quant tables
-    a uniform 8x8 block's FDCT is DC = 8*(v-128) with every AC exactly
-    zero, so the entropy stream is a pure chain of
-    (DC-category code, diff magnitude bits, EOB) triples — no FDCT, no
-    per-coefficient scan needed. The JFIF/DQT/SOF/DHT/SOS header is a
-    constant for a fixed frame size, so it is rendered once through
-    the ordinary encoder and reused; only the ~40-byte entropy segment
-    is packed per frame (integer bit-concat + T.81 F.1.2.3 stuffing,
-    the same byte stream `_BitWriter` emits)."""
-    if not 1 <= frame_bytes <= 8191:
-        raise ValueError(
-            f"frame_bytes={frame_bytes} outside the 1..8191 bound of the "
-            "single-strip exact JPEG construction"
         )
     n = len(data) // frame_bytes
     if n == 0:
         return []
-    hdr, dc_codes, (eob_code, eob_len) = _frame_consts(frame_bytes)
+    hdr = _exact_header(frame_bytes)
+    dc_codes = _K_DC_CODES[0]
+    eob_code, eob_len = _K_AC_CODES[0][0x00]
     out = []
     for f in range(n):
         frame = data[f * frame_bytes : (f + 1) * frame_bytes]
@@ -1051,28 +965,6 @@ def _zz_to_plane(zz: np.ndarray, qtbl: np.ndarray, bh: int, bw: int) -> np.ndarr
     return _blocks_to_plane(pix, bh, bw)
 
 
-def _finish_planes(planes, comps, h: int, w: int, hmax: int, vmax: int):
-    """Upsample each component plane to full resolution (nearest), crop
-    to (h, w), and convert to the output sample array (grayscale plane
-    or interleaved RGB) — the shared tail of both decode paths."""
-    out = []
-    for c, plane in zip(comps, planes):
-        fy, fx = vmax // c["v"], hmax // c["h"]
-        if fy > 1:
-            plane = np.repeat(plane, fy, axis=0)
-        if fx > 1:
-            plane = np.repeat(plane, fx, axis=1)
-        out.append(plane[:h, :w])
-    if len(out) == 1:
-        return np.clip(np.round(out[0]), 0, 255).astype(np.uint8).ravel()
-    y, cb, cr = out
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-    b = y + 1.772 * (cb - 128.0)
-    rgb = np.stack([r, g, b], axis=-1)
-    return np.clip(np.round(rgb), 0, 255).astype(np.uint8).ravel()
-
-
 def decode_jpeg(payload: bytes):
     """Huffman JPEG decoder — baseline sequential (SOF0/SOF1) and, as
     of round 11, progressive (SOF2: spectral selection + successive
@@ -1081,7 +973,12 @@ def decode_jpeg(payload: bytes):
     same contract as _decode_png). Raises NotImplementedError for
     arithmetic-coded/12-bit/hierarchical streams so decode_payload can
     fall through to the env-gated PIL fast path, and ValueError for
-    corrupt streams."""
+    corrupt streams.
+
+    One decode path for every frame type: each scan accumulates into
+    per-component coefficient grids, and the frame reconstructs once,
+    at EOI. So every frame must end in EOI, and its scans must have
+    delivered DC for every component."""
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     pos = 2
@@ -1089,9 +986,10 @@ def decode_jpeg(payload: bytes):
     huff: dict[tuple[int, int], tuple[list, dict[tuple[int, int], int]]] = {}
     sof = None
     ri = 0
-    grids = None  # multi-scan coefficient accumulators, built at first SOS
-    seq_seen: set[int] = set()  # components decoded by sequential scans
-    dc_seen: set[int] = set()  # components covered by a progressive DC-first scan
+    grids = None  # coefficient accumulators, built at the first SOS
+    # components whose DC has arrived: by a sequential scan, or by a
+    # progressive DC-first scan
+    covered: set[int] = set()
     while pos < len(payload):
         if payload[pos] != 0xFF:
             raise ValueError("JPEG marker desync")
@@ -1100,16 +998,13 @@ def decode_jpeg(payload: bytes):
             pos += 1
         if pos + 2 <= len(payload) and payload[pos + 1] == 0xD9:  # EOI
             if grids is not None:
-                covered = dc_seen if sof.get("progressive") else seq_seen
                 if covered != set(range(len(sof["comps"]))):
                     # a frame whose scans never delivered DC for some
                     # component — rendering flat gray for it would be
                     # silently wrong (ADVICE r11: the progressive path
                     # used to reconstruct unconditionally)
-                    raise ValueError(
-                        "JPEG multi-scan stream ended with undecoded components"
-                    )
-                return _reconstruct_progressive(sof, qt, grids)
+                    raise ValueError("JPEG stream ended with undecoded components")
+                return _reconstruct_frame(sof, qt, grids)
             raise ValueError("JPEG reached EOI before SOS")
         if pos + 4 > len(payload):
             raise ValueError("JPEG truncated in marker segment")
@@ -1158,7 +1053,7 @@ def decode_jpeg(payload: bytes):
                     f"JPEG with {nc} components (CMYK/duotone) — grayscale "
                     "and YCbCr only; PIL path covers it"
                 )
-            comps = []
+            comps, samp = [], []
             for ci in range(nc):
                 cid, hv, tq = body[6 + 3 * ci : 9 + 3 * ci]
                 sh, sv = hv >> 4, hv & 0xF
@@ -1172,8 +1067,12 @@ def decode_jpeg(payload: bytes):
                         f"JPEG sampling factors {sh}x{sv} (non-power-of-2) "
                         "— 1/2/4 only; PIL path covers it"
                     )
-                comps.append({"id": cid, "h": sh, "v": sv, "tq": tq})
-            sof = {"h": h, "w": w, "comps": comps, "progressive": marker == 0xC2}
+                comps.append({"id": cid, "tq": tq})
+                samp.append((sh, sv))
+            sof = {
+                "h": h, "w": w, "comps": comps, "samp": samp,
+                "progressive": marker == 0xC2,
+            }
         elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             raise NotImplementedError(
                 f"JPEG SOF marker 0xFF{marker:02X} (lossless/arithmetic/"
@@ -1195,54 +1094,24 @@ def decode_jpeg(payload: bytes):
                 raise ValueError("JPEG SOS header invalid")
             Ss, Se = body[1 + 2 * ns], body[2 + 2 * ns]
             Ah, Al = body[3 + 2 * ns] >> 4, body[3 + 2 * ns] & 0xF
-            if not sof.get("progressive"):
-                scomps = []
-                for si in range(ns):
-                    cs, tt = body[1 + 2 * si : 3 + 2 * si]
-                    ci = next(
-                        (i for i, c in enumerate(sof["comps"]) if c["id"] == cs),
-                        None,
+            progressive = sof["progressive"]
+            if progressive:
+                # validate the spectral band / successive-approximation
+                # header (T.81 G.1.1.1.1)
+                if Ss == 0 and Se != 0:
+                    raise ValueError("JPEG progressive DC scan must have Se=0")
+                if Ss > 0 and (ns != 1 or Ss > Se or Se > 63):
+                    raise ValueError("JPEG progressive AC scan band invalid")
+                if Ah not in (0, Al + 1):
+                    raise ValueError(
+                        "JPEG successive approximation must refine one bit at a time"
                     )
-                    if ci is None:
-                        raise ValueError(f"JPEG SOS selects unknown component {cs}")
-                    comp = sof["comps"][ci]
-                    dct, act = tt >> 4, tt & 0xF
-                    if (0, dct) not in huff or (1, act) not in huff:
-                        raise ValueError("JPEG SOS references undefined Huffman table")
-                    if comp["tq"] not in qt:
-                        raise ValueError(
-                            "JPEG component references undefined quant table"
-                        )
-                    scomps.append((ci, comp, dct, act))
-                if ns == len(sof["comps"]) and grids is None:
-                    # the common single-scan layout: decode and return in
-                    # one pass (no grid accumulation)
-                    return _decode_scan(
-                        payload, pos, sof, [s[1:] for s in scomps], qt, huff, ri
-                    )
-                # spec-legal MULTI-SCAN baseline (T.81 lets a sequential
-                # frame split components across scans — one scan per
-                # component is the common non-interleaved layout):
-                # accumulate like progressive, reconstruct at EOI
-                if grids is None:
-                    grids = _alloc_coef_grids(sof)
-                for ci, *_ in scomps:
-                    seq_seen.add(ci)
-                pos = _decode_sequential_scan_into_grids(
-                    payload, pos, sof, scomps, huff, ri, grids
-                )
-                continue
-            # progressive scan: validate the spectral band / successive-
-            # approximation header (T.81 G.1.1.1.1), then accumulate
-            if Ss == 0 and Se != 0:
-                raise ValueError("JPEG progressive DC scan must have Se=0")
-            if Ss > 0 and (ns != 1 or Ss > Se or Se > 63):
-                raise ValueError("JPEG progressive AC scan band invalid")
-            if Ah not in (0, Al + 1):
-                raise ValueError(
-                    "JPEG successive approximation must refine one bit at a time"
-                )
-            pscomps = []
+            # a sequential scan codes DC and AC; a progressive DC-first
+            # scan needs a DC table, an AC scan an AC table, and a DC
+            # refinement none
+            need_dc = not progressive or (Ss == 0 and Ah == 0)
+            need_ac = not progressive or Ss > 0
+            scomps = []
             for si in range(ns):
                 cs, tt = body[1 + 2 * si : 3 + 2 * si]
                 ci = next(
@@ -1250,49 +1119,53 @@ def decode_jpeg(payload: bytes):
                 )
                 if ci is None:
                     raise ValueError(f"JPEG SOS selects unknown component {cs}")
-                comp = sof["comps"][ci]
                 dct, act = tt >> 4, tt & 0xF
-                # DC refinement needs no Huffman table; DC first needs a
-                # DC table; AC scans need an AC table
-                if Ss == 0 and Ah == 0 and (0, dct) not in huff:
+                if (need_dc and (0, dct) not in huff) or (
+                    need_ac and (1, act) not in huff
+                ):
                     raise ValueError("JPEG SOS references undefined Huffman table")
-                if Ss > 0 and (1, act) not in huff:
-                    raise ValueError("JPEG SOS references undefined Huffman table")
-                if comp["tq"] not in qt:
+                if sof["comps"][ci]["tq"] not in qt:
                     raise ValueError("JPEG component references undefined quant table")
-                pscomps.append((ci, comp, dct, act))
+                scomps.append((ci, dct, act))
             if grids is None:
                 grids = _alloc_coef_grids(sof)
-            if Ss == 0 and Ah == 0:
-                for ci, *_ in pscomps:
-                    dc_seen.add(ci)
-            pos = _decode_progressive_scan(
-                payload, pos, sof, pscomps, huff, ri, grids, Ss, Se, Ah, Al
+            if need_dc:
+                covered.update(ci for ci, _, _ in scomps)
+            pos = _decode_scan_into_grids(
+                payload, pos, sof, scomps, huff, ri, grids, Ss, Se, Ah, Al
             )
         # else: APPn / COM / others — skipped
     if grids is not None:
-        # truncated multi-scan stream (no EOI) — render what arrived?
-        # No: fail loudly, a partial render is a silently-wrong answer.
-        raise ValueError("JPEG multi-scan stream truncated before EOI")
+        # a stream cut before EOI — render what arrived? No: fail
+        # loudly, a partial render is a silently-wrong answer.
+        raise ValueError("JPEG stream truncated before EOI")
     raise ValueError("JPEG missing SOS")
+
+
+def _decode_dc(reader, dctbl, pred: int) -> int:
+    """One DC difference (T.81 F.2.2.1) added to the predictor; returns
+    the new predictor. Shared by sequential blocks and progressive
+    DC-first units."""
+    cat = _decode_symbol(reader, dctbl)
+    if cat > 11:  # T.81 Table F.1: DC categories 0..11 at 8-bit
+        raise ValueError("JPEG DC magnitude category out of range")
+    if cat:
+        pred += _extend(reader.read_bits(cat), cat)
+    if not -2047 <= pred <= 2047:
+        # T.81 F.1.2.1: 8-bit DC values fit categories 0..11 (±2047); a
+        # legal encoder never accumulates past that, but a corrupt
+        # stream of max-magnitude diffs would — and an unbounded Python
+        # int (or pred << Al) would later overflow the int32 grid store
+        # instead of failing as the documented ValueError
+        raise ValueError("JPEG DC predictor out of range")
+    return pred
 
 
 def _decode_sequential_block(reader, coef, dctbl, actbl, pred) -> int:
     """One sequential data unit (T.81 F.2.2): DC diff + AC run/size
     pairs into a 64-entry zig-zag coefficient array; returns the new
     DC predictor."""
-    cat = _decode_symbol(reader, dctbl)
-    if cat > 11:  # T.81 Table F.1: DC categories 0..11 at 8-bit
-        raise ValueError("JPEG DC magnitude category out of range")
-    diff = _extend(reader.read_bits(cat), cat) if cat else 0
-    pred += diff
-    if not -2047 <= pred <= 2047:
-        # T.81 F.1.2.1: 8-bit DC values fit categories 0..11 (±2047); a
-        # legal encoder never accumulates past that, but a corrupt
-        # stream of max-magnitude diffs would — and an unbounded Python
-        # int would later overflow the int32 grid store instead of
-        # failing as the documented ValueError
-        raise ValueError("JPEG DC predictor out of range")
+    pred = _decode_dc(reader, dctbl, pred)
     coef[0] = pred
     k = 1
     while k < 64:
@@ -1315,112 +1188,13 @@ def _decode_sequential_block(reader, coef, dctbl, actbl, pred) -> int:
     return pred
 
 
-def _decode_sequential_scan_into_grids(payload, pos, sof, scomps, huff, ri, grids):
-    """One sequential scan of a MULTI-SCAN baseline image, accumulated
-    into the shared coefficient grids (T.81 allows a sequential frame
-    to split its components across scans — one scan per component is
-    the common non-interleaved layout). Same walk as the progressive
-    DC branch, full block decode per data unit; returns the byte
-    offset of the scan's terminating marker.
-    scomps: [(comp_index_in_sof, comp, dct, act), ...]."""
-    hmax, vmax, mcux, mcuy = _frame_geometry(sof)
-    h, w = sof["h"], sof["w"]
-    reader = _BitReader(payload, pos)
-    preds = [0] * len(scomps)
-    if len(scomps) == 1:
-        ci, c, dct, act = scomps[0]
-        dctbl, actbl = huff[(0, dct)], huff[(1, act)]
-        bw = -(-(w * c["h"]) // (hmax * 8))
-        bh = -(-(h * c["v"]) // (vmax * 8))
-        bw_pad = mcux * c["h"]
-        m = 0
-        for by in range(bh):
-            for bx in range(bw):
-                if ri and m and m % ri == 0:
-                    reader.restart()
-                    preds = [0]
-                preds[0] = _decode_sequential_block(
-                    reader, grids[ci][by * bw_pad + bx], dctbl, actbl, preds[0]
-                )
-                m += 1
-    else:
-        for m in range(mcux * mcuy):
-            if ri and m and m % ri == 0:
-                reader.restart()
-                preds = [0] * len(scomps)
-            my, mx = divmod(m, mcux)
-            for si, (ci, c, dct, act) in enumerate(scomps):
-                dctbl, actbl = huff[(0, dct)], huff[(1, act)]
-                bw_pad = mcux * c["h"]
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        bi = (my * c["v"] + by) * bw_pad + mx * c["h"] + bx
-                        preds[si] = _decode_sequential_block(
-                            reader, grids[ci][bi], dctbl, actbl, preds[si]
-                        )
-    return _entropy_segment_end(payload, pos)
-
-
-def _decode_scan(payload, pos, sof, scomps, qt, huff, ri):
-    h, w = sof["h"], sof["w"]
-    hmax = max(c["h"] for c, _, _ in scomps)
-    vmax = max(c["v"] for c, _, _ in scomps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    reader = _BitReader(payload, pos)
-    # per-component zig-zag coefficient stacks, MCU-interleaved order
-    stacks = {i: [] for i in range(len(scomps))}
-    preds = [0] * len(scomps)
-    n_mcu = mcux * mcuy
-    if len(scomps) == 1:
-        # non-interleaved single-component scan: MCU = one block over
-        # the component's own raster (T.81 A.2.2)
-        c = scomps[0][0]
-        bw = -(-(w * c["h"]) // (hmax * 8))
-        bh = -(-(h * c["v"]) // (vmax * 8))
-        n_mcu = bw * bh
-    for m in range(n_mcu):
-        if ri and m and m % ri == 0:
-            reader.restart()
-            preds = [0] * len(scomps)
-        for si, (c, dct, act) in enumerate(scomps):
-            nblk = 1 if len(scomps) == 1 else c["h"] * c["v"]
-            for _ in range(nblk):
-                coef = np.zeros(64, dtype=np.int64)
-                preds[si] = _decode_sequential_block(
-                    reader, coef, huff[(0, dct)], huff[(1, act)], preds[si]
-                )
-                stacks[si].append(coef)
-    planes = []
-    for si, (c, _, _) in enumerate(scomps):
-        if len(scomps) == 1:
-            bw = -(-(w * c["h"]) // (hmax * 8))
-            bh = -(-(h * c["v"]) // (vmax * 8))
-        else:
-            bw, bh = mcux * c["h"], mcuy * c["v"]
-        zz = np.stack(stacks[si])  # (n, 64) in MCU-interleaved order
-        if len(scomps) > 1:
-            # reorder interleaved blocks into component raster order —
-            # a fixed (mcuy, mcux, v, h) -> (mcuy, v, mcux, h) transpose,
-            # vectorized (the per-block Python loop cost mcuy*mcux*v*h
-            # iterations on megapixel images)
-            order = (
-                np.arange(len(zz), dtype=np.int64)
-                .reshape(mcuy, mcux, c["v"], c["h"])
-                .transpose(0, 2, 1, 3)
-                .ravel()
-            )
-            zz = zz[order]
-        planes.append(_zz_to_plane(zz, qt[c["tq"]], bh, bw))
-    return _finish_planes(planes, [c for c, _, _ in scomps], h, w, hmax, vmax)
-
-
 # ---------------------------------------------------------------------------
-# Progressive (SOF2) decode — T.81 Annex G.2 / the jdphuff.c algorithms.
-# Coefficients accumulate across scans in per-component MCU-padded
-# grids; each SOS contributes a spectral band (Ss..Se) at a successive-
-# approximation bit position (Ah -> Al); reconstruction happens once,
-# at EOI, through the same dequant + IDCT + upsample tail as baseline.
+# Scan decode — every frame type takes one path. Coefficients accumulate
+# across scans in per-component MCU-padded grids: a sequential scan
+# fills whole blocks, a progressive scan (T.81 Annex G.2 / the jdphuff.c
+# algorithms) contributes a spectral band (Ss..Se) at a successive-
+# approximation bit position (Ah -> Al). Reconstruction happens once,
+# at EOI (_reconstruct_frame).
 # ---------------------------------------------------------------------------
 
 
@@ -1448,15 +1222,6 @@ def _entropy_segment_end(payload: bytes, pos: int) -> int:
     raise ValueError("JPEG entropy segment runs past end of stream")
 
 
-def _frame_geometry(sof):
-    """(hmax, vmax, mcux, mcuy) of the full frame."""
-    hmax = max(c["h"] for c in sof["comps"])
-    vmax = max(c["v"] for c in sof["comps"])
-    mcux = -(-sof["w"] // (8 * hmax))
-    mcuy = -(-sof["h"] // (8 * vmax))
-    return hmax, vmax, mcux, mcuy
-
-
 def _alloc_coef_grids(sof):
     """Per-component (n_blocks, 64) zig-zag coefficient stores over the
     MCU-padded raster (interleaved DC scans address the padded blocks;
@@ -1465,10 +1230,10 @@ def _alloc_coef_grids(sof):
     (|DC| <= 2047 pre-shift, Al <= 13) and the grid is the decode
     worker's dominant allocation on large images — 256 B/block instead
     of 512 (libjpeg uses int16 here)."""
-    _, _, mcux, mcuy = _frame_geometry(sof)
+    _, _, mcux, mcuy = _frame_geometry(sof["samp"], sof["w"], sof["h"])
     return [
-        np.zeros((mcuy * c["v"] * mcux * c["h"], 64), dtype=np.int32)
-        for c in sof["comps"]
+        np.zeros((mcuy * sv * mcux * sh, 64), dtype=np.int32)
+        for sh, sv in sof["samp"]
     ]
 
 
@@ -1549,97 +1314,68 @@ def _decode_ac_refine(reader, acttbl, coef, Ss, Se, Al, eobrun):
     return eobrun
 
 
-def _decode_progressive_scan(
+def _decode_scan_into_grids(
     payload, pos, sof, scomps, huff, ri, grids, Ss, Se, Ah, Al
 ):
-    """Decode one progressive SOS into the coefficient grids; returns
-    the byte offset just past the scan's entropy-coded segment.
-    scomps: [(comp_index_in_sof, comp, dct, act), ...]."""
-    hmax, vmax, mcux, mcuy = _frame_geometry(sof)
-    h, w = sof["h"], sof["w"]
+    """Decode one scan into the coefficient grids; returns the byte
+    offset of the marker that ends its entropy-coded segment. Per data
+    unit of the walk: a sequential scan decodes the whole block (T.81
+    F.2.2); a progressive DC scan decodes the DC first pass or its
+    1-bit refinement; a progressive AC scan (one component, G.1.1.1.1)
+    decodes one band of the block, first pass or refinement. A restart
+    resets the DC predictors and the EOB run.
+    scomps: [(comp_index_in_sof, dct, act), ...]."""
     reader = _BitReader(payload, pos)
-    eobrun = 0
+    dctbls = [huff.get((0, dct)) for _, dct, _ in scomps]
+    actbls = [huff.get((1, act)) for _, _, act in scomps]
+    sequential = not sof["progressive"]
+    decode_ac = _decode_ac_first if Ah == 0 else _decode_ac_refine
     preds = [0] * len(scomps)
-
-    if Ss == 0:
-        # DC scan — interleaved MCU walk (or the component's own block
-        # raster when non-interleaved), first pass or 1-bit refinement
-
-        def dc_unit(si: int, ci: int, dct: int, bi: int) -> None:
-            if Ah == 0:
-                cat = _decode_symbol(reader, huff[(0, dct)])
-                if cat > 11:
-                    raise ValueError("JPEG DC magnitude category out of range")
-                diff = _extend(reader.read_bits(cat), cat) if cat else 0
-                preds[si] += diff
-                if not -2047 <= preds[si] <= 2047:
-                    # same ±2047 category bound as the sequential path:
-                    # keeps (pred << Al) inside the int32 grids and turns
-                    # a corrupt-stream overflow into the contract ValueError
-                    raise ValueError("JPEG DC predictor out of range")
-                grids[ci][bi, 0] = preds[si] << Al
-            elif reader.read_bits(1):
-                grids[ci][bi, 0] |= 1 << Al
-
-        if len(scomps) == 1:
-            ci, c, dct, _ = scomps[0]
-            bw = -(-(w * c["h"]) // (hmax * 8))
-            bh = -(-(h * c["v"]) // (vmax * 8))
-            bw_pad = mcux * c["h"]
-            m = 0
-            for by in range(bh):
-                for bx in range(bw):
-                    if ri and m and m % ri == 0:
-                        reader.restart()
-                        preds = [0]
-                    dc_unit(0, ci, dct, by * bw_pad + bx)
-                    m += 1
-        else:
-            for m in range(mcux * mcuy):
-                if ri and m and m % ri == 0:
-                    reader.restart()
-                    preds = [0] * len(scomps)
-                my, mx = divmod(m, mcux)
-                for si, (ci, c, dct, _) in enumerate(scomps):
-                    bw_pad = mcux * c["h"]
-                    for by in range(c["v"]):
-                        for bx in range(c["h"]):
-                            bi = (my * c["v"] + by) * bw_pad + mx * c["h"] + bx
-                            dc_unit(si, ci, dct, bi)
-    else:
-        # AC scan — spec-mandated single component (G.1.1.1.1)
-        ci, c, dct, act = scomps[0]
-        acttbl = huff[(1, act)]
-        bw = -(-(w * c["h"]) // (hmax * 8))
-        bh = -(-(h * c["v"]) // (vmax * 8))
-        bw_pad = mcux * c["h"]
-        grid = grids[ci]
-        m = 0
-        for by in range(bh):
-            for bx in range(bw):
-                if ri and m and m % ri == 0:
-                    reader.restart()
-                    eobrun = 0
-                coef = grid[by * bw_pad + bx]
-                if Ah == 0:
-                    eobrun = _decode_ac_first(reader, acttbl, coef, Ss, Se, Al, eobrun)
-                else:
-                    eobrun = _decode_ac_refine(reader, acttbl, coef, Ss, Se, Al, eobrun)
-                m += 1
+    eobrun = 0
+    for restart, si, ci, bi in _scan_units(
+        sof["samp"], sof["w"], sof["h"], [ci for ci, _, _ in scomps], ri
+    ):
+        if restart:
+            reader.restart()
+            preds = [0] * len(scomps)
+            eobrun = 0
+        if sequential:
+            preds[si] = _decode_sequential_block(
+                reader, grids[ci][bi], dctbls[si], actbls[si], preds[si]
+            )
+        elif Ss > 0:
+            eobrun = decode_ac(reader, actbls[si], grids[ci][bi], Ss, Se, Al, eobrun)
+        elif Ah == 0:
+            preds[si] = _decode_dc(reader, dctbls[si], preds[si])
+            grids[ci][bi, 0] = preds[si] << Al
+        elif reader.read_bits(1):
+            grids[ci][bi, 0] |= 1 << Al
     # the scan's pad bits and the reader's over-loaded window bytes are
     # both discarded: the next parse position is the terminating marker
     return _entropy_segment_end(payload, pos)
 
 
-def _reconstruct_progressive(sof, qt, grids):
-    """Final reconstruction from accumulated coefficient grids — the
-    same dequant/IDCT/upsample tail baseline uses, over the MCU-padded
-    per-component rasters."""
-    hmax, vmax, mcux, mcuy = _frame_geometry(sof)
-    planes = []
-    for c, zz in zip(sof["comps"], grids):
+def _reconstruct_frame(sof, qt, grids):
+    """Final reconstruction from the accumulated coefficient grids:
+    dequantize + IDCT each component's MCU-padded raster, upsample it
+    to full resolution (nearest), crop to the image, and convert to
+    the output sample array (grayscale plane or interleaved RGB)."""
+    hmax, vmax, mcux, mcuy = _frame_geometry(sof["samp"], sof["w"], sof["h"])
+    out = []
+    for c, (sh, sv), zz in zip(sof["comps"], sof["samp"], grids):
         if c["tq"] not in qt:
             raise ValueError("JPEG component references undefined quant table")
-        bw, bh = mcux * c["h"], mcuy * c["v"]
-        planes.append(_zz_to_plane(zz, qt[c["tq"]], bh, bw))
-    return _finish_planes(planes, sof["comps"], sof["h"], sof["w"], hmax, vmax)
+        plane = _zz_to_plane(zz, qt[c["tq"]], mcuy * sv, mcux * sh)
+        if vmax > sv:
+            plane = np.repeat(plane, vmax // sv, axis=0)
+        if hmax > sh:
+            plane = np.repeat(plane, hmax // sh, axis=1)
+        out.append(plane[: sof["h"], : sof["w"]])
+    if len(out) == 1:
+        return np.clip(np.round(out[0]), 0, 255).astype(np.uint8).ravel()
+    y, cb, cr = out
+    r = y + 1.402 * (cr - 128.0)
+    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
+    b = y + 1.772 * (cb - 128.0)
+    rgb = np.stack([r, g, b], axis=-1)
+    return np.clip(np.round(rgb), 0, 255).astype(np.uint8).ravel()

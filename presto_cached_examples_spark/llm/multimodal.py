@@ -135,15 +135,17 @@ _ADAM7 = (
     (1, 0, 2, 2),
     (0, 1, 1, 2),
 )
+#: a non-interlaced raster, walked as the one pass covering every pixel
+_ONE_PASS = ((0, 0, 1, 1),)
 
 
 def _unfilter_raster(raw: bytes, pos: int, n_rows: int, stride: int, fd: int):
     """Undo PNG scanline filtering over one raster of `n_rows` rows of
     `stride` bytes (each preceded by its filter-type byte) starting at
     `pos` in the inflated stream; `fd` is the filter's byte distance
-    ("bpp"). Returns (rows array (n_rows, stride), next pos). Shared
-    by the sequential path and each Adam7 pass (which filter their
-    sub-rasters independently, spec §8.2)."""
+    ("bpp"). Returns (rows array (n_rows, stride), next pos). Run once
+    per pass: the one pass of a non-interlaced raster, or each Adam7
+    pass (which filter their sub-rasters independently, spec §8.2)."""
     import numpy as np
 
     if pos + n_rows * (stride + 1) > len(raw):
@@ -199,7 +201,7 @@ def _png_raster_samples(out, n_rows: int, width: int, ch: int, depth: int, scale
     MSB-first; when `scale` (grayscale), they bit-replicate to the full
     8-bit range — 255/(2**d - 1) is exact for d in 1/2/4 (spec §12.5
     sample depth rescaling) — while palette indices pass through
-    unscaled. Shared by the sequential path and each Adam7 pass."""
+    unscaled. Run once per pass, like _unfilter_raster."""
     import numpy as np
 
     if depth == 8:
@@ -273,41 +275,28 @@ def _decode_png(payload: bytes):
     # the filter's byte distance ("bpp" in the spec — 1 for sub-byte
     # depths, where the filters operate on PACKED bytes)
     fd = max(1, ch * depth // 8)
-    if interlace:
-        # Adam7: seven independently-filtered sub-rasters, scattered
-        # into the image on the spec's fixed offset/stride grid; each
-        # pass packs / byte-pairs its own scanlines (spec §8.2)
-        img = np.zeros((h, w, ch), dtype=np.uint8)
-        pos = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw = (w - x0 + dx - 1) // dx
-            ph = (h - y0 + dy - 1) // dy
-            if pw <= 0 or ph <= 0:
-                continue  # empty passes are wholly absent (spec)
-            pstride = (pw * ch * depth + 7) // 8
-            sub, pos = _unfilter_raster(raw, pos, ph, pstride, fd)
-            img[y0::dy, x0::dx, :] = _png_raster_samples(
-                sub, ph, pw, ch, depth, scale
-            ).reshape(ph, pw, ch)
-        if pos != len(raw):
-            raise ValueError(
-                f"PNG interlaced raster size mismatch: {len(raw)} != {pos}"
-            )
-        samples = img.reshape(-1)
-        if color_type == 3:
-            if plte is None or len(plte) % 3:
-                raise ValueError("palette PNG missing/malformed PLTE")
-            pal = np.frombuffer(plte, dtype=np.uint8).reshape(-1, 3)
-            if samples.size and int(samples.max()) >= pal.shape[0]:
-                raise ValueError("PNG palette index out of range")
-            samples = pal[samples].reshape(-1)
-        return samples
-    # scanline geometry: row byte length of the packed samples
-    stride = (w * ch * depth + 7) // 8
-    if len(raw) != h * (stride + 1):
-        raise ValueError(f"PNG raster size mismatch: {len(raw)} != {h * (stride + 1)}")
-    out, _ = _unfilter_raster(raw, 0, h, stride, fd)
-    samples = _png_raster_samples(out, h, w, ch, depth, scale).reshape(-1)
+    # Adam7: seven independently-filtered sub-rasters, scattered into
+    # the image on the spec's fixed offset/stride grid, each pass
+    # packing / byte-pairing its own scanlines (spec §8.2); a
+    # non-interlaced raster is the single pass (0, 0, 1, 1)
+    img = np.zeros((h, w, ch), dtype=np.uint8)
+    pos = 0
+    for x0, y0, dx, dy in _ADAM7 if interlace else _ONE_PASS:
+        pw = (w - x0 + dx - 1) // dx
+        ph = (h - y0 + dy - 1) // dy
+        if interlace and (pw <= 0 or ph <= 0):
+            # an empty Adam7 pass is wholly absent (spec); the one pass
+            # of a non-interlaced raster is not, so a zero-width image
+            # still carries one filter byte per row
+            continue
+        pstride = (pw * ch * depth + 7) // 8
+        sub, pos = _unfilter_raster(raw, pos, ph, pstride, fd)
+        img[y0::dy, x0::dx, :] = _png_raster_samples(
+            sub, ph, pw, ch, depth, scale
+        ).reshape(ph, pw, ch)
+    if pos != len(raw):
+        raise ValueError(f"PNG raster size mismatch: {len(raw)} != {pos}")
+    samples = img.reshape(-1)
     if color_type == 3:
         if plte is None or len(plte) % 3:
             raise ValueError("palette PNG missing/malformed PLTE")
@@ -323,8 +312,8 @@ def _filter_raster(arr, ch: int, filter_type: int) -> list:
     PNG filter type, returning the per-row bytes (filter byte + data).
     The forward direction predicts from RAW neighbor samples, which
     are all known up front, so Average/Paeth encode fully vectorized
-    even though their decode is a sequential recurrence. Shared by
-    the sequential writer and each Adam7 pass."""
+    even though their decode is a sequential recurrence. Run once per
+    pass, like _unfilter_raster."""
     import numpy as np
 
     raws = []
@@ -414,20 +403,17 @@ def _encode_png(
             + struct.pack(">I", binascii.crc32(ctype + data) & 0xFFFFFFFF)
         )
 
-    if interlace:
-        img = arr.reshape(height, width, ch)
-        raws = []
-        for x0, y0, dx, dy in _ADAM7:
-            sub = img[y0::dy, x0::dx, :]
-            if sub.shape[0] == 0 or sub.shape[1] == 0:
-                continue  # empty passes are wholly absent (spec)
-            raws += _filter_raster(
-                pack_rows(np.ascontiguousarray(sub), sub.shape[0], sub.shape[1]),
-                fd,
-                filter_type,
-            )
-    else:
-        raws = _filter_raster(pack_rows(arr, height, width), fd, filter_type)
+    img = arr.reshape(height, width, ch)
+    raws = []
+    for x0, y0, dx, dy in _ADAM7 if interlace else _ONE_PASS:
+        sub = img[y0::dy, x0::dx, :]
+        if interlace and (sub.shape[0] == 0 or sub.shape[1] == 0):
+            continue  # as in _decode_png
+        raws += _filter_raster(
+            pack_rows(np.ascontiguousarray(sub), sub.shape[0], sub.shape[1]),
+            fd,
+            filter_type,
+        )
     ihdr = struct.pack(
         ">IIBBBBB", width, height, depth, color_type, 0, 0, 1 if interlace else 0
     )

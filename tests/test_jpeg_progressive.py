@@ -320,16 +320,15 @@ def test_multiscan_baseline_roundtrip_equals_single_scan(nc, sub, w, h, q, ri, g
     """Multi-scan SEQUENTIAL decode (round 11 — previously a PIL gate):
     the same coefficients split across per-component (or interleaved-
     subset) scans must decode byte-identical to the single interleaved
-    scan, including with restart intervals."""
-    from presto_cached_examples_spark.llm.jpeg import encode_jpeg_multiscan
-
+    scan, including with restart intervals. groups=None is one scan
+    per component."""
     rng = np.random.RandomState(w + h + nc)
     img = rng.randint(0, 256, w * h * nc, dtype=np.uint8)
     base = decode_jpeg(encode_jpeg(img, w, h, n_channels=nc, quality=q, subsampling=sub))
     ms = decode_jpeg(
-        encode_jpeg_multiscan(
+        encode_jpeg(
             img, w, h, n_channels=nc, quality=q, subsampling=sub,
-            groups=groups, restart_interval=ri,
+            groups=groups or [[c] for c in range(nc)], restart_interval=ri,
         )
     )
     assert (base == ms).all()
@@ -339,14 +338,51 @@ def test_multiscan_missing_component_raises():
     """A sequential multi-scan stream that reaches EOI without covering
     every component must raise, never render gray for the missing
     planes."""
-    from presto_cached_examples_spark.llm.jpeg import encode_jpeg_multiscan
-
     rng = np.random.RandomState(2)
     img = rng.randint(0, 256, 16 * 16 * 3, dtype=np.uint8)
-    full = encode_jpeg_multiscan(img, 16, 16)
+    full = encode_jpeg(img, 16, 16, n_channels=3, groups=[[0], [1], [2]])
     cut = full[: full.rfind(b"\xff\xda")] + b"\xff\xd9"
     with pytest.raises(ValueError, match="undecoded components"):
         decode_jpeg(cut)
+
+
+@pytest.mark.parametrize(
+    "nc,sub,ri,groups",
+    [
+        (1, "4:4:4", 0, None),
+        (3, "4:2:0", 2, None),
+        (3, "4:4:4", 0, [[0], [1], [2]]),
+    ],
+)
+def test_sequential_frames_must_end_in_eoi(nc, sub, ri, groups):
+    """Every frame reconstructs at EOI, so a sequential stream whose
+    final FF D9 is cut raises ValueError — the single-scan baseline
+    frame included, never a render of whatever its scan held (the
+    progressive case is test_progressive_truncation_raises)."""
+    rng = np.random.RandomState(3)
+    img = rng.randint(0, 256, 24 * 16 * nc, dtype=np.uint8)
+    jp = encode_jpeg(
+        img, 24, 16, n_channels=nc, quality=90, subsampling=sub,
+        restart_interval=ri, groups=groups,
+    )
+    assert jp.endswith(b"\xff\xd9")
+    assert decode_jpeg(jp).shape == img.shape
+    with pytest.raises(ValueError):
+        decode_jpeg(jp[:-2])
+
+
+def test_single_scan_naming_a_component_twice_raises():
+    """A one-scan sequential frame whose SOS selects one component
+    twice (and so never delivers another) raises at EOI instead of
+    rendering the repeated plane in the missing one's place."""
+    rng = np.random.RandomState(4)
+    img = rng.randint(0, 256, 16 * 16 * 3, dtype=np.uint8)
+    jp = bytearray(encode_jpeg(img, 16, 16, n_channels=3))
+    sos = jp.find(b"\xff\xda")
+    assert jp[sos + 5 : sos + 10 : 2] == bytes([1, 2, 3])
+    jp[sos + 7] = 3  # component selectors 1, 3, 3
+    with pytest.raises(ValueError, match="undecoded components"):
+        decode_jpeg(bytes(jp))
 
 
 def test_progressive_in_decode_payload():

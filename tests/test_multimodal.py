@@ -687,10 +687,12 @@ def test_jpeg_spec_legal_variants_and_guards():
     seed=st.integers(min_value=0, max_value=2**31 - 1),
 )
 def test_jpeg_batch_encoder_matches_scalar(n_bytes, frame_bytes, seed):
-    """encode_frames_exact's LUT fast path must be BYTE-IDENTICAL to
-    encode_bytes_exact on every frame — the property that lets the
-    MJPEG fixture synthesizer use it without weakening the exact-decode
-    construction (hypothesis)."""
+    """encode_frames_exact's DC-chain packer must be BYTE-IDENTICAL to
+    encode_bytes_exact on every frame, and both to encode_jpeg of the
+    frame's uniform-block image — the independent reference that runs
+    the FDCT and the per-coefficient scan. This is the property that
+    lets the fixture synthesizers pack frames without weakening the
+    exact-decode construction (hypothesis)."""
     import numpy as np
 
     from presto_cached_examples_spark.llm.jpeg import (
@@ -702,10 +704,34 @@ def test_jpeg_batch_encoder_matches_scalar(n_bytes, frame_bytes, seed):
     data = rng.randint(0, 256, n_bytes, dtype=np.uint8).tobytes()
     fast = encode_frames_exact(data, frame_bytes)
     n = n_bytes // frame_bytes
-    assert fast == [
-        encode_bytes_exact(data[i * frame_bytes : (i + 1) * frame_bytes])
-        for i in range(n)
-    ]
+    frames = [data[i * frame_bytes : (i + 1) * frame_bytes] for i in range(n)]
+    assert fast == [encode_bytes_exact(f) for f in frames]
+    assert fast == [_encode_uniform_blocks(f) for f in frames]
+
+
+def _encode_uniform_blocks(frame: bytes) -> bytes:
+    """encode_jpeg of the exact construction's image: one uniform 8x8
+    block per byte, height 8, quality 100."""
+    import numpy as np
+
+    from presto_cached_examples_spark.llm.jpeg import encode_jpeg
+
+    img = np.tile(np.repeat(np.frombuffer(frame, np.uint8), 8), 8)
+    return encode_jpeg(img, width=8 * len(frame), height=8, n_channels=1, quality=100)
+
+
+def test_jpeg_exact_encoders_match_encode_jpeg_on_every_byte():
+    """Every single-byte value, through both exact encoders, is
+    byte-identical to encode_jpeg of its uniform block."""
+    from presto_cached_examples_spark.llm.jpeg import (
+        encode_bytes_exact,
+        encode_frames_exact,
+    )
+
+    every = bytes(range(256))
+    refs = [_encode_uniform_blocks(every[v : v + 1]) for v in range(256)]
+    assert encode_frames_exact(every, 1) == refs
+    assert [encode_bytes_exact(every[v : v + 1]) for v in range(256)] == refs
 
 
 @settings(max_examples=40, deadline=None, derandomize=True)
