@@ -1203,13 +1203,10 @@ def _entropy_segment_end(payload: bytes, pos: int) -> int:
     that starts at `pos`: skips 0xFF00 stuffing, 0xFF fill bytes and
     RSTn markers (all part of the segment, T.81 B.1.1.2/E.2.4). The
     bit reader over-loads bytes into its window, so its final `pos` is
-    not the segment end — this walk is."""
-    i = pos
-    n = len(payload)
-    while i < n - 1:
-        if payload[i] != 0xFF:
-            i += 1
-            continue
+    not the segment end — this walk is. It jumps from one 0xFF to the
+    next: every other byte is entropy-coded data."""
+    i = payload.find(b"\xff", pos)
+    while 0 <= i < len(payload) - 1:
         nxt = payload[i + 1]
         if nxt == 0x00:  # stuffed data byte
             i += 2
@@ -1219,6 +1216,7 @@ def _entropy_segment_end(payload: bytes, pos: int) -> int:
             i += 2
         else:
             return i
+        i = payload.find(b"\xff", i)
     raise ValueError("JPEG entropy segment runs past end of stream")
 
 

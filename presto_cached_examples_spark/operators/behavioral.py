@@ -577,31 +577,28 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         range_splits,
     )
 
-    o = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
-    rfm = o.groupBy("o_custkey").agg(
-        F.datediff(
-            F.lit("2001-08-01").cast("date"), F.max("o_orderdate").cast("date")
-        ).alias("recency_days"),
-        F.count(F.lit(1)).alias("frequency"),
-        (F.sum(cents) / 100.0).alias("monetary"),
-    )
-    # Lazy checkpoint (round 15): eager=True forced a sequential
-    # build-time materialization job on every plan build; lazily the
-    # base materializes inside whichever action touches it first (the
-    # memoized approxQuantile on first build, the query's own action
-    # after) and all four consumers still share the one artifact.
-    rfm = rfm.localCheckpoint(eager=False)
-    # Split points memoized per (session, sf) under the build-time-
-    # action contract: splits shape only the plan — global_rank's
-    # (rank, n) is exact for ANY split set — so reusing them changes no
-    # value, and warm builds skip the sampling action.
-    all_splits = memo(
-        spark,
-        sf_dir,
-        "rfm_splits",
-        lambda: range_splits(rfm, ["recency_days", "frequency", "monetary"]),
-    )
+    def checkpointed_rfm():
+        o = load_table(spark, sf_dir, "orders")
+        cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
+        rfm = o.groupBy("o_custkey").agg(
+            F.datediff(
+                F.lit("2001-08-01").cast("date"), F.max("o_orderdate").cast("date")
+            ).alias("recency_days"),
+            F.count(F.lit(1)).alias("frequency"),
+            (F.sum(cents) / 100.0).alias("monetary"),
+        )
+        rfm = rfm.localCheckpoint(eager=False)
+        return rfm, range_splits(rfm, ["recency_days", "frequency", "monetary"])
+
+    # Lazy checkpoint (round 15; eager=True forced a sequential
+    # materialization job) and split points, memoized together per
+    # (session, sf): the base materializes inside the approxQuantile
+    # pass and all four consumers share it. Splits shape only the plan
+    # — global_rank's (rank, n) is exact for ANY split set — so reusing
+    # them changes no value. A new lazy checkpoint on every build would
+    # run the upstream stages again at build time under AQE, so warm
+    # builds reuse this one and run no job.
+    rfm, all_splits = memo(spark, sf_dir, "rfm_base", checkpointed_rfm)
     scores = []
     for (col, desc, out), col_splits in zip(
         (

@@ -30,8 +30,13 @@ from presto_cached_examples_spark.plans.artifacts import memo
 DRIVER_EDGE_THRESHOLD = 100_000
 
 
-def _driver_union_find(spark, edge_rows):
+def _driver_union_find(spark, edge_rows) -> DataFrame:
+    """(node, component, degree) of the undirected graph ``edge_rows``
+    in one Python pass: union by min id, so the component label is the
+    minimum node id, and one degree count per edge end (a degree is the
+    node's row count in the symmetrized edge list)."""
     parent: dict = {}
+    degree: dict = {}
 
     def find(x):
         root = x
@@ -42,44 +47,56 @@ def _driver_union_find(spark, edge_rows):
         return root
 
     for a, b in edge_rows:
+        degree[a] = degree.get(a, 0) + 1
+        degree[b] = degree.get(b, 0) + 1
         ra, rb = find(a), find(b)
         if ra != rb:
-            # union by min id so the component label is the min node
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    rows = [(n, find(n)) for n in parent]
-    # Ship the labels as Arrow batches → a JVM LocalTableScan. The
-    # pickle path (createDataFrame on a list) plans a ParallelCollection
-    # + PythonRDD, and every downstream stage that scans it round-trips
-    # through Python workers — profiled at sf0.1, that stall (43 s task
-    # run time vs 1.3 s CPU) dominated q_dedup_near's clustering jobs.
-    import pandas as pd
+    import pyarrow as pa
 
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    pdf = pd.DataFrame(rows, columns=["node", "component"]).astype("int64")
-    # schema passed explicitly so the zero-edge case (empty frame)
-    # still yields long columns
-    return spark.createDataFrame(pdf, schema="node long, component long")
+    # Ship the result as Arrow batches → a JVM LocalTableScan: driver
+    # data, no block-manager blocks to lose, and no Python workers in
+    # the stages that scan it (the pickle path plans a PythonRDD, whose
+    # Python round-trips stalled q_dedup_near's clustering jobs at
+    # sf0.1: 43 s task run time vs 1.3 s CPU). createDataFrame of a
+    # pyarrow Table takes that path whatever the session's
+    # spark.sql.execution.arrow.pyspark.enabled says, so no conf is
+    # touched; the explicit types keep an empty graph's columns long.
+    nodes = list(degree)
+    table = pa.table(
+        {
+            "node": pa.array(nodes, pa.int64()),
+            "component": pa.array([find(n) for n in nodes], pa.int64()),
+            "degree": pa.array([degree[n] for n in nodes], pa.int64()),
+        }
+    )
+    return spark.createDataFrame(table)
 
 
 def connected_components(
     edges: DataFrame, max_iter: int = 20, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Label every node of the undirected graph `edges` with the
-    minimum node id reachable from it. Returns (node, component).
+    minimum node id reachable from it, next to its degree (its row
+    count in the symmetrized edge list). Returns (node, component,
+    degree).
 
     Hybrid execution: edge sets under DRIVER_EDGE_THRESHOLD are solved
     with an exact driver-side union-find (ONE collect of two long
     columns, limit-capped at threshold+1 so an oversized graph ships
     at most one extra row batch before falling to the distributed
-    loop); larger graphs run the distributed label-propagation loop.
-    `max_iter` bounds that loop; hitting it raises rather than
-    returning a half-converged labeling."""
+    loop); larger graphs checkpoint the edges once, run the
+    distributed label-propagation loop and materialize labels joined
+    to the degree aggregate once. `max_iter` bounds that loop; hitting
+    it raises rather than returning a half-converged labeling."""
     probe = edges.select(src, dst).limit(DRIVER_EDGE_THRESHOLD + 1).collect()
     if len(probe) <= DRIVER_EDGE_THRESHOLD:
-        return _driver_union_find(edges.sparkSession, [(r[0], r[1]) for r in probe])
+        return _driver_union_find(edges.sparkSession, probe)
 
-    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    # The edges feed every round and the degree aggregate: materialize
+    # their (possibly long) lineage once.
+    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint(eager=True)
     sym = sym.unionByName(sym.select(F.col("b").alias("a"), F.col("a").alias("b")))
     labels = (
         sym.select(F.col("a").alias("node"))
@@ -107,7 +124,14 @@ def connected_components(
         changed = new_labels.filter(F.col("changed")).limit(1).count()
         labels = new_labels.select("node", "label")
         if changed == 0:
-            return labels.select("node", F.col("label").alias("component"))
+            degree = sym.groupBy(F.col("a").alias("node")).agg(
+                F.count(F.lit(1)).alias("degree")
+            )
+            return (
+                labels.join(degree, "node")
+                .select("node", F.col("label").alias("component"), "degree")
+                .localCheckpoint(eager=True)
+            )
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 
@@ -190,7 +214,6 @@ def _register_graph_query():
     from pyspark.sql import SparkSession
 
     from presto_cached_examples_spark.registry import register
-    from presto_cached_examples_spark.sources.catalog import load_table
 
     @register("q_graph_components", category="graph", oracle=_GRAPH_COMPONENTS_ORACLE)
     def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -209,17 +232,17 @@ def _register_graph_query():
         (one bounded collect), above it the distributed min-label
         propagation loop whose per-round state is two long columns.
         The oracle replays the closure as a recursive CTE — exact, the
-        same pattern q_dedup_near's clustering oracle uses."""
-        pairs = copurchase_pairs(spark, sf_dir)
-        comp = connected_components(pairs, src="pa", dst="pb")
-        sym = pairs.unionByName(
-            pairs.select(F.col("pb").alias("pa"), F.col("pa").alias("pb"))
+        same pattern q_dedup_near's clustering oracle uses. Labels and
+        degrees are a session artifact beside the edges they come from,
+        so a warm build runs no job."""
+        comp = memo(
+            spark,
+            sf_dir,
+            "copurchase_components",
+            lambda: connected_components(copurchase_pairs(spark, sf_dir), src="pa", dst="pb"),
         )
-        degree = sym.groupBy(F.col("pa").alias("node")).agg(
-            F.count(F.lit(1)).alias("n_neighbors")
-        )
-        return comp.join(degree, "node").select(
-            F.col("node").alias("part_key"), "component", "n_neighbors"
+        return comp.select(
+            F.col("node").alias("part_key"), "component", F.col("degree").alias("n_neighbors")
         )
 
 

@@ -47,6 +47,10 @@ def test_codebook_queries_build_without_jobs_when_warm(spark):
         "q_graph_triangles",
         "q_graph_degree_stats",
         "q_graph_khop",
+        "q_graph_components",  # memoized labels and degrees beside the edges
+        "q_dedup_near",  # memoized near-dup clusters (driver data)
+        "q_ntile_spend",  # memoized lazy checkpoint with its split points
+        "q_rfm_segments",  # memoized lazy checkpoint with its split points
         "q_scan_json",  # documents landed once per session
     )
     # Warm every artifact (codebooks, bloom count, ...) — may run jobs.
