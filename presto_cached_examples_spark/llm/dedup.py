@@ -583,11 +583,12 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dedup_embed_oracle() -> str:
-    """DuckDB replay of the embedding near-dup pipeline: the learned
-    quantizer is reproducible cross-engine (llm/similarity.py's
-    determinism contract), so the multi-probe candidate set — and
-    therefore the verified pair set — is identical, not just similar."""
+def _embed_pairs_sql(hint: str = "") -> str:
+    """WITH prefix of the embedding-dedup oracles, through `scored
+    (vec_a, vec_b, cosine)`: the learned quantizer is reproducible
+    cross-engine (llm/similarity.py's determinism contract), so the
+    multi-probe candidate set — and therefore the verified pair set —
+    is identical, not just similar. `hint` goes after `scored AS`."""
     from presto_cached_examples_spark.llm.similarity import (
         _KMEANS_NPROBE,
         _kmeans_cells_sql,
@@ -601,18 +602,21 @@ pairs AS (
     ON a.cell = b.cell AND a.vec_id < b.vec_id
   WHERE a.r <= {_KMEANS_NPROBE} AND b.r <= {_KMEANS_NPROBE}
 ),
-scored AS (
+scored AS{hint} (
   SELECT p.vec_a, p.vec_b,
          ROUND(list_dot_product(na.v, nb.v) / (na.nrm * nb.nrm), 4) AS cosine
   FROM pairs p
   JOIN nv na ON na.vec_id = p.vec_a
   JOIN nv nb ON nb.vec_id = p.vec_b
 )
-SELECT vec_a, vec_b, cosine FROM scored WHERE cosine >= 0.25
 """
 
 
-@register("q_dedup_embed", category="llm-dedup", oracle=_dedup_embed_oracle())
+@register(
+    "q_dedup_embed",
+    category="llm-dedup",
+    oracle=_embed_pairs_sql() + "SELECT vec_a, vec_b, cosine FROM scored WHERE cosine >= 0.25\n",
+)
 def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (cosine ≥ 0.25), blocked by a
     LEARNED coarse quantizer: k-means cells (llm/similarity.py's Lloyd
@@ -629,26 +633,30 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     products are JVM higher-order-function folds over array<float> —
     no Python, no UDF. Multi-probe duplicates collapse via
     dropDuplicates on the id pair before the dot products run."""
+    return _embed_pairs(spark, sf_dir).filter(F.col("cosine") >= 0.25)
+
+
+def _embed_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_a, vec_b, cosine) for every pair that shares one of its
+    nprobe nearest k-means cells, the candidates q_dedup_embed and its
+    sweep score: an ids-only bucket join and pair dedup (multi-probe
+    collisions), then each surviving pair fetches its vectors once —
+    arrays stay off the bucket shuffle, as in q_dedup_near."""
     from presto_cached_examples_spark.llm.similarity import (
         _KMEANS_NPROBE,
         _cell_ranking,
         _corpus,
         _corpus_centroids,
+        _dot,
     )
 
     e = _corpus(spark, sf_dir)
     cents = _corpus_centroids(spark, sf_dir)
     cells = e.select(
         "vec_id",
-        "v",
-        "nrm",
         F.explode(F.slice(_cell_ranking(cents), 1, _KMEANS_NPROBE)).alias("cell"),
     )
-    ids = cells.select("vec_id", "cell")
-    a, b = ids.alias("a"), ids.alias("b")
-    # ids-only bucket join + pair dedup (multi-probe collisions), then
-    # fetch vectors once per surviving pair — arrays stay off the
-    # bucket shuffle, as in q_dedup_near
+    a, b = cells.alias("a"), cells.alias("b")
     pairs = (
         a.join(
             b,
@@ -657,25 +665,20 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
         .dropDuplicates(["vec_a", "vec_b"])
     )
-    vecs = e.select("vec_id", "v", "nrm")
-    pairs = pairs.join(
-        vecs.select(
-            F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
-        ),
-        "vec_a",
-    ).join(
-        vecs.select(
-            F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-        ),
-        "vec_b",
+
+    def side(s: str) -> DataFrame:
+        return e.select(
+            F.col("vec_id").alias(f"vec_{s}"),
+            F.col("v").alias(f"v{s}"),
+            F.col("nrm").alias(f"n{s}"),
+        )
+
+    cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+    return (
+        pairs.join(side("a"), "vec_a")
+        .join(side("b"), "vec_b")
+        .select("vec_a", "vec_b", F.round(cos, 4).alias("cosine"))
     )
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    cos = dot / (F.col("na") * F.col("nb"))
-    return pairs.select(
-        "vec_a", "vec_b", F.round(cos, 4).alias("cosine")
-    ).filter(F.col("cosine") >= 0.25)
 
 
 # Incremental (cross-snapshot) dedup: the new-crawl batch is the 20%
@@ -1107,11 +1110,6 @@ _EMBED_SWEEP_THRESHOLDS = (0.20, 0.25, 0.30, 0.35)
 def _dedup_embed_sweep_oracle() -> str:
     """DuckDB replay of the threshold sweep: the identical blocked
     candidate set scored once, then per-threshold pair/doc counts."""
-    from presto_cached_examples_spark.llm.similarity import (
-        _KMEANS_NPROBE,
-        _kmeans_cells_sql,
-    )
-
     branches = "\n    UNION ALL ".join(
         f"""SELECT CAST({t} AS DOUBLE) AS threshold,
            COUNT(*) AS n_pairs,
@@ -1119,23 +1117,7 @@ def _dedup_embed_sweep_oracle() -> str:
     FROM scored WHERE cosine >= {t}"""
         for t in _EMBED_SWEEP_THRESHOLDS
     )
-    return f"""
-WITH {_kmeans_cells_sql()},
-pairs AS (
-  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-  FROM rc a JOIN rc b
-    ON a.cell = b.cell AND a.vec_id < b.vec_id
-  WHERE a.r <= {_KMEANS_NPROBE} AND b.r <= {_KMEANS_NPROBE}
-),
-scored AS MATERIALIZED (
-  SELECT p.vec_a, p.vec_b,
-         ROUND(list_dot_product(na.v, nb.v) / (na.nrm * nb.nrm), 4) AS cosine
-  FROM pairs p
-  JOIN nv na ON na.vec_id = p.vec_a
-  JOIN nv nb ON nb.vec_id = p.vec_b
-)
-{branches}
-"""
+    return f"{_embed_pairs_sql(' MATERIALIZED')}{branches}\n"
 
 
 @register(
@@ -1160,67 +1142,15 @@ def q_dedup_embed_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference provenance: C9 measure-then-tune (/root/reference/
     README.md:14-21 — published operating curves drive the knob)."""
-    from presto_cached_examples_spark.llm.similarity import (
-        _KMEANS_NPROBE,
-        _cell_ranking,
-        _corpus,
-        _corpus_centroids,
-    )
-
-    e = _corpus(spark, sf_dir)
-    cents = _corpus_centroids(spark, sf_dir)
-    cells = e.select(
-        "vec_id",
-        F.explode(F.slice(_cell_ranking(cents), 1, _KMEANS_NPROBE)).alias("cell"),
-    )
-    a, b = cells.alias("a"), cells.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .dropDuplicates(["vec_a", "vec_b"])
-    )
-    vecs = e.select("vec_id", "v", "nrm")
-    pair_cosines = (
-        pairs.join(
-            vecs.select(
-                F.col("vec_id").alias("vec_a"),
-                F.col("v").alias("va"),
-                F.col("nrm").alias("na"),
-            ),
-            "vec_a",
-        )
-        .join(
-            vecs.select(
-                F.col("vec_id").alias("vec_b"),
-                F.col("v").alias("vb"),
-                F.col("nrm").alias("nb"),
-            ),
-            "vec_b",
-        )
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(
-                F.aggregate(
-                    F.zip_with("va", "vb", lambda x, y: x * y),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                / (F.col("na") * F.col("nb")),
-                4,
-            ).alias("cosine"),
-        )
-    )
     # The blocking + scoring pass is identical for every build, and the
     # checkpoint otherwise re-materializes per build: one scoring pass
     # per session/sf, N thresholds x M builds. Lazy checkpoint: no
     # build-time jobs.
     scored = memo(
-        spark, sf_dir, "sweep_scored", lambda: pair_cosines.localCheckpoint(eager=False)
+        spark,
+        sf_dir,
+        "sweep_scored",
+        lambda: _embed_pairs(spark, sf_dir).localCheckpoint(eager=False),
     )
     out = None
     for t in _EMBED_SWEEP_THRESHOLDS:

@@ -174,8 +174,13 @@ def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KCENTER_K = 8  # coreset size
 
 
-def _kcenter_dist_sql(v: str, c: str) -> str:
-    """Squared L2 for the oracle replay (the _dist_sql formulation)."""
+def _dist_sql(v: str, c: str) -> str:
+    """Squared-L2 distance for the oracles' argmin and argmax ORDER BYs
+    (this k-center replay and llm/similarity.py's Lloyd loops, which
+    import it from here: the registry loads this module first, and the
+    k-center oracle is generated at import): |a|² − 2a·b + |b|². A
+    ranking flip vs Spark's Σ(aᵢ−bᵢ)² fold would need two candidates
+    equidistant to ~1 ulp."""
     return (
         f"list_dot_product({v}, {v}) - 2 * list_dot_product({v}, {c})"
         f" + list_dot_product({c}, {c})"
@@ -203,7 +208,7 @@ selall1 AS MATERIALIZED (SELECT vec_id, v FROM sel1)"""
         parts.append(
             f"""
 m{i} AS MATERIALIZED (
-  SELECT c.vec_id, MIN({_kcenter_dist_sql('c.v', 's.v')}) AS md
+  SELECT c.vec_id, MIN({_dist_sql('c.v', 's.v')}) AS md
   FROM e c CROSS JOIN selall{i - 1} s
   WHERE c.vec_id NOT IN (SELECT vec_id FROM selall{i - 1})
   GROUP BY c.vec_id
@@ -245,8 +250,9 @@ _KCENTER_LAST_SCANS = {"scans": 0}
 
 def _fold_dist2(x, c) -> float:
     """Squared L2 as a SEQUENTIAL left-to-right fold of (x_i - c_i)²,
-    exactly replicating Spark's `F.aggregate(zip_with(...), 0.0,
-    acc + x)` evaluation order (similarity._dist2_to). Python floats
+    exactly replicating the evaluation order of the shared Spark
+    kernel `similarity._dist2` (`F.aggregate(zip_with(...), 0.0,
+    acc + x)`; pinned by tests/test_similarity.py). Python floats
     are IEEE-754 doubles, so this is bit-identical to the JVM value —
     which is what lets the driver-side pool refinement's tau
     certification and (md, vec_id) tie-breaks reproduce the pure
@@ -292,7 +298,7 @@ def _kcenter_traverse(spark: SparkSession, sf_dir: str, k: int):
     _KCENTER_LAST_SCANS."""
     import numpy as np
 
-    from presto_cached_examples_spark.llm.similarity import _corpus, _dist2_to
+    from presto_cached_examples_spark.llm.similarity import _corpus, _dist2, _double_array
 
     c = _corpus(spark, sf_dir).select("vec_id", "v")
     seed = (
@@ -301,7 +307,7 @@ def _kcenter_traverse(spark: SparkSession, sf_dir: str, k: int):
     sel = [(int(seed.vec_id), [float(x) for x in seed.v], 0.0)]
     scans = 1  # the seed pass
     while len(sel) < k:
-        dists = [_dist2_to(v) for _vid, v, _d in sel]
+        dists = [_dist2(F.col("v"), _double_array(v)) for _vid, v, _d in sel]
         mind = dists[0] if len(dists) == 1 else F.least(*dists)
         rows = (
             c.filter(~F.col("vec_id").isin([vid for vid, _v, _d in sel]))

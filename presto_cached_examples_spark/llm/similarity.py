@@ -1,13 +1,34 @@
 """Similarity search over the `embeddings` table (north-star family;
 SURVEY.md §2.B q_sim_topk).
 
-Two paths:
-- brute-force cosine top-k — the exact baseline. O(probes × corpus),
-  but fully JVM-side (higher-order array folds) and embarrassingly
-  parallel: probes broadcast, corpus partitions stream.
-- LSH-bucketed ANN — random-hyperplane sign bits form buckets; only
-  same-bucket candidates are scored. The 100 TB path: bucket join
-  replaces the cross join, cost O(probes × bucket_size).
+The family:
+- exact brute-force cosine top-k (q_sim_topk), fully JVM-side
+  (higher-order array folds): probes broadcast, corpus partitions
+  stream;
+- the same search routed to a candidate block: random-hyperplane LSH
+  buckets (q_sim_topk_lsh), the label column as IVF cell
+  (q_sim_topk_ivf) or learned k-means cells (q_sim_topk_kmeans), and
+  their recall-vs-nprobe sweep (q_ann_recall_sweep);
+- product quantization: the encoder (q_sim_pq), asymmetric-distance
+  search over its codes (q_sim_adc) and the IVF-PQ stack with exact
+  rerank (q_ann_pipeline);
+- corpus diagnostics: label centroids, norm outliers, SQ8, power
+  iteration, k-means purity, label margins and rank fusion.
+
+One shared kernel holds one copy of each piece of vector code, and
+llm/dedup.py's embedding dedup and llm/sampling.py's k-center call it
+too:
+- `_double_array`: a constant vector or codebook as ONE `F.expr` array
+  literal (NOTES.md "A constant vector is one SQL array literal");
+- `_dot` and `_dist2`: the dot product and the squared-L2 fold
+  Σ(xᵢ−cᵢ)², each one sequential left fold (llm/sampling._fold_dist2
+  replays `_dist2` bit for bit on the driver);
+- `_cell_sorted` / `_cell_ranking`: every centroid of a codebook ranked
+  by `_dist2`, one fold inside one transform;
+- `_pq_encode`, `_adc_tables` and `_adc`: the PQ encoder and the
+  asymmetric distance;
+- `_probes` and `_top_k`: the broadcast probe side and the
+  `row_number` top-k tail every search ends in.
 
 Oracles (round 4): every variant is hash-checked. DuckDB 1.0
 evaluates `list_dot_product`, so the exact and IVF variants carry
@@ -17,7 +38,9 @@ per-dim means rounded to 6 dp — the rounding is what makes the learned
 centroids reproducible across engines despite summation-order drift);
 and the LSH variant's hyperplanes derive from md5 (round 4 — formerly
 xxhash64, which DuckDB cannot evaluate), so its bucket assignment is
-replayed bit-for-bit too (_lsh_oracle).
+replayed bit-for-bit too (_lsh_oracle). The oracle text is generated
+from one copy of each piece as well: `_sql_top_k`, `_pq_sql` and
+`_adc_sql`.
 """
 
 from __future__ import annotations
@@ -27,6 +50,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from presto_cached_examples_spark.llm.sampling import _dist_sql
 from presto_cached_examples_spark.plans.artifacts import memo
 from presto_cached_examples_spark.registry import register
 from presto_cached_examples_spark.sources.catalog import load_table, spread
@@ -46,6 +70,77 @@ def _norm(v):
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _dist2(a, b):
+    """Squared L2 distance Σ(aᵢ−bᵢ)² between two array expressions, as
+    one sequential left fold: the evaluation order
+    llm/sampling._fold_dist2 replays on the driver bit for bit."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _double_array(values):
+    """A constant vector (floats) or codebook (lists of them) as ONE
+    `F.expr` array literal. Each element is written as `repr(float)`
+    with a `D` suffix: repr round-trips every finite double and Spark
+    parses a `D` literal with Java's exact decimal-to-double
+    conversion, so the values, and the optimized plan, equal the
+    nested `F.array(F.lit(...))` form, built in one Py4J call instead
+    of one per float. A non-finite value has no such literal and
+    raises."""
+    return F.expr(_array_sql(values))
+
+
+def _array_sql(values) -> str:
+    if isinstance(values, (list, tuple)):
+        return "array(" + ", ".join(_array_sql(x) for x in values) + ")"
+    x = float(values)
+    if not math.isfinite(x):
+        raise ValueError(f"no SQL literal for the non-finite double {x!r}")
+    return f"{x!r}D"
+
+
+def _cosine():
+    """Cosine between the probe vector (pv, pnrm) and the candidate (v, nrm)."""
+    return _dot(F.col("pv"), F.col("v")) / (F.col("pnrm") * F.col("nrm"))
+
+
+def _probes(frame: DataFrame, *cols, vectors: bool = True) -> DataFrame:
+    """The probe side every search here broadcasts: the first
+    _N_PROBES rows of `frame` as probe_id, with their vector and norm
+    as (pv, pnrm) unless `vectors` is False, and `cols`."""
+    vec = [F.col("v").alias("pv"), F.col("nrm").alias("pnrm")] if vectors else []
+    return frame.filter(F.col("vec_id") < _N_PROBES).select(
+        F.col("vec_id").alias("probe_id"), *vec, *cols
+    )
+
+
+def _top_k(
+    pairs: DataFrame,
+    score,
+    name: str = "cosine",
+    *,
+    desc: bool = True,
+    n: int = _TOP_K,
+    rank: str = "k",
+) -> DataFrame:
+    """The tail every search ends in: `score` over (probe_id, vec_id)
+    `pairs`, rounded to 4 dp as column `name`, ranked per probe by
+    (`name` DESC — ASC when not `desc` — then vec_id) into column
+    `rank`, keeping ranks <= n: (probe_id, vec_id, name, rank). The
+    rank filter plans as a WindowGroupLimit."""
+    order = F.col(name).desc() if desc else F.col(name)
+    w = Window.partitionBy("probe_id").orderBy(order, F.col("vec_id"))
+    return (
+        pairs.select("probe_id", "vec_id", F.round(score, 4).alias(name))
+        .withColumn(rank, F.row_number().over(w))
+        .filter(F.col(rank) <= n)
+        .select("probe_id", "vec_id", name, rank)
+    )
 
 
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -71,17 +166,18 @@ nv AS MATERIALIZED (
 )
 """
 
-#: Top-k rerank tail shared by every oracle: rounded cosine, then
-#: row_number ordered by (cosine DESC, vec_id) — the identical
-#: deterministic tie-break the Spark queries use.
-_SQL_TOPK_TAIL = f"""
+def _sql_top_k(score: str = "cosine", desc: bool = True, src: str = "scored") -> str:
+    """Top-k tail of every top-k oracle: row_number over `src` ordered
+    by (`score` DESC — ASC when not `desc` — then vec_id), the
+    deterministic tie-break of the Spark queries' `_top_k`."""
+    return f"""
 ranked AS (
-  SELECT probe_id, vec_id, cosine,
+  SELECT probe_id, vec_id, {score},
          CAST(ROW_NUMBER() OVER (
-           PARTITION BY probe_id ORDER BY cosine DESC, vec_id) AS INT) AS k
-  FROM scored
+           PARTITION BY probe_id ORDER BY {score}{" DESC" if desc else ""}, vec_id) AS INT) AS k
+  FROM {src}
 )
-SELECT probe_id, vec_id, cosine, k FROM ranked WHERE k <= {_TOP_K}
+SELECT probe_id, vec_id, {score}, k FROM ranked WHERE k <= {_TOP_K}
 """
 
 _SIM_TOPK_ORACLE = f"""
@@ -92,7 +188,7 @@ scored AS (
   FROM nv p JOIN nv c ON c.vec_id <> p.vec_id
   WHERE p.vec_id < {_N_PROBES}
 ),
-{_SQL_TOPK_TAIL}
+{_sql_top_k()}
 """
 
 
@@ -103,20 +199,13 @@ def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The probe side is tiny and broadcast; the corpus side streams one
     scan — at 100 TB this is the exact-rerank stage run on LSH/IVF
     candidates, not on the full corpus."""
-    corpus = _corpus(spark, sf_dir)
-    probes = corpus.filter(F.col("vec_id") < _N_PROBES).select(
-        F.col("vec_id").alias("probe_id"), F.col("v").alias("pv"), F.col("nrm").alias("pnrm")
-    )
-    cos = _dot(F.col("pv"), F.col("v")) / (F.col("pnrm") * F.col("nrm"))
-    w = Window.partitionBy("probe_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        F.broadcast(probes)
-        .join(corpus, probes.probe_id != corpus.vec_id)
-        .select("probe_id", "vec_id", F.round(cos, 4).alias("cosine"))
-        .withColumn("k", F.row_number().over(w))
-        .filter(F.col("k") <= _TOP_K)
-        .select("probe_id", "vec_id", "cosine", "k")
-    )
+    return _exact_top_k(_corpus(spark, sf_dir))
+
+
+def _exact_top_k(corpus: DataFrame) -> DataFrame:
+    """Each probe's exact cosine top-k over the whole of `corpus`."""
+    probes = _probes(corpus)
+    return _top_k(F.broadcast(probes).join(corpus, probes.probe_id != corpus.vec_id), _cosine())
 
 
 def _plane_sign(p: int, i):
@@ -183,7 +272,7 @@ scored AS (
   FROM b p JOIN b c ON c.bucket = p.bucket AND c.vec_id <> p.vec_id
   WHERE p.vec_id < {_N_PROBES}
 ),
-{_SQL_TOPK_TAIL}
+{_sql_top_k()}
 """
 
 
@@ -202,37 +291,14 @@ def q_sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     prune instead of a full scan. Recall is tunable by planes/band
     count; the exact q_sim_topk is the rerank oracle."""
     corpus = _corpus(spark, sf_dir).withColumn("bucket", _bucket(F.col("v")))
-    probes = corpus.filter(F.col("vec_id") < _N_PROBES).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("v").alias("pv"),
-        F.col("nrm").alias("pnrm"),
-        F.col("bucket").alias("pbucket"),
-    )
-    cos = _dot(F.col("pv"), F.col("v")) / (F.col("pnrm") * F.col("nrm"))
-    w = Window.partitionBy("probe_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        F.broadcast(probes)
-        .join(corpus, (probes.pbucket == corpus.bucket) & (probes.probe_id != corpus.vec_id))
-        .select("probe_id", "vec_id", F.round(cos, 4).alias("cosine"))
-        .withColumn("k", F.row_number().over(w))
-        .filter(F.col("k") <= _TOP_K)
-        .select("probe_id", "vec_id", "cosine", "k")
-    )
+    probes = _probes(corpus, F.col("bucket").alias("pbucket"))
+    same_bucket = (probes.pbucket == corpus.bucket) & (probes.probe_id != corpus.vec_id)
+    return _top_k(F.broadcast(probes).join(corpus, same_bucket), _cosine())
 
 
 _KMEANS_K = 8
 _KMEANS_ITERS = 4
 _KMEANS_NPROBE = 2
-
-
-def _dist2_to(cent: list[float]):
-    """Squared L2 distance from column `v` to a centroid literal."""
-    lit = F.array(*[F.lit(float(x)) for x in cent])
-    return F.aggregate(
-        F.zip_with(F.col("v"), lit, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def _cell_sorted(cents: list[list[float]], v=None):
@@ -250,19 +316,10 @@ def _cell_sorted(cents: list[list[float]], v=None):
     replay is unaffected; still a pure map-side expression — no join,
     no shuffle, exactly like the literal form."""
     v = F.col("v") if v is None else v
-    carr = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in cents])
-
-    def d2(c):
-        return F.aggregate(
-            F.zip_with(v, c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     return F.array_sort(
         F.transform(
-            carr,
-            lambda c, i: F.struct(d2(c).alias("d"), i.cast("int").alias("cell")),
+            _double_array(cents),
+            lambda c, i: F.struct(_dist2(v, c).alias("d"), i.cast("int").alias("cell")),
         )
     )
 
@@ -335,23 +392,10 @@ def _corpus_centroids(
     def train():
         corpus = _corpus(spark, sf_dir)
         if sub is not None:
-            corpus = corpus.select(
-                "vec_id",
-                F.slice(F.col("v"), sub * _PQ_SUBDIM + 1, _PQ_SUBDIM).alias("v"),
-            )
+            corpus = corpus.select("vec_id", _pq_sub(sub).alias("v"))
         return kmeans_centroids(corpus, k=k, iters=iters)
 
     return memo(spark, sf_dir, ("codebook", sub, k, iters), train)
-
-
-def _dist_sql(v: str, c: str) -> str:
-    """Squared-L2 distance for argmin ORDER BYs: |a|² − 2a·b + |b|².
-    A ranking flip vs Spark's Σ(aᵢ−bᵢ)² fold would need two centroids
-    equidistant to ~1 ulp."""
-    return (
-        f"list_dot_product({v}, {v}) - 2 * list_dot_product({v}, {c})"
-        f" + list_dot_product({c}, {c})"
-    )
 
 
 def _lloyd_sql(src: str, tag: str, k: int, iters: int) -> str:
@@ -432,7 +476,7 @@ scored AS (
   JOIN (SELECT * FROM rc WHERE r = 1) a
     ON a.cell = p.cell AND a.vec_id <> p.vec_id
 ),
-{_SQL_TOPK_TAIL}
+{_sql_top_k()}
 """
 
 
@@ -448,29 +492,17 @@ def q_sim_topk_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_similarity.py), never the plan shape."""
     corpus = _corpus(spark, sf_dir)
     cents = _corpus_centroids(spark, sf_dir)
-    cell = F.element_at(_cell_ranking(cents), 1)
-    indexed = corpus.withColumn("cell", cell)
-    probes = (
-        indexed.filter(F.col("vec_id") < _N_PROBES)
-        .select(
-            F.col("vec_id").alias("probe_id"),
-            F.col("v").alias("pv"),
-            F.col("nrm").alias("pnrm"),
-            F.slice(_cell_ranking(cents), 1, _KMEANS_NPROBE).alias("pcells"),
-        )
-        .select("probe_id", "pv", "pnrm", F.explode("pcells").alias("cell"))
+    ranking = _cell_ranking(cents)
+    indexed = corpus.withColumn("cell", F.element_at(ranking, 1))
+    probes = _probes(indexed, F.slice(ranking, 1, _KMEANS_NPROBE).alias("pcells")).select(
+        "probe_id", "pv", "pnrm", F.explode("pcells").alias("cell")
     )
-    cos = _dot(F.col("pv"), F.col("v")) / (F.col("pnrm") * F.col("nrm"))
-    w = Window.partitionBy("probe_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
+    pairs = (
         F.broadcast(probes)
         .join(indexed, ["cell"])
         .filter(F.col("probe_id") != F.col("vec_id"))
-        .select("probe_id", "vec_id", F.round(cos, 4).alias("cosine"))
-        .withColumn("k", F.row_number().over(w))
-        .filter(F.col("k") <= _TOP_K)
-        .select("probe_id", "vec_id", "cosine", "k")
     )
+    return _top_k(pairs, _cosine())
 
 
 # Product quantization: 4 subspaces x 16 dims, 4-entry codebook per
@@ -482,37 +514,75 @@ _PQ_K = 4
 _PQ_ITERS = 2
 
 
-def _pq_oracle() -> str:
-    """DuckDB replay of the PQ encoder: per subspace, slice the vector,
-    rerun the identical Lloyd loop (_lloyd_sql, tagged CTEs), assign by
-    argmin of the SAME Σ(xᵢ−cᵢ)² fold Spark evaluates (so the rounded
-    reconstruction error is bit-comparable, not just close), then join
-    the M code columns back to one row per vector."""
-    subs = []
+def _pq_sub(m: int):
+    """Subspace m of column `v`: its m-th slice of _PQ_SUBDIM dims."""
+    return F.slice(F.col("v"), m * _PQ_SUBDIM + 1, _PQ_SUBDIM)
+
+
+def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
+    """The learned codebook of each PQ subspace (session artifacts)."""
+    return [
+        _corpus_centroids(spark, sf_dir, sub=m, k=_PQ_K, iters=_PQ_ITERS)
+        for m in range(_PQ_M)
+    ]
+
+
+def _pq_encode(codebooks):
+    """The PQ encoder over column `v`: the code columns code_m (the
+    nearest centroid of subspace m's codebook, ties to the lower id)
+    and the vector's squared reconstruction error, their distances
+    summed in subspace order."""
+    nearest = [F.element_at(_cell_sorted(cb, v=_pq_sub(m)), 1) for m, cb in enumerate(codebooks)]
+    err = F.lit(0.0)
+    for best in nearest:
+        err = err + best["d"]
+    return [best["cell"].alias(f"code_{m}") for m, best in enumerate(nearest)], err
+
+
+def _pq_sql(cc: bool) -> str:
+    """Per-subspace CTEs of the PQ oracles: slice the vector (e_m),
+    rerun the identical Lloyd loop (_lloyd_sql, tagged CTEs), and
+    assign by argmin of the SAME Σ(xᵢ−cᵢ)² fold Spark evaluates
+    (asg_m), so distances are bit-comparable, not just close. The
+    encoder's asg_m keeps that distance as err; with `cc` (ADC) it
+    keeps the cell only, and cc_m maps each vector to the centroid
+    its code points at."""
+    parts = []
     for m in range(_PQ_M):
         lo, hi = m * _PQ_SUBDIM + 1, (m + 1) * _PQ_SUBDIM
         err = (
             f"list_sum(list_transform(range(1, {_PQ_SUBDIM} + 1),"
             " j -> (s.v[j] - c.c[j]) * (s.v[j] - c.c[j])))"
         )
-        subs.append(f"e_{m} AS (SELECT vec_id, v[{lo}:{hi}] AS v FROM e)")
-        subs.append(_lloyd_sql(f"e_{m}", f"_{m}", _PQ_K, _PQ_ITERS))
-        subs.append(
-            f"""
+        keep, score = ("", "") if cc else (", err", f" {err} AS err,")
+        parts.append(f"e_{m} AS (SELECT vec_id, v[{lo}:{hi}] AS v FROM e)")
+        parts.append(_lloyd_sql(f"e_{m}", f"_{m}", _PQ_K, _PQ_ITERS))
+        asg = f"""
 asg_{m} AS (
-  SELECT vec_id, cell, err FROM (
-    SELECT s.vec_id, c.cell, {err} AS err,
+  SELECT vec_id, cell{keep} FROM (
+    SELECT s.vec_id, c.cell,{score}
            ROW_NUMBER() OVER (PARTITION BY s.vec_id ORDER BY {err}, c.cell) AS r
     FROM e_{m} s CROSS JOIN c{_PQ_ITERS}_{m} c) t
   WHERE r = 1
 )"""
-        )
+        if cc:
+            asg += f""",
+cc_{m} AS (
+  SELECT a.vec_id, c.c FROM asg_{m} a JOIN c{_PQ_ITERS}_{m} c ON c.cell = a.cell
+)"""
+        parts.append(asg)
+    return ",".join(parts)
+
+
+def _pq_oracle() -> str:
+    """DuckDB replay of the PQ encoder (_pq_sql), with the M code
+    columns joined back to one row per vector."""
     codes = ", ".join(f"CAST(asg_{m}.cell AS INT) AS code_{m}" for m in range(_PQ_M))
     joins = " ".join(f"JOIN asg_{m} ON asg_{m}.vec_id = e.vec_id" for m in range(_PQ_M))
     errsum = " + ".join(f"asg_{m}.err" for m in range(_PQ_M))
     return f"""
 WITH {_SQL_CORPUS},
-{",".join(subs)}
+{_pq_sql(cc=False)}
 SELECT e.vec_id, {codes}, ROUND({errsum}, 4) AS recon_err
 FROM e {joins}
 """
@@ -535,76 +605,70 @@ def q_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     per vector at production k=256. The learned state is deterministic,
     so DuckDB replays the entire encoder (_pq_oracle) and the driver
     hash-checks codes AND reconstruction error."""
-    corpus = _corpus(spark, sf_dir)
-    sel = [F.col("vec_id")]
-    err = F.lit(0.0)
+    codes, err = _pq_encode(_pq_codebooks(spark, sf_dir))
+    return _corpus(spark, sf_dir).select("vec_id", *codes, F.round(err, 4).alias("recon_err"))
+
+
+def _adc_tables(codebooks):
+    """ADC's probe side: per subspace m, column t_m holds the squared
+    distance from the probe's raw sub-vector to every centroid."""
+    return [
+        F.transform(_double_array(cb), lambda c: _dist2(_pq_sub(m), c)).alias(f"t_{m}")
+        for m, cb in enumerate(codebooks)
+    ]
+
+
+def _adc():
+    """A candidate's asymmetric distance: the probe's table entries
+    (t_m) at the candidate's codes (code_m), summed in subspace order."""
+    adc = F.lit(0.0)
     for m in range(_PQ_M):
-        sub = F.slice(F.col("v"), m * _PQ_SUBDIM + 1, _PQ_SUBDIM)
-        cents = _corpus_centroids(spark, sf_dir, sub=m, k=_PQ_K, iters=_PQ_ITERS)
-        best = F.element_at(_cell_sorted(cents, v=sub), 1)
-        sel.append(best["cell"].alias(f"code_{m}"))
-        err = err + best["d"]
-    return corpus.select(*sel, F.round(err, 4).alias("recon_err"))
+        adc = adc + F.element_at(f"t_{m}", F.col(f"code_{m}") + 1)
+    return adc
 
 
-def _adc_oracle() -> str:
-    """DuckDB replay of ADC search: per subspace, rerun the Lloyd loop,
-    re-derive every corpus vector's code (the same argmin fold q_sim_pq
-    uses), then score each (probe, vector) pair as the sum over
+def _adc_sql(by_label: bool) -> str:
+    """WITH prefix of the ADC oracles, through `scored(probe_id, vec_id,
+    adc_dist)`: per subspace, rerun the Lloyd loop and re-derive every
+    corpus vector's code (_pq_sql, the same argmin fold q_sim_pq uses),
+    then score each (probe, other vector) pair — with `by_label` only
+    pairs in the probe's own IVF cell (label) — as the sum over
     subspaces of the EXACT fold distance between the probe's raw
-    sub-vector and the centroid the vector's code points at — the same
-    numbers Spark's probe-side lookup tables contain."""
-    parts, folds, joins = [], [], []
-    for m in range(_PQ_M):
-        lo, hi = m * _PQ_SUBDIM + 1, (m + 1) * _PQ_SUBDIM
-        err = (
-            f"list_sum(list_transform(range(1, {_PQ_SUBDIM} + 1),"
-            " j -> (s.v[j] - c.c[j]) * (s.v[j] - c.c[j])))"
+    sub-vector and the centroid the vector's code points at: the same
+    numbers Spark's probe-side tables contain."""
+    adc = " + ".join(
+        f"list_sum(list_transform(range(1, {_PQ_SUBDIM} + 1),"
+        f" j -> (p{m}.v[j] - c{m}.c[j]) * (p{m}.v[j] - c{m}.c[j])))"
+        for m in range(_PQ_M)
+    )
+    pj = " ".join(f"JOIN e_{m} p{m} ON p{m}.vec_id = p0.vec_id" for m in range(1, _PQ_M))
+    cj = " ".join(f"JOIN cc_{m} c{m} ON c{m}.vec_id = c0.vec_id" for m in range(1, _PQ_M))
+    pe, ce, same = (
+        (
+            "\n  JOIN e pe ON pe.vec_id = p0.vec_id",
+            "\n  JOIN e ce ON ce.vec_id = c0.vec_id",
+            "\n    AND ce.label = pe.label",
         )
-        parts.append(f"e_{m} AS (SELECT vec_id, v[{lo}:{hi}] AS v FROM e)")
-        parts.append(_lloyd_sql(f"e_{m}", f"_{m}", _PQ_K, _PQ_ITERS))
-        parts.append(
-            f"""
-asg_{m} AS (
-  SELECT vec_id, cell FROM (
-    SELECT s.vec_id, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY s.vec_id ORDER BY {err}, c.cell) AS r
-    FROM e_{m} s CROSS JOIN c{_PQ_ITERS}_{m} c) t
-  WHERE r = 1
-),
-cc_{m} AS (
-  SELECT a.vec_id, c.c FROM asg_{m} a JOIN c{_PQ_ITERS}_{m} c ON c.cell = a.cell
-)"""
-        )
-        folds.append(
-            f"list_sum(list_transform(range(1, {_PQ_SUBDIM} + 1),"
-            f" j -> (p{m}.v[j] - c{m}.c[j]) * (p{m}.v[j] - c{m}.c[j])))"
-        )
-        if m:
-            joins.append(f"JOIN e_{m} p{m} ON p{m}.vec_id = p0.vec_id")
-            joins.append(f"JOIN cc_{m} c{m} ON c{m}.vec_id = c0.vec_id")
-    adc = " + ".join(folds)
+        if by_label
+        else ("", "", "")
+    )
     return f"""
 WITH {_SQL_CORPUS},
-{",".join(parts)},
+{_pq_sql(cc=True)},
 scored AS (
   SELECT p0.vec_id AS probe_id, c0.vec_id AS vec_id,
          ROUND({adc}, 4) AS adc_dist
-  FROM e_0 p0 {" ".join(joins[::2])}
-  CROSS JOIN cc_0 c0 {" ".join(joins[1::2])}
-  WHERE p0.vec_id < {_N_PROBES} AND c0.vec_id <> p0.vec_id
-),
-ranked AS (
-  SELECT probe_id, vec_id, adc_dist,
-         CAST(ROW_NUMBER() OVER (
-           PARTITION BY probe_id ORDER BY adc_dist, vec_id) AS INT) AS k
-  FROM scored
+  FROM e_0 p0 {pj}{pe}
+  CROSS JOIN cc_0 c0 {cj}{ce}
+  WHERE p0.vec_id < {_N_PROBES} AND c0.vec_id <> p0.vec_id{same}
+),"""
+
+
+@register(
+    "q_sim_adc",
+    category="llm-similarity",
+    oracle=_adc_sql(False) + _sql_top_k("adc_dist", desc=False),
 )
-SELECT probe_id, vec_id, adc_dist, k FROM ranked WHERE k <= {_TOP_K}
-"""
-
-
-@register("q_sim_adc", category="llm-similarity", oracle=_adc_oracle())
 def q_sim_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes — the query-time
     half of IVF-PQ that q_sim_pq's encoder feeds: the corpus is
@@ -629,45 +693,11 @@ def q_sim_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     production k=256) recall comes from codebook quality, while the
     plan shape shown here is already the production one."""
     corpus = _corpus(spark, sf_dir)
-    codebooks = []
-    code_cols = []
-    for m in range(_PQ_M):
-        sub = F.slice(F.col("v"), m * _PQ_SUBDIM + 1, _PQ_SUBDIM)
-        cents = _corpus_centroids(spark, sf_dir, sub=m, k=_PQ_K, iters=_PQ_ITERS)
-        codebooks.append(cents)
-        code_cols.append(
-            F.element_at(_cell_sorted(cents, v=sub), 1)["cell"].alias(f"code_{m}")
-        )
-    codes = corpus.select("vec_id", *code_cols)
-
-    def dist_table(m: int):
-        carr = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in codebooks[m]])
-        sub = F.slice(F.col("v"), m * _PQ_SUBDIM + 1, _PQ_SUBDIM)
-        return F.transform(
-            carr,
-            lambda c: F.aggregate(
-                F.zip_with(sub, c, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-
-    probes = corpus.filter(F.col("vec_id") < _N_PROBES).select(
-        F.col("vec_id").alias("probe_id"),
-        *[dist_table(m).alias(f"t_{m}") for m in range(_PQ_M)],
-    )
-    adc = F.lit(0.0)
-    for m in range(_PQ_M):
-        adc = adc + F.element_at(f"t_{m}", F.col(f"code_{m}") + 1)
-    w = Window.partitionBy("probe_id").orderBy(F.col("adc_dist"), F.col("vec_id"))
-    return (
-        F.broadcast(probes)
-        .join(codes, F.col("probe_id") != F.col("vec_id"))
-        .select("probe_id", "vec_id", F.round(adc, 4).alias("adc_dist"))
-        .withColumn("k", F.row_number().over(w))
-        .filter(F.col("k") <= _TOP_K)
-        .select("probe_id", "vec_id", "adc_dist", "k")
-    )
+    codebooks = _pq_codebooks(spark, sf_dir)
+    codes = corpus.select("vec_id", *_pq_encode(codebooks)[0])
+    probes = _probes(corpus, *_adc_tables(codebooks), vectors=False)
+    pairs = F.broadcast(probes).join(codes, F.col("probe_id") != F.col("vec_id"))
+    return _top_k(pairs, _adc(), "adc_dist", desc=False)
 
 
 _SIM_TOPK_IVF_ORACLE = f"""
@@ -678,7 +708,7 @@ scored AS (
   FROM nv p JOIN nv c ON c.label = p.label AND c.vec_id <> p.vec_id
   WHERE p.vec_id < {_N_PROBES}
 ),
-{_SQL_TOPK_TAIL}
+{_sql_top_k()}
 """
 
 
@@ -692,22 +722,9 @@ def q_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     search within the probe's cell — is the scalable structure; the
     quantizer quality only affects recall, not the plan."""
     corpus = _corpus(spark, sf_dir)
-    probes = corpus.filter(F.col("vec_id") < _N_PROBES).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("v").alias("pv"),
-        F.col("nrm").alias("pnrm"),
-        F.col("label").alias("plabel"),
-    )
-    cos = _dot(F.col("pv"), F.col("v")) / (F.col("pnrm") * F.col("nrm"))
-    w = Window.partitionBy("probe_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        F.broadcast(probes)
-        .join(corpus, (probes.plabel == corpus.label) & (probes.probe_id != corpus.vec_id))
-        .select("probe_id", "vec_id", F.round(cos, 4).alias("cosine"))
-        .withColumn("k", F.row_number().over(w))
-        .filter(F.col("k") <= _TOP_K)
-        .select("probe_id", "vec_id", "cosine", "k")
-    )
+    probes = _probes(corpus, F.col("label").alias("plabel"))
+    same_cell = (probes.plabel == corpus.label) & (probes.probe_id != corpus.vec_id)
+    return _top_k(F.broadcast(probes).join(corpus, same_cell), _cosine())
 
 
 @register(
@@ -931,53 +948,11 @@ _ANN_SHORTLIST = 20
 
 def _ann_pipeline_oracle() -> str:
     """DuckDB replay of the composed serving pipeline: the ADC oracle's
-    code re-derivation (same tagged Lloyd CTEs), restricted to each
-    probe's own IVF cell (label), shortlisted by rounded ADC distance,
-    then exact-cosine reranked — stage for stage the SQL twin of
+    code re-derivation (_adc_sql, restricted to each probe's own IVF
+    cell, the label), shortlisted by rounded ADC distance, then
+    exact-cosine reranked — stage for stage the SQL twin of
     q_ann_pipeline's plan."""
-    parts, folds, joins = [], [], []
-    for m in range(_PQ_M):
-        lo, hi = m * _PQ_SUBDIM + 1, (m + 1) * _PQ_SUBDIM
-        err = (
-            f"list_sum(list_transform(range(1, {_PQ_SUBDIM} + 1),"
-            " j -> (s.v[j] - c.c[j]) * (s.v[j] - c.c[j])))"
-        )
-        parts.append(f"e_{m} AS (SELECT vec_id, v[{lo}:{hi}] AS v FROM e)")
-        parts.append(_lloyd_sql(f"e_{m}", f"_{m}", _PQ_K, _PQ_ITERS))
-        parts.append(
-            f"""
-asg_{m} AS (
-  SELECT vec_id, cell FROM (
-    SELECT s.vec_id, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY s.vec_id ORDER BY {err}, c.cell) AS r
-    FROM e_{m} s CROSS JOIN c{_PQ_ITERS}_{m} c) t
-  WHERE r = 1
-),
-cc_{m} AS (
-  SELECT a.vec_id, c.c FROM asg_{m} a JOIN c{_PQ_ITERS}_{m} c ON c.cell = a.cell
-)"""
-        )
-        folds.append(
-            f"list_sum(list_transform(range(1, {_PQ_SUBDIM} + 1),"
-            f" j -> (p{m}.v[j] - c{m}.c[j]) * (p{m}.v[j] - c{m}.c[j])))"
-        )
-        if m:
-            joins.append(f"JOIN e_{m} p{m} ON p{m}.vec_id = p0.vec_id")
-            joins.append(f"JOIN cc_{m} c{m} ON c{m}.vec_id = c0.vec_id")
-    adc = " + ".join(folds)
-    return f"""
-WITH {_SQL_CORPUS},
-{",".join(parts)},
-scored AS (
-  SELECT p0.vec_id AS probe_id, c0.vec_id AS vec_id,
-         ROUND({adc}, 4) AS adc_dist
-  FROM e_0 p0 {" ".join(joins[::2])}
-  JOIN e pe ON pe.vec_id = p0.vec_id
-  CROSS JOIN cc_0 c0 {" ".join(joins[1::2])}
-  JOIN e ce ON ce.vec_id = c0.vec_id
-  WHERE p0.vec_id < {_N_PROBES} AND c0.vec_id <> p0.vec_id
-    AND ce.label = pe.label
-),
+    return _adc_sql(True) + f"""
 short AS (
   SELECT probe_id, vec_id FROM (
     SELECT probe_id, vec_id,
@@ -992,15 +967,7 @@ rer AS (
   FROM short s
   JOIN nv p ON p.vec_id = s.probe_id
   JOIN nv c ON c.vec_id = s.vec_id
-),
-ranked AS (
-  SELECT probe_id, vec_id, cosine,
-         CAST(ROW_NUMBER() OVER (
-           PARTITION BY probe_id ORDER BY cosine DESC, vec_id) AS INT) AS k
-  FROM rer
-)
-SELECT probe_id, vec_id, cosine, k FROM ranked WHERE k <= {_TOP_K}
-"""
+),{_sql_top_k(src="rer")}"""
 
 
 @register(
@@ -1025,66 +992,27 @@ def q_ann_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     set — not just the final answer — is deterministic on both
     engines."""
     corpus = _corpus(spark, sf_dir)
-    codebooks = []
-    code_cols = []
-    for m in range(_PQ_M):
-        sub = F.slice(F.col("v"), m * _PQ_SUBDIM + 1, _PQ_SUBDIM)
-        cents = _corpus_centroids(spark, sf_dir, sub=m, k=_PQ_K, iters=_PQ_ITERS)
-        codebooks.append(cents)
-        code_cols.append(
-            F.element_at(_cell_sorted(cents, v=sub), 1)["cell"].alias(f"code_{m}")
-        )
-    codes = corpus.select("vec_id", "label", *code_cols)
-
-    def dist_table(m: int):
-        carr = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in codebooks[m]])
-        sub = F.slice(F.col("v"), m * _PQ_SUBDIM + 1, _PQ_SUBDIM)
-        return F.transform(
-            carr,
-            lambda c: F.aggregate(
-                F.zip_with(sub, c, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-
-    probes = corpus.filter(F.col("vec_id") < _N_PROBES).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("label").alias("p_label"),
-        *[dist_table(m).alias(f"t_{m}") for m in range(_PQ_M)],
+    codebooks = _pq_codebooks(spark, sf_dir)
+    codes = corpus.select("vec_id", "label", *_pq_encode(codebooks)[0])
+    probes = _probes(
+        corpus, F.col("label").alias("p_label"), *_adc_tables(codebooks), vectors=False
     )
-    adc = F.lit(0.0)
-    for m in range(_PQ_M):
-        adc = adc + F.element_at(f"t_{m}", F.col(f"code_{m}") + 1)
-    ws = Window.partitionBy("probe_id").orderBy(F.col("adc_dist"), F.col("vec_id"))
-    short = (
-        F.broadcast(probes)
-        .join(
-            codes,
-            (F.col("p_label") == F.col("label"))
-            & (F.col("probe_id") != F.col("vec_id")),
-        )
-        .select("probe_id", "vec_id", F.round(adc, 4).alias("adc_dist"))
-        .withColumn("s", F.row_number().over(ws))
-        .filter(F.col("s") <= _ANN_SHORTLIST)
-        .select("probe_id", "vec_id")
-    )
+    same_cell = (F.col("p_label") == F.col("label")) & (F.col("probe_id") != F.col("vec_id"))
+    short = _top_k(
+        F.broadcast(probes).join(codes, same_cell),
+        _adc(),
+        "adc_dist",
+        desc=False,
+        n=_ANN_SHORTLIST,
+        rank="s",
+    ).select("probe_id", "vec_id")
     pvec = corpus.select(
         F.col("vec_id").alias("probe_id"),
         F.col("v").alias("pv"),
         F.col("nrm").alias("pnrm"),
     )
     cvec = corpus.select("vec_id", "v", "nrm")
-    cosine = F.round(_dot(F.col("pv"), F.col("v")) / (F.col("pnrm") * F.col("nrm")), 4)
-    wk = Window.partitionBy("probe_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        short.join(F.broadcast(pvec), "probe_id")
-        .join(cvec, "vec_id")
-        .select("probe_id", "vec_id", cosine.alias("cosine"))
-        .withColumn("k", F.row_number().over(wk))
-        .filter(F.col("k") <= _TOP_K)
-        .select("probe_id", "vec_id", "cosine", "k")
-    )
+    return _top_k(short.join(F.broadcast(pvec), "probe_id").join(cvec, "vec_id"), _cosine())
 
 
 # Recall-vs-probe sweep: the serving-stack diagnostic that tells an
@@ -1174,21 +1102,7 @@ def q_ann_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _corpus_centroids(spark, sf_dir)
     ranking = _cell_ranking(cents)
     indexed = corpus.withColumn("cell", F.element_at(ranking, 1))
-    cos = _dot(F.col("pv"), F.col("v")) / (F.col("pnrm") * F.col("nrm"))
-    w = Window.partitionBy("probe_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-
-    # exact ground truth: brute-force top-k for the probe set
-    probes0 = corpus.filter(F.col("vec_id") < _N_PROBES).select(
-        F.col("vec_id").alias("probe_id"), F.col("v").alias("pv"), F.col("nrm").alias("pnrm")
-    )
-    exact = (
-        F.broadcast(probes0)
-        .join(corpus, probes0.probe_id != corpus.vec_id)
-        .select("probe_id", "vec_id", F.round(cos, 4).alias("cosine"))
-        .withColumn("k", F.row_number().over(w))
-        .filter(F.col("k") <= _TOP_K)
-        .select("probe_id", "vec_id")
-    )
+    exact = _exact_top_k(corpus).select("probe_id", "vec_id")  # the ground truth
 
     # ONE IVF serving join at the largest nprobe (VERDICT r8 item 4 —
     # the nprobe=4 candidate set subsumes 1 and 2): each candidate is
@@ -1203,17 +1117,8 @@ def q_ann_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exactly, and the identical (cosine DESC, vec_id) ranking keeps
     # the oracle hash unchanged.
     max_np = max(_SWEEP_NPROBES)
-    probes = (
-        indexed.filter(F.col("vec_id") < _N_PROBES)
-        .select(
-            F.col("vec_id").alias("probe_id"),
-            F.col("v").alias("pv"),
-            F.col("nrm").alias("pnrm"),
-            F.slice(ranking, 1, max_np).alias("pcells"),
-        )
-        .select(
-            "probe_id", "pv", "pnrm", F.posexplode("pcells").alias("cell_rank0", "cell")
-        )
+    probes = _probes(indexed, F.slice(ranking, 1, max_np).alias("pcells")).select(
+        "probe_id", "pv", "pnrm", F.posexplode("pcells").alias("cell_rank0", "cell")
     )
     tiers = F.array(*[F.lit(n) for n in _SWEEP_NPROBES])
     wnp = Window.partitionBy("nprobe", "probe_id").orderBy(
@@ -1226,7 +1131,7 @@ def q_ann_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "probe_id",
             "vec_id",
-            F.round(cos, 4).alias("cosine"),
+            F.round(_cosine(), 4).alias("cosine"),
             F.explode(
                 F.filter(tiers, lambda n: F.col("cell_rank0") < n)
             ).alias("nprobe"),
@@ -1248,12 +1153,11 @@ def q_ann_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vector lives in one cell; row_number emits each truth pair once),
     # so MAX over the flags is exact set membership and hits = both
     # flags set. Everything stays probe×k-bounded.
-    tiers_all = F.array(*[F.lit(n) for n in _SWEEP_NPROBES])
     ret_rows = u.select(
         "nprobe", "probe_id", "vec_id", F.lit(1).alias("ret"), F.lit(0).alias("tru")
     )
     truth_rows = exact.select(
-        F.explode(tiers_all).alias("nprobe"),
+        F.explode(tiers).alias("nprobe"),
         "probe_id",
         "vec_id",
         F.lit(0).alias("ret"),
@@ -1347,14 +1251,9 @@ def _power_iterate(
         .collect()
     )
     mu = [r.m for r in sorted(mu_rows, key=lambda r: r.dim0)]
-    mulit = F.array(*[F.lit(m) for m in mu])
     v = [0.125] * len(mu)
     for _ in range(_POWER_ITERS):
-        vlit = F.array(*[F.lit(x) for x in v])
-        xc = F.zip_with("v", mulit, lambda a, b: a - b)
-        p = F.aggregate(
-            F.zip_with(xc, vlit, lambda a, b: a * b), F.lit(0.0), lambda acc, y: acc + y
-        )
+        xc, p = _power_project(mu, v)
         s_rows = (
             c.select(p.alias("p"), F.posexplode(xc).alias("dim0", "xc"))
             .groupBy("dim0")
@@ -1370,6 +1269,13 @@ def _power_iterate(
     for x in v:  # dim-order sum, embedded as a literal both sides
         vtv += x * x
     return mu, v, vtv
+
+
+def _power_project(mu: list[float], v: list[float]):
+    """The power step's map-side half over column `v`: the centred
+    vector xc = v − mu and its projection p = xc·v on the component."""
+    xc = F.zip_with("v", _double_array(mu), lambda a, b: a - b)
+    return xc, _dot(xc, _double_array(v))
 
 
 def _power_oracle() -> str:
@@ -1422,12 +1328,7 @@ def q_embed_power_topvec(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding QA)."""
     mu, v, vtv = _power_topvec(spark, sf_dir)
     c = _corpus(spark, sf_dir)
-    mulit = F.array(*[F.lit(m) for m in mu])
-    vlit = F.array(*[F.lit(x) for x in v])
-    xc = F.zip_with("v", mulit, lambda a, b: a - b)
-    p = F.aggregate(
-        F.zip_with(xc, vlit, lambda a, b: a * b), F.lit(0.0), lambda acc, y: acc + y
-    )
+    _xc, p = _power_project(mu, v)
     eig = c.select(p.alias("p")).agg(
         F.round(
             F.sum(F.col("p") * F.col("p")) / ((F.count(F.lit(1)) - 1) * F.lit(vtv)), 4
@@ -1435,7 +1336,7 @@ def q_embed_power_topvec(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dims = (
         c.sparkSession.range(1)
-        .select(F.posexplode(F.arrays_zip(mulit, vlit)).alias("dim0", "mv"))
+        .select(F.posexplode(F.arrays_zip(_double_array(mu), _double_array(v))).alias("dim0", "mv"))
         .select(
             (F.col("dim0") + 1).cast("long").alias("dim"),
             F.col("mv")["0"].alias("mu"),

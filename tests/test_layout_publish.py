@@ -32,6 +32,15 @@ from presto_cached_examples_spark.operators.scans import (
 from presto_cached_examples_spark.operators.joins import _bucketed_tables
 
 
+def _traceback(err: str) -> str:
+    """A worker's whole Python traceback: its stderr from the first
+    `Traceback` header on (chained exceptions included), or all of it
+    when there is none. Spark's JVM stack trails the exception message,
+    so a tail of stderr would cut the message off."""
+    i = err.find("Traceback (most recent call last)")
+    return err[i:] if i >= 0 else err
+
+
 def _dir_snapshot(root: str) -> list[tuple[str, int, int]]:
     """(relpath, size, mtime_ns) of every file under root — any write,
     rewrite, or delete inside a published layout changes this."""
@@ -280,7 +289,7 @@ spark.stop()
     outs = [p.communicate(timeout=300) for p in procs]
     counts = []
     for p, (out, err) in zip(procs, outs):
-        assert p.returncode == 0, f"worker failed:\n{out}\n{err[-2000:]}"
+        assert p.returncode == 0, f"worker failed:\n{out}\n{_traceback(err)}"
         counts.append([l for l in out.splitlines() if l.startswith("COUNT")][0])
     assert counts[0] == counts[1], counts
     entries = os.listdir(wh)
@@ -361,7 +370,7 @@ print("SWEEPS", sweeps, "PUBLISHED", layouts.is_published(canonical), flush=True
     ]
     outs = [p.communicate(timeout=300) for p in procs]
     for p, (out, err) in zip(procs, outs):
-        assert p.returncode == 0, f"worker failed:\n{out}\n{err[-2000:]}"
+        assert p.returncode == 0, f"worker failed:\n{out}\n{_traceback(err)}"
     counts = {l for l in outs[0][0].splitlines() if l.startswith("COUNT")}
     assert len(counts) == 1, f"scan counts unstable under sweeper race: {counts}"
     for out, _err in outs[1:]:

@@ -9,7 +9,13 @@ vec mapping with the operator's own (cosine DESC, vec_id) tie-break."""
 
 from __future__ import annotations
 
+import math
+import re
+import struct
+
 import numpy as np
+import pytest
+from pyspark.sql import functions as F
 
 from presto_cached_examples_spark.registry import queries
 from presto_cached_examples_spark.sources.catalog import load_table
@@ -119,3 +125,65 @@ def test_recall_sweep_is_monotone_and_consistent(spark):
         for r in queries()["q_sim_topk_kmeans"](spark, SF_TINY).collect()
     }
     assert abs(rows[2].recall - len(got & truth) / len(truth)) <= 1e-4
+
+
+def _bits(xs) -> list[bytes]:
+    return [struct.pack(">d", x) for x in xs]
+
+
+def test_double_array_literal_is_exact(spark):
+    """The one-expression constant vector (`_double_array`) reads back
+    bit for bit, as the per-element `F.lit` form does, and optimizes to
+    the same literal: exponents, the smallest subnormal, -0.0 and
+    17-significant-digit values included. A non-finite value raises."""
+    from presto_cached_examples_spark.llm.similarity import _double_array
+
+    vals = [
+        1e-05,
+        1.5e300,
+        5e-324,
+        -0.0,
+        0.1 + 0.2,  # 0.30000000000000004
+        1.2345678901234567e-08,
+        -1.7976931348623157e308,
+        2.2250738585072014e-308,
+        -0.040266,
+        0.125,
+    ]
+    expr = spark.range(1).select(_double_array(vals).alias("a"))
+    lits = spark.range(1).select(F.array(*[F.lit(x) for x in vals]).alias("a"))
+    assert _bits(expr.first().a) == _bits(vals)
+    assert _bits(lits.first().a) == _bits(vals)
+
+    def plan(df):
+        return re.sub(r"#\d+", "#", df._jdf.queryExecution().optimizedPlan().toString())
+
+    assert plan(expr) == plan(lits)
+    nested = spark.range(1).select(_double_array([vals[:4], vals[4:]]).alias("a")).first().a
+    assert [_bits(r) for r in nested] == [_bits(vals[:4]), _bits(vals[4:])]
+    for bad in (math.inf, -math.inf, math.nan):
+        with pytest.raises(ValueError):
+            _double_array([0.0, bad])
+
+
+def test_fold_replica_matches_spark_kernel(spark):
+    """sampling._fold_dist2 replays the shared Spark squared-L2 fold
+    (`similarity._dist2`) bit for bit: k-center's driver-side pool
+    refinement certifies its picks against Spark-collected distances
+    (tau), so a last-bit difference could change the selection."""
+    from presto_cached_examples_spark.llm import sampling
+    from presto_cached_examples_spark.llm.similarity import _corpus, _dist2, _double_array
+
+    centers = [v for _vid, v, _d in sampling._kcenter_select(spark, SF_TINY)]
+    dists = [
+        _dist2(F.col("v"), _double_array(c)).alias(f"d{i}") for i, c in enumerate(centers)
+    ]
+    rows = _corpus(spark, SF_TINY).select("v", *dists).collect()
+    assert len(rows) == 500 and len(centers) == sampling._KCENTER_K
+    mismatches = [
+        (i, r[f"d{i}"], sampling._fold_dist2(r.v, c))
+        for r in rows
+        for i, c in enumerate(centers)
+        if r[f"d{i}"] != sampling._fold_dist2(r.v, c)
+    ]
+    assert not mismatches, mismatches[:5]
