@@ -17,6 +17,12 @@ The store also records which fixture directory the session's temp
 views name (``bind``), so the SQL binder re-registers them only when
 that directory changes.
 
+Query plans are artifacts too: the registry keeps each query's analyzed
+logical plan under the name ``(PLAN, query_name)``, so a repeated build
+skips the Python builder. A plan embeds the values of the artifacts its
+builder read, so ``forget`` drops the session's plans for the same
+``sf_dir`` along with the named entry.
+
 Lifecycle: ``release(spark)`` unpersists every persisted DataFrame memo
 value the session holds and drops all of the session's entries.
 Long-running drivers call it between query batches; the next build of
@@ -33,6 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from presto_cached_examples_spark.session import session_token
 
 T = TypeVar("T")
+
+PLAN = "plan"  # first element of a cached query plan's name
 
 _ENTRIES: dict[tuple[str, str | None, Hashable], Any] = {}
 _MISSING = object()
@@ -52,8 +60,17 @@ def memo(spark: SparkSession, sf_dir: str, name: Hashable, build: Callable[[], T
 
 
 def forget(spark: SparkSession, sf_dir: str, name: Hashable) -> None:
-    """Drop one entry, so the next ``memo`` call rebuilds it."""
-    _ENTRIES.pop((session_token(spark), sf_dir, name), None)
+    """Drop one entry, so the next ``memo`` call rebuilds it, and the
+    session's cached query plans for ``sf_dir``, so the next build of
+    each query runs its builder against the rebuilt artifact."""
+    token = session_token(spark)
+    _ENTRIES.pop((token, sf_dir, name), None)
+    for key in [k for k in list(_ENTRIES) if k[:2] == (token, sf_dir) and _is_plan(k[2])]:
+        _ENTRIES.pop(key, None)
+
+
+def _is_plan(name: Hashable) -> bool:
+    return isinstance(name, tuple) and name[:1] == (PLAN,)
 
 
 def bind(spark: SparkSession, sf_dir: str, register: Callable[[], None]) -> None:

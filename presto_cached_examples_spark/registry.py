@@ -21,22 +21,40 @@ corpus count that sizes the incremental-dedup Bloom filter, the
 bucketed/evolved warehouse materializations. All such artifacts live
 in the session-artifact store (plans/artifacts.memo, keyed on
 (session_token, sf_dir, name)), so only the FIRST build per session
-pays; every later build is pure plan assembly (tests/test_round7_ops.py
-pins this with a job-group probe). ``artifacts.release(spark)`` drops
-them and unpersists what they pinned. Callers that need strictly
-action-free construction should warm the session once, or treat the
-first build as ingest.
+pays; every later run of the builder is pure plan assembly
+(tests/test_round7_ops.py pins this with a job-group probe).
+``artifacts.release(spark)`` drops them and unpersists what they
+pinned. Callers that need strictly action-free construction should
+warm the session once, or treat the first build as ingest.
+
+Plan cache: ``queries()`` does not rerun the builder on a repeated
+build either. The first call per session and fixture directory runs the
+builder and returns its DataFrame unchanged; it keeps the DataFrame's
+analyzed logical plan as the artifact ``(artifacts.PLAN, name)``. A
+later call returns a new DataFrame with its own QueryExecution over
+that plan, so Catalyst optimization, physical planning and execution
+still run in full, and no final plan or shuffle output is shared
+between calls. A plan with a ``LogicalRDD`` leaf (a checkpoint) is not
+kept: its builder runs on every call, as it would without the cache,
+so a lost checkpoint block is rebuilt rather than reread.
+``artifacts.forget`` drops the plans of its fixture directory, since a
+plan embeds its artifacts' values. ``QuerySpec.fn`` stays the raw
+builder.
 """
 
 from __future__ import annotations
 
+import functools
 import importlib
 import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
+from presto_cached_examples_spark.plans import artifacts
+from presto_cached_examples_spark.session import ship_package_to_workers
 from presto_cached_examples_spark.sources.catalog import register_all
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -361,7 +379,64 @@ def all_specs() -> dict[str, QuerySpec]:
 
 
 def queries() -> dict[str, QueryFn]:
-    return {name: spec.fn for name, spec in all_specs().items()}
+    return {name: _plan_cached(spec) for name, spec in all_specs().items()}
+
+
+def _plan_cached(spec: QuerySpec) -> QueryFn:
+    """``spec.fn`` behind the session's plan cache (module docstring).
+
+    The cached value is ``(session, plan)``: a plan is analyzed against
+    one session's conf and temp views, so another session that shares
+    the SparkContext (``newSession``) runs the builder instead."""
+    name = (artifacts.PLAN, spec.name)
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        built: list[DataFrame] = []
+
+        def analyze():
+            built.append(_run_builder(spec, spark, sf_dir))
+            plan = built[0]._jdf.queryExecution().analyzed()
+            return spark, None if _holds_rdd(plan) else plan
+
+        owner, plan = artifacts.memo(spark, sf_dir, name, analyze)
+        if built:
+            return built[0]
+        if plan is None or owner is not spark:
+            return _run_builder(spec, spark, sf_dir)
+        return ClassicDataFrame(_of_rows(spark._jvm)(spark._jsparkSession, plan), spark)
+
+    return build
+
+
+def _run_builder(spec: QuerySpec, spark: SparkSession, sf_dir: str) -> DataFrame:
+    ship_package_to_workers(spark)
+    return spec.fn(spark, sf_dir)
+
+
+@functools.cache
+def _of_rows(jvm):
+    """``org.apache.spark.sql.classic.Dataset.ofRows(session, plan)``: a
+    Dataset with a new QueryExecution over an analyzed plan. Resolving
+    the JVM member costs reflection round trips, so it is done once."""
+    return jvm.org.apache.spark.sql.classic.Dataset.ofRows
+
+
+def _holds_rdd(plan) -> bool:
+    """Whether an analyzed plan, or any subquery in it, has a
+    ``LogicalRDD`` leaf: a checkpoint or a frame over an RDD."""
+    for tree in (plan, *_seq(plan.subqueriesAll())):
+        if any(leaf.nodeName() == "LogicalRDD" for leaf in _seq(tree.collectLeaves())):
+            return True
+    return False
+
+
+def _seq(seq) -> list:
+    """A Scala ``Seq`` proxy's elements as a Python list."""
+    it = seq.iterator()
+    out = []
+    while it.hasNext():
+        out.append(it.next())
+    return out
 
 
 def oracle_sql() -> dict[str, str]:

@@ -159,12 +159,21 @@ def get_session(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # Python workers unpickle this package's UDFs and so import it; they
-    # see the environment of the Python functions Spark ships, not the
-    # driver's sys.path. Put the package's parent on their path so they
-    # find it whatever the driver's working directory.
+    ship_package_to_workers(spark)
+    return spark
+
+
+def ship_package_to_workers(spark: SparkSession) -> None:
+    """Put the package's parent on the Python workers' ``PYTHONPATH``.
+
+    Python workers unpickle this package's UDFs and so import it; they
+    see the environment of the Python functions Spark ships, not the
+    driver's sys.path, so without this they find the package only when
+    the driver's working directory is the repo. Spark copies the
+    environment into each Python function when the function is created,
+    so call this before building one. It edits a driver-side dict and
+    makes no JVM call."""
     env = spark.sparkContext.environment
     paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
     if _PACKAGE_PARENT not in paths:
         env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_PARENT, *paths])
-    return spark

@@ -12,7 +12,7 @@ from presto_cached_examples_spark.operators.graph import connected_components
 from presto_cached_examples_spark.plans import artifacts
 from presto_cached_examples_spark.registry import queries
 from tests.conftest import SF_TINY
-from tests.test_plans import plan_of
+from tests.test_plans import build, plan_of
 from tests.util import jobs_during
 
 BOTH_PATHS = pytest.mark.parametrize("threshold", [100_000, 0], ids=["driver", "distributed"])
@@ -105,10 +105,23 @@ def test_near_dup_clusters_match_on_both_paths(spark, monkeypatch):
     assert any(n > 0 for _, _, n in driver), "fixture has no near-dup pair"
     monkeypatch.setattr(graph, "DRIVER_EDGE_THRESHOLD", 0)
     artifacts.forget(spark, SF_TINY, "near_dup_clusters")
+    # the rebuild must run the distributed path, not reuse a cached plan
+    paths = []
+    for fn, path in ((graph.connected_components, "cc"), (graph._driver_union_find, "driver")):
+        monkeypatch.setattr(graph, fn.__name__, _spy(fn, path, paths))
     try:
         assert _rows(_dedup_near(spark)) == driver
+        assert paths == ["cc"]
     finally:
         artifacts.forget(spark, SF_TINY, "near_dup_clusters")
+
+
+def _spy(fn, label, calls):
+    def spy(*args, **kwargs):
+        calls.append(label)
+        return fn(*args, **kwargs)
+
+    return spy
 
 
 def test_warm_dedup_near_matches_cold(spark):
@@ -116,7 +129,8 @@ def test_warm_dedup_near_matches_cold(spark):
     artifacts.forget(spark, SF_TINY, "near_dup_clusters")
     cold = _rows(_dedup_near(spark))
     warm = []
-    assert jobs_during(spark, lambda: warm.append(_dedup_near(spark))) == []
+    # the builder itself, not a cached plan, must read the memo
+    assert jobs_during(spark, lambda: warm.append(build(spark, "q_dedup_near"))) == []
     assert _rows(warm[0]) == cold
 
 

@@ -80,7 +80,7 @@ def test_sim_pq_codes_are_valid_and_deterministic(spark):
         for m in range(_PQ_M):
             assert 0 <= r[f"code_{m}"] < _PQ_K
         assert r.recon_err >= 0.0
-    again = queries()["q_sim_pq"](spark, SF_TINY).collect()
+    again = build(spark, "q_sim_pq").collect()  # the builder, not a cached plan
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 

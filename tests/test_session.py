@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from presto_cached_examples_spark.registry import all_specs
 from presto_cached_examples_spark.session import derived_conf, detect_resources
 from tests.conftest import SF_TINY
@@ -56,10 +58,19 @@ def test_codegen_cache_holds_the_headline_working_set(spark):
 # ---- Python workers find the package (session.py) -----------------------
 
 
-def test_python_workers_import_package_from_any_cwd(tmp_path):
+@pytest.mark.parametrize(
+    "make_session",
+    [
+        "get_session()",
+        "SparkSession.builder.master('local[2]').config('spark.ui.enabled', 'false').getOrCreate()",
+    ],
+    ids=["get_session", "bare_builder"],
+)
+def test_python_workers_import_package_from_any_cwd(tmp_path, make_session):
     """A driver whose working directory is not the repo, with the repo on
     sys.path only, must still run a query whose Python worker imports the
-    package (q_mm_features' mapInPandas unpickles a package function)."""
+    package (q_mm_features' mapInPandas unpickles a package function),
+    whether the session comes from get_session or a bare builder."""
     import os
     import subprocess
     import sys
@@ -68,8 +79,9 @@ def test_python_workers_import_package_from_any_cwd(tmp_path):
     script = (
         "import sys\n"
         f"sys.path.insert(0, {root!r})\n"
+        "from pyspark.sql import SparkSession\n"
         "from presto_cached_examples_spark import get_session, registry\n"
-        "spark = get_session()\n"
+        f"spark = {make_session}\n"
         f"n = registry.queries()['q_mm_features'](spark, {SF_TINY!r}).count()\n"
         "print('ROWS', n)\n"
     )
